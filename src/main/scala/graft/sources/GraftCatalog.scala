@@ -6,7 +6,7 @@ import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{array, col, explode, lit, md5, pmod, row_number, struct, when, xxhash64}
+import org.apache.spark.sql.functions.{array, col, explode, lit, md5, row_number, struct, when}
 import org.apache.spark.sql.types.{NumericType, StructField, StructType}
 
 /**
@@ -1703,15 +1703,24 @@ class GraftCatalog(private[sources] val spark: SparkSession,
   }
 
   /**
-   * Read with planning-time zone-map pruning: dirs whose manifest
-   * min/max stats prove `condition` unsatisfiable are never listed,
-   * opened, or planned — the Spark-native analog of the reference's
-   * manifest-stats split skip (TrinoMetadataBase.applyFilter →
-   * SnapshotReader.withFilter). On a 100 TB table where commits arrive
-   * time-ordered, a date-range query plans O(matching dirs) instead of
-   * O(all dirs). Falls back to `read(...).filter` whenever pruning is
-   * unsafe (PK merge state, evolved files) or stats are missing —
-   * results are identical either way; only the file list shrinks.
+   * Read with planning-time pruning — `read(...).filter(condition)`'s
+   * result, from less of the table:
+   *
+   *  - Bucket selection (Paimon's `BucketSelectConverter` path): on a
+   *    fixed-bucket PK table read at its head snapshot, a condition that
+   *    pins every primary-key column with `=`, `<=>` or `IN` merges only
+   *    the buckets those keys hash to ([[selectBuckets]]) — a key lookup
+   *    is one single-task leg, not N. Driver-side hashing, no job.
+   *  - Zone maps: dirs (and files) whose manifest min/max stats prove
+   *    `condition` unsatisfiable are never listed, opened, or planned —
+   *    the Spark-native analog of the reference's manifest-stats split
+   *    skip (TrinoMetadataBase.applyFilter → SnapshotReader.withFilter).
+   *    On a 100 TB table where commits arrive time-ordered, a date-range
+   *    query plans O(matching dirs) instead of O(all dirs).
+   *
+   * Falls back to `read(...).filter` whenever neither applies (PK merge
+   * state, evolved files, time travel on a bucketed table) or stats are
+   * missing; only that fallback resolves every dir of the snapshot.
    */
   def readWhere(schema: String, table: String,
       condition: org.apache.spark.sql.Column,
@@ -1720,7 +1729,25 @@ class GraftCatalog(private[sources] val spark: SparkSession,
     val m = readManifest(schema, table)
     val chosen = chooseSnapshot(m, schema, table, snapshotId, asOfMillis)
     val entries = chosen.map(filesOf).getOrElse(Seq.empty)
-    val full = read(schema, table, snapshotId, asOfMillis).filter(condition)
+    // read(...)'s frame over THIS manifest read — built only on fallback
+    // (it lists and plans every dir of the snapshot)
+    lazy val full = resolveFrames(schema, table, m, entries)
+      .getOrElse(emptyFrame(m)).filter(condition)
+    // The Column's tree is unresolved (plain name + raw literal); the
+    // selectors need the analyzer's output — typed literals, coercion
+    // casts folded in — so analyze the filter over a zero-row frame of
+    // the table's schema (driver-side analysis only: no listing, no job).
+    val resolved = emptyFrame(m).filter(condition).queryExecution.analyzed.collectFirst {
+      case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition
+    }
+    resolved.flatMap(selectBuckets(m, chosen, _)) match {
+      case Some(buckets) =>
+        // an empty selection proves no row matches (`k = 1 AND k = 2`)
+        val slice = if (buckets.isEmpty) None
+          else bucketSlice(schema, table, m, entries, bucketCount(m).get, buckets)
+        return slice.getOrElse(emptyFrame(m)).filter(condition)
+      case None => ()
+    }
     // DV-COVERED PK snapshots (every data dir at/below the newest build,
     // current schema) prune like append-only state: the base holds one
     // live version per key, so a dir/file whose zones refute the
@@ -1736,13 +1763,6 @@ class GraftCatalog(private[sources] val spark: SparkSession,
         fe.kind == "data" && entryOrdinal(fe) <= bo && fe.schemaVersion == cur)
     }
     if (entries.isEmpty || !(zonePrunable(m, entries) || coveredPk)) return full
-    // The Column's tree is unresolved (plain name + raw literal); the zone
-    // evaluator needs the analyzer's output — typed literals, coercion
-    // casts folded in — so pull the resolved predicate off the analyzed
-    // filter (driver-side analysis only, no job).
-    val resolved = full.queryExecution.analyzed.collectFirst {
-      case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition
-    }
     if (resolved.isEmpty) return full
     val (dvEntries, dataEntries) = entries.partition(_.kind == "dv")
     val stats = dirStatsFrom(m)
@@ -2740,17 +2760,20 @@ class GraftCatalog(private[sources] val spark: SparkSession,
     else Seq.empty
   }
 
-  /** The bucket a primary-key tuple hashes to — the same expression on
-    * the write path (commit) and any read-side pruning. */
+  /** The bucket a primary-key tuple hashes to — [[BucketSelect.bucketOf]]
+    * over the key columns, the same expression on the write path
+    * (commit) and driver-side bucket selection. */
   private[sources] def bucketExpr(pk: Seq[String], n: Int): org.apache.spark.sql.Column =
-    pmod(xxhash64(pk.map(col): _*), lit(n.toLong)).cast("int")
+    org.apache.spark.sql.GraftColumnBridge.column(BucketSelect.bucketOf(
+      pk.map(c => org.apache.spark.sql.GraftColumnBridge.expression(col(c))), n))
 
-  /** The bucket a concrete primary-key tuple lands in — evaluated with
-    * the write path's own expression over a one-row local relation (a
-    * driver-local job over one row), so hash semantics can never drift
-    * from [[bucketExpr]]. `values` must follow primary-key column order
-    * and are cast to the declared column types before hashing. */
+  /** The bucket a concrete primary-key tuple lands in — the write path's
+    * own expression evaluated over literals on the driver (no Spark
+    * job), so hash semantics can never drift from [[bucketExpr]].
+    * `values` must follow primary-key column order and are cast to the
+    * declared column types before hashing. */
   def bucketFor(schema: String, table: String, values: Seq[Any]): Int = {
+    import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
     val m = readManifest(schema, table)
     val pk = primaryKey(m)
     val n = bucketCount(m).getOrElse(
@@ -2759,18 +2782,40 @@ class GraftCatalog(private[sources] val spark: SparkSession,
       "key→bucket is the index's, not a hash: use dynamicBucketFor")
     require(values.length == pk.length, s"expected ${pk.length} pk values")
     val cur = currentFields(m).map(f => f.name -> f.trinoType).toMap
-    val row = spark.range(1).select(pk.zip(values).map { case (c, v) =>
-      lit(v).cast(TypeMapping.toSparkType(cur(c))).as(c)
-    }: _*)
-    row.select(bucketExpr(pk, n).as("b")).head().getInt(0)
+    val tz = Some(spark.sessionState.conf.sessionLocalTimeZone)
+    BucketSelect.bucketOfLiterals(pk.zip(values).map { case (c, v) =>
+      Cast(Literal(v), TypeMapping.toSparkType(cur(c)), tz)
+    }, n)
   }
 
+  /** The buckets `pred` (analyzed over the table's current schema) can
+    * hit in the chosen snapshot — [[BucketSelect.select]] behind the
+    * table gates: a fixed-bucket PK table, read at the head snapshot of
+    * this same manifest read. The `bucket` option describes the head's
+    * layout only (an older snapshot may predate a rescaleBucket), so time
+    * travel never selects. None = read every bucket. */
+  private[sources] def selectBuckets(m: ObjectNode, chosen: Option[JsonNode],
+      pred: org.apache.spark.sql.catalyst.expressions.Expression): Option[Seq[Int]] = {
+    val pk = primaryKey(m)
+    val snaps = m.get("snapshots").asInstanceOf[ArrayNode]
+    val atHead = chosen.exists(s => snaps.size() > 0 &&
+      s.get("id").asLong() == snaps.get(snaps.size() - 1).get("id").asLong())
+    bucketCount(m) match {
+      case Some(n) if n >= 1 && pk.nonEmpty && atHead =>
+        val types = currentFields(m)
+          .map(f => f.name -> TypeMapping.toSparkType(f.trinoType)).toMap
+        BucketSelect.select(pk.map(c => c -> types(c)), n, pred)
+      case _ => None
+    }
+  }
 
   /**
    * Read ONE bucket of a bucketed PK table, merge-on-read resolved — the
    * split-level consumer API (a bucket is the unit of parallel work, as
-   * in Paimon): point lookups read 1/N of the table via [[bucketFor]],
-   * and N independent workers can each process one bucket.
+   * in Paimon): N independent workers can each process one bucket, and
+   * [[bucketFor]] names the bucket of a known key. Key lookups need not
+   * come here: [[readWhere]] selects the buckets of a primary-key
+   * equality itself.
    */
   def readBucket(schema: String, table: String, bucket: Int,
       snapshotId: Option[Long] = None,
@@ -2785,19 +2830,20 @@ class GraftCatalog(private[sources] val spark: SparkSession,
     val target = StructType(currentFields(m).map(f =>
       StructField(f.name, TypeMapping.toSparkType(f.trinoType))))
     chooseSnapshot(m, schema, table, snapshotId, asOfMillis)
-      .flatMap { s =>
-        val entries = filesOf(s)
-        // live deletion vectors: the hybrid merge-free read restricted
-        // to this bucket's legs (r15 — point lookups on a DV table read
-        // 1/N of the data, the same economics as the DV-free path)
-        if (entries.exists(_.kind == "dv"))
-          pkDvResolve(schema, table, m, entries,
-            onlyBuckets = Some(Seq(bucket)))
-        else bucketedResolve(schema, table, m, entries, n, Some(Seq(bucket)))
-      }
+      .flatMap(s => bucketSlice(schema, table, m, filesOf(s), n, Seq(bucket)))
       .getOrElse(spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], target))
   }
+
+  /** Merge-on-read image of `buckets` only: the hybrid merge-free read
+    * restricted to those legs when deletion vectors are live (a point
+    * lookup on a DV table reads 1/N of the data too), else the bucketed
+    * per-leg merge. None = nothing to read. */
+  private def bucketSlice(schema: String, table: String, m: ObjectNode,
+      entries: Seq[FileEntry], n: Int, buckets: Seq[Int]): Option[DataFrame] =
+    if (entries.exists(_.kind == "dv"))
+      pkDvResolve(schema, table, m, entries, onlyBuckets = Some(buckets))
+    else bucketedResolve(schema, table, m, entries, n, Some(buckets))
 
   /**
    * Bucket-co-located PK join of two bucketed PK tables — the

@@ -250,7 +250,8 @@ class GraftSparkCatalog extends TableCatalog with SupportsNamespaces
     // Bucketed PK tables always scan through the merge bridge: their file
     // layout carries the physical __bucket partition dirs, which a raw
     // ParquetTable would surface as a column.
-    val bucketed = gc.bucketCountOf(schemaName, tableName).isDefined
+    val bucketCount = gc.bucketCountOf(schemaName, tableName)
+    val bucketed = bucketCount.isDefined
     // A partitioned table spanning several snapshot dirs cannot feed one
     // ParquetTable: Spark's partition discovery requires all col=value
     // leaves to share a single non-kv base dir, and N roots give N bases
@@ -269,34 +270,27 @@ class GraftSparkCatalog extends TableCatalog with SupportsNamespaces
     // MoR-pending state (PK deltas, tombstones, pre-evolution files) is
     // served through the read-time merge scan; fully-resolved snapshots
     // keep the native vectorized parquet path (raw file scans + pushdown).
-    // The reader sees the pushed filters: on a bucketed table, equality
-    // on the FULL primary key prunes the read to that key's single
-    // bucket (1/N of the data — Paimon's point-lookup path). The
-    // equality predicate is still applied post-merge, so pruning is
-    // purely a superset optimization.
+    // The reader sees the pushed filters and hands them to readWhere,
+    // which prunes a fixed-bucket table's full-PK equality/IN to the
+    // buckets its keys hash to (Paimon's point-lookup path) and
+    // zone-prunes whole dirs where provably safe. The filters are still
+    // applied post-merge, so pruning is purely a superset optimization.
+    val dynamicBucket = bucketCount.contains(-1)
     val morRead = if (resolvedAsFiles) None else Some(
       (filters: Array[Filter]) => {
-        val eq = filters.collect {
-          case EqualTo(a, v) if pk.contains(a) => a -> v
-        }.toMap
-        val prunedBucket =
-          // composes with live PK deletion vectors since r15: readBucket
-          // routes through the bucket-restricted hybrid merge-free read
-          if (bucketed && pk.nonEmpty && pk.forall(eq.contains)) {
-            // dynamic-bucket tables route point lookups through the hash
-            // index; an unassigned key (None) falls through to the
-            // ordinary read, which correctly returns nothing
-            if (gc.bucketCountOf(schemaName, tableName).contains(-1))
-              gc.dynamicBucketFor(schemaName, tableName, pk.map(eq))
-            else Some(gc.bucketFor(schemaName, tableName, pk.map(eq)))
-          } else None
-        prunedBucket match {
+        // dynamic-bucket tables route a full-PK equality through the
+        // hash index (key→bucket is data there, not a hash); an
+        // unassigned key (None) falls through to the ordinary read,
+        // which correctly returns nothing
+        val dynBucket = if (!dynamicBucket || pk.isEmpty) None else {
+          val eq = filters.collect { case EqualTo(a, v) if pk.contains(a) => a -> v }.toMap
+          if (pk.forall(eq.contains))
+            gc.dynamicBucketFor(schemaName, tableName, pk.map(eq))
+          else None
+        }
+        dynBucket match {
           case Some(k) => gc.readBucket(schemaName, tableName, k, snapshotId, asOfMillis)
           case None => FilterTranslation.toCondition(filters) match {
-            // readWhere zone-prunes whole dirs when provably safe
-            // (append-only current-schema snapshots) and degrades to
-            // read().filter otherwise — the filter is re-applied by the
-            // V1 scan either way, so this is purely a file-list shrink.
             case Some(cond) if filters.nonEmpty =>
               gc.readWhere(schemaName, tableName, cond, snapshotId, asOfMillis)
             case _ => gc.read(schemaName, tableName, snapshotId, asOfMillis)

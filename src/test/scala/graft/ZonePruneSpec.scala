@@ -88,6 +88,24 @@ class ZonePruneSpec extends SparkSpecBase {
     assert(none.columns.toSeq === Seq("id", "name", "score"))
   }
 
+  test("a zone-pruned readWhere never lists the dirs its zones exclude") {
+    // own warehouse: this test deletes a data dir
+    val wh = Files.createTempDirectory("graft-zplazy").toString
+    val cat = new GraftCatalog(spark, wh)
+    cat.createSchema("db")
+    def batch(lo: Long) = spark.range(lo, lo + 10).selectExpr("id", "concat('n', id) AS name")
+    cat.createTable("db", "a", batch(0L).schema)
+    Seq(0L, 100L, 200L).foreach(lo => cat.append("db", "a", batch(lo)))
+    val dirs = cat.snapshotFileEntries("db", "a").map(_.dir)
+    assert(dirs.size === 3)
+    // the first dir's zone [0, 9] refutes id >= 200: only an eager full
+    // resolve would list it
+    val first = new org.apache.hadoop.fs.Path(cat.dirLocation("db", "a", dirs.head))
+    first.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(first, true)
+    val got = cat.readWhere("db", "a", col("id") >= 200L)
+    assert(got.orderBy("id").collect().map(_.getLong(0)).toSeq === (200L until 210L))
+  }
+
   test("readWhere matches unpruned results exactly") {
     val cond = col("score") >= 9.5 && col("score") < 20.5
     val pruned = gc.readWhere("db", "zp", cond).orderBy("id").collect()
