@@ -15,12 +15,14 @@ import org.apache.spark.sql.SparkSession
  * FEWER actions/stages, not faster kernels. Dev tool only; the driver
  * uses Bench.
  *
- * Usage: sbt "runMain graft.JobProfile <sfDir> <query>..."
+ * Usage: sbt "runMain graft.JobProfile <sfDir> [-explain] <query>..."
+ * (`-explain` also prints each query's executed plan after its runs).
  */
 object JobProfile {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val names = args.drop(1)
+    val names = args.drop(1).filterNot(_ == "-explain")
+    val explain = args.contains("-explain")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -164,6 +166,8 @@ object JobProfile {
           org.apache.spark.sql.catalyst.rules.RuleExecutor.resetMetrics()
         }
       }
+      if (explain)
+        println(fn(spark, sfDir).queryExecution.executedPlan.toString.take(4000))
     }
     spark.stop()
   }

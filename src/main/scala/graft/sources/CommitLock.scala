@@ -6,9 +6,8 @@ import org.apache.hadoop.fs.{FileContext, FileSystem, Path}
  * The single atomicity primitive the graft commit protocol rests on:
  * publish a staged file/dir at its final name iff that name is absent,
  * exactly-once across concurrent writers. Every CAS in the protocol —
- * the snapshot-dir claim in `commit()`, sortCompact's per-range dir
- * promotions, and the `manifest-v{N}.json` version rename — goes through
- * this seam.
+ * the snapshot-dir claims in `commit()` (one per dir the snapshot lands)
+ * and the `manifest-v{N}.json` version rename — goes through this seam.
  *
  * The default [[ExclusiveRenameCommitLock]] implements it with an atomic
  * fail-if-exists rename (HDFS semantics; a per-table JVM lock closes the

@@ -694,10 +694,13 @@ class GraftCatalog(private[sources] val spark: SparkSession,
   // ---- writes ------------------------------------------------------------
 
   def append(schema: String, table: String, df: DataFrame): Long =
-    commit(schema, table, df, keepExisting = true)
+    commit(schema, table, Seq(Leg("", "data", df)))
 
+  /** Replace the table's image with `df`. The new image replaces the
+    * head it was built against, so a concurrent commit aborts it. */
   def overwrite(schema: String, table: String, df: DataFrame): Long =
-    commit(schema, table, df, keepExisting = false)
+    commit(schema, table, Seq(Leg("", "data", df)), InheritNone,
+      basis = Some(commitVersion(readManifest(schema, table))))
 
   /**
    * Dynamic partition overwrite (Paimon's `dynamic-partition-overwrite`):
@@ -737,69 +740,61 @@ class GraftCatalog(private[sources] val spark: SparkSession,
         "dynamic overwrite committed nothing")) // unreachable: newData set
   }
 
-  private[sources] def commit(schema: String, table: String, df: DataFrame,
-      keepExisting: Boolean, streamBatchId: Option[Long] = None,
-      kind: String = "data", deleteDf: Option[DataFrame] = None,
+  /**
+   * Publish one snapshot. Every snapshot a table gets lands here:
+   * appends, upserts, merges, tombstone and deletion-vector deletes,
+   * index folds, changelog carriers, every compaction and rescale, and
+   * [[sortCompact]]'s range dirs.
+   *
+   * '''Legs.''' The snapshot lands one dir per [[Leg]], named
+   * `snap-<id><suffix>`. Each leg's frame is written once by
+   * [[writeDir]] into a unique dot-staging dir (or arrives staged by the
+   * caller). Every data leg gets its zone stats, zone sidecar and bloom
+   * index; every leg gets a claim marker. The landing loop claims each
+   * leg's dir by exclusive rename, then CASes the manifest, so all legs
+   * share one ordinal and become visible together. The first leg is the
+   * main dir: its kind drives the dedupe fold, dynamic-bucket routing and
+   * the input/lookup changelog producers (which add a `-cl` leg).
+   *
+   * '''Inheritance.''' `inherit` says what the snapshot keeps of the
+   * previous file list (see [[Inherit]]).
+   *
+   * '''Basis.''' A commit whose content was derived from the head
+   * carries that head's manifest version as `basis`: overwrite,
+   * compactions, deletes, DV commits and index folds pass it; commit adds
+   * the version it read itself when it derives content here
+   * (dynamic-bucket routing, lookup changelogs). A commit with a basis
+   * aborts with a ConcurrentModificationException when the head is no
+   * longer that version, or when one of its dirs is claimed by another
+   * writer (never deleting that writer's dir). Only basis-free commits
+   * rebase onto a new head and retry.
+   */
+  private[sources] def commit(schema: String, table: String, legs: Seq[Leg],
+      inherit: Inherit = InheritAll, basis: Option[Long] = None,
       compaction: Boolean = false,
       dvIndexEntry: Option[(Seq[String], Long)] = None,
-      basisVersion: Option[Long] = None,
-      // (file, pos) victims PAIRED with a data commit in one snapshot —
-      // the append-only UPDATE shape: retract old positions and land the
-      // updated images atomically (dir + dir-dv share one ordinal).
-      dvDf: Option[DataFrame] = None,
-      // Replace-subset commit (minor compaction): the new snapshot
-      // inherits the previous file list MINUS these dirs, plus the new
-      // dir — older snapshots still reference them (time travel), and
-      // expiration reclaims them once unreferenced.
-      replacedDirs: Set[String] = Set.empty,
       // Options applied atomically WITH the snapshot in the same manifest
       // CAS — the bucket-rescale path: data written under the new layout
       // and the option that describes it become visible together.
       optionOverrides: Map[String, String] = Map.empty,
-      // Per-BUCKET compaction (bucketed PK tables): the new snapshot
-      // inherits the previous file list with these buckets marked
-      // retired on every inherited entry — the committed dir carries
-      // their merged images, other buckets' bytes are untouched, and the
-      // serialized delta stays O(1) (one `xbuckets` list, applied at
-      // inflate). Older snapshots keep the unexcluded entries (time
-      // travel); expiration reclaims retired subdirs.
-      excludeBucketsFromPrior: Set[Int] = Set.empty,
-      // Aggregation-engine retract batch (r16): the data dir carries the
-      // hidden RetractCol flag column; its manifest entry is marked `rk`
-      // so reads pull the column through the explicit schema.
-      retractDir: Boolean = false,
-      // Index-only fold (kind = "idx"): the pre-folded live key→bucket
-      // set replaces EVERY prior `.dbidx` delta — the new dir carries
-      // only the consolidated index, zero data bytes move, and the
-      // manifest's dynIdx node is rebuilt to reference it alone.
-      dynIdxFold: Option[(DataFrame, Long)] = None,
-      // Explicit pre-built changelog (full-compaction producer): the
-      // frame (table columns + _row_kind) pairs with this snapshot as a
-      // `-cl` dir covering (the given from-id, this snapshot]. When
-      // absent, the input/lookup producers derive one from the staged
-      // dirs (see producerChangelog).
-      changelogDf: Option[(DataFrame, Long)] = None): Long = {
+      streamBatchId: Option[Long] = None): Long = {
+    basisTestHook()
     val m = readManifest(schema, table)
-    // Derived-content commits (DV deletes) pass the manifest version their
-    // victims were computed against: if the head advanced in between (a
-    // concurrent compact/overwrite may have retired the very files the
-    // (file, pos) pairs name), the delete would land referencing dead
-    // files and be silently lost — abort instead, matching the
-    // stale-rewrite-aborts contract below.
-    basisVersion.foreach { b =>
-      val now = if (m.has("commitVersion")) m.get("commitVersion").asLong() else 0L
-      if (now != b) throw new java.util.ConcurrentModificationException(
-        s"$schema.$table: head advanced (manifest v$b -> v$now) since this " +
-          "commit's content was derived — re-run against the new head")
-    }
-    if (kind == "data") {
-      val cur = currentSchema(schema, table)
+    def staleBasis(b: Long, now: Long) = new java.util.ConcurrentModificationException(
+      s"$schema.$table: a concurrent writer moved the head (manifest v$b -> " +
+        s"v$now) since this commit's content was derived — re-run against the new head")
+    basis.foreach(b => if (commitVersion(m) != b) throw staleBasis(b, commitVersion(m)))
+    val main = legs.head
+    val keepExisting = inherit != InheritNone
+    if (legs.exists(_.kind == "data")) {
+      val cur = currentSchema(schema, table).fieldNames
       // a retract batch (aggregation engine) carries the hidden flag
       // column as its last field — everything else must still align
-      val expect = if (retractDir) cur.fieldNames :+ RetractCol
-        else cur.fieldNames
-      require(df.schema.fieldNames.sameElements(expect),
-        s"dataframe columns ${df.schema.fieldNames.mkString(",")} != table ${expect.mkString(",")}")
+      legs.filter(_.kind == "data").foreach { l =>
+        val expect = if (l.retract) cur :+ RetractCol else cur
+        require(l.frame.schema.fieldNames.sameElements(expect),
+          s"dataframe columns ${l.frame.schema.fieldNames.mkString(",")} != table ${expect.mkString(",")}")
+      }
     }
     // Within-batch key resolution (deduplicate engine): all rows of one
     // commit share an ordinal, so duplicate keys INSIDE one batch would
@@ -811,8 +806,8 @@ class GraftCatalog(private[sources] val spark: SparkSession,
     // key-unique batches (CDC, MERGE, compaction rewrites — the common
     // case) pass through it unchanged. Skipped when a column type is
     // unorderable (maps): those tables keep the key-unique-batch contract.
-    val dedupedDf =
-      if (kind == "data" && !compaction && primaryKey(m).nonEmpty &&
+    def dedup(df: DataFrame): DataFrame =
+      if (!compaction && primaryKey(m).nonEmpty &&
           mergeEngine(m) == "deduplicate" &&
           df.schema.fields.forall(f =>
             org.apache.spark.sql.catalyst.expressions.RowOrdering
@@ -831,9 +826,9 @@ class GraftCatalog(private[sources] val spark: SparkSession,
             if (pkCols.contains(c)) col(c) else col(s"__best.$c").as(c)
           }: _*)
       } else df
+    val deduped = legs.map(l => if (l.kind == "data") l.copy(frame = dedup(l.frame)) else l)
     val snaps = m.get("snapshots").asInstanceOf[ArrayNode]
     val lastId = if (snaps.size() == 0) 0L else snaps.get(snaps.size() - 1).get("id").asLong()
-    val id = lastId + 1
     // Data is written to a UNIQUE dot-staging dir (invisible to snap-*
     // globs and never another writer's target), then RENAMED to its
     // ordinal dir at land time via an exclusive FileContext rename —
@@ -853,179 +848,135 @@ class GraftCatalog(private[sources] val spark: SparkSession,
     // are routed up front (existing keys to their recorded bucket, new
     // keys filling capacity) and carry an explicit __bucket column; the
     // commit's own assignments land as an immutable `.dbidx` parquet
-    // delta inside the staging dir, atomic with the data under the
-    // ordinal claim-rename.
+    // delta inside the main dir, atomic with the data under the ordinal
+    // claim-rename. An index-only fold carries its folded index already.
     val dynamicBucket = buckets.contains(-1)
-    // kind "idx" carries no rows to route — its payload is the folded
-    // index passed via dynIdxFold
-    val (routedDf, routedDel, dynIdxDelta) =
-      if (!dynamicBucket || kind == "idx") (dedupedDf, deleteDf, dynIdxFold)
-      else dynamicRoute(schema, table, m, dedupedDf, deleteDf, kind,
-        fold = compaction, reset = !keepExisting && !compaction)
+    val routed =
+      if (!dynamicBucket || main.kind == "idx") deduped
+      else {
+        val (df, del, idx) = dynamicRoute(schema, table, m, deduped.head.frame,
+          deduped.tail.find(_.kind == "delete").map(_.frame), main.kind,
+          fold = compaction, reset = !keepExisting && !compaction)
+        // routing drops tombstones of keys that have no residence and
+        // adds the old residence's tombstone of each cross-partition move
+        deduped.head.copy(frame = df, index = idx) +:
+          (del.map(Leg("-del", "delete", _)).toSeq ++
+            deduped.tail.filter(_.kind != "delete"))
+      }
     // Full-fold commits — index-only fold, compaction, overwrite reset —
     // record the ENTIRE live key set in their own dir: the manifest's
     // dynIdx node is rebuilt to that one flag (stale flags on surviving
     // dirs would double-count keys) and prior index-only dirs leave the
     // file list (their bytes reclaim on expiration).
     val dynIdxReplace = dynamicBucket &&
-      (kind == "idx" || compaction || !keepExisting)
-    def write(frame: DataFrame, toDir: String, frameKind: String): Unit = {
-      val (toWrite0, bucketPart) =
-        if (frameKind == "idx") (frame, Seq.empty) // no rows, no layout
-        // DV sidecars are (file, pos) lists with no key columns — they
-        // never take the bucket layout (a PK DV build on a bucketed
-        // table would otherwise try to hash absent key columns).
-        // Changelog dirs stay flat too: they are consumed whole-range,
-        // never bucket-routed.
-        else if (frameKind == "dv" || frameKind == "cl") (frame, Seq.empty)
-        else buckets match {
-          case Some(-1) => (frame, Seq(BucketCol)) // pre-routed via the hash index
-          case Some(n) =>
-            (frame.withColumn(BucketCol, bucketExpr(primaryKey(m), n)), Seq(BucketCol))
-          case None => (frame, Seq.empty)
-        }
-      val parted =
-        (if (frameKind == "data") partitionColumns(m) else Seq.empty) ++ bucketPart
-      // Cluster the batch by its physical layout keys before a bucketed
-      // write: without this, EVERY task writes a file into every
-      // (partition, bucket) it holds rows for — tasks × buckets files
-      // per commit (a 1000-task batch into a 4096-bucket table would
-      // land 4M tiny files). One delta-sized shuffle caps it at ~one
-      // file per touched leaf dir, which is also Paimon's per-bucket
-      // writer grouping. Plain partitioned tables (no bucket) keep the
-      // narrow write — their file count is bounded by tasks × live
-      // partitions of the batch, the standard Spark trade.
-      val toWrite = if (bucketPart.nonEmpty) toWrite0.repartition(parted.map(col): _*)
-        else toWrite0
-      // DV sidecar frames stay parquet regardless of the table's data
-      // format (position lists, not data)
-      val fmt = if (frameKind == "dv") "parquet" else fileFormat(m)
-      // ORC/AVRO DV tables: stamp the write-time positional identity
-      // into every data file (see [[OrcPosCol]] — neither reader has a
-      // `_metadata.row_index`; identity only needs to be stable and
-      // unique, and monotonically_increasing_id is partition-prefixed
-      // unique within the commit's job). Data files only: tombstones
-      // and sidecars are never DV victims.
-      val stamped = if (frameKind == "data" && fmt != "parquet" &&
-          deletionVectors(m))
-        toWrite.withColumn(OrcPosCol,
-          org.apache.spark.sql.functions.monotonically_increasing_id())
-      else toWrite
-      val writer0 = stamped.write.mode("overwrite").format(providerFor(fmt))
-      // Paimon's file.compression: per-table codec for data files
-      // (engine default — snappy — when unset). DV sidecars keep the
-      // default; they are position lists, not data.
-      val writer = fileCompression(m).filter(_ => frameKind != "dv")
-        .map(c => writer0.option("compression", c)).getOrElse(writer0)
-      (if (parted.nonEmpty) writer.partitionBy(parted: _*) else writer)
-        .save(new Path(tablePath(schema, table), toDir).toString)
-    }
-    write(routedDf, dir, kind)
-    // a merge commit pairs the data dir with a tombstone dir inside ONE
-    // snapshot (same ordinal `$id`): updates+inserts and deletes become
-    // visible atomically, never as two observable states
-    routedDel.foreach(write(_, s"$dir-del", "delete"))
-    // an append-only UPDATE pairs the data dir with a DV dir the same way
-    dvDf.foreach(write(_, s"$dir-dv", "dv"))
+      (main.kind == "idx" || compaction || !keepExisting)
+    val staged = routed.map(l => l.staged.getOrElse {
+      writeDir(schema, table, m, l.frame, dir + l.suffix, l.kind, buckets)
+      dir + l.suffix
+    })
     // Write-time changelog materialization (changelog-producer): the
     // snapshot pairs a `-cl` dir of row-kinded changelog rows — consumers
     // then read O(changelog files) per batch instead of paying the
     // before-image resolve (see readChangelogFull's file-served path).
+    // An explicit `-cl` leg (full-compaction producer) is passed in.
     val clProducerMode = changelogProducer(m)
-    val clPair: Option[(DataFrame, Option[Long])] =
-      changelogDf.map { case (f, from) => (f, Some(from): Option[Long]) }
-        .orElse {
-          if ((clProducerMode == "input" || clProducerMode == "lookup") &&
-              primaryKey(m).nonEmpty && keepExisting && !compaction &&
-              (kind == "data" || kind == "delete"))
-            producerChangelog(schema, table, m, clProducerMode,
-              if (kind == "data") Some(dir) else None,
-              if (routedDel.isDefined) Some(s"$dir-del")
-              else if (kind == "delete") Some(dir) else None)
-              .map((_, None: Option[Long]))
-          else None
-        }
-    clPair.foreach { case (f, _) => write(f, s"$dir-cl", "cl") }
+    def stagedOf(kind: String) = Some(routed.indexWhere(_.kind == kind))
+      .filter(_ >= 0).map(staged)
+    val produced: Option[Leg] =
+      if (!legs.exists(_.kind == "cl") &&
+          (clProducerMode == "input" || clProducerMode == "lookup") &&
+          primaryKey(m).nonEmpty && keepExisting && !compaction &&
+          (main.kind == "data" || main.kind == "delete"))
+        producerChangelog(schema, table, m, clProducerMode,
+          stagedOf("data"), stagedOf("delete")).map(Leg("-cl", "cl", _))
+      else None
+    produced.foreach(l => writeDir(schema, table, m, l.frame, dir + l.suffix, l.kind, buckets))
+    val all = routed ++ produced
+    // where each leg's bytes sit: staging at first, then its claimed dir
+    val at = (staged ++ produced.map(dir + _.suffix)).toArray
+    // Dynamic-bucket index routing and a lookup changelog's before
+    // images are derived from THIS head: such a commit carries its basis
+    // even when the caller passed none.
+    val fence = basis.orElse(Some(commitVersion(m)).filter(_ =>
+      dynamicBucket || (produced.isDefined && clProducerMode == "lookup")))
     // The files' write-time schema version — pinned BEFORE any conflict
     // rebase (a concurrent DDL may bump the current version; these bytes
     // are at THIS version and map forward by field id like any other dir).
     val sv = m.get("currentSchemaVersion").asInt()
-    // Zone maps: aggregate the new dir's footer stats into the manifest
+    // Zone maps: aggregate each data leg's footer stats into the manifest
     // (Paimon manifests carry per-file field stats the same way;
     // TrinoMetadataBase.applyFilter prunes splits with them). Dirs are
     // immutable, so this runs exactly once per dir. The footer reads
     // run in a DISTRIBUTED job (one driver listing, executor-side
     // footers), so a bulk load landing 10⁴–10⁵ files in one snapshot
     // never stalls the commit on sequential driver round-trips; per-FILE
-    // zones ride along for file-granular skipping. Data dirs only —
+    // zones ride along for file-granular skipping. Data legs only —
     // tombstone dirs are never zone-pruned (MoR must see every delta).
-    // Parquet AND ORC footers both carry min/max/null counts (r14 closed
-    // the ORC gap); AVRO files carry none, so their stats are collected
-    // from the DATA in the same distributed job shape (r15 — Paimon's
-    // writer-side SimpleStatsCollector is format-independent the same
-    // way), feeding identical sidecars: avro tables zone-prune and
-    // metadata-count like parquet.
-    val stats = if (kind == "data")
-      FileStats.collectWithFiles(spark, fs,
-        new Path(tablePath(schema, table), dir), df.schema, fileFormat(m))
-    else None
+    // Parquet AND ORC footers both carry min/max/null counts; AVRO
+    // files carry none, so their stats are collected from the DATA in
+    // the same distributed job shape (Paimon's writer-side
+    // SimpleStatsCollector is format-independent the same way), feeding
+    // identical sidecars: avro tables zone-prune and metadata-count like
+    // parquet.
+    //
     // Bloom-filter file index (see [[BloomIndex]]): one distributed job
     // over the dir just written, bitsets sized from the footer row counts
     // the zone collection produced. The sidecar lands INSIDE the staging
     // dir, so the ordinal claim-rename moves data and index atomically;
-    // the manifest entry below carries only {token, cols}.
-    val bloomEntry: Option[(String, Seq[String])] =
-      if (kind == "data" && bloomColsOf(m).nonEmpty)
-        stats.flatMap { case (_, fileZones) =>
-          BloomIndex.build(spark, fs, new Path(tablePath(schema, table), dir),
-            df.schema, bloomColsOf(m),
-            fileZones.map { case (r, s) => r -> s.rows },
-            provider = providerFor(fileFormat(m)))
-            .map(cols => (java.util.UUID.randomUUID().toString, cols))
-        }
-      else None
+    // the manifest entry carries only {token, cols}.
+    //
     // Hierarchical manifest tier (Paimon's snapshot → manifest-list →
     // manifest-file shape): the per-FILE zone payload — the dominant,
     // O(files × cols) share of commit metadata — lands as an immutable
-    // `.zones.json` sidecar INSIDE the staging dir, so the ordinal
-    // claim-rename publishes data and zones atomically and the head
-    // manifest carries only the small dir-level aggregate plus this
-    // token. Commit metadata writes are O(this commit), never O(table);
-    // reads load sidecars lazily per dir, cached by token (fresh per
-    // build, so an ordinal reused after rollback never serves stale
-    // zones).
-    val zoneToken: Option[String] = stats.flatMap { case (_, fileZones) =>
-      if (fileZones.isEmpty) None
-      else Some(writeZoneSidecar(
-        new Path(tablePath(schema, table), dir), fileZones))
+    // `.zones.json` sidecar INSIDE the staging dir, and the head manifest
+    // carries only the small dir-level aggregate plus this token. Commit
+    // metadata writes are O(this commit), never O(table); reads load
+    // sidecars lazily per dir, cached by token (fresh per build, so an
+    // ordinal reused after rollback never serves stale zones).
+    val legStats = all.indices.filter(all(_).kind == "data").flatMap { i =>
+      val path = new Path(tablePath(schema, table), at(i))
+      // the caller's columns: routing adds the dynamic bucket column
+      val sch = legs.find(_.suffix == all(i).suffix).get.frame.schema
+      FileStats.collectWithFiles(spark, fs, path, sch, fileFormat(m)).map {
+        case (ds, fileZones) =>
+          val bloom = if (bloomColsOf(m).isEmpty) None
+            else BloomIndex.build(spark, fs, path, sch, bloomColsOf(m),
+                fileZones.map { case (r, s) => r -> s.rows },
+                provider = providerFor(fileFormat(m)))
+              .map(cols => (java.util.UUID.randomUUID().toString, cols))
+          val zoneToken = if (fileZones.isEmpty) None
+            else Some(writeZoneSidecar(path, fileZones))
+          (all(i).suffix, ds, zoneToken, bloom)
+      }
     }
     // Dynamic-bucket index delta: written AFTER the zone/bloom passes
     // (their recursive file walks must see only data files), INSIDE the
-    // staging dir so the claim-rename publishes data and index
-    // atomically. Hash-sorted and range-partitioned so point lookups
-    // push `__kh = v` into the parquet scan.
-    val dynIdxKeys: Option[Long] = dynIdxDelta.map { case (delta, keys) =>
+    // main dir so the claim-rename publishes data and index atomically.
+    // Hash-sorted and range-partitioned so point lookups push `__kh = v`
+    // into the parquet scan.
+    val dynIdxKeys: Option[Long] = routed.head.index.map { case (delta, keys) =>
       val parts = math.min(32L, (keys - 1) / 4000000L + 1).toInt
       val sorted = if (parts == 1) delta.coalesce(1).sortWithinPartitions("__kh")
         else delta.repartitionByRange(parts, col("__kh")).sortWithinPartitions("__kh")
       sorted.write.mode("overwrite").parquet(
-        new Path(new Path(tablePath(schema, table), dir), DynIdxDir).toString)
+        new Path(new Path(tablePath(schema, table), at(0)), DynIdxDir).toString)
       keys
     }
     commitTestHook()
+    val fileLegs = all.filter(_.kind != "cl")
     /** Build the snapshot entry against manifest `mm` and CAS it in. */
     def land(mm: ObjectNode, landId: Long, landDir: String): Unit = {
       val sn2 = mm.get("snapshots").asInstanceOf[ArrayNode]
       val lastTs = if (sn2.size() == 0) 0L
         else sn2.get(sn2.size() - 1).get("timestampMillis").asLong()
-      stats.foreach { case (ds, _) =>
+      legStats.foreach { case (suffix, ds, zoneToken, _) =>
         val statsNode =
           if (mm.has("dirStats")) mm.get("dirStats").asInstanceOf[ObjectNode]
           else mm.putObject("dirStats")
         // head carries the dir-level aggregate (the manifest-list's
         // partition-stats analog) + the sidecar token; per-file zones
         // stay in the dir's immutable `.zones.json`
-        val dn = statsNode.putObject(landDir)
+        val dn = statsNode.putObject(landDir + suffix)
         FileStats.toJson(dn, ds)
         zoneToken.foreach(dn.put("filesExt", _))
       }
@@ -1036,16 +987,23 @@ class GraftCatalog(private[sources] val spark: SparkSession,
           filesOf(sn2.get(sn2.size() - 1))
             .filter(_.kind == "idx").map(_.dir).toSet
         else Set.empty
-      val allReplaced = replacedDirs ++ droppedIdxDirs
+      val allReplaced = droppedIdxDirs ++ (inherit match {
+        case InheritAllExcept(dirs) => dirs
+        case _ => Set.empty[String]
+      })
+      val retired = inherit match {
+        case InheritRetiring(bs) => bs
+        case _ => Set.empty[Int]
+      }
       val prevFiles: Seq[FileEntry] = {
         val inherited =
           if (keepExisting && sn2.size() > 0)
             filesOf(sn2.get(sn2.size() - 1))
               .filterNot(fe => allReplaced.contains(fe.dir))
           else Seq.empty
-        if (excludeBucketsFromPrior.isEmpty) inherited
+        if (retired.isEmpty) inherited
         else inherited.map(fe => fe.copy(excludeBuckets =
-          (fe.excludeBuckets ++ excludeBucketsFromPrior).distinct.sorted))
+          (fe.excludeBuckets ++ retired).distinct.sorted))
       }
       // Delta basis for the serialized form: an additive commit's file
       // list is prev ++ added, so the head stores {baseId, added}; a
@@ -1077,8 +1035,8 @@ class GraftCatalog(private[sources] val spark: SparkSession,
       sn.put("commitKind",
         if (compaction) "compact"
         else if (!keepExisting) "overwrite"
-        else if (routedDel.isDefined || dvDf.isDefined) "merge"
-        else if (kind == "delete" || kind == "dv") "delete"
+        else if (fileLegs.size > 1) "merge"
+        else if (main.kind == "delete" || main.kind == "dv") "delete"
         else "append")
       // Deletion-vector index: which data files the new DV dir touches and
       // how many positions it deletes — the manifest-side summary that lets
@@ -1088,37 +1046,39 @@ class GraftCatalog(private[sources] val spark: SparkSession,
       dvIndexEntry.foreach { case (files, rows) =>
         val idx = if (mm.has("dvIndex")) mm.get("dvIndex").asInstanceOf[ObjectNode]
           else mm.putObject("dvIndex")
-        val e = idx.putObject(if (dvDf.isDefined) s"$landDir-dv" else landDir)
+        val e = idx.putObject(landDir + all.find(_.kind == "dv").fold("")(_.suffix))
         e.put("rows", rows)
         val fa = e.putArray("files")
         files.foreach(fa.add)
       }
       // Changelog-producer registration: the `-cl` dir, its write-time
       // schema version, and its coverage link (the snapshot its rows
-      // change FROM — the previous head unless the producer passed an
-      // explicit range, as full-compaction does).
-      clPair.foreach { case (_, explicitFrom) =>
+      // change FROM — the previous head unless the leg names an explicit
+      // range, as full-compaction does).
+      all.find(_.kind == "cl").foreach { l =>
         // the new snapshot is already appended — the previous head sits
         // one element back
         val prevId = if (sn2.size() < 2) 0L
           else sn2.get(sn2.size() - 2).get("id").asLong()
         val cn = if (mm.has("changelog")) mm.get("changelog").asInstanceOf[ObjectNode]
           else mm.putObject("changelog")
-        val e = cn.putObject(s"$landDir-cl")
+        val e = cn.putObject(landDir + l.suffix)
         e.put("id", landId)
         e.put("ver", sv)
-        e.put("from", explicitFrom.getOrElse(prevId))
+        e.put("from", l.from.getOrElse(prevId))
       }
       // Bloom-index pointer: which columns this dir's sidecar indexes,
       // plus a cache token (fresh per build — an ordinal reused after
       // rollback never serves a stale cached index).
-      bloomEntry.foreach { case (token, bcols) =>
-        val bn = if (mm.has("bloomIdx")) mm.get("bloomIdx").asInstanceOf[ObjectNode]
-          else mm.putObject("bloomIdx")
-        val e = bn.putObject(landDir)
-        e.put("token", token)
-        val ca = e.putArray("cols")
-        bcols.foreach(ca.add)
+      legStats.foreach { case (suffix, _, _, bloom) =>
+        bloom.foreach { case (token, bcols) =>
+          val bn = if (mm.has("bloomIdx")) mm.get("bloomIdx").asInstanceOf[ObjectNode]
+            else mm.putObject("bloomIdx")
+          val e = bn.putObject(landDir + suffix)
+          e.put("token", token)
+          val ca = e.putArray("cols")
+          bcols.foreach(ca.add)
+        }
       }
       // Dynamic-bucket index pointer: this dir carries a `.dbidx` delta
       // with that many key assignments — readDynamicIndex unions exactly
@@ -1140,9 +1100,8 @@ class GraftCatalog(private[sources] val spark: SparkSession,
         }
       }
       val fArr = sn.putArray("files")
-      val added = FileEntry(landDir, sv, kind, retract = retractDir) +:
-        (routedDel.map(_ => FileEntry(s"$landDir-del", sv, "delete")).toSeq ++
-          dvDf.map(_ => FileEntry(s"$landDir-dv", sv, "dv")).toSeq)
+      val added = fileLegs.map(l =>
+        FileEntry(landDir + l.suffix, sv, l.kind, retract = l.retract))
       (prevFiles ++ added).foreach(addEntry(fArr, _))
       baseId.foreach { b =>
         sn.put("baseId", b)
@@ -1152,12 +1111,12 @@ class GraftCatalog(private[sources] val spark: SparkSession,
           val rArr = sn.putArray("removed")
           allReplaced.toSeq.sorted.foreach(rArr.add)
         }
-        if (excludeBucketsFromPrior.nonEmpty) {
+        if (retired.nonEmpty) {
           // O(1) delta for a per-bucket compaction: inflate applies the
           // exclusion to every INHERITED entry instead of re-serializing
           // the whole list with per-entry `xb` fields.
           val xArr = sn.putArray("xbuckets")
-          excludeBucketsFromPrior.toSeq.sorted.foreach(xArr.add)
+          retired.toSeq.sorted.foreach(xArr.add)
         }
       }
       streamBatchId.foreach(b => mm.put("lastStreamBatchId", b))
@@ -1166,42 +1125,27 @@ class GraftCatalog(private[sources] val spark: SparkSession,
     // Optimistic concurrency (Paimon's commit protocol), two fences:
     //
     //  1. DIR CLAIM — an exclusive rename (fails if the target exists)
-    //     moves the staging dir to `snap-<id>`. Losing the claim means a
-    //     concurrent writer took that ordinal: re-read the manifest,
-    //     target the next one. No writer ever deletes or renames onto
-    //     another's dir.
+    //     moves each leg's staging dir to `snap-<id><suffix>`. Losing a
+    //     claim means a concurrent writer took that ordinal: re-read the
+    //     manifest, target the next one. No writer ever deletes or
+    //     renames onto another's dir.
     //  2. MANIFEST CAS — writeManifest detects a concurrent commit
     //     between our manifest read and write.
     //
-    // On either conflict, ADDITIVE commits — appends, upserts, CDC merge
-    // batches — rebase and retry: the dir moves to the next free ordinal
-    // and the snapshot entry is rebuilt on the new head (an upsert
-    // rebased later keeps latest-wins semantics: its versions simply
-    // carry the later ordinal). Commits whose CONTENT was derived from
-    // the old head — overwrite, compaction, row-level deletes — abort
-    // with the conflict instead: their bytes are stale against the
-    // concurrent commit (Paimon aborts conflicting compactions the same
-    // way); the caller re-runs against the new head. An aborted attempt
-    // leaves only an unreferenced dir (never a dangling manifest),
-    // harmless until [[sweepOrphanDirs]] reclaims it (plain expiration
-    // can't: it only deletes dirs that dropped snapshot entries name).
-    // dvDf content (file, pos victims) is derived from the basis head —
-    // never rebaseable, like standalone DV deletes.
-    // Dynamic-bucket commits are never rebaseable: their routing AND the
-    // index delta were derived from the head's index — a concurrent
-    // commit may have assigned the same new keys to different buckets or
-    // consumed the capacity this batch filled, so rebasing would corrupt
-    // the key→bucket contract. Single writer per dynamic table, as in
-    // Paimon's dynamic-bucket assigner; conflicts abort loudly.
-    // A lookup-produced changelog's before images were resolved against
-    // THIS head — a rebase would publish stale -U rows, so those commits
-    // conflict-abort like other derived-content commits.
-    val retryable = keepExisting && kind == "data" && !compaction &&
-      dvDf.isEmpty && replacedDirs.isEmpty && !dynamicBucket &&
-      !(clPair.isDefined && clProducerMode == "lookup")
-    val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-      fs.makeQualified(tablePath(schema, table)).toUri,
-      spark.sparkContext.hadoopConfiguration)
+    // On either conflict, basis-free commits — appends, upserts, CDC
+    // merge batches — rebase and retry: the dirs move to the next free
+    // ordinal and the snapshot entry is rebuilt on the new head (an
+    // upsert rebased later keeps latest-wins semantics: its versions
+    // simply carry the later ordinal). A commit with a basis aborts
+    // instead: its bytes are stale against the concurrent commit (Paimon
+    // aborts conflicting compactions the same way), and a claim lost
+    // while the head still sits at the basis means another writer (or a
+    // dead attempt's leftover) owns that dir. The caller re-runs. An
+    // aborted attempt leaves only unreferenced dirs (never a dangling
+    // manifest), harmless until [[sweepOrphanDirs]] reclaims them (plain
+    // expiration can't: it only deletes dirs that dropped snapshot
+    // entries name).
+    val fc = fcFor(tablePath(schema, table))
     // FS CONTRACT: the claim below requires an ATOMIC fail-if-exists
     // rename. HDFS gives this server-side; the per-table JVM lock closes
     // the local filesystem's check-then-rename window (local rename
@@ -1216,16 +1160,12 @@ class GraftCatalog(private[sources] val spark: SparkSession,
     // the protocol then fails LOUDLY instead of silently interleaving
     // two writers' dirs.
     val claimToken = java.util.UUID.randomUUID().toString
-    def writeClaimMarker(d: String): Unit = {
+    at.foreach { d =>
       val out = fs.create(
         new Path(tablePath(schema, table), s"$d/${GraftCatalog.ClaimMarker}"), true)
       try out.write(claimToken.getBytes(java.nio.charset.StandardCharsets.UTF_8))
       finally out.close()
     }
-    writeClaimMarker(dir)
-    if (routedDel.isDefined) writeClaimMarker(s"$dir-del")
-    if (dvDf.isDefined) writeClaimMarker(s"$dir-dv")
-    if (clPair.isDefined) writeClaimMarker(s"$dir-cl")
     // Reads the whole marker (a single read() may legally return short)
     // and retries transient IO errors, so only a genuine token mismatch —
     // never a short read or a blip — downgrades a successful rename into
@@ -1277,44 +1217,27 @@ class GraftCatalog(private[sources] val spark: SparkSession,
             "concurrent writer's files.")
       renamed
     }
-    def versionOf(n: ObjectNode): Long =
-      if (n.has("commitVersion")) n.get("commitVersion").asLong() else 0L
     var cur = m
-    var curDir = dir // staging at first, then the last claimed ordinal dir
-    var curDelDir = s"$dir-del"
-    var curDvDir = s"$dir-dv"
-    var curClDir = s"$dir-cl"
-    var landId = id
+    var landId = lastId + 1
     var attempts = 0
-    // Additive commits retry to a TIME budget, not a fixed attempt count
-    // (Paimon's commit retries until a configurable deadline): under an
-    // N-writer storm each round has one winner, so any fixed small bound
-    // is a liveness cliff for the slowest writer. The attempt cap is a
-    // runaway backstop only. Non-retryable commits throw on their first
-    // conflict inside the loop, so the budget never delays an abort.
+    // Basis-free commits retry to a TIME budget, not a fixed attempt
+    // count (Paimon's commit retries until a configurable deadline):
+    // under an N-writer storm each round has one winner, so any fixed
+    // small bound is a liveness cliff for the slowest writer. The attempt
+    // cap is a runaway backstop only. Commits with a basis throw on their
+    // first conflict inside the loop, so the budget never delays an abort.
     val retryDeadline = System.nanoTime() + commitRetryTimeoutMs * 1000000L
     while (attempts < 10000 &&
         (attempts == 0 || System.nanoTime() < retryDeadline)) {
       attempts += 1
       val target = s"snap-$landId"
-      var ok = true
-      if (curDir != target) {
-        ok = claim(curDir, target)
-        if (ok) curDir = target
+      // claim every leg's dir at this ordinal, in order; a lost claim
+      // leaves the remaining legs where they are
+      val lost = all.indices.find { i =>
+        val to = target + all(i).suffix
+        at(i) != to && { val won = claim(at(i), to); if (won) at(i) = to; !won }
       }
-      if (ok && routedDel.isDefined && curDelDir != s"$target-del") {
-        ok = claim(curDelDir, s"$target-del")
-        if (ok) curDelDir = s"$target-del"
-      }
-      if (ok && dvDf.isDefined && curDvDir != s"$target-dv") {
-        ok = claim(curDvDir, s"$target-dv")
-        if (ok) curDvDir = s"$target-dv"
-      }
-      if (ok && clPair.isDefined && curClDir != s"$target-cl") {
-        ok = claim(curClDir, s"$target-cl")
-        if (ok) curClDir = s"$target-cl"
-      }
-      if (ok) {
+      if (lost.isEmpty) {
         try {
           land(cur, landId, target)
           autoMaintain(schema, table, compaction)
@@ -1322,19 +1245,17 @@ class GraftCatalog(private[sources] val spark: SparkSession,
           return landId
         }
         catch { case e: java.util.ConcurrentModificationException =>
-          if (!retryable) throw e
+          if (fence.isDefined) throw e
         }
       }
-      // conflict — the dir claim or the manifest CAS was lost
+      // conflict — a dir claim or the manifest CAS was lost
       val fresh = readManifest(schema, table)
-      if (!retryable) {
-        if (versionOf(fresh) != versionOf(m))
-          throw new java.util.ConcurrentModificationException(
-            s"$schema.$table: a concurrent writer committed — this " +
-              "commit's content was derived from an older head; re-run")
-        throw new IllegalStateException(
-          s"$schema.$table: snapshot dir $target exists but is not in " +
-            "the manifest — a dead writer's leftover; remove it and re-run")
+      fence.foreach { b =>
+        if (commitVersion(fresh) != b) throw staleBasis(b, commitVersion(fresh))
+        throw new java.util.ConcurrentModificationException(
+          s"$schema.$table: ${lost.fold(target)(target + all(_).suffix)} is " +
+            "claimed by a concurrent writer (or a dead attempt's leftover) — " +
+            "re-run; sweepOrphanDirs reclaims orphan dirs")
       }
       cur = fresh
       val fsnaps = cur.get("snapshots").asInstanceOf[ArrayNode]
@@ -1358,25 +1279,77 @@ class GraftCatalog(private[sources] val spark: SparkSession,
   }
 
   /**
-   * Commit-time auto-expiration (Paimon's `snapshot.num-retained` /
-   * `snapshot.time-retained` behavior: every successful commit applies
-   * the table's retention policy, so retention is a TABLE CONTRACT, not
-   * an external cron). Entirely best-effort AFTER the snapshot landed —
-   * a retention failure (including a lost CAS against a concurrent
-   * writer, who will retrigger expiration with its own commit) never
-   * fails or retries the commit. All pins hold: tags, consumer-unread
-   * history, replay bases, the current snapshot.
+   * Write one frame as a snapshot dir (staging path `toDir`, relative to
+   * the table) in the table's physical layout for `kind`: data rows
+   * under the identity-partition columns, data and tombstones of
+   * bucketed PK tables under `__bucket=k` by key hash (`buckets`; -1 =
+   * pre-routed), in the table's file format and compression, with the
+   * write-time position stamp on ORC/AVRO deletion-vector tables. DV,
+   * changelog and index dirs stay flat. `lead` names extra leading
+   * partition columns carried by the frame — [[sortCompact]]'s
+   * `__range`, whose subdirs it then lands as separate legs.
    */
+  private[sources] def writeDir(schema: String, table: String, m: ObjectNode,
+      frame: DataFrame, toDir: String, kind: String, buckets: Option[Int],
+      lead: Seq[String] = Nil): Unit = {
+    val (toWrite0, bucketPart) =
+      // DV sidecars are (file, pos) lists with no key columns — they
+      // never take the bucket layout (a PK DV build on a bucketed
+      // table would otherwise try to hash absent key columns).
+      // Changelog dirs stay flat too: they are consumed whole-range,
+      // never bucket-routed. Index-only dirs carry no rows.
+      if (kind == "idx" || kind == "dv" || kind == "cl") (frame, Seq.empty)
+      else buckets match {
+        case Some(-1) => (frame, Seq(BucketCol)) // pre-routed via the hash index
+        case Some(n) =>
+          (frame.withColumn(BucketCol, bucketExpr(primaryKey(m), n)), Seq(BucketCol))
+        case None => (frame, Seq.empty)
+      }
+    val parted =
+      lead ++ (if (kind == "data") partitionColumns(m) else Seq.empty) ++ bucketPart
+    // Cluster the batch by its physical layout keys before a bucketed
+    // write: without this, EVERY task writes a file into every
+    // (partition, bucket) it holds rows for — tasks × buckets files
+    // per commit (a 1000-task batch into a 4096-bucket table would
+    // land 4M tiny files). One delta-sized shuffle caps it at ~one
+    // file per touched leaf dir, which is also Paimon's per-bucket
+    // writer grouping. Plain partitioned tables (no bucket) keep the
+    // narrow write — their file count is bounded by tasks × live
+    // partitions of the batch, the standard Spark trade.
+    val toWrite = if (bucketPart.nonEmpty) toWrite0.repartition(parted.map(col): _*)
+      else toWrite0
+    // DV sidecar frames stay parquet regardless of the table's data
+    // format (position lists, not data)
+    val fmt = if (kind == "dv") "parquet" else fileFormat(m)
+    // ORC/AVRO DV tables: stamp the write-time positional identity
+    // into every data file (see [[OrcPosCol]] — neither reader has a
+    // `_metadata.row_index`; identity only needs to be stable and
+    // unique, and monotonically_increasing_id is partition-prefixed
+    // unique within the commit's job). Data files only: tombstones
+    // and sidecars are never DV victims.
+    val stamped = if (kind == "data" && fmt != "parquet" && deletionVectors(m))
+      toWrite.withColumn(OrcPosCol,
+        org.apache.spark.sql.functions.monotonically_increasing_id())
+    else toWrite
+    val writer0 = stamped.write.mode("overwrite").format(providerFor(fmt))
+    // Paimon's file.compression: per-table codec for data files
+    // (engine default — snappy — when unset). DV sidecars keep the
+    // default; they are position lists, not data.
+    val writer = fileCompression(m).filter(_ => kind != "dv")
+      .map(c => writer0.option("compression", c)).getOrElse(writer0)
+    (if (parted.nonEmpty) writer.partitionBy(parted: _*) else writer)
+      .save(new Path(tablePath(schema, table), toDir).toString)
+  }
 
   /** The atomicity primitive every protocol CAS (snapshot-dir claim,
-    * sortCompact range promotion, manifest version publish) goes
+    * manifest version publish) goes
     * through. Default: exclusive rename (HDFS/local). Swap in a
     * [[ConditionalPutCommitLock]] for S3-class stores where rename is
     * copy+delete — exclusivity then comes from the store's conditional
     * put, not the filesystem. */
   private[graft] var commitLockImpl: CommitLock = ExclusiveRenameCommitLock
 
-  /** Retry budget for additive commits that lose the manifest CAS
+  /** Retry budget for basis-free commits that lose the manifest CAS
     * (Paimon's commit-retry deadline analog: `commit.retry-timeout`,
     * not a fixed attempt count). Test seam + deployment knob. */
   private[graft] var commitRetryTimeoutMs: Long = 120000L
@@ -1392,10 +1365,11 @@ class GraftCatalog(private[sources] val spark: SparkSession,
     * that into a loud error. */
   private[graft] var claimTestHook: () => Unit = () => ()
 
-  /** Test seam: runs after a DV delete's (file, pos) victims are derived,
-    * before the commit that lands them — the window where a concurrent
-    * compact/overwrite retires the very files the victims name. */
-  private[graft] var dvVictimsTestHook: () => Unit = () => ()
+  /** Test seam: runs at [[commit]] entry, before its manifest read and
+    * basis check — the window between a commit's content being derived
+    * (a DV delete's (file, pos) victims, a compaction's image) and its
+    * landing, where a concurrent writer can move the head. */
+  private[graft] var basisTestHook: () => Unit = () => ()
 
 
 
@@ -1508,6 +1482,17 @@ class GraftCatalog(private[sources] val spark: SparkSession,
       case Some(s) => resolveFrames(schema, table, m, filesOf(s))
         .getOrElse(emptyFrame(m))
     }
+  }
+
+  /** The head snapshot's merged image resolved from `m` alone — the plan
+    * [[read]] builds, pinned to one manifest read so a compaction can
+    * fence its commit on exactly that manifest's version. */
+  private[sources] def headImage(schema: String, table: String,
+      m: ObjectNode): DataFrame = {
+    val snaps = m.get("snapshots").asInstanceOf[ArrayNode]
+    (if (snaps.size() == 0) None
+    else resolveFrames(schema, table, m, filesOf(snaps.get(snaps.size() - 1))))
+      .getOrElse(emptyFrame(m))
   }
 
   /** Zone maps of every live dir (dir name → stats); empty map for
@@ -3008,11 +2993,10 @@ class GraftCatalog(private[sources] val spark: SparkSession,
             // same one-ordinal disjointness contract as mergeCommit
             require(data.join(dels, pk, "left_semi").isEmpty,
               "a key cannot be both written and deleted in one batch")
-            commit(schema, table, data, keepExisting = true,
-              deleteDf = Some(dels.select(pk.map(col): _*)),
-              retractDir = hasRetracts)
-          } else commit(schema, table, data, keepExisting = true,
-            retractDir = hasRetracts)
+            commit(schema, table, Seq(Leg("", "data", data, retract = hasRetracts),
+              Leg("-del", "delete", dels.select(pk.map(col): _*))))
+          } else commit(schema, table,
+            Seq(Leg("", "data", data, retract = hasRetracts)))
         }
         else if (mergeEngineOf(schema, table) == "partial-update") {
           // partial-update + remove-record-on-delete (r16): `-D` rows
@@ -3036,8 +3020,8 @@ class GraftCatalog(private[sources] val spark: SparkSession,
             val pk = primaryKey(m)
             require(ups.join(dels, pk, "left_semi").isEmpty,
               "a key cannot be both written and deleted in one batch")
-            commit(schema, table, ups, keepExisting = true,
-              deleteDf = Some(dels.select(pk.map(col): _*)))
+            commit(schema, table, Seq(Leg("", "data", ups),
+              Leg("-del", "delete", dels.select(pk.map(col): _*))))
           }
         }
         else {
@@ -3090,8 +3074,8 @@ class GraftCatalog(private[sources] val spark: SparkSession,
           .select((pk :+ sf).map(col): _*)
       case None => deleteKeys.select(pk.map(col): _*)
     }
-    commit(schema, table, upserts, keepExisting = true,
-      deleteDf = Some(delKeys),
+    commit(schema, table,
+      Seq(Leg("", "data", upserts), Leg("-del", "delete", delKeys)),
       streamBatchId = streamBatchId)
   }
 
@@ -3122,7 +3106,7 @@ class GraftCatalog(private[sources] val spark: SparkSession,
     // since no tombstone path is needed.
     if (tableOptions(schema, table).get("ignore-delete").contains("true")) {
       val ups = batch.filter(col(RowKindCol).isin("+I", "+U")).drop(RowKindCol)
-      return Some(commit(schema, table, ups, keepExisting = true,
+      return Some(commit(schema, table, Seq(Leg("", "data", ups)),
         streamBatchId = batchId))
     }
     val upserts = batch.filter(col(RowKindCol).isin("+I", "+U")).drop(RowKindCol)
@@ -3181,7 +3165,8 @@ class GraftCatalog(private[sources] val spark: SparkSession,
       (if (crossPartition(m)) partitionColumns(m) else Seq.empty)
     val victims = read(schema, table).filter(condition)
       .select((pk ++ extra).map(col): _*)
-    commit(schema, table, victims, keepExisting = true, kind = "delete")
+    commit(schema, table, Seq(Leg("", "delete", victims)),
+      basis = Some(commitVersion(m)))
   }
 
   /** Tombstone-commit the given victim KEYS (PK tables; the SQL
@@ -3204,7 +3189,8 @@ class GraftCatalog(private[sources] val spark: SparkSession,
         read(schema, table).join(victims.select(pk.map(col): _*), pk, "left_semi")
           .select((pk ++ sf.toSeq ++ parts).map(col): _*)
     }
-    commit(schema, table, keys, keepExisting = true, kind = "delete")
+    commit(schema, table, Seq(Leg("", "delete", keys)),
+      basis = Some(commitVersion(m)))
   }
 
 
@@ -3479,8 +3465,7 @@ class GraftCatalog(private[sources] val spark: SparkSession,
    */
   private[sources] def writeManifest(schema: String, table: String, m: ObjectNode): Unit = {
     val dir = tablePath(schema, table)
-    val basis = if (m.has("commitVersion")) m.get("commitVersion").asLong() else 0L
-    val version = basis + 1
+    val version = commitVersion(m) + 1
     m.put("commitVersion", version)
     val fc = fcFor(dir)
     val tmp = fs.makeQualified(new Path(dir,
@@ -3876,6 +3861,39 @@ object GraftCatalog {
     * are `-U`/`-D` retract inputs the field-wise fold must invert. */
   case class FileEntry(dir: String, schemaVersion: Int, kind: String,
       excludeBuckets: Seq[Int] = Nil, retract: Boolean = false)
+
+  /** One dir a [[GraftCatalog.commit]] lands, `snap-<id><suffix>`: `frame`
+    * written as `kind` (data / delete / dv / cl / idx). `retract` marks an
+    * aggregation-engine retract batch (data dirs carrying
+    * [[GraftCatalog.RetractCol]]); `from` is a changelog leg's explicit
+    * coverage start (default: the previous head); `index` is the
+    * dynamic-bucket index delta (rows, key count) the dir carries;
+    * `staged` names a staging dir (relative to the table) already holding
+    * the leg's rows, written by [[GraftCatalog.writeDir]]. */
+  final case class Leg(suffix: String, kind: String, frame: DataFrame,
+      retract: Boolean = false, from: Option[Long] = None,
+      index: Option[(DataFrame, Long)] = None, staged: Option[String] = None)
+
+  /** What a commit's snapshot keeps of the previous snapshot's file list. */
+  sealed trait Inherit
+  /** Every previous entry: appends, upserts, deletes. */
+  case object InheritAll extends Inherit
+  /** Nothing: overwrite, full compaction, rescale, sort-compaction. */
+  case object InheritNone extends Inherit
+  /** Every previous entry except these dirs (minor compaction, partition
+    * replacement, a DV build retiring tombstone dirs): older snapshots
+    * still reference them, and expiration reclaims them. */
+  final case class InheritAllExcept(dirs: Set[String]) extends Inherit
+  /** Every previous entry with these buckets retired (per-bucket
+    * compaction): the new dir carries their merged images, and the
+    * serialized delta stays O(1) (one `xbuckets` list, applied at
+    * inflate). Expiration reclaims retired subdirs. */
+  final case class InheritRetiring(buckets: Set[Int]) extends Inherit
+
+  /** The manifest's CAS version (0 before the first versioned write) —
+    * the basis a derived-content commit fences on. */
+  private[sources] def commitVersion(m: ObjectNode): Long =
+    m.path("commitVersion").asLong(0L)
 }
 
 /**

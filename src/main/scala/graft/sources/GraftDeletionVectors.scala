@@ -423,15 +423,13 @@ trait GraftDeletionVectors { self: GraftCatalog =>
       val files = perFile.map(_.getString(0)).toSeq.sorted
       val rows = perFile.map(_.getLong(1)).sum
       commit(schema, table,
-        victims.sortWithinPartitions(DvFileCol, DvPosCol),
-        keepExisting = true, kind = "dv",
-        compaction = true, // bytes re-indexed, no logical change: changelog skips it
-        dvIndexEntry = Some((files, rows)),
-        replacedDirs = delEs.map(_.dir).toSet,
+        Seq(Leg("", "dv", victims.sortWithinPartitions(DvFileCol, DvPosCol))),
+        InheritAllExcept(delEs.map(_.dir).toSet),
         // victims are (file, pos) pairs derived from THIS head — abort
         // if a concurrent commit moved it (same contract as deleteWhereDv)
-        basisVersion = Some(
-          if (m.has("commitVersion")) m.get("commitVersion").asLong() else 0L))
+        basis = Some(commitVersion(m)),
+        compaction = true, // bytes re-indexed, no logical change: changelog skips it
+        dvIndexEntry = Some((files, rows)))
     } finally { victims.unpersist(); () }
   }
 
@@ -471,15 +469,12 @@ trait GraftDeletionVectors { self: GraftCatalog =>
       if (perFile.isEmpty) return latest.get("id").asLong()
       val files = perFile.map(_.getString(0)).toSeq.sorted
       val rows = perFile.map(_.getLong(1)).sum
-      dvVictimsTestHook()
       commit(schema, table,
-        victims.sortWithinPartitions(DvFileCol, DvPosCol),
-        keepExisting = true, kind = "dv", dvIndexEntry = Some((files, rows)),
+        Seq(Leg("", "dv", victims.sortWithinPartitions(DvFileCol, DvPosCol))),
         // victims are (file, pos) pairs derived from THIS manifest's file
         // set — a concurrent compact/overwrite would retire those files,
         // so the commit must abort if the head moved (see commit()).
-        basisVersion = Some(
-          if (m.has("commitVersion")) m.get("commitVersion").asLong() else 0L))
+        basis = Some(commitVersion(m)), dvIndexEntry = Some((files, rows)))
     } finally { victims.unpersist(); () }
   }
 
@@ -528,13 +523,10 @@ trait GraftDeletionVectors { self: GraftCatalog =>
       // UPDATE semantics, same contract as the PK path above)
       val updated = matched.select(cur.fieldNames.toSeq.map(c =>
         assignments.get(c).map(_.as(c)).getOrElse(col(c))): _*)
-      dvVictimsTestHook()
-      commit(schema, table, updated, keepExisting = true, kind = "data",
-        dvDf = Some(matched.select(col(DvFileCol), col(DvPosCol))
-          .sortWithinPartitions(DvFileCol, DvPosCol)),
-        dvIndexEntry = Some((files, rows)),
-        basisVersion = Some(
-          if (m.has("commitVersion")) m.get("commitVersion").asLong() else 0L))
+      commit(schema, table, Seq(Leg("", "data", updated),
+          Leg("-dv", "dv", matched.select(col(DvFileCol), col(DvPosCol))
+            .sortWithinPartitions(DvFileCol, DvPosCol))),
+        basis = Some(commitVersion(m)), dvIndexEntry = Some((files, rows)))
     } finally { matched.unpersist(); () }
   }
 }

@@ -143,13 +143,11 @@ trait GraftDynamicBucket { self: GraftCatalog =>
       else dynIdxLatest(m, idx) // resolve moves; new ordinal re-stamps
     val keys = folded.count()
     if (keys == 0) return -1L
-    val basis = if (m.has("commitVersion")) m.get("commitVersion").asLong() else 0L
     val empty = spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
       currentSchema(schema, table))
-    commit(schema, table, empty, keepExisting = true, kind = "idx",
-      compaction = true, basisVersion = Some(basis),
-      dynIdxFold = Some((folded, keys)))
+    commit(schema, table, Seq(Leg("", "idx", empty, index = Some((folded, keys)))),
+      basis = Some(commitVersion(m)), compaction = true)
   }
 
   /** Latest index record per key of a cross-partition table — apply

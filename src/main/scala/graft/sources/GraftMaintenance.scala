@@ -172,29 +172,36 @@ trait GraftMaintenance { self: GraftCatalog =>
   /**
    * Compaction: rewrite the current snapshot's (possibly many, possibly
    * schema-heterogeneous) files into one fresh snapshot at the current
-   * schema — Paimon's small-file compaction, expressed as an ordinary
-   * overwrite commit. Old snapshots remain time-travelable.
+   * schema — Paimon's small-file compaction, expressed as a
+   * compaction-marked commit that inherits nothing. Old snapshots remain
+   * time-travelable.
+   *
+   * The image is resolved from ONE manifest read, and the commit carries
+   * that manifest's version as its basis: a commit landing anywhere
+   * after that read — while the image is planned or written — aborts
+   * the compaction with a ConcurrentModificationException instead of
+   * being dropped by it. The caller re-runs against the new head.
    */
   def compact(schema: String, table: String): Long = {
+    val m = readManifest(schema, table)
     // full-compaction changelog producer: this compaction carries the
     // accumulated row-kinded diff since the last carrier (Paimon's
     // full-compaction mode — the before-image resolve runs here, once,
     // and consumers read only files). The first compaction emits the
     // whole image as +I, exactly Paimon's initial full-compaction scan.
-    val m0 = readManifest(schema, table)
-    val cl: Option[(DataFrame, Long)] =
-      if (changelogProducer(m0) == "full-compaction" &&
-          primaryKey(m0).nonEmpty) {
-        val snaps = m0.get("snapshots").asInstanceOf[ArrayNode]
+    val cl: Option[Leg] =
+      if (changelogProducer(m) == "full-compaction" &&
+          primaryKey(m).nonEmpty) {
+        val snaps = m.get("snapshots").asInstanceOf[ArrayNode]
         val headId = if (snaps.size() == 0) 0L
           else snaps.get(snaps.size() - 1).get("id").asLong()
-        val from = changelogIndexFrom(m0).values.map(_._1).maxOption.getOrElse(0L)
-        if (headId > from)
-          Some((readChangelogFull(schema, table, from, headId), from))
+        val from = changelogIndexFrom(m).values.map(_._1).maxOption.getOrElse(0L)
+        if (headId > from) Some(Leg("-cl", "cl",
+          readChangelogFull(schema, table, from, headId), from = Some(from)))
         else None
       } else None
-    commit(schema, table, read(schema, table), keepExisting = false,
-      compaction = true, changelogDf = cl)
+    commit(schema, table, Leg("", "data", headImage(schema, table, m)) +: cl.toSeq,
+      InheritNone, basis = Some(commitVersion(m)), compaction = true)
   }
 
   /**
@@ -239,12 +246,12 @@ trait GraftMaintenance { self: GraftCatalog =>
     require(snaps.size() > 0, s"$schema.$table has no snapshots")
     if (filesOf(snaps.get(snaps.size() - 1)).exists(_.kind == "dv"))
       return compactBucketsDv(schema, table, buckets.distinct.sorted)
-    val basis = if (m.has("commitVersion")) m.get("commitVersion").asLong() else 0L
     val entries = filesOf(snaps.get(snaps.size() - 1))
     val img = bucketedResolve(schema, table, m, entries, n,
       onlyBuckets = Some(buckets.distinct.sorted)).getOrElse(emptyFrame(m))
-    commit(schema, table, img, keepExisting = true, compaction = true,
-      basisVersion = Some(basis), excludeBucketsFromPrior = buckets.toSet)
+    commit(schema, table, Seq(Leg("", "data", img)),
+      InheritRetiring(buckets.toSet), basis = Some(commitVersion(m)),
+      compaction = true)
   }
 
   /**
@@ -267,7 +274,7 @@ trait GraftMaintenance { self: GraftCatalog =>
       buckets: Seq[Int]): Long = {
     buildDeletionVectors(schema, table) // restore the covered invariant
     val m = readManifest(schema, table)
-    val basis = if (m.has("commitVersion")) m.get("commitVersion").asLong() else 0L
+    val basis = Some(commitVersion(m))
     val snaps = m.get("snapshots").asInstanceOf[ArrayNode]
     val entries = filesOf(snaps.get(snaps.size() - 1))
     val (dvEs, dataEs) = entries.partition(_.kind == "dv")
@@ -342,20 +349,18 @@ trait GraftMaintenance { self: GraftCatalog =>
         }
         if (!holdsBytes)
           return snaps.get(snaps.size() - 1).get("id").asLong()
-        return commit(schema, table, live.select(names.map(col): _*),
-          keepExisting = true, compaction = true,
-          excludeBucketsFromPrior = buckets.toSet,
-          basisVersion = Some(basis))
+        return commit(schema, table,
+          Seq(Leg("", "data", live.select(names.map(col): _*))),
+          InheritRetiring(buckets.toSet), basis, compaction = true)
       }
       val files = perFile.map(_.getString(0)).toSeq.sorted
       val rows = perFile.map(_.getLong(1)).sum
-      commit(schema, table, live.select(names.map(col): _*),
-        keepExisting = true, compaction = true,
-        dvDf = Some(live.select(col(DvFileCol), col(DvPosCol))
-          .sortWithinPartitions(DvFileCol, DvPosCol)),
-        dvIndexEntry = Some((files, rows)),
-        excludeBucketsFromPrior = buckets.toSet,
-        basisVersion = Some(basis))
+      commit(schema, table,
+        Seq(Leg("", "data", live.select(names.map(col): _*)),
+          Leg("-dv", "dv", live.select(col(DvFileCol), col(DvPosCol))
+            .sortWithinPartitions(DvFileCol, DvPosCol))),
+        InheritRetiring(buckets.toSet), basis, compaction = true,
+        dvIndexEntry = Some((files, rows)))
     } finally { live.unpersist(); () }
   }
 
@@ -446,9 +451,8 @@ trait GraftMaintenance { self: GraftCatalog =>
     val headId = if (snaps.size() == 0) 0L
       else snaps.get(snaps.size() - 1).get("id").asLong()
     if (old == newBuckets) return headId
-    val basis = if (m.has("commitVersion")) m.get("commitVersion").asLong() else 0L
-    commit(schema, table, read(schema, table), keepExisting = false,
-      compaction = true, basisVersion = Some(basis),
+    commit(schema, table, Seq(Leg("", "data", headImage(schema, table, m))),
+      InheritNone, basis = Some(commitVersion(m)), compaction = true,
       optionOverrides = Map("bucket" -> newBuckets.toString))
   }
 
@@ -465,8 +469,15 @@ trait GraftMaintenance { self: GraftCatalog =>
    * parquet row-group stats are tight too (scan-time skipping).
    *
    * One distributed job: repartitionByRange (a range shuffle) + in-task
-   * sort, written once via a staging dir whose range subdirs are
-   * renamed into per-range dirs driver-side (metadata-only moves).
+   * sort, written once through [[writeDir]] with `__range` as the
+   * leading partition column. Each `__range=i` subdir then lands through
+   * [[commit]] as its own data leg `snap-<id>-r<i>`, so range dirs get
+   * the same zone stats, bloom index, claim marker, file format,
+   * compression, position stamp and post-commit retention as every
+   * other commit. The commit carries the version of the manifest this
+   * call read first as its basis: a concurrent commit, or a range dir
+   * claimed by another writer, aborts the sort-compaction with a
+   * ConcurrentModificationException and never deletes that writer's dir.
    * With `zorder = true`, clustering is by the interleaved-bit z-value
    * of the `by` columns instead of their lexicographic order — every
    * listed dimension gets a tight per-dir zone (multi-dimensional data
@@ -494,15 +505,6 @@ trait GraftMaintenance { self: GraftCatalog =>
         "use compact() instead")
     val cur = currentSchema(schema, table)
     by.foreach(c => require(cur.fieldNames.contains(c), s"unknown column $c"))
-    val snaps = m.get("snapshots").asInstanceOf[ArrayNode]
-    val lastId = if (snaps.size() == 0) 0L else snaps.get(snaps.size() - 1).get("id").asLong()
-    val lastTs = if (snaps.size() == 0) 0L else snaps.get(snaps.size() - 1).get("timestampMillis").asLong()
-    val id = lastId + 1
-    // UNIQUE per-attempt staging dir (same rule as commit()'s): two
-    // concurrent sortCompacts at the same head must never share or
-    // clobber each other's staging bytes.
-    val staging = new Path(tablePath(schema, table),
-      s".staging-sort-${java.util.UUID.randomUUID()}")
     // Linear order: range-partition + sort by the columns themselves.
     // Z-order: range-partition + sort by the interleaved-bit z-value, so
     // EVERY `by` column gets a tight per-dir zone (a lexicographic sort
@@ -510,7 +512,7 @@ trait GraftMaintenance { self: GraftCatalog =>
     // alone would prune nothing). The z-value is a scratch column
     // computed from 16-bit quantized ranks (min/max from one agg job)
     // and dropped before write.
-    val img = read(schema, table)
+    val img = headImage(schema, table, m)
     val clustered =
       if (!zorder) img.repartitionByRange(ranges, by.map(col): _*)
         .sortWithinPartitions(by.map(col): _*)
@@ -521,76 +523,30 @@ trait GraftMaintenance { self: GraftCatalog =>
           .sortWithinPartitions(col("__z"))
           .drop("__z")
       }
+    // UNIQUE per-attempt staging dir: two concurrent sortCompacts at the
+    // same head never share or clobber each other's staging bytes.
     // __range leads the partition spec so each range subdir still nests
-    // the table's own col=value layout inside it (renamed dirs keep the
+    // the table's own col=value layout inside it (landed dirs keep the
     // identity-partition structure $partitions and pruning expect).
-    clustered
-      .withColumn("__range", org.apache.spark.sql.functions.spark_partition_id())
-      .write.mode("overwrite").format(providerFor(fileFormat(m)))
-      .partitionBy(("__range" +: partitionColumns(m)): _*)
-      .save(staging.toString)
-    // Promote each __range=i subdir to its own dir entry (rename = O(1)
-    // metadata per dir on HDFS/posix; object stores see a copy per file).
-    val rangeDirs = fs.listStatus(staging).filter(_.isDirectory)
-      .map(_.getPath.getName).filter(_.startsWith("__range="))
-      .sortBy(_.stripPrefix("__range=").toInt)
-    val sv = m.get("currentSchemaVersion").asInt()
-    // Promote each range subdir by the SAME exclusive-rename claim
-    // commit() uses: the rename fails if the target exists, so a
-    // concurrent sortCompact (or a dead attempt's leftover) at the same
-    // ordinal ABORTS instead of deleting dirs another writer may own —
-    // delete-then-rename here could silently replace a winner's promoted
-    // files and make its recorded zone maps wrong. An aborted attempt
-    // leaves only unreferenced dirs, reclaimed by sweepOrphanDirs.
-    val fcSort = org.apache.hadoop.fs.FileContext.getFileContext(
-      fs.makeQualified(tablePath(schema, table)).toUri,
-      spark.sparkContext.hadoopConfiguration)
-    val entries = rangeDirs.map { rd =>
-      val dir = s"snap-$id-r${rd.stripPrefix("__range=")}"
-      val dst = fs.makeQualified(new Path(tablePath(schema, table), dir))
-      val won = commitLockImpl.publishIfAbsent(fs, fcSort,
-        fs.makeQualified(new Path(staging, rd)), dst)
-      if (!won) {
-        try fs.delete(staging, true) catch { case _: java.io.IOException => () }
-        throw new java.util.ConcurrentModificationException(
-          s"$schema.$table: snap-$id-r* is claimed by a concurrent " +
-            "sortCompact (or a dead attempt's leftover) — re-run; orphan " +
-            "dirs are reclaimed by sweepOrphanDirs")
-      }
-      FileEntry(dir, sv, "data")
-    }.toSeq
-    fs.delete(staging, true)
-    val sn = snaps.addObject()
-    sn.put("id", id)
-    sn.put("timestampMillis", math.max(System.currentTimeMillis(), lastTs + 1))
-    sn.put("compaction", true) // rewrites bytes, not content: changelog skips it
-    sn.put("commitKind", "compact")
-    val fArr = sn.putArray("files")
-    entries.foreach { fe =>
-      val e = fArr.addObject(); e.put("dir", fe.dir); e.put("schemaVersion", fe.schemaVersion)
+    val staging = s".staging-sort-${java.util.UUID.randomUUID()}"
+    writeDir(schema, table, m,
+      clustered.withColumn("__range", spark_partition_id()),
+      staging, "data", buckets = None, lead = Seq("__range"))
+    try {
+      val rangeDirs = fs.listStatus(new Path(tablePath(schema, table), staging))
+        .filter(_.isDirectory).map(_.getPath.getName)
+        .filter(_.startsWith("__range=")).sortBy(_.stripPrefix("__range=").toInt)
+      // an empty image writes no range dir: land one empty leg instead
+      val legs = if (rangeDirs.isEmpty) Seq(Leg("-r0", "data", img))
+        else rangeDirs.toSeq.map(rd => Leg(s"-r${rd.stripPrefix("__range=")}",
+          "data", img, staged = Some(s"$staging/$rd")))
+      commit(schema, table, legs, InheritNone,
+        basis = Some(commitVersion(m)), compaction = true)
+    } finally {
+      // landed ranges moved out; an aborted attempt's unclaimed ones go
+      try fs.delete(new Path(tablePath(schema, table), staging), true)
+      catch { case _: java.io.IOException => () }
     }
-    // every format collects here since r15 — avro stats come from the
-    // data itself (FileStats.collectFromData), same sidecars
-    entries.foreach { fe =>
-      FileStats.collectWithFiles(spark, fs,
-          dirPath(schema, table, fe.dir), cur, fileFormat(m)).foreach {
-        case (ds, fileZones) =>
-          val statsNode =
-            if (m.has("dirStats")) m.get("dirStats").asInstanceOf[ObjectNode]
-            else m.putObject("dirStats")
-          // same hierarchical split as commit(): per-file zones go to the
-          // dir's immutable sidecar (written before the manifest CAS — a
-          // head that references it always finds it), head keeps the
-          // aggregate + token
-          val dn = statsNode.putObject(fe.dir)
-          FileStats.toJson(dn, ds)
-          if (fileZones.nonEmpty)
-            dn.put("filesExt", writeZoneSidecar(
-              dirPath(schema, table, fe.dir), fileZones))
-      }
-    }
-    writeManifest(schema, table, m)
-    id
   }
 
   /**
@@ -702,10 +658,9 @@ trait GraftMaintenance { self: GraftCatalog =>
     // between (e.g. a DV delete touching a candidate dir) would make the
     // rewrite stale — abort via the basis-version fence, same contract
     // as DV deletes.
-    val basis = if (m.has("commitVersion")) m.get("commitVersion").asLong() else 0L
-    Some(commit(schema, table, img, keepExisting = true, compaction = true,
-      replacedDirs = candidates.map(_.dir).toSet,
-      basisVersion = Some(basis)))
+    Some(commit(schema, table, Seq(Leg("", "data", img)),
+      InheritAllExcept(candidates.map(_.dir).toSet),
+      basis = Some(commitVersion(m)), compaction = true))
   }
 
   /**
@@ -821,7 +776,7 @@ trait GraftMaintenance { self: GraftCatalog =>
     require(pcols.nonEmpty, s"$schema.$table is not partitioned")
     val snaps = m.get("snapshots").asInstanceOf[ArrayNode]
     if (snaps.size() == 0) return (Seq.empty,
-      newData.map(d => commit(schema, table, d, keepExisting = true)))
+      newData.map(d => commit(schema, table, Seq(Leg("", "data", d)))))
     val allEntries = filesOf(snaps.get(snaps.size() - 1)).filter(_.kind == "data")
     // Candidate prefilter from the head's dir-level zones (partition
     // columns carry path-segment zones): a dir the evaluator PROVES
@@ -841,7 +796,7 @@ trait GraftMaintenance { self: GraftCatalog =>
       case None => allEntries
     }
     if (entries.isEmpty) return (Seq.empty,
-      newData.map(d => commit(schema, table, d, keepExisting = true)))
+      newData.map(d => commit(schema, table, Seq(Leg("", "data", d)))))
     // live partition paths per dir: one recursive metadata listing
     val dirParts: Map[String, Set[String]] = entries.map { fe =>
       val basePath = dirPath(schema, table, fe.dir)
@@ -862,7 +817,7 @@ trait GraftMaintenance { self: GraftCatalog =>
     }.toMap
     val allParts = dirParts.values.flatten.toSet.toSeq.sorted
     if (allParts.isEmpty) return (Seq.empty,
-      newData.map(d => commit(schema, table, d, keepExisting = true)))
+      newData.map(d => commit(schema, table, Seq(Leg("", "data", d)))))
     // Evaluate `where` over the distinct partition tuples, typed exactly
     // as Spark partition discovery types them: unescape the path value,
     // NULL for the default-partition token, explicit cast to the
@@ -887,10 +842,9 @@ trait GraftMaintenance { self: GraftCatalog =>
     val expired = typed.filter(where).select("__part")
       .collect().map(_.getString(0)).toSet
     if (expired.isEmpty) return (Seq.empty,
-      newData.map(d => commit(schema, table, d, keepExisting = true)))
+      newData.map(d => commit(schema, table, Seq(Leg("", "data", d)))))
     val affected = entries.filter(fe => dirParts(fe.dir).exists(expired.contains))
     val mixed = affected.filter(fe => !dirParts(fe.dir).forall(expired.contains))
-    val basis = if (m.has("commitVersion")) m.get("commitVersion").asLong() else 0L
     // Survivor filter keeps null-predicate rows: a partition `where`
     // cannot decide must NOT silently vanish from a rewritten dir.
     val keep = org.apache.spark.sql.functions.not(
@@ -905,9 +859,9 @@ trait GraftMaintenance { self: GraftCatalog =>
       case (None, Some(b)) => b
       case (None, None) => emptyFrame(m)
     }
-    val sid = commit(schema, table, img, keepExisting = true,
-      replacedDirs = affected.map(_.dir).toSet,
-      basisVersion = Some(basis))
+    val sid = commit(schema, table, Seq(Leg("", "data", img)),
+      InheritAllExcept(affected.map(_.dir).toSet),
+      basis = Some(commitVersion(m)))
     (expired.toSeq.sorted, Some(sid))
   }
 

@@ -33,7 +33,7 @@ trait GraftStreamingOps { self: GraftCatalog =>
   def appendStreamBatch(schema: String, table: String, df: DataFrame,
       batchId: Long): Boolean = {
     if (batchId <= lastStreamBatchId(schema, table)) false
-    else { commit(schema, table, df, keepExisting = true, streamBatchId = Some(batchId)); true }
+    else { commit(schema, table, Seq(Leg("", "data", df)), streamBatchId = Some(batchId)); true }
   }
 
   /**
@@ -155,10 +155,7 @@ trait GraftStreamingOps { self: GraftCatalog =>
               val m = readManifest(schema, dimTable)
               val head = chooseSnapshot(m, schema, dimTable, None, None)
                 .map(_.get("id").asLong()).getOrElse(0L)
-              val cv =
-                if (m.has("commitVersion")) m.get("commitVersion").asLong()
-                else 0L
-              val dimKey = (head, cv)
+              val dimKey = (head, commitVersion(m))
               val dim0 = cachedDim.get() match {
                 case Some((k, df)) if k == dimKey => df
                 case stale =>

@@ -12,8 +12,9 @@ import graft.sources.GraftCatalog
  * commits whose content was derived from the old head — compaction,
  * overwrite, row-level deletes — abort with the conflict instead of
  * silently dropping the other writer's snapshot. The deterministic
- * interleaving uses the catalog's commitTestHook seam (runs between the
- * data write and the manifest CAS).
+ * interleavings use the catalog's commitTestHook seam (runs between the
+ * data write and the manifest CAS) and basisTestHook seam (runs at
+ * commit entry, after a derived-content commit planned its content).
  */
 class ConcurrentCommitSpec extends SparkSpecBase {
 
@@ -115,13 +116,13 @@ class ConcurrentCommitSpec extends SparkSpecBase {
     // the compact lands AFTER the delete derived its (file, pos) victims
     // but BEFORE its commit — the victims name files the compact retires,
     // so landing them would silently lose the delete (rows resurrect)
-    gc.dvVictimsTestHook = () => { other.compact("db", "tdv"); () }
+    gc.basisTestHook = () => { other.compact("db", "tdv"); () }
     try {
       val e = intercept[java.util.ConcurrentModificationException] {
         gc.deleteWhere("db", "tdv", col("id") <= 5)
       }
       assert(e.getMessage.contains("derived"))
-    } finally gc.dvVictimsTestHook = () => ()
+    } finally gc.basisTestHook = () => ()
     // nothing was lost or half-applied: full image intact, count exact
     assert(gc.read("db", "tdv").count() === 20)
     assert(gc.countRows("db", "tdv") === Some(20L))
@@ -151,6 +152,50 @@ class ConcurrentCommitSpec extends SparkSpecBase {
     assert(marker.delete() && claimed.delete())
     gc.sortCompact("db", "tsc", Seq("id"), ranges = 4)
     assert(gc.read("db", "tsc").count() === 100)
+  }
+
+  test("compact aborts when an append lands while it plans; the append " +
+      "survives") {
+    gc.createTable("db", "tcr", rows(0, 0).schema)
+    gc.append("db", "tcr", rows(1, 10).toDF())
+    gc.append("db", "tcr", rows(11, 20).toDF())
+    // the append lands after compact resolved its image and before its
+    // commit reads the manifest: the image misses it, so landing the
+    // compaction would silently drop an acknowledged append
+    var fired = false
+    gc.basisTestHook = () => if (!fired) {
+      fired = true
+      other.append("db", "tcr", rows(21, 30).toDF())
+    }
+    try {
+      val e = intercept[java.util.ConcurrentModificationException](
+        gc.compact("db", "tcr"))
+      assert(e.getMessage.contains("concurrent"), e.getMessage)
+    } finally gc.basisTestHook = () => ()
+    assert(gc.read("db", "tcr").count() === 30)
+    assert(gc.snapshots("db", "tcr").map(_.id) === Seq(1L, 2L, 3L))
+    gc.compact("db", "tcr")
+    assert(gc.read("db", "tcr").count() === 30)
+  }
+
+  test("a basis commit losing a dir claim at an unchanged head aborts " +
+      "naming the dir, and never deletes it") {
+    gc.createTable("db", "tlo", rows(0, 0).schema)
+    gc.append("db", "tlo", rows(1, 10).toDF())
+    // a dead writer's leftover sits at the next ordinal
+    val leftover = new java.io.File(s"$warehouse/db/tlo/snap-2")
+    assert(leftover.mkdirs())
+    val marker = new java.io.File(leftover, "leftover-marker")
+    assert(marker.createNewFile())
+    val e = intercept[java.util.ConcurrentModificationException](
+      gc.overwrite("db", "tlo", rows(1, 3).toDF()))
+    assert(e.getMessage.contains("snap-2 is claimed"), e.getMessage)
+    assert(marker.exists(), "the claimant's dir was clobbered")
+    assert(gc.snapshots("db", "tlo").map(_.id) === Seq(1L))
+    assert(gc.read("db", "tlo").count() === 10)
+    assert(marker.delete() && leftover.delete())
+    gc.overwrite("db", "tlo", rows(1, 3).toDF())
+    assert(gc.read("db", "tlo").count() === 3)
   }
 
   test("non-exclusive rename fails loudly via the claim marker") {
@@ -281,8 +326,11 @@ class ConcurrentCommitSpec extends SparkSpecBase {
     // The race tests are the suite's only timing-dependent paths (the
     // crash-injection tests below fire deterministic hook seams), so the
     // soak repeats exactly them: 20 conditional-put storms + 5
-    // rename-based storms, 8 writers each, fresh table per round. One
-    // lost snapshot in any round fails loudly with the round number.
+    // rename-based storms, 8 writers each, fresh table per round. Each
+    // rename round also races one compact() loop against the appends —
+    // a compaction that planned before an append landed must abort, not
+    // drop it. One lost snapshot or append in any round fails loudly
+    // with the round number.
     (1 to 20).foreach { r =>
       withClue(s"conditional-put soak round $r: ") { condPutStorm(s"tsoakc$r") }
     }
@@ -290,14 +338,25 @@ class ConcurrentCommitSpec extends SparkSpecBase {
       withClue(s"rename soak round $r: ") {
         val t = s"tsoakr$r"
         gc.createTable("db", t, rows(0, 0).schema)
+        val appending = new java.util.concurrent.CountDownLatch(8)
         raceWriters((1 to 8).map { i => () =>
-          new GraftCatalog(spark, warehouse)
+          try new GraftCatalog(spark, warehouse)
             .append("db", t, rows(i * 100L, i * 100L + 9).toDF())
+          finally appending.countDown()
           ()
+        } :+ { () =>
+          val cat = new GraftCatalog(spark, warehouse)
+          while (appending.getCount > 0)
+            try cat.compact("db", t)
+            catch { case _: java.util.ConcurrentModificationException => () }
         })
         val ids = gc.snapshots("db", t).map(_.id)
-        assert(ids.length === 8 && ids.distinct.length === 8, s"ids $ids")
+        val appends = gc.snapshotsTable("db", t)
+          .filter(col("commit_kind") === "append").count()
+        assert(appends === 8 && ids.distinct.length === ids.length, s"ids $ids")
         assert(gc.read("db", t).count() === 80)
+        assert(gc.read("db", t).agg(sum("id")).head.getLong(0) ===
+          (1 to 8).map(i => (i * 100L until i * 100L + 10).sum).sum)
       }
     }
   }

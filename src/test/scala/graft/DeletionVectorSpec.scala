@@ -296,7 +296,7 @@ class DeletionVectorSpec extends SparkSpecBase {
     gc.append("db", "tux", batch(1, 30).toDF())
     val other = new GraftCatalog(spark, warehouse)
     var fired = false
-    gc.dvVictimsTestHook = () => if (!fired) {
+    gc.basisTestHook = () => if (!fired) {
       fired = true
       other.append("db", "tux", batch(31, 40).toDF())
     }
@@ -304,7 +304,7 @@ class DeletionVectorSpec extends SparkSpecBase {
       intercept[java.util.ConcurrentModificationException] {
         gc.update("db", "tux", col("id") === 3L, Map("grp" -> lit(0)))
       }
-    } finally gc.dvVictimsTestHook = () => ()
+    } finally gc.basisTestHook = () => ()
     // nothing landed: table still consistent, re-run succeeds
     assert(gc.read("db", "tux").count() === 40)
     gc.update("db", "tux", col("id") === 3L, Map("grp" -> lit(0)))

@@ -577,6 +577,51 @@ class ZonePruneSpec extends SparkSpecBase {
       Seq(org.apache.spark.sql.Row(1L, 2L)))
   }
 
+  test("sortCompact range dirs keep the DV position stamp in every format") {
+    // ORC/AVRO deletion vectors address rows by a write-time position
+    // stamp; range dirs written without it would turn later deletes into
+    // silent no-ops. compact() is the control: it always wrote the stamp.
+    def batch(lo: Long, hi: Long) = spark.range(lo, hi + 1)
+      .selectExpr("id", "concat('v', id) AS v")
+    for (fmt <- Seq("parquet", "orc", "avro"); op <- Seq("sortCompact", "compact"))
+      withClue(s"$fmt / $op: ") {
+        val t = s"scdv_${fmt}_$op"
+        gc.createTable("db", t, batch(0, 0).schema,
+          options = Map("file.format" -> fmt, "deletion-vectors" -> "true"))
+        gc.append("db", t, batch(1, 100).toDF())
+        gc.append("db", t, batch(101, 200).toDF())
+        if (op == "sortCompact") gc.sortCompact("db", t, Seq("id"), ranges = 4)
+        else gc.compact("db", t)
+        gc.deleteWhere("db", t, col("id") % 20 === 0L)
+        assert(gc.read("db", t).count() === 190)
+        assert(gc.read("db", t).filter(col("id") % 20 === 0L).count() === 0)
+      }
+  }
+
+  test("sortCompact range dirs follow the table's compression, bloom index " +
+      "and snapshot retention") {
+    val sch = spark.range(0).selectExpr("id", "concat('v', id) AS v")
+    gc.createTable("db", "scopt", sch.schema, options = Map(
+      "file.compression" -> "zstd",
+      "file-index.bloom-filter.columns" -> "id",
+      "snapshot.num-retained" -> "2"))
+    gc.append("db", "scopt", spark.range(1, 101).selectExpr("id", "concat('v', id) AS v"))
+    gc.append("db", "scopt", spark.range(101, 201).selectExpr("id", "concat('v', id) AS v"))
+    val id = gc.sortCompact("db", "scopt", Seq("id"), ranges = 4)
+    val ranges = new java.io.File(s"$warehouse/db/scopt").listFiles()
+      .filter(_.getName.startsWith(s"snap-$id-r")).toSeq
+    assert(ranges.size === 4)
+    val files = ranges.flatMap(_.listFiles()).map(_.getName)
+      .filter(n => n.startsWith("part-") && !n.endsWith(".crc"))
+    assert(files.nonEmpty && files.forall(_.endsWith(".zstd.parquet")), files.toString)
+    val bloomDirs = gc.bloomIndexInfo("db", "scopt").keySet
+      .filter(_.startsWith(s"snap-$id-r"))
+    assert(bloomDirs === ranges.map(_.getName).toSet)
+    assert(gc.snapshots("db", "scopt").size === 2)
+    assert(gc.read("db", "scopt").count() === 200)
+    assert(scannedDirs(gc.readWhere("db", "scopt", col("id") === 150L)).size === 1)
+  }
+
   test("empty commits carry zero-row zones and never break pruning") {
     import spark.implicits._
     gc.createTable("db", "zempty", Seq((1L, "x")).toDF("id", "v").schema)
