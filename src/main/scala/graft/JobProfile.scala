@@ -12,8 +12,10 @@ import org.apache.spark.sql.SparkSession
  * task time. A query whose summed task time is a small fraction of
  * wall × cores is bounded by fixed per-job overhead (launch, planning,
  * stage scheduling), not by data work — the optimization lever is then
- * FEWER actions/stages, not faster kernels. Dev tool only; the driver
- * uses Bench.
+ * FEWER actions/stages, not faster kernels. Each run also reports its
+ * Janino compile count: generated code that differs from query to query
+ * (a plan that grows with the table's dirs, say) misses the codegen
+ * cache and recompiles. Dev tool only; the driver uses Bench.
  *
  * Usage: sbt "runMain graft.JobProfile <sfDir> [-explain] <query>..."
  * (`-explain` also prints each query's executed plan after its runs).
@@ -33,6 +35,10 @@ object JobProfile {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    // Janino compiles of generated code (whole-stage, projections,
+    // predicates): each one is a codegen-cache miss
+    def compiles(): Long =
+      org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     val jobs = new AtomicInteger
     val stages = new AtomicInteger
     val tasks = new AtomicInteger
@@ -118,6 +124,7 @@ object JobProfile {
         jobSpans.clear()
         val (j0, s0, t0, m0) =
           (jobs.get(), stages.get(), tasks.get(), taskMs.get())
+        val c0 = compiles()
         sampled.clear()
         samplerOn.set(true)
         val wc0 = System.currentTimeMillis()
@@ -144,7 +151,8 @@ object JobProfile {
         val driverGap = math.max(0.0, wall - covered / 1e3)
         println(f"[jobprofile] $name run$run wall=$wall%.2fs " +
           f"jobs=${jobs.get - j0} stages=${stages.get - s0} " +
-          f"tasks=${tasks.get - t0} taskTime=${(taskMs.get - m0) / 1e3}%.1fs " +
+          f"tasks=${tasks.get - t0} compiles=${compiles() - c0} " +
+          f"taskTime=${(taskMs.get - m0) / 1e3}%.1fs " +
           f"(parallel-occupancy ${(taskMs.get - m0) / 1e3 / (wall * cpus.toInt) * 100}%.0f%%) " +
           f"jobWall=${covered / 1e3}%.2fs driverGap=$driverGap%.2fs")
         if (sampleStacks) {

@@ -1804,8 +1804,7 @@ class GraftCatalog(private[sources] val spark: SparkSession,
       // appendUnion's per-file machinery doesn't resolve — DIR-level
       // pruning only (whole kept dirs, uniform anti-join), which is
       // where the zones' win lives anyway (time-ordered commits)
-      unionAllByName(picked.map { case (fe, _) => frameFor(schema, table, m,
-          fe, withMeta = true, withBucket = true) })
+      unionAllByName(dirFrames(schema, table, m, picked.map(_._1), withMeta = true))
         .join(dvFrame(schema, table, dvEntries),
           Seq(DvFileCol, DvPosCol), "left_anti")
         .select(currentFields(m).map(f => col(f.name)): _*).filter(condition)
@@ -1951,13 +1950,118 @@ class GraftCatalog(private[sources] val spark: SparkSession,
    * `__ord` and the tombstone flag `__del` used for merge-on-read.
    */
   private[sources] def frameFor(schema: String, table: String, m: ObjectNode,
-      fe: FileEntry, pathOverride: Option[Path] = None,
-      fileSubset: Option[Seq[String]] = None,
+      fe: FileEntry, fileSubset: Option[Seq[String]] = None,
       withMeta: Boolean = false,
       // Partitioned bucketed layout: read the WHOLE dir (partition
       // discovery resolves `col=value` AND `__bucket=k` segments) and
       // keep the bucket column so the caller can split per-bucket legs.
       withBucket: Boolean = false): DataFrame = {
+    val base = dirPath(schema, table, fe.dir).toString
+    fileSubset match {
+      // zone-pruned file list: explicit files with basePath so `col=value`
+      // partition segments between the dir root and each file still
+      // resolve as partition columns of the declared schema
+      case Some(files) => relationFor(m, fe, files, Some(base), withMeta, withBucket)
+      case None => relationFor(m, fe, Seq(base), None, withMeta, withBucket)
+    }
+  }
+
+  /** What changes how a snapshot dir is read: its kind, write-time schema
+    * version and retract flag. Dirs sharing this key read as ONE relation
+    * ([[groupFrames]]); the ordinal comes from each row's file path. */
+  private def readGroupOf(fe: FileEntry): (String, Int, Boolean) =
+    (fe.kind, fe.schemaVersion, fe.retract)
+
+  /**
+   * `roots` (each a snapshot dir, or a `__bucket=k` leaf of one, paired
+   * with its entry) read as one relation per read group
+   * ([[readGroupOf]]) instead of one per dir, so a resolve's plan grows
+   * with its groups, not its dirs, and its generated code is the same
+   * from commit to commit. Roots must be flat: a root holding `col=value`
+   * subdirs needs partition discovery, which takes a single base dir
+   * (partitioned data dirs read through [[frameFor]], one each). A group
+   * is split into chunks of at most
+   * `spark.sql.sources.parallelPartitionDiscovery.threshold` roots, so
+   * listing stays on the driver as it does for one-dir relations —
+   * beyond it Spark lists through a job.
+   */
+  private[sources] def groupFrames(m: ObjectNode, roots: Seq[(FileEntry, Path)],
+      withMeta: Boolean = false): Seq[DataFrame] = {
+    val chunk = spark.conf
+      .get("spark.sql.sources.parallelPartitionDiscovery.threshold", "32").toInt
+    roots.map(r => readGroupOf(r._1)).distinct.flatMap { g =>
+      roots.filter(r => readGroupOf(r._1) == g).grouped(math.max(1, chunk))
+        .map(part => relationFor(m, part.head._1, part.map(_._2.toString), None,
+          withMeta, withBucket = false))
+    }
+  }
+
+  /**
+   * Every version source of `entries` read whole, as [[groupFrames]]
+   * relations. On a bucketed layout each dir is listed once and its
+   * `__bucket=k` leaves are read (only `onlyBuckets`' when given); the
+   * frames never carry the bucket column. Partitioned data dirs read one
+   * discovery-backed relation each.
+   */
+  private[sources] def dirFrames(schema: String, table: String, m: ObjectNode,
+      entries: Seq[FileEntry], withMeta: Boolean = false,
+      onlyBuckets: Option[Seq[Int]] = None): Seq[DataFrame] = {
+    val bucketed = bucketCount(m).isDefined
+    val (own, flat) = entries.partition(fe =>
+      fe.kind == "data" && partitionColumns(m).nonEmpty)
+    val ownFrames = own.map { fe =>
+      if (!bucketed) frameFor(schema, table, m, fe, withMeta = withMeta)
+      else {
+        val f = frameFor(schema, table, m, fe, withMeta = withMeta, withBucket = true)
+        onlyBuckets.fold(f)(bs =>
+          f.filter(col(BucketCol).isin(bs.map(Integer.valueOf): _*)))
+          .drop(BucketCol)
+      }
+    }
+    val roots = flat.flatMap { fe =>
+      val d = dirPath(schema, table, fe.dir)
+      if (!bucketed) Seq(fe -> d)
+      else bucketsUnder(d, 0).filter(k => onlyBuckets.forall(_.contains(k)))
+        .sorted.map(k => fe -> new Path(d, s"$BucketCol=$k"))
+    }
+    ownFrames ++ groupFrames(m, roots, withMeta)
+  }
+
+  /** Test seam: each data and tombstone dir of the head snapshot with
+    * the distinct merge ordinals its rows resolve under
+    * ([[GraftCatalog.OrdinalFromPath]], read through [[dirFrames]]). */
+  private[graft] def headOrdinals(schema: String,
+      table: String): Seq[(String, Seq[Long])] = {
+    val m = readManifest(schema, table)
+    snapshotFileEntries(schema, table)
+      .filter(fe => fe.kind == "data" || fe.kind == "delete").map { fe =>
+        val frames = dirFrames(schema, table, m, Seq(fe))
+        fe.dir -> (if (frames.isEmpty) Seq.empty
+          else unionAllByName(frames).select("__ord").distinct().collect()
+            .map(_.getLong(0)).toSeq.sorted)
+      }
+  }
+
+  /** Bucket ids of the `__bucket=k` leaves under `p`: directly below it,
+    * or below up to `depth` levels of `col=value` partition dirs. One
+    * driver listing per dir level; a missing dir has none. */
+  private[sources] def bucketsUnder(p: Path, depth: Int): Seq[Int] =
+    if (!fs.exists(p)) Seq.empty
+    else fs.listStatus(p).toSeq.flatMap { st =>
+      val nm = st.getPath.getName
+      if (nm.startsWith(s"$BucketCol="))
+        scala.util.Try(nm.stripPrefix(s"$BucketCol=").toInt).toOption
+      else if (depth > 0 && st.isDirectory && nm.contains("="))
+        bucketsUnder(st.getPath, depth - 1)
+      else Seq.empty
+    }
+
+  /** `paths` (dirs, or files under `basePath`) read as one relation
+    * mapped onto the current schema; `fe` describes how (kind, write-time
+    * schema version, retract flag) — see [[frameFor]]. */
+  private def relationFor(m: ObjectNode, fe: FileEntry, paths: Seq[String],
+      basePath: Option[String], withMeta: Boolean,
+      withBucket: Boolean): DataFrame = {
     val curFields = currentFields(m)
     val allSchemas = schemaVersions(m)
     val writeFieldsAll = allSchemas(fe.schemaVersion)
@@ -2006,16 +2110,8 @@ class GraftCatalog(private[sources] val spark: SparkSession,
       (if (withBucket)
         Seq(StructField(BucketCol, org.apache.spark.sql.types.IntegerType))
       else Seq.empty))
-    val base = pathOverride.getOrElse(dirPath(schema, table, fe.dir))
-    val raw = fileSubset match {
-      // zone-pruned file list: explicit files with basePath so `col=value`
-      // partition segments between the dir root and each file still
-      // resolve as partition columns of the declared schema
-      case Some(files) => spark.read.schema(writeSchema)
-        .option("basePath", base.toString).format(providerFor(fmt)).load(files: _*)
-      case None => spark.read.schema(writeSchema).format(providerFor(fmt))
-        .load(base.toString)
-    }
+    val reader = spark.read.schema(writeSchema).format(providerFor(fmt))
+    val raw = basePath.fold(reader)(reader.option("basePath", _)).load(paths: _*)
     // Map write-time schema → current schema by field id; struct columns
     // whose SHAPE evolved map member-wise by nested lineage (adaptExpr —
     // a positional cast would mis-wire renamed/added members).
@@ -2054,9 +2150,6 @@ class GraftCatalog(private[sources] val spark: SparkSession,
       // identity column — same stability contract, different source.
       (if (orcPos) col(OrcPosCol) else col("_metadata.row_index"))
         .as(DvPosCol))
-    // ordinal = leading digits of the dir name: "snap-7" and a merge
-    // commit's paired "snap-7-del" share ordinal 7 (one atomic snapshot;
-    // a key never appears in both dirs, so the tie is unreachable)
     val bucketCols = if (withBucket) Seq(col(BucketCol)) else Seq.empty
     // aggregation-engine frames always carry the retract flag so sibling
     // dirs with and without retract batches union by name; unflagged
@@ -2066,8 +2159,7 @@ class GraftCatalog(private[sources] val spark: SparkSession,
         org.apache.spark.sql.functions.coalesce(col(RetractCol), lit(false))
       else lit(false)).as(RetractCol))
     raw.select(cols ++ metaCols ++ bucketCols ++ rkCols ++ Seq(
-      lit(dirKey(fe.dir).stripPrefix("snap-").takeWhile(_.isDigit).toLong).as("__ord"),
-      lit(fe.kind == "delete").as("__del")): _*)
+      OrdinalFromPath.as("__ord"), lit(fe.kind == "delete").as("__del")): _*)
   }
 
 
@@ -2109,8 +2201,7 @@ class GraftCatalog(private[sources] val spark: SparkSession,
       return Some(appendUnion(schema, table, m, dataEs.map((_, None)), dvEs)
         .drop("__ord", "__del"))
     }
-    val all = unionAllByName(entries.map(frameFor(schema, table, m, _)))
-    val names = currentFields(m).map(_.name)
+    val all = unionAllByName(dirFrames(schema, table, m, entries))
     def ordinalPick(earliest: Boolean): DataFrame = {
       // first-row keeps pure commit order (sequence.field is validated
       // deduplicate-only at create time)
@@ -2500,53 +2591,49 @@ class GraftCatalog(private[sources] val spark: SparkSession,
     // `col=value` partition dirs (data dirs of a partitioned bucketed
     // table; tombstone dirs stay flat — their files CARRY the partition
     // columns as data, since partition ⊆ primary key).
-    def bucketsUnder(p: Path, depth: Int): Seq[Int] =
-      if (!fs.exists(p)) Seq.empty
-      else fs.listStatus(p).toSeq.flatMap { st =>
-        val nm = st.getPath.getName
-        if (nm.startsWith(s"$BucketCol="))
-          scala.util.Try(nm.stripPrefix(s"$BucketCol=").toInt).toOption
-        else if (depth > 0 && st.isDirectory && nm.contains("="))
-          bucketsUnder(st.getPath, depth - 1)
-        else Seq.empty
-      }
-    def depthOf(fe: FileEntry) = if (fe.kind == "data") partCols.length else 0
+    def nested(fe: FileEntry) = fe.kind == "data" && partCols.nonEmpty
     // ONE listing per entry dir, shared by bucket enumeration and the
     // per-leg skip decisions below (r18 — the flat layout used to probe
     // fs.exists once per (dir, bucket) and build one discovery-backed
     // frame per probe: O(dirs × buckets) driver listings per resolve,
     // the dominant plan-construction cost of the bucketed family).
     val present: Seq[(FileEntry, Set[Int])] = entries.map { fe =>
-      fe -> bucketsUnder(dirPath(schema, table, fe.dir), depthOf(fe)).toSet
+      fe -> bucketsUnder(dirPath(schema, table, fe.dir),
+        if (nested(fe)) partCols.length else 0).toSet
     }
     val wanted: Seq[Int] = onlyBuckets.getOrElse {
       val seen = mutable.SortedSet[Int](0 until n: _*)
       present.foreach { case (_, ks) => seen ++= ks }
       seen.toSeq
     }
-    // Flat AND partitioned layouts: one discovery-backed frame per entry
-    // dir with the bucket column RETAINED (`__bucket=k` — and, on
-    // partitioned data dirs, `col=value` — resolve as partition columns
-    // of the declared schema); each leg filters its bucket, so partition
-    // pruning on __bucket keeps per-leg I/O exact while the dir is
-    // LISTED once. Every partition's slice of bucket k merges in ONE leg
-    // — sound because partition ⊆ primary key makes cross-partition key
-    // spaces disjoint, and the sizing contract (one bucket per task) is
-    // unchanged.
-    val dirFrames: Seq[(FileEntry, Set[Int], DataFrame)] =
-      present.collect { case (fe, ks) if ks.nonEmpty =>
-        (fe, ks, frameFor(schema, table, m, fe, withBucket = true))
-      }
+    // Partitioned data dirs: one discovery-backed frame per dir with the
+    // bucket column RETAINED (`col=value` and `__bucket=k` resolve as
+    // partition columns of the declared schema); each leg filters its
+    // bucket, so partition pruning keeps per-leg I/O exact while the dir
+    // is LISTED once. Every partition's slice of bucket k merges in ONE
+    // leg — sound because partition ⊆ primary key makes cross-partition
+    // key spaces disjoint, and the sizing contract (one bucket per task)
+    // is unchanged.
+    val partFrames: Map[FileEntry, DataFrame] = present.collect {
+      case (fe, ks) if ks.nonEmpty && nested(fe) =>
+        fe -> frameFor(schema, table, m, fe, withBucket = true)
+    }.toMap
     val legs = wanted.flatMap { k =>
       // A dir whose entry RETIRES bucket k (per-bucket compaction folded
       // it into a later dir) contributes nothing to k's leg — dir-level
       // skip, zero I/O, exact because the compacted dir carries the
       // resolved image of everything excluded. Dirs without bucket k at
-      // all are skipped from the same shared listing.
-      val frames = dirFrames.collect {
-        case (fe, ks, f) if ks.contains(k) && !fe.excludeBuckets.contains(k) =>
-          f.filter(col(BucketCol) === k).drop(BucketCol)
+      // all are skipped from the same shared listing. Flat dirs read
+      // their `__bucket=k` leaves as one relation per read group, so a
+      // leg's scans track the groups, not the dirs.
+      val live = present.collect {
+        case (fe, ks) if ks.contains(k) && !fe.excludeBuckets.contains(k) => fe
       }
+      val (part, flat) = live.partition(nested)
+      val frames = part.map(fe =>
+        partFrames(fe).filter(col(BucketCol) === k).drop(BucketCol)) ++
+        groupFrames(m, flat.map(fe =>
+          fe -> new Path(dirPath(schema, table, fe.dir), s"$BucketCol=$k")))
       if (frames.isEmpty) None
       else {
         val all = unionAllByName(frames).coalesce(1)
@@ -2911,7 +2998,15 @@ class GraftCatalog(private[sources] val spark: SparkSession,
    * existing data; [[compact]] materializes the resolution). The batch
    * itself must be PK-unique.
    */
-  def upsert(schema: String, table: String, df: DataFrame): Long = {
+  def upsert(schema: String, table: String, df: DataFrame): Long =
+    upsertFrom(schema, table, df, basis = None)
+
+  /** [[upsert]] of a batch derived from the head at manifest version
+    * `basis` ([[update]]'s updated image): every commit it lands carries
+    * that basis, so a writer that moved the head since aborts it instead
+    * of having its rows overwritten by the stale image. */
+  private def upsertFrom(schema: String, table: String, df: DataFrame,
+      basis: Option[Long]): Long = {
     require(primaryKeyOf(schema, table).nonEmpty,
       s"$schema.$table has no primary key — use append")
     // rowkind.field (Paimon): the batch carries its own CDC kinds — `-D`
@@ -2939,7 +3034,7 @@ class GraftCatalog(private[sources] val spark: SparkSession,
         // ignore-delete (Paimon): drop retractions instead of
         // tombstoning — the CDC-fed-patch-table mode
         if (opts.get("ignore-delete").contains("true"))
-          append(schema, table, df.filter(!isRetract))
+          commit(schema, table, Seq(Leg("", "data", df.filter(!isRetract))), basis = basis)
         else if (mergeEngineOf(schema, table) == "aggregation") {
           // r16 retraction: `-U` (and `-D` without remove-record-on-
           // delete) rows land as RETRACT inputs the field-wise fold
@@ -2994,9 +3089,9 @@ class GraftCatalog(private[sources] val spark: SparkSession,
             require(data.join(dels, pk, "left_semi").isEmpty,
               "a key cannot be both written and deleted in one batch")
             commit(schema, table, Seq(Leg("", "data", data, retract = hasRetracts),
-              Leg("-del", "delete", dels.select(pk.map(col): _*))))
+              Leg("-del", "delete", dels.select(pk.map(col): _*))), basis = basis)
           } else commit(schema, table,
-            Seq(Leg("", "data", data, retract = hasRetracts)))
+            Seq(Leg("", "data", data, retract = hasRetracts)), basis = basis)
         }
         else if (mergeEngineOf(schema, table) == "partial-update") {
           // partial-update + remove-record-on-delete (r16): `-D` rows
@@ -3015,13 +3110,13 @@ class GraftCatalog(private[sources] val spark: SparkSession,
               s"the key) or +U (applies the patch); sample row: ${bad.headOption}")
           val ups = df.filter(!isRetract)
           val dels = df.filter(isRetract)
-          if (dels.isEmpty) append(schema, table, ups)
+          if (dels.isEmpty) commit(schema, table, Seq(Leg("", "data", ups)), basis = basis)
           else {
             val pk = primaryKey(m)
             require(ups.join(dels, pk, "left_semi").isEmpty,
               "a key cannot be both written and deleted in one batch")
             commit(schema, table, Seq(Leg("", "data", ups),
-              Leg("-del", "delete", dels.select(pk.map(col): _*))))
+              Leg("-del", "delete", dels.select(pk.map(col): _*))), basis = basis)
           }
         }
         else {
@@ -3034,10 +3129,10 @@ class GraftCatalog(private[sources] val spark: SparkSession,
           // trip mergeCommit's key-disjoint contract.
           val pk = primaryKeyOf(schema, table)
           val dels = df.filter(isRetract).join(ups, pk, "left_anti")
-          if (dels.isEmpty) append(schema, table, ups)
-          else mergeCommit(schema, table, ups, dels)
+          if (dels.isEmpty) commit(schema, table, Seq(Leg("", "data", ups)), basis = basis)
+          else mergeCommit(schema, table, ups, dels, basis = basis)
         }
-      case _ => append(schema, table, df)
+      case _ => commit(schema, table, Seq(Leg("", "data", df)), basis = basis)
     }
   }
 
@@ -3051,7 +3146,8 @@ class GraftCatalog(private[sources] val spark: SparkSession,
    * exactly one action). Returns the snapshot id.
    */
   def mergeCommit(schema: String, table: String, upserts: DataFrame,
-      deleteKeys: DataFrame, streamBatchId: Option[Long] = None): Long = {
+      deleteKeys: DataFrame, streamBatchId: Option[Long] = None,
+      basis: Option[Long] = None): Long = {
     val pk = primaryKeyOf(schema, table)
     require(pk.nonEmpty, s"$schema.$table has no primary key — MERGE needs one")
     val m = readManifest(schema, table)
@@ -3076,7 +3172,7 @@ class GraftCatalog(private[sources] val spark: SparkSession,
     }
     commit(schema, table,
       Seq(Leg("", "data", upserts), Leg("-del", "delete", delKeys)),
-      streamBatchId = streamBatchId)
+      basis = basis, streamBatchId = streamBatchId)
   }
 
   /**
@@ -3203,8 +3299,12 @@ class GraftCatalog(private[sources] val spark: SparkSession,
   def update(schema: String, table: String,
       condition: org.apache.spark.sql.Column,
       assignments: Map[String, org.apache.spark.sql.Column]): Long = {
-    val pk = primaryKeyOf(schema, table)
-    if (pk.isEmpty && deletionVectors(readManifest(schema, table)))
+    // The updated image derives from this head: its commit carries the
+    // head's version, so a concurrent upsert of an updated key aborts
+    // the update rather than being overwritten by the stale image.
+    val m = readManifest(schema, table)
+    val pk = primaryKey(m)
+    if (pk.isEmpty && deletionVectors(m))
       return updateWhereDv(schema, table, condition, assignments)
     require(pk.nonEmpty, s"$schema.$table has no primary key — use overwrite")
     val cur = currentSchema(schema, table)
@@ -3222,7 +3322,7 @@ class GraftCatalog(private[sources] val spark: SparkSession,
     val updated = read(schema, table).filter(condition)
       .select(cur.fieldNames.toSeq.map(c =>
         assignments.get(c).map(_.as(c)).getOrElse(col(c))): _*)
-    upsert(schema, table, updated)
+    upsertFrom(schema, table, updated, basis = Some(commitVersion(m)))
   }
 
 
@@ -3710,6 +3810,19 @@ object GraftCatalog {
   val DvFileCol = "__file"
   val DvPosCol = "__pos"
 
+  /** A row's snapshot ordinal, parsed from its file path: the leading
+    * digits of the LAST path segment starting with "snap-" — the dir the
+    * file lives in, whatever the warehouse path above it holds (the
+    * greedy `.*` anchors there, as [[DvFileCol]]'s capture does).
+    * "snap-7", its paired "snap-7-del", a sort-compaction's "snap-7-r2"
+    * and a branch's shared `~/snap-7` all read 7 (one atomic snapshot; a
+    * key never appears in two dirs of one ordinal, so the tie is
+    * unreachable). Per row rather than a per-dir literal, so one relation
+    * can span many dirs and the generated code never names a dir. */
+  def OrdinalFromPath: org.apache.spark.sql.Column =
+    org.apache.spark.sql.functions.regexp_extract(
+      col("_metadata.file_path"), "^.*/snap-(\\d+)[^/]*/", 1).cast("long")
+
   /** Hidden retract flag of aggregation-engine data files (r16,
     * Paimon's retract-input handling): a batch row marked `-U`/`-D`
     * through `rowkind.field` lands as an ordinary data row with this
@@ -3768,16 +3881,17 @@ object GraftCatalog {
     * resolve (r19 rule metering: 564 analyzer batch runs on one bucketed
     * read, ~half the query's driver gap) — while the N-ary form analyzes
     * the final tree once and its already-analyzed children are skipped.
-    * Result-identical to the by-name reduce: every call site unions
-    * frames built by one projection (same field names, same order,
-    * same types), and the guard below falls back to the by-name reduce
-    * if that ever stops holding. */
+    * Result-identical to the by-name reduce because every call site
+    * unions frames built by one projection (same field names, same
+    * order, same types) — asserted, since a positional Union of
+    * misaligned frames would silently mis-wire columns. */
   private[sources] def unionAllByName(frames: Seq[DataFrame]): DataFrame = {
     require(frames.nonEmpty, "unionAllByName of zero frames")
     if (frames.size == 1) return frames.head
     val names = frames.head.schema.fieldNames.toSeq
-    if (frames.exists(_.schema.fieldNames.toSeq != names))
-      return frames.reduce(_ unionByName _)
+    frames.find(_.schema.fieldNames.toSeq != names).foreach(f =>
+      throw new IllegalStateException("unionAllByName of misaligned frames: " +
+        s"${names.mkString(",")} vs ${f.schema.fieldNames.mkString(",")}"))
     org.apache.spark.sql.GraftColumnBridge.dataFrame(
       frames.head.sparkSession,
       org.apache.spark.sql.catalyst.plans.logical.Union(

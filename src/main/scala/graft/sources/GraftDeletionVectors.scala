@@ -188,30 +188,22 @@ trait GraftDeletionVectors { self: GraftCatalog =>
           .select(names.map(col): _*))
       else {
         // bucketed layout: dirs hold __bucket=k subdirs that appendUnion's
-        // per-file machinery doesn't resolve — read whole dirs with the
-        // bucket column retained and apply the anti-join uniformly (the
-        // DV side holds deleted positions only; AQE broadcasts it).
-        // A bucket restriction partition-prunes the scan to those legs
-        // and shrinks the DV side to their files' positions.
-        val all0 = unionAllByName(base.map(frameFor(schema, table, m, _,
-            withMeta = true, withBucket = true)))
-        val all = onlyBuckets.fold(all0)(bs =>
-          all0.filter(col(BucketCol).isin(bs.map(Integer.valueOf): _*)))
+        // per-file machinery doesn't resolve — read whole dirs (their
+        // bucket leaves, one relation per read group) and apply the
+        // anti-join uniformly (the DV side holds deleted positions only;
+        // AQE broadcasts it). A bucket restriction reads only those
+        // buckets' leaves and shrinks the DV side to their files'
+        // positions.
         val dv0 = dvFrame(schema, table, dvEs)
         val dv = onlyBuckets.fold(dv0)(dvPositionsInBuckets(dv0, _))
-        Some(all.join(dv, Seq(DvFileCol, DvPosCol), "left_anti")
+        val frames = dirFrames(schema, table, m, base, withMeta = true, onlyBuckets)
+        if (frames.isEmpty) None
+        else Some(unionAllByName(frames).join(dv, Seq(DvFileCol, DvPosCol), "left_anti")
           .select(names.map(col): _*))
       }
-    if (delta.isEmpty) return baseLive
-    val deltaAll = unionAllByName(delta.map { fe =>
-      val f0 = frameFor(schema, table, m, fe, withBucket = bucketed)
-      val f = (onlyBuckets, bucketed) match {
-        case (Some(bs), true) =>
-          f0.filter(col(BucketCol).isin(bs.map(Integer.valueOf): _*))
-        case _ => f0
-      }
-      if (bucketed) f.drop(BucketCol) else f
-    })
+    val deltaFrames = dirFrames(schema, table, m, delta, onlyBuckets = onlyBuckets)
+    if (deltaFrames.isEmpty) return baseLive
+    val deltaAll = unionAllByName(deltaFrames)
     // version order: (sequence, ordinal) on sequence.field tables, pure
     // ordinal otherwise — the same rule as every other resolution path
     // (r15: the sequence.field + DV refusal is lifted)

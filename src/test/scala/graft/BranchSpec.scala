@@ -91,6 +91,10 @@ class BranchSpec extends SparkSpecBase {
       3L -> "v13", 4L -> "v14", 9L -> "new"))
     assert(rows(cat, "p").toMap ===
       Map(0L -> "keep", 1L -> "v11", 2L -> "v2x", 3L -> "v13", 4L -> "v14"))
+    // inherited `~/snap-<n>` dirs and branch-local ones read under their
+    // own ordinals, through one relation per read group
+    assert(cat.headOrdinals("db", "p$branch_fix").map(_._1).count(_.startsWith("~/")) === 2)
+    assertDirOrdinals(cat, "db", "p$branch_fix")
     // schema evolution diverges freely on the branch
     cat.addColumn("db", "p$branch_fix", StructField("extra", IntegerType))
     assert(cat.currentSchema("db", "p$branch_fix").fieldNames.toSeq ===

@@ -231,4 +231,90 @@ class BucketPruneSpec extends SparkSpecBase {
     assert(placed.zipWithIndex.forall { case (b, i) =>
       cat.readBucket("db", "t", b).filter(col("id") === (i + 1).toLong).count() == 1 })
   }
+
+  /** Spark jobs `body` starts (listener-observed, bus flushed). */
+  private def jobsDuring(body: => Unit): Int = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.GraftTestBus.waitUntilEmpty(spark.sparkContext)
+    spark.sparkContext.addSparkListener(l)
+    try { body; org.apache.spark.GraftTestBus.waitUntilEmpty(spark.sparkContext) }
+    finally spark.sparkContext.removeSparkListener(l)
+    jobs.get()
+  }
+
+  /** File-scan leaves of `df`'s executed plan. */
+  private def fileScans(df: DataFrame): Int = {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    def count(p: SparkPlan): Int = p match {
+      case a: AdaptiveSparkPlanExec => count(a.executedPlan)
+      case _: FileSourceScanExec => 1
+      case o => o.children.map(count).sum
+    }
+    count(df.queryExecution.executedPlan)
+  }
+
+  private def pkTable(cat: GraftCatalog, table: String): Unit =
+    cat.createTable("db", table, idvSchema,
+      options = Map("bucket" -> N.toString), primaryKey = Seq("id"))
+
+  test("a read plans one scan per bucket and read group, however many dirs") {
+    val cat = freshCatalog()
+    cat.createSchema("db")
+    pkTable(cat, "g")
+    def upserts(rounds: Range): Unit =
+      rounds.foreach(i => cat.upsert("db", "g", idv(1L to 200L, s"u$i-")))
+    upserts(1 to 2)
+    val at2 = fileScans(cat.read("db", "g"))
+    upserts(3 to 12)
+    val at12 = fileScans(cat.read("db", "g"))
+    assert(at2 === N && at12 === N, s"$at2 scans after 2 upserts, $at12 after 12")
+    assert(cat.read("db", "g").count() === 200)
+    assert(cat.readWhere("db", "g", col("id") === 7L).head().getString(1) === "u12-7")
+    // tombstones are a second read group: one more scan per bucket
+    cat.deleteWhere("db", "g", col("id") <= 100L)
+    assert(fileScans(cat.read("db", "g")) === 2 * N)
+    assert(cat.read("db", "g").count() === 100)
+    assertDirOrdinals(cat, "db", "g")
+  }
+
+  test("40 uncompacted dirs plan without a listing job and read with the " +
+      "jobs of a 2-dir table") {
+    val cat = freshCatalog()
+    cat.createSchema("db")
+    pkTable(cat, "few")
+    pkTable(cat, "many")
+    (1 to 2).foreach(i => cat.upsert("db", "few", idv(1L to 40L, s"f$i-")))
+    (1 to 40).foreach(i => cat.upsert("db", "many", idv(1L to 40L, s"m$i-")))
+    // more dirs than spark.sql.sources.parallelPartitionDiscovery.threshold
+    // (32) in one read group: listing must stay on the driver
+    assert(jobsDuring(cat.read("db", "many").queryExecution.executedPlan) === 0)
+    val fewJobs = jobsDuring(cat.read("db", "few").collect())
+    val manyJobs = jobsDuring(cat.read("db", "many").collect())
+    assert(manyJobs === fewJobs)
+    assert(rowsOf(cat.read("db", "many")) ===
+      rowsOf(idv(1L to 40L, "m40-")))
+  }
+
+  test("ordinals come from each file's dir: paired -del dirs, and a " +
+      "warehouse path holding a snap- segment") {
+    val root = Files.createTempDirectory("graft-bp-ord")
+    val cat = new GraftCatalog(spark, root.resolve("snap-9/wh").toString)
+    cat.createSchema("db")
+    pkTable(cat, "m")
+    cat.upsert("db", "m", idv(1L to 60L, "v"))
+    // one snapshot, two dirs: snap-2 (upserts) and snap-2-del (tombstones)
+    cat.mergeCommit("db", "m", idv(1L to 10L, "u"), idv(50L to 60L, "x").select("id"))
+    assert(cat.headOrdinals("db", "m").map(_._1).contains("snap-2-del"))
+    assertDirOrdinals(cat, "db", "m")
+    // the newest version wins in every bucket, never the warehouse's "9"
+    cat.upsert("db", "m", idv(Seq(3L), "w"))
+    assert(rowsOf(cat.read("db", "m")) ===
+      rowsOf(idv(Seq(3L), "w")) ++ rowsOf(idv((1L to 10L).filter(_ != 3L), "u")) ++
+        rowsOf(idv(11L to 49L, "v")))
+  }
 }

@@ -73,6 +73,32 @@ class ConcurrentCommitSpec extends SparkSpecBase {
     assert(gc.read("db", "tu").count() === 10)
   }
 
+  test("update aborts when a concurrent upsert of its key lands between " +
+      "its read and its commit; the upsert survives") {
+    gc.createTable("db", "tup", rows(0, 0).schema, primaryKey = Seq("id"))
+    gc.upsert("db", "tup", rows(1, 10).toDF())
+    def v5 = gc.read("db", "tup").filter(col("id") === 5).collect()
+      .map(_.getString(1)).toSeq
+    val bump = Map("v" -> concat(col("v"), lit("+u")))
+    // the upsert lands after update read id=5's image and before its
+    // commit: landing the updated stale image would silently revert it
+    var fired = false
+    gc.basisTestHook = () => if (!fired) {
+      fired = true
+      other.upsert("db", "tup", rows(5, 5).withColumn("v", lit("theirs")).toDF())
+    }
+    try {
+      val e = intercept[java.util.ConcurrentModificationException](
+        gc.update("db", "tup", col("id") === 5, bump))
+      assert(e.getMessage.contains("concurrent"), e.getMessage)
+    } finally gc.basisTestHook = () => ()
+    assert(v5 === Seq("theirs"))
+    // re-run against the new head: the update applies on top of it
+    gc.update("db", "tup", col("id") === 5, bump)
+    assert(v5 === Seq("theirs+u"))
+    assert(gc.read("db", "tup").count() === 10)
+  }
+
   test("concurrent append during compaction aborts the compaction") {
     gc.createTable("db", "tc", rows(0, 0).schema)
     gc.append("db", "tc", rows(1, 10).toDF())

@@ -27,6 +27,19 @@ trait SparkSpecBase extends AnyFunSuite with BeforeAndAfterAll {
     finally spark.sparkContext.removeSparkListener(l)
     acc.get()
   }
+
+  /** Every data and tombstone dir of the head snapshot resolves its rows
+    * under the ordinal its name carries: `snap-7`, `snap-7-del`,
+    * `snap-7-r2` and a branch's `~/snap-7` all read 7. */
+  def assertDirOrdinals(cat: graft.sources.GraftCatalog, schema: String,
+      table: String): Unit = {
+    val got = cat.headOrdinals(schema, table)
+    assert(got.nonEmpty, s"$schema.$table has no data or tombstone dirs")
+    got.foreach { case (dir, ords) =>
+      val want = "snap-(\\d+)".r.findAllMatchIn(dir).toSeq.last.group(1).toLong
+      assert(ords === Seq(want), s"$dir reads ordinals $ords")
+    }
+  }
 }
 
 object SparkSpecBase {

@@ -195,6 +195,8 @@ class ZonePruneSpec extends SparkSpecBase {
     val rangeStats = stats.filter(_._1.startsWith("snap-4-r"))
     assert(rangeStats.size === 4)
     assert(rangeStats.values.map(_.rows).sum === 300)
+    // every snap-4-r<i> range dir reads under the snapshot's ordinal 4
+    assertDirOrdinals(gc, "db", "sc")
     // zones are now disjoint: a point query plans exactly one dir
     val after = gc.readWhere("db", "sc", col("id") === 150L)
     assert(scannedDirs(after).size === 1)
