@@ -80,15 +80,26 @@ object JobProfile {
     // the query thread every 5 ms and aggregates the deepest frame in
     // graft/catalyst/hadoop-fs code, attributing the driverGap to actual
     // driver work (plan analysis vs FS listings vs manifest JSON vs
-    // commit bookkeeping).
+    // commit bookkeeping). Janino compiles mostly run on task and AQE
+    // stage-materialization threads, which the query thread's samples
+    // never show, so each tick also checks every RUNNABLE thread of the
+    // JVM for a Janino frame.
     val sampleStacks = sys.env.get("SPARK_GRAFT_PROFILE_STACKS").contains("1")
     val sampled = new java.util.concurrent.ConcurrentHashMap[String, Integer]
+    val ticks = new AtomicInteger
+    val janinoTicks = new AtomicInteger
     val samplerOn = new java.util.concurrent.atomic.AtomicBoolean(false)
     val queryThread = Thread.currentThread()
     if (sampleStacks) {
       val t = new Thread(() => {
         while (true) {
           if (samplerOn.get()) {
+            ticks.incrementAndGet()
+            val compiling = Thread.getAllStackTraces.entrySet.stream.anyMatch { e =>
+              e.getKey.getState == Thread.State.RUNNABLE &&
+                e.getValue.exists(_.getClassName.startsWith("org.codehaus."))
+            }
+            if (compiling) janinoTicks.incrementAndGet()
             val st = queryThread.getStackTrace
             // topmost frame from an attributable package, else the top
             // non-jdk frame
@@ -126,6 +137,8 @@ object JobProfile {
           (jobs.get(), stages.get(), tasks.get(), taskMs.get())
         val c0 = compiles()
         sampled.clear()
+        ticks.set(0)
+        janinoTicks.set(0)
         samplerOn.set(true)
         val wc0 = System.currentTimeMillis()
         val w0 = System.nanoTime()
@@ -162,6 +175,9 @@ object JobProfile {
           top.foreach { case (k, c) =>
             println(f"[stacks] $name run$run ${c.toInt * 100.0 / n}%5.1f%% ($c) $k")
           }
+          val jt = janinoTicks.get
+          println(f"[stacks] $name run$run janino (any thread) " +
+            f"${jt * 100.0 / math.max(1, ticks.get)}%5.1f%% ($jt of ${ticks.get} ticks)")
         }
         // Per-Catalyst-rule cumulative time for this run (driver-side
         // analysis/optimization attribution); reset between runs.

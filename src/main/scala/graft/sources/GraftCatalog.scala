@@ -58,21 +58,36 @@ class GraftCatalog(private[sources] val spark: SparkSession,
 
   import GraftCatalog._
 
-  // Spark 4.1's partitioning-aware UnionExec (spark.sql.unionOutputPartitioning,
-  // default true) ZIPS union children that share an output partitioning —
-  // and every per-bucket merge leg this engine builds is deliberately
-  // SinglePartition (the in-task keep-latest merge needs one bucket's
-  // rows in one partition), so a K-bucket resolve's union of K legs
-  // collapsed into ONE task that merged every bucket SERIALLY (measured
-  // r19: an 8-bucket read ran 1 task; a 4096-bucket 100 TB table would
-  // funnel the whole merge through one core). Restore the documented
-  // one-bucket-per-task shape by turning the flag off for sessions this
-  // catalog drives — set it back after construction to opt out. (Shape
-  // fix, not tuning: the flag only controls whether UnionExec CLAIMS its
-  // children's common partitioning to save downstream exchanges — none
-  // of this engine's plans rely on that claim, and a bucketed resolve's
-  // merge parallelism is pinned by GraftCatalogSpec.)
+  // Catalog session settings. Both are Spark's own flags, set for the
+  // session this catalog drives; set either back after construction to
+  // opt out.
+  //
+  // spark.sql.unionOutputPartitioning=false — Spark 4.1's
+  // partitioning-aware UnionExec (default true) ZIPS union children that
+  // share an output partitioning — and every per-bucket merge leg this
+  // engine builds is deliberately SinglePartition (the in-task
+  // keep-latest merge needs one bucket's rows in one partition), so a
+  // K-bucket resolve's union of K legs collapsed into ONE task that
+  // merged every bucket SERIALLY (measured r19: an 8-bucket read ran 1
+  // task; a 4096-bucket 100 TB table would funnel the whole merge
+  // through one core). Turning the flag off restores the documented
+  // one-bucket-per-task shape. (Shape fix, not tuning: the flag only
+  // controls whether UnionExec CLAIMS its children's common partitioning
+  // to save downstream exchanges — none of this engine's plans rely on
+  // that claim, and a bucketed resolve's merge parallelism is pinned by
+  // GraftCatalogSpec.)
+  //
+  // spark.sql.codegen.useIdInClassName=false — Spark's codegen cache is
+  // keyed by the generated source, and whole-stage classes are otherwise
+  // named GeneratedIteratorForCodegenStage<N>: the K identical merge legs
+  // of a bucketed resolve compiled K classes, and since stage numbers
+  // shift with the plan around them, every delete or compaction after a
+  // commit compiled its pipelines again (measured on an 8-bucket table:
+  // 31–44 compiles per deleteWhere, 17 per repeated compact). Without
+  // the id, identical pipelines share one class per JVM, within a query
+  // and across operations. Plans, jobs and tasks are unchanged.
   spark.conf.set("spark.sql.unionOutputPartitioning", "false")
+  spark.conf.set("spark.sql.codegen.useIdInClassName", "false")
 
   private[sources] val mapper = new ObjectMapper()
 
@@ -2869,16 +2884,28 @@ class GraftCatalog(private[sources] val spark: SparkSession,
   private[sources] def selectBuckets(m: ObjectNode, chosen: Option[JsonNode],
       pred: org.apache.spark.sql.catalyst.expressions.Expression): Option[Seq[Int]] = {
     val pk = primaryKey(m)
-    val snaps = m.get("snapshots").asInstanceOf[ArrayNode]
-    val atHead = chosen.exists(s => snaps.size() > 0 &&
-      s.get("id").asLong() == snaps.get(snaps.size() - 1).get("id").asLong())
     bucketCount(m) match {
-      case Some(n) if n >= 1 && pk.nonEmpty && atHead =>
+      case Some(n) if n >= 1 && pk.nonEmpty && isHead(m, chosen) =>
         val types = currentFields(m)
           .map(f => f.name -> TypeMapping.toSparkType(f.trinoType)).toMap
         BucketSelect.select(pk.map(c => c -> types(c)), n, pred)
       case _ => None
     }
+  }
+
+  private def isHead(m: ObjectNode, chosen: Option[JsonNode]): Boolean = {
+    val snaps = m.get("snapshots").asInstanceOf[ArrayNode]
+    chosen.exists(s => snaps.size() > 0 &&
+      s.get("id").asLong() == snaps.get(snaps.size() - 1).get("id").asLong())
+  }
+
+  /** Whether a read at `snapshotId` / `asOfMillis` (or the session's scan
+    * properties) resolves the head snapshot: the bucket options and the
+    * dynamic-bucket hash index describe the head's layout only. */
+  private[graft] def readsHead(schema: String, table: String,
+      snapshotId: Option[Long], asOfMillis: Option[Long]): Boolean = {
+    val m = readManifest(schema, table)
+    isHead(m, chooseSnapshot(m, schema, table, snapshotId, asOfMillis))
   }
 
   /**
@@ -3161,18 +3188,21 @@ class GraftCatalog(private[sources] val spark: SparkSession,
     // they lose the version race to the very rows they delete. A batch
     // already carrying the column (CDC `-D` rows) passes it through;
     // otherwise fetch from the current image (delta-sized semi join).
-    val delKeys = sequenceField(m) match {
+    // The fetched sequences derive from this head, so the commit carries
+    // its version: a concurrent upsert of a deleted key aborts the merge
+    // instead of outranking a tombstone that carries a stale sequence.
+    val (delKeys, fetchBasis) = sequenceField(m) match {
       case Some(sf) if deleteKeys.columns.contains(sf) =>
-        deleteKeys.select((pk :+ sf).map(col): _*)
+        (deleteKeys.select((pk :+ sf).map(col): _*), None)
       case Some(sf) =>
-        read(schema, table)
+        (read(schema, table)
           .join(deleteKeys.select(pk.map(col): _*), pk, "left_semi")
-          .select((pk :+ sf).map(col): _*)
-      case None => deleteKeys.select(pk.map(col): _*)
+          .select((pk :+ sf).map(col): _*), Some(commitVersion(m)))
+      case None => (deleteKeys.select(pk.map(col): _*), None)
     }
     commit(schema, table,
       Seq(Leg("", "data", upserts), Leg("-del", "delete", delKeys)),
-      basis = basis, streamBatchId = streamBatchId)
+      basis = basis.orElse(fetchBasis), streamBatchId = streamBatchId)
   }
 
   /**

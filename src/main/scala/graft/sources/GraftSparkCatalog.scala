@@ -281,8 +281,11 @@ class GraftSparkCatalog extends TableCatalog with SupportsNamespaces
         // dynamic-bucket tables route a full-PK equality through the
         // hash index (key→bucket is data there, not a hash); an
         // unassigned key (None) falls through to the ordinary read,
-        // which correctly returns nothing
-        val dynBucket = if (!dynamicBucket || pk.isEmpty) None else {
+        // which correctly returns nothing. The index is the head's: an
+        // overwrite since an older snapshot may have re-assigned the
+        // key's bucket, so time-travel lookups read through readWhere.
+        val dynBucket = if (!dynamicBucket || pk.isEmpty ||
+            !gc.readsHead(schemaName, tableName, snapshotId, asOfMillis)) None else {
           val eq = filters.collect { case EqualTo(a, v) if pk.contains(a) => a -> v }.toMap
           if (pk.forall(eq.contains))
             gc.dynamicBucketFor(schemaName, tableName, pk.map(eq))

@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -316,5 +317,39 @@ class BucketPruneSpec extends SparkSpecBase {
     assert(rowsOf(cat.read("db", "m")) ===
       rowsOf(idv(Seq(3L), "w")) ++ rowsOf(idv((1L to 10L).filter(_ != 3L), "u")) ++
         rowsOf(idv(11L to 49L, "v")))
+  }
+
+  /** Janino compiles while `body` runs (driver, task and AQE threads),
+    * counted as `JobProfile` counts them: each one is a miss in Spark's
+    * codegen cache. Catalog sessions name generated classes without
+    * their stage id, so identical merge legs share one class and a
+    * repeated maintenance run reuses the classes of the last one. */
+  private def compiles(body: => Unit): Long = {
+    val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    body
+    CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
+  }
+
+  test("a 16-bucket read compiles no more classes than an 8-bucket read " +
+      "of the same dir shape") {
+    val cat = freshCatalog()
+    Seq(4, 8, 16).foreach(n => idvTable(cat, s"b$n", Map("bucket" -> n.toString)))
+    cat.read("db", "b4").collect() // warm-up: the shape's pipelines
+    val c8 = compiles(assert(cat.read("db", "b8").collect().length === 377))
+    val c16 = compiles(assert(cat.read("db", "b16").collect().length === 377))
+    assert(c16 <= c8, s"16 buckets compiled $c16 classes, 8 buckets $c8")
+  }
+
+  test("a repeated compact compiles no class, though the upsert between " +
+      "them shifts the plan's stage numbering") {
+    val cat = freshCatalog()
+    idvTable(cat, "c")
+    cat.compact("db", "c")
+    cat.upsert("db", "c", idv(51L to 120L, "w"))
+    cat.deleteWhere("db", "c", col("id") % 19 === 0)
+    val again = compiles(cat.compact("db", "c"))
+    assert(again === 0, s"the second compact compiled $again classes")
+    val want = (1L to 400L).filter(i => (i % 17 != 0 || (i >= 51 && i <= 120)) && i % 19 != 0)
+    assert(cat.read("db", "c").select("id").collect().map(_.getLong(0)).sorted.toSeq === want)
   }
 }

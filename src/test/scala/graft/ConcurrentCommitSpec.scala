@@ -99,6 +99,39 @@ class ConcurrentCommitSpec extends SparkSpecBase {
     assert(gc.read("db", "tup").count() === 10)
   }
 
+  test("sequence.field mergeCommit aborts when a concurrent upsert of its " +
+      "deleted key lands between its tombstone fetch and its commit") {
+    import spark.implicits._
+    def seqRows(ids: Seq[Long], v: String, seq: Long) =
+      ids.map(i => (i, v, seq)).toDF("id", "v", "seq")
+    gc.createTable("db", "tms", seqRows(Seq(0L), "", 0L).schema,
+      options = Map("sequence.field" -> "seq"), primaryKey = Seq("id"))
+    gc.upsert("db", "tms", seqRows(1L to 10L, "old", 1L))
+    def v5 = gc.read("db", "tms").filter(col("id") === 5).collect()
+      .map(_.getString(1)).toSeq
+    // the upsert (sequence 2) lands after the merge fetched key 5's
+    // tombstone sequence (1) from the image: landing the tombstone would
+    // lose the version race, so the acknowledged delete would not apply
+    var fired = false
+    gc.basisTestHook = () => if (!fired) {
+      fired = true
+      other.upsert("db", "tms", seqRows(Seq(5L), "theirs", 2L))
+    }
+    try {
+      val e = intercept[java.util.ConcurrentModificationException](
+        gc.mergeCommit("db", "tms", seqRows(Seq(20L), "new", 1L),
+          Seq(5L).toDF("id")))
+      assert(e.getMessage.contains("concurrent"), e.getMessage)
+    } finally gc.basisTestHook = () => ()
+    assert(v5 === Seq("theirs"))
+    assert(gc.read("db", "tms").count() === 10)
+    // re-run against the new head: the tombstone carries sequence 2
+    gc.mergeCommit("db", "tms", seqRows(Seq(20L), "new", 1L), Seq(5L).toDF("id"))
+    assert(v5.isEmpty)
+    assert(gc.read("db", "tms").select("id").as[Long].collect().sorted.toSeq ===
+      ((1L to 10L).filter(_ != 5L) :+ 20L))
+  }
+
   test("concurrent append during compaction aborts the compaction") {
     gc.createTable("db", "tc", rows(0, 0).schema)
     gc.append("db", "tc", rows(1, 10).toDF())
