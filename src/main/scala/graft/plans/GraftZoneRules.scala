@@ -43,7 +43,7 @@ class GraftZonePrune extends Rule[LogicalPlan] {
           // loses the col=value segments a partitioned scan derives
           // partition columns from — pruneTo compensates by pinning a
           // basePath option on the pruned scan (the same contract as
-          // GraftCatalog.frameFor's file-subset read), so partitioned
+          // GraftCatalog.dirFrames' file-subset read), so partitioned
           // tables expand to file granularity too.
           val fz = gt.fileZones.getOrElse(Map.empty)
           val cur = gt.currentPaths

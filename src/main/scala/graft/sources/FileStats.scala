@@ -609,7 +609,7 @@ private[graft] object FileStats {
       val qdir = fs.makeQualified(dir).toString
       // explicit schema + basePath: partition `col=value` segments resolve
       // as typed partition columns without inference coercion (the
-      // frameFor contract), so their zones come out as exact points
+      // relationFor contract), so their zones come out as exact points
       // the avro short name is not registered in every environment — use
       // the class name, as GraftCatalog.providerFor does
       val provider =

@@ -471,29 +471,8 @@ class GraftCatalog(private[sources] val spark: SparkSession,
               "producer, which materialize resolved-image pairs)")
       }
     }
-    // Bloom-filter file index (Paimon's `file-index.bloom-filter.columns`):
-    // per-file membership bitsets for equality/IN lookups on columns no
-    // clustering helps. Append-only scope: that's the path [[readWhere]]
-    // prunes (PK point lookups already bucket-prune, and MoR resolution
-    // must see every delta anyway).
-    options.get(BloomIndex.OptionKey).foreach { v =>
-      val cols = v.split(',').map(_.trim).filter(_.nonEmpty)
-      require(cols.nonEmpty,
-        s"${BloomIndex.OptionKey} must name at least one column")
-      cols.foreach { c =>
-        val f = structType.fields.find(_.name.equalsIgnoreCase(c))
-        require(f.isDefined, s"bloom-filter column $c not in schema")
-        require(BloomIndex.indexable(f.get.dataType),
-          s"bloom-filter column $c: ${f.get.dataType.simpleString} has no " +
-            "canonical bloom domain (integral/date/timestamp/string only)")
-        require(!partitionBy.exists(_.equalsIgnoreCase(c)),
-          s"bloom-filter column $c is a partition column (partition values " +
-            "already prune via path-segment zones)")
-      }
-      require(primaryKey.isEmpty,
-        "bloom-filter index applies to append-only tables (PK tables " +
-          "point-look-up via bucket pruning; MoR reads must see every delta)")
-    }
+    options.get(BloomIndex.OptionKey)
+      .foreach(validateBloomColumns(_, structType, partitionBy, primaryKey))
     // Sequence groups (Paimon's `fields.<seq-col>.sequence-group`): with
     // partial-update, independent upstream streams own disjoint column
     // GROUPS, each versioned by its own sequence column — a group's
@@ -1308,12 +1287,7 @@ class GraftCatalog(private[sources] val spark: SparkSession,
       frame: DataFrame, toDir: String, kind: String, buckets: Option[Int],
       lead: Seq[String] = Nil): Unit = {
     val (toWrite0, bucketPart) =
-      // DV sidecars are (file, pos) lists with no key columns — they
-      // never take the bucket layout (a PK DV build on a bucketed
-      // table would otherwise try to hash absent key columns).
-      // Changelog dirs stay flat too: they are consumed whole-range,
-      // never bucket-routed. Index-only dirs carry no rows.
-      if (kind == "idx" || kind == "dv" || kind == "cl") (frame, Seq.empty)
+      if (!bucketLaid(kind)) (frame, Seq.empty)
       else buckets match {
         case Some(-1) => (frame, Seq(BucketCol)) // pre-routed via the hash index
         case Some(n) =>
@@ -1417,6 +1391,32 @@ class GraftCatalog(private[sources] val spark: SparkSession,
         writeManifest(schema, table, m)
       }
     }
+
+  /** Bloom-filter file index (Paimon's `file-index.bloom-filter.columns`)
+    * on a table of schema `st`: per-file membership bitsets for
+    * equality/IN lookups on columns no clustering helps. Append-only
+    * scope: that's the path [[readWhere]] prunes (PK point lookups
+    * already bucket-prune, and MoR resolution must see every delta
+    * anyway). Checked at create time and on every option change. */
+  private[sources] def validateBloomColumns(v: String, st: StructType,
+      partitionBy: Seq[String], primaryKey: Seq[String]): Unit = {
+    val cols = v.split(',').map(_.trim).filter(_.nonEmpty)
+    require(cols.nonEmpty,
+      s"${BloomIndex.OptionKey} must name at least one column")
+    cols.foreach { c =>
+      val f = st.fields.find(_.name.equalsIgnoreCase(c))
+      require(f.isDefined, s"bloom-filter column $c not in schema")
+      require(BloomIndex.indexable(f.get.dataType),
+        s"bloom-filter column $c: ${f.get.dataType.simpleString} has no " +
+          "canonical bloom domain (integral/date/timestamp/string only)")
+      require(!partitionBy.exists(_.equalsIgnoreCase(c)),
+        s"bloom-filter column $c is a partition column (partition values " +
+          "already prune via path-segment zones)")
+    }
+    require(primaryKey.isEmpty,
+      "bloom-filter index applies to append-only tables (PK tables " +
+        "point-look-up via bucket pruning; MoR reads must see every delta)")
+  }
 
   private[sources] def validateRetentionOptions(options: Map[String, String]): Unit = {
     options.get("snapshot.num-retained").foreach { v =>
@@ -1890,14 +1890,6 @@ class GraftCatalog(private[sources] val spark: SparkSession,
   }
 
   /**
-   * Metadata-only row count: `count(*)` answered from manifest zone-map
-   * row counts — zero files opened, zero executor work (the O(1)
-   * planning answer a 100 TB `SELECT count(*)` deserves). Some only when
-   * provably exact: every live dir is plain current-schema append data
-   * with recorded stats, and the table has no primary key (MoR merge
-   * changes the visible count).
-   */
-  /**
    * Upper-bound row estimate of a snapshot from manifest dir stats alone
    * (sum of per-dir footer row counts over DATA entries — pre-merge, so
    * MoR-pending PK snapshots over-count; tombstones/DVs only shrink).
@@ -1916,6 +1908,17 @@ class GraftCatalog(private[sources] val spark: SparkSession,
     if (counts.exists(_.isEmpty)) None else Some(counts.flatten.sum)
   }
 
+  /**
+   * Metadata-only row count: `count(*)` answered from manifest zone-map
+   * row counts minus deletion-vector positions — zero files opened, zero
+   * executor work (the O(1) planning answer a 100 TB `SELECT count(*)`
+   * deserves). Some only when provably exact, which takes recorded stats
+   * on every counted dir and one of: plain current-schema append data
+   * (no primary key), or a DV-covered primary-key snapshot (every data
+   * dir at or below the newest DV build, no tombstone dirs), whose image
+   * holds one live row per key. Other PK snapshots answer None: MoR merge
+   * changes the visible count.
+   */
   def countRows(schema: String, table: String,
       snapshotId: Option[Long] = None,
       asOfMillis: Option[Long] = None): Option[Long] = {
@@ -1959,28 +1962,6 @@ class GraftCatalog(private[sources] val spark: SparkSession,
     else Some(counts.flatten.sum - dvRows.flatten.sum)
   }
 
-  /**
-   * Map one snapshot file entry onto the current schema: every current
-   * column (by stable field id; missing → null) plus the snapshot ordinal
-   * `__ord` and the tombstone flag `__del` used for merge-on-read.
-   */
-  private[sources] def frameFor(schema: String, table: String, m: ObjectNode,
-      fe: FileEntry, fileSubset: Option[Seq[String]] = None,
-      withMeta: Boolean = false,
-      // Partitioned bucketed layout: read the WHOLE dir (partition
-      // discovery resolves `col=value` AND `__bucket=k` segments) and
-      // keep the bucket column so the caller can split per-bucket legs.
-      withBucket: Boolean = false): DataFrame = {
-    val base = dirPath(schema, table, fe.dir).toString
-    fileSubset match {
-      // zone-pruned file list: explicit files with basePath so `col=value`
-      // partition segments between the dir root and each file still
-      // resolve as partition columns of the declared schema
-      case Some(files) => relationFor(m, fe, files, Some(base), withMeta, withBucket)
-      case None => relationFor(m, fe, Seq(base), None, withMeta, withBucket)
-    }
-  }
-
   /** What changes how a snapshot dir is read: its kind, write-time schema
     * version and retract flag. Dirs sharing this key read as ONE relation
     * ([[groupFrames]]); the ordinal comes from each row's file path. */
@@ -1988,19 +1969,18 @@ class GraftCatalog(private[sources] val spark: SparkSession,
     (fe.kind, fe.schemaVersion, fe.retract)
 
   /**
-   * `roots` (each a snapshot dir, or a `__bucket=k` leaf of one, paired
-   * with its entry) read as one relation per read group
-   * ([[readGroupOf]]) instead of one per dir, so a resolve's plan grows
-   * with its groups, not its dirs, and its generated code is the same
-   * from commit to commit. Roots must be flat: a root holding `col=value`
-   * subdirs needs partition discovery, which takes a single base dir
-   * (partitioned data dirs read through [[frameFor]], one each). A group
-   * is split into chunks of at most
+   * `roots` (each a snapshot dir, a `__bucket=k` leaf of one, or a file
+   * of one, paired with its entry) read as one relation per read group
+   * ([[readGroupOf]]) instead of one per dir, so a plan grows with its
+   * groups, not its dirs, and its generated code is the same from commit
+   * to commit. Roots must be flat: a root holding `col=value` subdirs
+   * needs partition discovery, which takes a single base dir (see
+   * [[dirFrames]]). A group is split into chunks of at most
    * `spark.sql.sources.parallelPartitionDiscovery.threshold` roots, so
    * listing stays on the driver as it does for one-dir relations —
    * beyond it Spark lists through a job.
    */
-  private[sources] def groupFrames(m: ObjectNode, roots: Seq[(FileEntry, Path)],
+  private def groupFrames(m: ObjectNode, roots: Seq[(FileEntry, Path)],
       withMeta: Boolean = false): Seq[DataFrame] = {
     val chunk = spark.conf
       .get("spark.sql.sources.parallelPartitionDiscovery.threshold", "32").toInt
@@ -2012,32 +1992,49 @@ class GraftCatalog(private[sources] val spark: SparkSession,
   }
 
   /**
-   * Every version source of `entries` read whole, as [[groupFrames]]
-   * relations. On a bucketed layout each dir is listed once and its
-   * `__bucket=k` leaves are read (only `onlyBuckets`' when given); the
-   * frames never carry the bucket column. Partitioned data dirs read one
-   * discovery-backed relation each.
+   * The one way snapshot entries become frames: each mapped onto the
+   * current schema by [[relationFor]], as [[groupFrames]] relations over
+   * flat roots — the dir, its `__bucket=k` leaves on a bucket-laid dir
+   * (listed once; only `onlyBuckets`', and without the entry's retired
+   * buckets when `skipRetired`), or the files `files` names for the
+   * entry (an empty subset reads nothing). A partitioned data dir (or a
+   * file subset of it) needs partition discovery from one base dir, so
+   * it reads as its own relation with its buckets filtered after the
+   * read. No frame carries the bucket column, so all of them share one
+   * column layout and union with [[unionAllByName]].
    */
   private[sources] def dirFrames(schema: String, table: String, m: ObjectNode,
       entries: Seq[FileEntry], withMeta: Boolean = false,
-      onlyBuckets: Option[Seq[Int]] = None): Seq[DataFrame] = {
+      onlyBuckets: Option[Seq[Int]] = None, skipRetired: Boolean = false,
+      files: Map[FileEntry, Seq[String]] = Map.empty): Seq[DataFrame] = {
     val bucketed = bucketCount(m).isDefined
-    val (own, flat) = entries.partition(fe =>
-      fe.kind == "data" && partitionColumns(m).nonEmpty)
+    def keeps(fe: FileEntry, k: Int) = onlyBuckets.forall(_.contains(k)) &&
+      !(skipRetired && fe.excludeBuckets.contains(k))
+    val (own, flat) = entries.filterNot(fe => files.get(fe).exists(_.isEmpty))
+      .partition(fe => fe.kind == "data" && partitionColumns(m).nonEmpty)
     val ownFrames = own.map { fe =>
-      if (!bucketed) frameFor(schema, table, m, fe, withMeta = withMeta)
+      val base = dirPath(schema, table, fe.dir).toString
+      val sub = files.get(fe)
+      val f = relationFor(m, fe, sub.getOrElse(Seq(base)), sub.map(_ => base),
+        withMeta, withBucket = bucketed)
+      if (!bucketed) f
       else {
-        val f = frameFor(schema, table, m, fe, withMeta = withMeta, withBucket = true)
-        onlyBuckets.fold(f)(bs =>
-          f.filter(col(BucketCol).isin(bs.map(Integer.valueOf): _*)))
-          .drop(BucketCol)
+        val retired = if (skipRetired) fe.excludeBuckets else Nil
+        (onlyBuckets.map(bs => col(BucketCol).isin(bs.map(Integer.valueOf): _*)) ++
+          Some(retired).filter(_.nonEmpty)
+            .map(xs => !col(BucketCol).isin(xs.map(Integer.valueOf): _*)))
+          .reduceOption(_ && _).fold(f)(f.filter).drop(BucketCol)
       }
     }
     val roots = flat.flatMap { fe =>
       val d = dirPath(schema, table, fe.dir)
-      if (!bucketed) Seq(fe -> d)
-      else bucketsUnder(d, 0).filter(k => onlyBuckets.forall(_.contains(k)))
-        .sorted.map(k => fe -> new Path(d, s"$BucketCol=$k"))
+      files.get(fe) match {
+        case Some(sub) => sub.map(f => fe -> new Path(f))
+        case None if bucketed && bucketLaid(fe.kind) =>
+          bucketsUnder(d, 0).filter(keeps(fe, _)).sorted
+            .map(k => fe -> new Path(d, s"$BucketCol=$k"))
+        case None => Seq(fe -> d)
+      }
     }
     ownFrames ++ groupFrames(m, roots, withMeta)
   }
@@ -2072,8 +2069,11 @@ class GraftCatalog(private[sources] val spark: SparkSession,
     }
 
   /** `paths` (dirs, or files under `basePath`) read as one relation
-    * mapped onto the current schema; `fe` describes how (kind, write-time
-    * schema version, retract flag) — see [[frameFor]]. */
+    * mapped onto the current schema: every current column by stable
+    * field id (missing → null), plus the snapshot ordinal `__ord` and
+    * the tombstone flag `__del` merge-on-read uses. `fe` describes how
+    * the paths were written (kind, write-time schema version, retract
+    * flag); a changelog (`cl`) dir adds its `_row_kind` column. */
   private def relationFor(m: ObjectNode, fe: FileEntry, paths: Seq[String],
       basePath: Option[String], withMeta: Boolean,
       withBucket: Boolean): DataFrame = {
@@ -2122,6 +2122,9 @@ class GraftCatalog(private[sources] val spark: SparkSession,
       (if (fe.retract)
         Seq(StructField(RetractCol, org.apache.spark.sql.types.BooleanType))
       else Seq.empty) ++
+      (if (fe.kind == "cl")
+        Seq(StructField(RowKindCol, org.apache.spark.sql.types.StringType))
+      else Seq.empty) ++
       (if (withBucket)
         Seq(StructField(BucketCol, org.apache.spark.sql.types.IntegerType))
       else Seq.empty))
@@ -2166,6 +2169,7 @@ class GraftCatalog(private[sources] val spark: SparkSession,
       (if (orcPos) col(OrcPosCol) else col("_metadata.row_index"))
         .as(DvPosCol))
     val bucketCols = if (withBucket) Seq(col(BucketCol)) else Seq.empty
+    val clCols = if (fe.kind == "cl") Seq(col(RowKindCol)) else Seq.empty
     // aggregation-engine frames always carry the retract flag so sibling
     // dirs with and without retract batches union by name; unflagged
     // dirs contribute constant false (their rows are all inserts)
@@ -2173,7 +2177,7 @@ class GraftCatalog(private[sources] val spark: SparkSession,
       else Seq((if (fe.retract)
         org.apache.spark.sql.functions.coalesce(col(RetractCol), lit(false))
       else lit(false)).as(RetractCol))
-    raw.select(cols ++ metaCols ++ bucketCols ++ rkCols ++ Seq(
+    raw.select(cols ++ metaCols ++ bucketCols ++ rkCols ++ clCols ++ Seq(
       OrdinalFromPath.as("__ord"), lit(fe.kind == "delete").as("__del")): _*)
   }
 
@@ -2295,22 +2299,16 @@ class GraftCatalog(private[sources] val spark: SparkSession,
         }
       }.reduceOption(org.apache.spark.sql.catalyst.expressions.And(_, _))
     val perFile = fileStatsFrom(schema, table, m)
-    val frames = entries.flatMap { fe =>
-      (rangePred, perFile.get(fe.dir).filter(_.nonEmpty)) match {
-        case (Some(p), Some(fm)) =>
-          val admit = fm.collect {
-            case (rel, z) if FileStats.mightMatch(z, p) => rel
-          }.toSeq.sorted
-          if (admit.isEmpty) None
-          else Some(frameFor(schema, table, m, fe,
-            fileSubset = Some(admit.map(r =>
-              new Path(dirPath(schema, table, fe.dir), r).toString)),
-            withMeta = withMeta))
-        case _ =>
-          Some(frameFor(schema, table, m, fe, withMeta = withMeta))
-      }
+    val admitted: Map[FileEntry, Seq[String]] = rangePred.fold(
+        Map.empty[FileEntry, Seq[String]]) { p =>
+      entries.flatMap(fe => perFile.get(fe.dir).filter(_.nonEmpty).map(fm =>
+        fe -> fm.collect {
+          case (rel, z) if FileStats.mightMatch(z, p) =>
+            new Path(dirPath(schema, table, fe.dir), rel).toString
+        }.toSeq.sorted)).toMap
     }
-    if (frames.isEmpty) None else Some(unionAllByName(frames))
+    unionOption(dirFrames(schema, table, m, entries, withMeta = withMeta,
+      files = admitted))
   }
 
   /** Fold an `__ord`-tagged frame of row versions per a FIELD-WISE merge
@@ -2631,7 +2629,8 @@ class GraftCatalog(private[sources] val spark: SparkSession,
     // is unchanged.
     val partFrames: Map[FileEntry, DataFrame] = present.collect {
       case (fe, ks) if ks.nonEmpty && nested(fe) =>
-        fe -> frameFor(schema, table, m, fe, withBucket = true)
+        fe -> relationFor(m, fe, Seq(dirPath(schema, table, fe.dir).toString),
+          None, withMeta = false, withBucket = true)
     }.toMap
     val legs = wanted.flatMap { k =>
       // A dir whose entry RETIRES bucket k (per-bucket compaction folded
@@ -2670,8 +2669,6 @@ class GraftCatalog(private[sources] val spark: SparkSession,
     if (legs.isEmpty) None else Some(unionAllByName(legs))
   }
 
-  /** Snapshot selection shared by reads and the SQL catalog: explicit
-    * id/timestamp beats session defaults beats latest. */
   /** The snapshot id an explicit/session-level travel request selects —
     * the same resolution [[read]] uses (explicit args win, then the
     * GraftOptions session properties, then latest). None = empty table. */
@@ -2683,6 +2680,8 @@ class GraftCatalog(private[sources] val spark: SparkSession,
       .map(_.get("id").asLong())
   }
 
+  /** Snapshot selection shared by reads and the SQL catalog: explicit
+    * id/timestamp beats session defaults beats latest. */
   private[sources] def chooseSnapshot(m: ObjectNode, schema: String, table: String,
       snapshotId: Option[Long], asOfMillis: Option[Long]): Option[JsonNode] = {
     val snaps = m.get("snapshots").asInstanceOf[ArrayNode]
@@ -3763,6 +3762,13 @@ object GraftCatalog {
     * of the logical schema — reads select it away). */
   val BucketCol = "__bucket"
 
+  /** Does a dir of this kind take the `__bucket=k` layout on a bucketed
+    * table? DV sidecars are (file, pos) lists with no key columns to
+    * hash, changelog dirs are consumed whole-range, never bucket-routed,
+    * and index-only dirs carry no rows — all three stay flat. */
+  def bucketLaid(kind: String): Boolean =
+    kind != "idx" && kind != "dv" && kind != "cl"
+
   /** Dynamic-bucket hash-index delta subdir inside each data dir (dot
     * prefix: invisible to parquet discovery, atomic under the dir's
     * ordinal claim-rename). */
@@ -3900,7 +3906,7 @@ object GraftCatalog {
     * evaluated once at write is unique within the commit's job
     * (partition-id-prefixed), lands in the file bytes, and reads back
     * identically forever. Paimon's row tracking stamps `_ROW_ID` into
-    * data files the same way. Invisible to user reads (frameFor maps
+    * data files the same way. Invisible to user reads (relationFor maps
     * columns by field id); surfaced as [[DvPosCol]] when a DV path asks
     * for row identity on an ORC/AVRO table. */
   val OrcPosCol = "__gpos"
@@ -3927,6 +3933,11 @@ object GraftCatalog {
       org.apache.spark.sql.catalyst.plans.logical.Union(
         frames.map(_.queryExecution.analyzed)))
   }
+
+  /** [[unionAllByName]] of possibly zero frames: None when there are none
+    * (a bucket-laid dir with no leaves left to read yields no frame). */
+  private[sources] def unionOption(frames: Seq[DataFrame]): Option[DataFrame] =
+    if (frames.isEmpty) None else Some(unionAllByName(frames))
 
   /** In-task merge of one bucket's delta rows: highest `__ord` wins per
     * primary key — unless `seqIdx >= 0` (a `sequence.field` table), where

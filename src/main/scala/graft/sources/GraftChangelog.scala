@@ -130,16 +130,10 @@ trait GraftChangelog { self: GraftCatalog =>
       val names = currentFields(m).map(_.name)
       val dv = if (dvDelta.isEmpty) None
         else Some(dvFrame(schema, table, dvDelta))
-      val inserts = if (dataDelta.isEmpty) None else Some {
-        val base = dv match {
-          case None =>
-            unionAllByName(dataDelta.map(frameFor(schema, table, m, _)))
-          case Some(d) =>
-            unionAllByName(dataDelta.map(
-              frameFor(schema, table, m, _, withMeta = true)))
-              .join(d, Seq(DvFileCol, DvPosCol), "left_anti")
-        }
-        base.select(names.map(col): _*).withColumn(RowKindCol, lit("+I"))
+      val inserts = unionOption(dirFrames(schema, table, m, dataDelta,
+          withMeta = dv.isDefined)).map { base =>
+        dv.fold(base)(base.join(_, Seq(DvFileCol, DvPosCol), "left_anti"))
+          .select(names.map(col): _*).withColumn(RowKindCol, lit("+I"))
       }
       val deletes = dv.flatMap { d =>
         val idx = dvIndexFrom(m)
@@ -160,24 +154,18 @@ trait GraftChangelog { self: GraftCatalog =>
               .find(_.get("id").asLong() == fromSnapshotId)
               .map(filesOf).getOrElse(Seq.empty).filter(_.kind == "data")
           }
-        val frames = beforeEntries.flatMap { fe =>
-          touched match {
-            case None =>
-              Some(frameFor(schema, table, m, fe, withMeta = true))
-            case Some(t) =>
-              val rel = t.filter(_.startsWith(dirKey(fe.dir) + "/"))
-                .map(_.stripPrefix(dirKey(fe.dir) + "/"))
-              if (rel.isEmpty) None
-              else Some(frameFor(schema, table, m, fe, fileSubset = Some(
-                rel.sorted.map(r => new Path(
-                  dirPath(schema, table, fe.dir), r).toString)),
-                withMeta = true))
-          }
+        val subsets: Map[FileEntry, Seq[String]] = touched.fold(
+            Map.empty[FileEntry, Seq[String]]) { t =>
+          beforeEntries.map { fe =>
+            val key = dirKey(fe.dir) + "/"
+            fe -> t.filter(_.startsWith(key)).sorted.map(r => new Path(
+              dirPath(schema, table, fe.dir), r.stripPrefix(key)).toString)
+          }.toMap
         }
-        if (frames.isEmpty) None
-        else Some(unionAllByName(frames)
-          .join(d, Seq(DvFileCol, DvPosCol), "left_semi")
-          .select(names.map(col): _*).withColumn(RowKindCol, lit("-D")))
+        unionOption(dirFrames(schema, table, m, beforeEntries, withMeta = true,
+            files = subsets))
+          .map(_.join(d, Seq(DvFileCol, DvPosCol), "left_semi")
+            .select(names.map(col): _*).withColumn(RowKindCol, lit("-D")))
       }
       return (inserts.toSeq ++ deletes.toSeq)
         .reduceOption(_ unionByName _).getOrElse(emptyChangelog)
@@ -189,17 +177,16 @@ trait GraftChangelog { self: GraftCatalog =>
     // rows are dropped first: upsert mode carries no retraction arm.
     if (changelogProducer(m) != "none")
       changelogCover(m, fromSnapshotId, toSnapshotId).foreach { dirs =>
-        val parts = dirs.map { case (d, v) =>
-          changelogDirFrame(schema, table, m, d, v)
-            .filter(col(RowKindCol) =!= "-U")
-        }
-        return if (parts.isEmpty) emptyChangelog
-          else collapseUpsertChangelog(m, parts)
+        return changelogFrame(schema, table, m, dirs)
+          .map(f => collapseUpsertChangelog(m,
+            f.filter(col(RowKindCol) =!= "-U"), dirs.size))
+          .getOrElse(emptyChangelog)
       }
     // PK tables: latest in-range version per key wins — the same
     // newest-wins rule as merge-on-read, restricted to the delta. The
     // shuffle is O(delta), bounded by the micro-batch, never the table.
-    val all = unionAllByName(delta.map(frameFor(schema, table, m, _)))
+    val all = unionOption(dirFrames(schema, table, m, delta))
+      .getOrElse(return emptyChangelog)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(pk.map(col): _*).orderBy(newestFirst(m): _*)
     all.withColumn("__rn", row_number().over(w))
@@ -253,13 +240,11 @@ trait GraftChangelog { self: GraftCatalog =>
     if (changelogProducer(m) == "lookup" ||
         changelogProducer(m) == "full-compaction")
       changelogCover(m, fromSnapshotId, toSnapshotId).foreach { dirs =>
-        val parts = dirs.map { case (d, v) =>
-          changelogDirFrame(schema, table, m, d, v)
-        }
-        return if (parts.isEmpty) spark.createDataFrame(
+        return changelogFrame(schema, table, m, dirs)
+          .map(collapseFullChangelog(m, _, dirs.size))
+          .getOrElse(spark.createDataFrame(
             spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-            changelogSchema(m))
-          else collapseFullChangelog(m, parts)
+            changelogSchema(m)))
       }
     // Field-wise engines (partial-update / aggregation / first-row) CAN
     // serve full changelog — a delta row is a PATCH, not the image, so
@@ -286,7 +271,9 @@ trait GraftChangelog { self: GraftCatalog =>
     // Latest in-range version per key — same newest-wins rule as
     // readChangelog; __del marks keys whose last in-range change is a
     // tombstone.
-    val all = unionAllByName(delta.map(frameFor(schema, table, m, _)))
+    val all = unionOption(dirFrames(schema, table, m, delta)).getOrElse(
+      return spark.createDataFrame(
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], target))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(pk.map(col): _*).orderBy(newestFirst(m): _*)
     val news = all.withColumn("__rn", row_number().over(w))
@@ -386,34 +373,15 @@ trait GraftChangelog { self: GraftCatalog =>
     out.toMap
   }
 
-  /** One persisted changelog dir mapped to the CURRENT schema by field
-    * id (same contract as frameFor): table columns + `_row_kind`. */
-  private def changelogDirFrame(schema: String, table: String, m: ObjectNode,
-      dir: String, ver: Int): DataFrame = {
-    val cur = currentFields(m)
-    val writeFields = schemaVersions(m)(ver)
-    val writeSchema = StructType(writeFields.map(f =>
-      StructField(f.name, TypeMapping.toSparkType(f.trinoType))) :+
-      StructField(RowKindCol, org.apache.spark.sql.types.StringType))
-    val raw = spark.read.schema(writeSchema).format(providerFor(fileFormat(m)))
-      .load(dirPath(schema, table, dir).toString)
-    val byId = writeFields.map(f => f.id -> f).toMap
-    raw.select(cur.map { cf =>
-      val toDt = TypeMapping.toSparkType(cf.trinoType)
-      byId.get(cf.id) match {
-        case Some(wf) =>
-          val fromDt = TypeMapping.toSparkType(wf.trinoType)
-          (fromDt, toDt) match {
-            case (f0, t0) if f0 == t0 => col(wf.name).as(cf.name)
-            case (_: StructType, _: StructType) =>
-              adaptExpr(col(wf.name), fromDt, toDt, curPath = "",
-                nestedCurToWrite(m, cf.id, ver)).as(cf.name)
-            case _ => col(wf.name).cast(toDt).as(cf.name)
-          }
-        case None => lit(null).cast(toDt).as(cf.name)
-      }
-    } :+ col(RowKindCol): _*)
-  }
+  /** Persisted changelog dirs (dir, write-time schema version) read
+    * through [[dirFrames]]: table columns, `_row_kind`, and `__ord`, the
+    * carrier's snapshot ordinal; None when there are none. */
+  private def changelogFrame(schema: String, table: String, m: ObjectNode,
+      dirs: Seq[(String, Int)]): Option[DataFrame] =
+    unionOption(dirFrames(schema, table, m,
+      dirs.map { case (d, v) => FileEntry(d, v, "cl") }))
+      .map(_.select((currentFields(m).map(_.name) :+ RowKindCol :+ "__ord")
+        .map(col): _*))
 
   /**
    * The persisted changelog dirs that exactly cover `(fromId, toId]`,
@@ -457,22 +425,20 @@ trait GraftChangelog { self: GraftCatalog =>
    * whether the key existed at range start (its `-U`/`-D` image IS the
    * range-start image); the last event fixes survival and the final
    * image; a key inserted and deleted inside the range nets to nothing.
+   * `parts` is [[changelogFrame]]'s union of `carriers` dirs.
    */
-  private def collapseFullChangelog(m: ObjectNode,
-      parts: Seq[DataFrame]): DataFrame = {
-    if (parts.size == 1) return parts.head
+  private def collapseFullChangelog(m: ObjectNode, parts: DataFrame,
+      carriers: Int): DataFrame = {
     import org.apache.spark.sql.functions.{min_by, max_by}
     val names = currentFields(m).map(_.name)
+    if (carriers == 1) return parts.select((names :+ RowKindCol).map(col): _*)
     val pk = primaryKey(m)
-    val tagged = unionAllByName(parts.zipWithIndex.map { case (f, i) =>
-      f.withColumn("__o", lit(i.toLong))
-    })
     // within one commit a key has at most one logical event; a -U sorts
     // before its +U partner so first/last land on the right halves
-    val ordKey = col("__o") * 2 +
+    val ordKey = col("__ord") * 2 +
       when(col(RowKindCol) === "-U", lit(0L)).otherwise(lit(1L))
     val ev = struct(col(RowKindCol).as("__k") +: names.map(col): _*)
-    val agg = tagged.groupBy(pk.map(col): _*)
+    val agg = parts.groupBy(pk.map(col): _*)
       .agg(min_by(ev, ordKey).as("__first"), max_by(ev, ordKey).as("__last"))
     val existed = col("__first.__k") =!= "+I"
     val dead = col("__last.__k") === "-D"
@@ -499,18 +465,15 @@ trait GraftChangelog { self: GraftCatalog =>
   /** Upsert-mode collapse: the key's LAST in-range event wins (-U rows
     * were already dropped by the caller) — the same newest-wins rule the
     * read-time upsert resolve applies. Join-free. */
-  private def collapseUpsertChangelog(m: ObjectNode,
-      parts: Seq[DataFrame]): DataFrame = {
-    if (parts.size == 1) return parts.head
+  private def collapseUpsertChangelog(m: ObjectNode, parts: DataFrame,
+      carriers: Int): DataFrame = {
     import org.apache.spark.sql.functions.max_by
     val names = currentFields(m).map(_.name)
+    if (carriers == 1) return parts.select((names :+ RowKindCol).map(col): _*)
     val pk = primaryKey(m)
-    val tagged = unionAllByName(parts.zipWithIndex.map { case (f, i) =>
-      f.withColumn("__o", lit(i.toLong))
-    })
     val ev = struct(col(RowKindCol).as("__k") +: names.map(col): _*)
-    tagged.groupBy(pk.map(col): _*)
-      .agg(max_by(ev, col("__o")).as("__last"))
+    parts.groupBy(pk.map(col): _*)
+      .agg(max_by(ev, col("__ord")).as("__last"))
       .select(names.map(c => col(s"__last.$c").as(c)) :+
         col("__last.__k").as(RowKindCol): _*)
   }
@@ -531,29 +494,15 @@ trait GraftChangelog { self: GraftCatalog =>
   private[sources] def producerChangelog(schema: String, table: String, m: ObjectNode,
       producer: String, dataDir: Option[String],
       delDir: Option[String]): Option[DataFrame] = {
-    val cur = currentFields(m)
-    val names = cur.map(_.name)
-    val bucketed = bucketCount(m).isDefined
-    def stagedBack(d: String, tombstone: Boolean): DataFrame = {
-      val keep = if (!tombstone) cur else {
-        val k = primaryKey(m).toSet ++ sequenceField(m) ++ partitionColumns(m)
-        cur.filter(f => k.contains(f.name))
-      }
-      val sch = StructType(keep.map(f =>
-        StructField(f.name, TypeMapping.toSparkType(f.trinoType))) ++
-        (if (bucketed)
-          Seq(StructField(BucketCol, org.apache.spark.sql.types.IntegerType))
-        else Seq.empty))
-      val raw = spark.read.schema(sch).format(providerFor(fileFormat(m)))
-        .load(new Path(tablePath(schema, table), d).toString)
-      raw.select(names.map { c =>
-        if (keep.exists(_.name == c)) col(c)
-        else lit(null).cast(TypeMapping.toSparkType(
-          cur.find(_.name == c).get.trinoType)).as(c)
-      }: _*)
-    }
-    val ups = dataDir.map(stagedBack(_, tombstone = false))
-    val dels = delDir.map(stagedBack(_, tombstone = true))
+    val names = currentFields(m).map(_.name)
+    // a staged dir reads like a committed one of its kind (a tombstone
+    // dir's non-key columns come back null)
+    def stagedBack(d: String, kind: String): DataFrame =
+      unionOption(dirFrames(schema, table, m,
+          Seq(FileEntry(d, m.get("currentSchemaVersion").asInt(), kind))))
+        .map(_.select(names.map(col): _*)).getOrElse(emptyFrame(m))
+    val ups = dataDir.map(stagedBack(_, "data"))
+    val dels = delDir.map(stagedBack(_, "delete"))
     if (ups.isEmpty && dels.isEmpty) return None
     if (producer == "input") {
       val kinded =
@@ -669,11 +618,10 @@ trait GraftChangelog { self: GraftCatalog =>
     val pk = primaryKey(m)
     val delta = changelogEntries(m, schema, table, fromSnapshotId, toSnapshotId)
     val target = changelogSchema(m)
-    if (delta.isEmpty)
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], target)
     // scratch-name collisions are validated by pairResolvedImages below
-    val changedKeys = unionAllByName(delta.map(frameFor(schema, table, m, _)))
+    val changedKeys = unionOption(dirFrames(schema, table, m, delta))
+      .getOrElse(return spark.createDataFrame(
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], target))
       .select(pk.map(col): _*).distinct()
     val after = read(schema, table, snapshotId = Some(toSnapshotId))
       .join(changedKeys, pk, "left_semi")

@@ -78,11 +78,11 @@ trait GraftDeletionVectors { self: GraftCatalog =>
   private[sources] def appendUnion(schema: String, table: String, m: ObjectNode,
       selections: Seq[(FileEntry, Option[Seq[String]])],
       dvEs: Seq[FileEntry]): DataFrame = {
-    def frame(fe: FileEntry, files: Option[Seq[String]], meta: Boolean) =
-      frameFor(schema, table, m, fe, fileSubset = files, withMeta = meta)
-    if (dvEs.isEmpty)
-      return unionAllByName(selections.map { case (fe, sel) =>
-        frame(fe, sel, meta = false) })
+    type Sel = (FileEntry, Option[Seq[String]])
+    def frames(sels: Seq[Sel], meta: Boolean) =
+      dirFrames(schema, table, m, sels.map(_._1), withMeta = meta,
+        files = sels.collect { case (fe, Some(fs)) => fe -> fs }.toMap)
+    if (dvEs.isEmpty) return unionAllByName(frames(selections, meta = false))
     val idx = dvIndexFrom(m)
     // every DV commit writes its index; `known = false` only for a
     // manifest from a foreign writer — then every file is treated dirty
@@ -97,8 +97,8 @@ trait GraftDeletionVectors { self: GraftCatalog =>
     // INHERITED dir (branch deleting rows of shared history) resolves.
     def absIn(fe: FileEntry, rel: String) =
       new Path(dirPath(schema, table, fe.dir), rel).toString
-    val clean = mutable.ArrayBuffer.empty[DataFrame]
-    val dirty = mutable.ArrayBuffer.empty[DataFrame]
+    val clean = mutable.ArrayBuffer.empty[Sel]
+    val dirty = mutable.ArrayBuffer.empty[Sel]
     selections.foreach { case (fe, sel) =>
       val key = dirKey(fe.dir)
       val dirAffected: Option[Set[String]] = // relative to fe.dir
@@ -109,28 +109,26 @@ trait GraftDeletionVectors { self: GraftCatalog =>
         case (Some(files), Some(aff)) =>
           val affAbs = aff.map(r => absIn(fe, r))
           val (d, c) = files.partition(affAbs.contains)
-          if (c.nonEmpty) clean += frame(fe, Some(c), meta = false)
-          if (d.nonEmpty) dirty += frame(fe, Some(d), meta = true)
-        case (Some(files), None) => dirty += frame(fe, Some(files), meta = true)
-        case (None, Some(aff)) if aff.isEmpty => clean += frame(fe, None, meta = false)
+          if (c.nonEmpty) clean += fe -> Some(c)
+          if (d.nonEmpty) dirty += fe -> Some(d)
+        case (Some(files), None) => dirty += fe -> Some(files)
+        case (None, Some(aff)) if aff.isEmpty => clean += fe -> None
         case (None, Some(aff)) =>
           perFile.get(fe.dir).filter(_.nonEmpty) match {
             case Some(fm) => // per-file zones double as the dir's file listing
               val cleanRel = (fm.keySet -- aff).toSeq.sorted
-              if (cleanRel.nonEmpty)
-                clean += frame(fe, Some(cleanRel.map(r => absIn(fe, r))), meta = false)
-              dirty += frame(fe,
-                Some(aff.toSeq.sorted.map(r => absIn(fe, r))), meta = true)
-            case None => dirty += frame(fe, None, meta = true)
+              if (cleanRel.nonEmpty) clean += fe -> Some(cleanRel.map(r => absIn(fe, r)))
+              dirty += fe -> Some(aff.toSeq.sorted.map(r => absIn(fe, r)))
+            case None => dirty += fe -> None
           }
-        case (None, None) => dirty += frame(fe, None, meta = true)
+        case (None, None) => dirty += fe -> None
       }
     }
     val dv = dvFrame(schema, table, dvEs)
-    val deduped = (if (dirty.isEmpty) None else Some(unionAllByName(dirty.toSeq)))
+    val deduped = unionOption(frames(dirty.toSeq, meta = true))
       .map(_.join(dv, Seq(DvFileCol, DvPosCol), "left_anti")
         .drop(DvFileCol, DvPosCol))
-    unionAllByName((clean ++ deduped).toSeq)
+    unionAllByName(frames(clean.toSeq, meta = false) ++ deduped)
   }
 
   /** Snapshot ordinal of an entry's dir: leading digits of the dir name
@@ -196,14 +194,12 @@ trait GraftDeletionVectors { self: GraftCatalog =>
         // positions.
         val dv0 = dvFrame(schema, table, dvEs)
         val dv = onlyBuckets.fold(dv0)(dvPositionsInBuckets(dv0, _))
-        val frames = dirFrames(schema, table, m, base, withMeta = true, onlyBuckets)
-        if (frames.isEmpty) None
-        else Some(unionAllByName(frames).join(dv, Seq(DvFileCol, DvPosCol), "left_anti")
-          .select(names.map(col): _*))
+        unionOption(dirFrames(schema, table, m, base, withMeta = true, onlyBuckets))
+          .map(_.join(dv, Seq(DvFileCol, DvPosCol), "left_anti")
+            .select(names.map(col): _*))
       }
-    val deltaFrames = dirFrames(schema, table, m, delta, onlyBuckets = onlyBuckets)
-    if (deltaFrames.isEmpty) return baseLive
-    val deltaAll = unionAllByName(deltaFrames)
+    val deltaAll = unionOption(dirFrames(schema, table, m, delta,
+      onlyBuckets = onlyBuckets)).getOrElse(return baseLive)
     // version order: (sequence, ordinal) on sequence.field tables, pure
     // ordinal otherwise — the same rule as every other resolution path
     // (r15: the sequence.field + DV refusal is lifted)
@@ -271,8 +267,8 @@ trait GraftDeletionVectors { self: GraftCatalog =>
     if (snaps.size() == 0) return 0L
     val latest = snaps.get(snaps.size() - 1)
     val entries = filesOf(latest)
-    // Per-bucket-compacted history COMPOSES: the build reads dirs whole
-    // (frameFor never consults excludeBuckets), so a retired bucket's
+    // Per-bucket-compacted history COMPOSES: the build reads retired
+    // buckets too (it never asks dirFrames to skip them), so their
     // rows enter the version race, lose to their compacted copies (the
     // fold dir carries a higher ordinal), and land in the DV — the
     // retirement marks become positional, exactly what [[pkDvResolve]]'s
@@ -286,9 +282,7 @@ trait GraftDeletionVectors { self: GraftCatalog =>
     val bucketed = bucketCount(m).isDefined
     // tombstones join the version race with null position identity
     def tombstoneFrame(es: Seq[FileEntry]): Option[DataFrame] =
-      (if (es.isEmpty) None
-       else Some(unionAllByName(es.map(frameFor(schema, table, m, _,
-         withBucket = bucketed)))))
+      unionOption(dirFrames(schema, table, m, es))
         .map(_.withColumn(DvFileCol,
             lit(null).cast(org.apache.spark.sql.types.StringType))
           .withColumn(DvPosCol, lit(null).cast(org.apache.spark.sql.types.LongType)))
@@ -316,14 +310,13 @@ trait GraftDeletionVectors { self: GraftCatalog =>
     val victimsUnpersisted: DataFrame = if (incremental) {
       if (deltaDataEs.isEmpty && delEs.isEmpty)
         return latest.get("id").asLong() // no post-build commits: no-op
-      val deltaData = if (deltaDataEs.isEmpty) None
-        else Some(unionAllByName(deltaDataEs.map(frameFor(schema, table, m, _,
-          withMeta = true, withBucket = bucketed))))
+      val deltaData = unionOption(dirFrames(schema, table, m, deltaDataEs,
+        withMeta = true))
       val allDelta = (deltaData, tombstoneFrame(delEs)) match {
         case (Some(d), Some(t)) => d.unionByName(t.select(d.columns.map(col): _*))
         case (Some(d), None) => d
         case (None, Some(t)) => t
-        case (None, None) => return latest.get("id").asLong() // unreachable
+        case (None, None) => return latest.get("id").asLong() // nothing to read
       }
       val ranked = allDelta.withColumn("__rn", row_number().over(w))
       // (a) versions superseded WITHIN the delta — O(delta) window (a
@@ -345,12 +338,10 @@ trait GraftDeletionVectors { self: GraftCatalog =>
           val n = bucketCount(m).get
           val changed = changedBucketsOf(schema, table,
             (deltaDataEs ++ delEs).map(_.dir)).getOrElse(0 until n)
-          // filter on the discovered __bucket partition column: Spark's
-          // partition pruning cuts the file listing to the touched
-          // buckets' subdirs — per-build I/O is O(touched buckets)
-          Some(unionAllByName(baseEs.map(frameFor(schema, table, m, _,
-              withMeta = true, withBucket = true)))
-            .filter(col(BucketCol).isin(changed.map(Integer.valueOf): _*)))
+          // only the touched buckets' leaves are read: per-build I/O is
+          // O(touched buckets)
+          unionOption(dirFrames(schema, table, m, baseEs, withMeta = true,
+            onlyBuckets = Some(changed)))
         } else {
           // zone-prune base files against the delta's pk bounds: a file
           // whose pk zone is disjoint from the delta's range on ANY key
@@ -390,21 +381,23 @@ trait GraftDeletionVectors { self: GraftCatalog =>
         }
       }
       baseVictims.map(inDelta.unionByName(_)).getOrElse(inDelta)
-    } else {
-      val dataAll = unionAllByName(dataEs.map(frameFor(schema, table, m, _,
-          withMeta = true, withBucket = bucketed)))
-      // victims are found over the DV-APPLIED image: an already-dead row
-      // must not be counted twice (same contract as deleteWhereDv)
-      val dataLive = if (dvEs.isEmpty) dataAll
-        else dataAll.join(dvFrame(schema, table, dvEs),
-          Seq(DvFileCol, DvPosCol), "left_anti")
-      val all = tombstoneFrame(delEs).map(d => dataLive.unionByName(
-        d.select(dataLive.columns.map(col): _*))).getOrElse(dataLive)
-      // every data row that is not its key's live winner is a victim —
-      // including all versions of a key whose winner is a tombstone
-      all.withColumn("__rn", row_number().over(w))
-        .filter(col("__rn") > 1 && col(DvFileCol).isNotNull)
-        .select(col(DvFileCol), col(DvPosCol))
+    } else unionOption(dirFrames(schema, table, m, dataEs, withMeta = true)) match {
+      // every data dir is empty: no row can be superseded
+      case None => spark.createDataFrame(
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], dvStorageSchema)
+      case Some(dataAll) =>
+        // victims are found over the DV-APPLIED image: an already-dead row
+        // must not be counted twice (same contract as deleteWhereDv)
+        val dataLive = if (dvEs.isEmpty) dataAll
+          else dataAll.join(dvFrame(schema, table, dvEs),
+            Seq(DvFileCol, DvPosCol), "left_anti")
+        val all = tombstoneFrame(delEs).map(d => dataLive.unionByName(
+          d.select(dataLive.columns.map(col): _*))).getOrElse(dataLive)
+        // every data row that is not its key's live winner is a victim —
+        // including all versions of a key whose winner is a tombstone
+        all.withColumn("__rn", row_number().over(w))
+          .filter(col("__rn") > 1 && col(DvFileCol).isNotNull)
+          .select(col(DvFileCol), col(DvPosCol))
     }
     val victims = victimsUnpersisted
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -444,8 +437,7 @@ trait GraftDeletionVectors { self: GraftCatalog =>
     val latest = snaps.get(snaps.size() - 1)
     val (dvEs, dataEs) = filesOf(latest).partition(_.kind == "dv")
     if (dataEs.isEmpty) return latest.get("id").asLong()
-    val withMeta = unionAllByName(
-      dataEs.map(frameFor(schema, table, m, _, withMeta = true)))
+    val withMeta = unionAllByName(dirFrames(schema, table, m, dataEs, withMeta = true))
     // evaluate the predicate over the DV-APPLIED image: an already-deleted
     // row must be invisible, or positions would double-count
     val live = if (dvEs.isEmpty) withMeta
@@ -496,8 +488,7 @@ trait GraftDeletionVectors { self: GraftCatalog =>
     val latest = snaps.get(snaps.size() - 1)
     val (dvEs, dataEs) = filesOf(latest).partition(_.kind == "dv")
     if (dataEs.isEmpty) return latest.get("id").asLong()
-    val withMeta = unionAllByName(
-      dataEs.map(frameFor(schema, table, m, _, withMeta = true)))
+    val withMeta = unionAllByName(dirFrames(schema, table, m, dataEs, withMeta = true))
     // evaluate over the DV-APPLIED image: an already-retracted row must
     // be invisible, or its position would be deleted twice
     val live = if (dvEs.isEmpty) withMeta

@@ -282,22 +282,14 @@ trait GraftMaintenance { self: GraftCatalog =>
       s"$schema.$table: tombstone dirs survived a DV build — " +
         "the covered invariant does not hold")
     val names = currentFields(m).map(_.name)
-    // honor each inherited entry's RETIRED buckets (prior folds): their
-    // rows are dead to the head — without this they are re-read and
-    // re-anti-joined on every fold, and an empty-fold retirement (below)
-    // would re-select the same dead bytes forever
-    val inBucketFrames = dataEs.map { fe =>
-        val f = frameFor(schema, table, m, fe,
-          withMeta = true, withBucket = true)
-        if (fe.excludeBuckets.isEmpty) f
-        else f.filter(!col(BucketCol).isin(
-          fe.excludeBuckets.map(Integer.valueOf): _*))
-      }
-    val inBuckets =
-      if (inBucketFrames.isEmpty)
-        return snaps.get(snaps.size() - 1).get("id").asLong()
-      else unionAllByName(inBucketFrames)
-        .filter(col(BucketCol).isin(buckets.map(Integer.valueOf): _*))
+    // only the chosen buckets' leaves are read, minus each inherited
+    // entry's RETIRED buckets (prior folds): their rows are dead to the
+    // head — without this they are re-read and re-anti-joined on every
+    // fold, and an empty-fold retirement (below) would re-select the
+    // same dead bytes forever
+    val inBuckets = unionOption(dirFrames(schema, table, m, dataEs,
+        withMeta = true, onlyBuckets = Some(buckets), skipRetired = true))
+      .getOrElse(return snaps.get(snaps.size() - 1).get("id").asLong())
     val live = (if (dvEs.isEmpty) inBuckets
       // the anti-join side shrinks to the chosen buckets' positions
       else inBuckets.join(
@@ -331,19 +323,8 @@ trait GraftMaintenance { self: GraftCatalog =>
         val holdsBytes = dataEs.exists { fe =>
           val inDir: Set[Int] = zones.get(fe.dir).filter(_.nonEmpty) match {
             case Some(fm) => fm.keysIterator.flatMap(relBucket).toSet
-            case None =>
-              def walk(p: Path, d: Int): Seq[Int] =
-                if (!fs.exists(p)) Seq.empty
-                else fs.listStatus(p).toSeq.flatMap { st =>
-                  val nm = st.getPath.getName
-                  if (nm.startsWith(s"$BucketCol="))
-                    nm.stripPrefix(s"$BucketCol=").toIntOption
-                  else if (d > 0 && st.isDirectory && nm.contains("="))
-                    walk(st.getPath, d - 1)
-                  else Seq.empty
-                }
-              walk(dirPath(schema, table, fe.dir),
-                partitionColumns(m).length).toSet
+            case None => bucketsUnder(dirPath(schema, table, fe.dir),
+              partitionColumns(m).length).toSet
           }
           (inDir -- fe.excludeBuckets).exists(chosen.contains)
         }
@@ -384,20 +365,8 @@ trait GraftMaintenance { self: GraftCatalog =>
     def fromPath(rel: String): Option[Int] =
       rel.split('/').find(_.startsWith(s"$BucketCol="))
         .flatMap(s => s.stripPrefix(s"$BucketCol=").toIntOption)
-    def listed(fe: FileEntry): Set[Int] = {
-      val depth = if (fe.kind == "data") partDepth else 0
-      def walk(p: Path, d: Int): Seq[Int] =
-        if (!fs.exists(p)) Seq.empty
-        else fs.listStatus(p).toSeq.flatMap { st =>
-          val nm = st.getPath.getName
-          if (nm.startsWith(s"$BucketCol="))
-            nm.stripPrefix(s"$BucketCol=").toIntOption
-          else if (d > 0 && st.isDirectory && nm.contains("="))
-            walk(st.getPath, d - 1)
-          else Seq.empty
-        }
-      walk(dirPath(schema, table, fe.dir), depth).toSet
-    }
+    def listed(fe: FileEntry): Set[Int] = bucketsUnder(
+      dirPath(schema, table, fe.dir), if (fe.kind == "data") partDepth else 0).toSet
     val counts = mutable.Map.empty[Int, Int].withDefaultValue(0)
     entries.foreach { fe =>
       val present: Set[Int] = perFile.get(fe.dir).filter(_.nonEmpty) match {
@@ -651,8 +620,7 @@ trait GraftMaintenance { self: GraftCatalog =>
         dirPath(schema, table, e.dir)).getLength < smallBytes
       catch { case _: java.io.IOException => false }))
     if (candidates.size < minDirs) return None
-    val img = unionAllByName(candidates
-      .map(fe => frameFor(schema, table, m, fe)))
+    val img = unionAllByName(dirFrames(schema, table, m, candidates))
       .drop("__ord", "__del")
     // Pin the head the candidates were derived from: a commit landing in
     // between (e.g. a DV delete touching a candidate dir) would make the
@@ -849,10 +817,8 @@ trait GraftMaintenance { self: GraftCatalog =>
     // cannot decide must NOT silently vanish from a rewritten dir.
     val keep = org.apache.spark.sql.functions.not(
       org.apache.spark.sql.functions.coalesce(where, lit(false)))
-    val survivorFrames = mixed.map(fe => frameFor(schema, table, m, fe)
-      .drop("__ord", "__del").filter(keep))
-    val survivors = if (survivorFrames.isEmpty) None
-      else Some(unionAllByName(survivorFrames))
+    val survivors = unionOption(dirFrames(schema, table, m, mixed))
+      .map(_.drop("__ord", "__del").filter(keep))
     val img = (survivors, newData) match {
       case (Some(a), Some(b)) => a.unionByName(b)
       case (Some(a), None) => a

@@ -734,7 +734,7 @@ private[graft] class GraftSqlTable(delegate: ParquetTable,
     // A partitioned scan over an explicit FILE list needs a basePath pin
     // so the col=value segments between the root and each file keep
     // resolving as partition columns (same contract as
-    // GraftCatalog.frameFor's subset read). The first prune records the
+    // GraftCatalog.dirFrames' subset read). The first prune records the
     // original root; fixed-point re-prunes inherit it via options.
     val newDelegate =
       if (partitionCols.isEmpty || delegate.options.containsKey("basePath"))

@@ -174,30 +174,11 @@ trait GraftStagingLineage { self: GraftCatalog =>
   def setTableOptions(schema: String, table: String,
       options: Map[String, String]): Unit = {
     require(options.nonEmpty, "no options to set")
-    options.keys.foreach { k =>
-      require(!GraftCatalog.ImmutableOptions.contains(k) && !k.startsWith("fields."),
-        s"option $k is immutable (baked into the data layout / merge " +
-          "semantics) — recreate the table to change it")
-    }
+    options.keys.foreach(requireMutableOption)
     // same validation createTable applies, against the CURRENT schema
-    options.get(BloomIndex.OptionKey).foreach { v =>
-      val st = currentSchema(schema, table)
-      val parts = partitionColumnsOf(schema, table)
-      val cols = v.split(',').map(_.trim).filter(_.nonEmpty)
-      require(cols.nonEmpty,
-        s"${BloomIndex.OptionKey} must name at least one column")
-      cols.foreach { c =>
-        val f = st.fields.find(_.name.equalsIgnoreCase(c))
-        require(f.isDefined, s"bloom-filter column $c not in schema")
-        require(BloomIndex.indexable(f.get.dataType),
-          s"bloom-filter column $c: ${f.get.dataType.simpleString} has no " +
-            "canonical bloom domain (integral/date/timestamp/string only)")
-        require(!parts.exists(_.equalsIgnoreCase(c)),
-          s"bloom-filter column $c is a partition column")
-      }
-      require(primaryKeyOf(schema, table).isEmpty,
-        "bloom-filter index applies to append-only tables")
-    }
+    options.get(BloomIndex.OptionKey).foreach(validateBloomColumns(_,
+      currentSchema(schema, table), partitionColumnsOf(schema, table),
+      primaryKeyOf(schema, table)))
     validateRetentionOptions(options)
     retryManifestUpdate {
       val m = readManifest(schema, table)
@@ -207,15 +188,17 @@ trait GraftStagingLineage { self: GraftCatalog =>
     }
   }
 
+  private def requireMutableOption(k: String): Unit =
+    require(!GraftCatalog.ImmutableOptions.contains(k) && !k.startsWith("fields."),
+      s"option $k is immutable (baked into the data layout / merge " +
+        "semantics) — recreate the table to change it")
+
   /** Remove mutable table options (`ALTER TABLE ... UNSET`); structural
     * options refuse exactly as in [[setTableOptions]]. Unknown keys are
     * a no-op, matching Paimon's removeOption. */
   def removeTableOptions(schema: String, table: String,
       keys: Seq[String]): Unit = {
-    keys.foreach { k =>
-      require(!GraftCatalog.ImmutableOptions.contains(k) && !k.startsWith("fields."),
-        s"option $k is immutable — recreate the table to change it")
-    }
+    keys.foreach(requireMutableOption)
     retryManifestUpdate {
       val m = readManifest(schema, table)
       val opts = m.get("options").asInstanceOf[ObjectNode]

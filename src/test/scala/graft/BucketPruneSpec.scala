@@ -208,22 +208,14 @@ class BucketPruneSpec extends SparkSpecBase {
   test("bucketFor runs no Spark job and agrees with write placement") {
     val cat = freshCatalog()
     idvTable(cat, "t")
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    org.apache.spark.GraftTestBus.waitUntilEmpty(spark.sparkContext)
-    spark.sparkContext.addSparkListener(l)
-    val placed = try {
-      val ks = (1L to 5L).map(k => cat.bucketFor("db", "t", Seq(k)))
+    var placed = Seq.empty[Int]
+    val jobs = jobsDuring {
+      placed = (1L to 5L).map(k => cat.bucketFor("db", "t", Seq(k)))
       // the readWhere selection hashes without a job too: only the
       // lookup's own collect below may run one
       cat.readWhere("db", "t", col("id") === 7L)
-      org.apache.spark.GraftTestBus.waitUntilEmpty(spark.sparkContext)
-      ks
-    } finally spark.sparkContext.removeSparkListener(l)
-    assert(jobs.get() === 0, s"bucketFor/readWhere planning ran ${jobs.get()} jobs")
+    }
+    assert(jobs === 0, s"bucketFor/readWhere planning ran $jobs jobs")
     // every key read from bucket k hashes back to k
     (0 until N).foreach { b =>
       assert(cat.readBucket("db", "t", b).select("id").collect()
@@ -231,32 +223,6 @@ class BucketPruneSpec extends SparkSpecBase {
     }
     assert(placed.zipWithIndex.forall { case (b, i) =>
       cat.readBucket("db", "t", b).filter(col("id") === (i + 1).toLong).count() == 1 })
-  }
-
-  /** Spark jobs `body` starts (listener-observed, bus flushed). */
-  private def jobsDuring(body: => Unit): Int = {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    org.apache.spark.GraftTestBus.waitUntilEmpty(spark.sparkContext)
-    spark.sparkContext.addSparkListener(l)
-    try { body; org.apache.spark.GraftTestBus.waitUntilEmpty(spark.sparkContext) }
-    finally spark.sparkContext.removeSparkListener(l)
-    jobs.get()
-  }
-
-  /** File-scan leaves of `df`'s executed plan. */
-  private def fileScans(df: DataFrame): Int = {
-    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-    def count(p: SparkPlan): Int = p match {
-      case a: AdaptiveSparkPlanExec => count(a.executedPlan)
-      case _: FileSourceScanExec => 1
-      case o => o.children.map(count).sum
-    }
-    count(df.queryExecution.executedPlan)
   }
 
   private def pkTable(cat: GraftCatalog, table: String): Unit =

@@ -1081,6 +1081,16 @@ class GraftCatalogSpec extends SparkSpecBase {
     }
     intercept[IllegalArgumentException](cat.setTableOptions("db", "op",
       Map("file-index.bloom-filter.columns" -> "nope")))
+    // createTable's column rules hold on mutation: a partition column and
+    // a type without a bloom domain refuse too
+    cat.createTable("db", "oppart", StructType(abSchema.fields :+
+      StructField("score", DoubleType)), partitionBy = Seq("name"))
+    Seq("name" -> "partition column", "score" -> "no canonical bloom domain")
+      .foreach { case (c, why) =>
+        val e = intercept[IllegalArgumentException](cat.setTableOptions("db",
+          "oppart", Map("file-index.bloom-filter.columns" -> c)))
+        assert(e.getMessage.contains(why), e.getMessage)
+      }
     // removal: unknown keys no-op, known keys disappear
     cat.removeTableOptions("db", "op", Seq("custom.note", "never.was"))
     assert(!cat.tableOptions("db", "op").contains("custom.note"))

@@ -28,6 +28,43 @@ trait SparkSpecBase extends AnyFunSuite with BeforeAndAfterAll {
     acc.get()
   }
 
+  /** Spark jobs `body` starts (listener-observed, bus flushed). */
+  def jobsDuring(body: => Unit): Int = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.GraftTestBus.waitUntilEmpty(spark.sparkContext)
+    spark.sparkContext.addSparkListener(l)
+    try { body; org.apache.spark.GraftTestBus.waitUntilEmpty(spark.sparkContext) }
+    finally spark.sparkContext.removeSparkListener(l)
+    jobs.get()
+  }
+
+  /** File-scan leaves of `df`'s executed plan. */
+  def fileScans(df: org.apache.spark.sql.DataFrame): Int =
+    SparkSpecBase.scansIn(df.queryExecution.executedPlan)
+
+  /** File-scan leaves of every query `body` runs, writes included
+    * (listener-observed, bus flushed); a cached frame's scans count at
+    * each query that reads it. */
+  def fileScansDuring(body: => Unit): Int = {
+    val scans = new java.util.concurrent.atomic.AtomicInteger(0)
+    val l = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, d: Long): Unit =
+        scans.addAndGet(SparkSpecBase.scansIn(qe.executedPlan))
+      override def onFailure(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
+    }
+    org.apache.spark.GraftTestBus.waitUntilEmpty(spark.sparkContext)
+    spark.listenerManager.register(l)
+    try { body; org.apache.spark.GraftTestBus.waitUntilEmpty(spark.sparkContext) }
+    finally spark.listenerManager.unregister(l)
+    scans.get()
+  }
+
   /** Every data and tombstone dir of the head snapshot resolves its rows
     * under the ordinal its name carries: `snap-7`, `snap-7-del`,
     * `snap-7-r2` and a branch's `~/snap-7` all read 7. */
@@ -43,6 +80,20 @@ trait SparkSpecBase extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpecBase {
+  import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+
+  /** File-scan leaves under `p`, through adaptive plans, their query
+    * stages and cached relations. */
+  def scansIn(p: SparkPlan): Int = p match {
+    case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
+      scansIn(a.executedPlan)
+    case s: org.apache.spark.sql.execution.adaptive.QueryStageExec => scansIn(s.plan)
+    case i: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec =>
+      scansIn(i.relation.cachedPlan)
+    case _: FileSourceScanExec => 1
+    case o => o.children.map(scansIn).sum
+  }
+
   lazy val session: SparkSession = {
     val s = SparkSession.builder()
       .master("local[4]")

@@ -743,7 +743,7 @@ class ZonePruneSpec extends SparkSpecBase {
     // library path: readWhere applies the same per-file cut on a
     // partitioned table — id zones admit one file per partition, and the
     // cat constraint (a per-file partition point zone) picks one of them
-    // (frameFor's basePath keeps cat resolvable over the file subset)
+    // (dirFrames' basePath keeps cat resolvable over the file subset)
     val lwId = gc.readWhere("db", "sprt", col("id") === 13L)
     assert(lwId.inputFiles.length === 4, // one id-range file per cat dir
       s"readWhere kept ${lwId.inputFiles.length} files for an id lookup")
