@@ -442,8 +442,12 @@ private[graft] object FileStats {
   }
 
   /** List every data file of the given format under `dir` recursively as
-    * (relative-path, absolute-path, length) — one metadata listing, no
-    * footer reads. None = dir missing or listing failed. */
+    * (relative-path, absolute-path, length) — one metadata listing per
+    * dir level, no footer reads. None = dir missing or listing failed.
+    * A plain `listStatus` walk in `listFiles`' depth-first order: the
+    * located statuses `listFiles` builds load each file's permissions,
+    * which the local filesystem without native Hadoop answers by
+    * spawning one `ls` process per file. */
   private def listDataFiles(fs: FileSystem, dir: Path,
       fmt: String): Option[Seq[(String, String, Long)]] = {
     val ext = "." + fmt
@@ -451,16 +455,16 @@ private[graft] object FileStats {
       if (!fs.exists(dir)) return None
       val qdir = fs.makeQualified(dir).toString
       val out = mutable.ArrayBuffer[(String, String, Long)]()
-      val it = fs.listFiles(dir, true)
-      while (it.hasNext) {
-        val st = it.next()
+      def walk(d: Path): Unit = fs.listStatus(d).foreach { st =>
         val p = st.getPath
-        if (p.getName.endsWith(ext)) {
+        if (st.isDirectory) walk(p)
+        else if (p.getName.endsWith(ext)) {
           val abs = p.toString
           val rel = abs.stripPrefix(qdir).stripPrefix("/")
           out += ((rel, abs, st.getLen))
         }
       }
+      walk(dir)
       Some(out.toSeq)
     } catch { case scala.util.control.NonFatal(_) => None }
   }

@@ -790,37 +790,6 @@ class GraftCatalog(private[sources] val spark: SparkSession,
           s"dataframe columns ${l.frame.schema.fieldNames.mkString(",")} != table ${expect.mkString(",")}")
       }
     }
-    // Within-batch key resolution (deduplicate engine): all rows of one
-    // commit share an ordinal, so duplicate keys INSIDE one batch would
-    // tie at read time and resolve by partition order — nondeterministic.
-    // Paimon folds a checkpoint's rows by input order; an unordered
-    // DataFrame has none, so fold here with a deterministic total rule:
-    // largest (sequence.field, remaining row) wins — consistent with the
-    // read-side race (null sequence smallest). One batch-sized aggregate;
-    // key-unique batches (CDC, MERGE, compaction rewrites — the common
-    // case) pass through it unchanged. Skipped when a column type is
-    // unorderable (maps): those tables keep the key-unique-batch contract.
-    def dedup(df: DataFrame): DataFrame =
-      if (!compaction && primaryKey(m).nonEmpty &&
-          mergeEngine(m) == "deduplicate" &&
-          df.schema.fields.forall(f =>
-            org.apache.spark.sql.catalyst.expressions.RowOrdering
-              .isOrderable(f.dataType))) {
-        val pkCols = primaryKey(m)
-        val seqF = sequenceField(m).toSeq
-        val rest = df.schema.fieldNames.toSeq
-          .filterNot(c => pkCols.contains(c) || seqF.contains(c))
-        val valueCols = seqF ++ rest
-        if (valueCols.isEmpty) df.dropDuplicates(pkCols)
-        else df.groupBy(pkCols.map(col): _*)
-          .agg(org.apache.spark.sql.functions.max(
-            org.apache.spark.sql.functions.struct(valueCols.map(col): _*))
-            .as("__best"))
-          .select(df.schema.fieldNames.toSeq.map { c =>
-            if (pkCols.contains(c)) col(c) else col(s"__best.$c").as(c)
-          }: _*)
-      } else df
-    val deduped = legs.map(l => if (l.kind == "data") l.copy(frame = dedup(l.frame)) else l)
     val snaps = m.get("snapshots").asInstanceOf[ArrayNode]
     val lastId = if (snaps.size() == 0) 0L else snaps.get(snaps.size() - 1).get("id").asLong()
     // Data is written to a UNIQUE dot-staging dir (invisible to snap-*
@@ -835,8 +804,9 @@ class GraftCatalog(private[sources] val spark: SparkSession,
     // one bucket across ALL deltas and merge-on-read never crosses
     // buckets (see bucketedResolve). Delete frames carry the PK columns,
     // so the same hash applies.
+    val pkCols = primaryKey(m)
     val buckets = optionOverrides.get("bucket").map(_.toInt)
-      .orElse(bucketCount(m)).filter(_ => primaryKey(m).nonEmpty)
+      .orElse(bucketCount(m)).filter(_ => pkCols.nonEmpty)
     // Dynamic bucket mode (Paimon's bucket = -1): key→bucket is NOT a
     // modular hash — it comes from the persisted hash index, so frames
     // are routed up front (existing keys to their recorded bucket, new
@@ -845,6 +815,55 @@ class GraftCatalog(private[sources] val spark: SparkSession,
     // delta inside the main dir, atomic with the data under the ordinal
     // claim-rename. An index-only fold carries its folded index already.
     val dynamicBucket = buckets.contains(-1)
+    // Within-batch key resolution (deduplicate engine): all rows of one
+    // commit share an ordinal, so duplicate keys INSIDE one batch would
+    // tie at read time and resolve by partition order — nondeterministic.
+    // Paimon folds a checkpoint's rows by input order; an unordered
+    // DataFrame has none, so fold here with a deterministic total rule:
+    // largest (sequence.field, remaining row) wins — consistent with the
+    // read-side race (null sequence smallest). One batch-sized aggregate;
+    // key-unique batches (CDC, MERGE, compaction rewrites — the common
+    // case) pass through it unchanged. Skipped when a column type is
+    // unorderable (maps): those tables keep the key-unique-batch contract.
+    def foldable(df: DataFrame): Boolean =
+      !compaction && pkCols.nonEmpty && mergeEngine(m) == "deduplicate" &&
+        df.schema.fields.forall(f =>
+          org.apache.spark.sql.catalyst.expressions.RowOrdering
+            .isOrderable(f.dataType))
+    // `df` folded per `keys` tuple, keeping the columns `out`.
+    def fold(df: DataFrame, keys: Seq[String], out: Seq[String]): DataFrame = {
+      val seqF = sequenceField(m).toSeq
+      val valueCols = seqF ++ out.filterNot(c => keys.contains(c) || seqF.contains(c))
+      if (valueCols.isEmpty) df.dropDuplicates(keys).select(out.map(col): _*)
+      else df.groupBy(keys.map(col): _*)
+        .agg(org.apache.spark.sql.functions.max(
+          org.apache.spark.sql.functions.struct(valueCols.map(col): _*))
+          .as("__best"))
+        .select(out.map { c =>
+          if (keys.contains(c)) col(c) else col(s"__best.$c").as(c)
+        }: _*)
+    }
+    // On a fixed-bucket table whose partition columns sit inside the key,
+    // the batch is clustered ONCE by writeDir's layout keys (partition
+    // columns, then `__bucket`) and folded over that clustering grouped
+    // by (layout keys, key) — the same groups, since the bucket is a
+    // function of the key. The clustering already meets the fold's
+    // distribution and the write's layout, so the commit runs one
+    // exchange instead of two. Dynamic routing keeps the two.
+    val foldLayout = buckets.filter(n => n >= 1 && !crossPartition(m))
+    val deduped = legs.map { l =>
+      if (l.kind != "data" || !foldable(l.frame)) l
+      else foldLayout match {
+        case Some(n) =>
+          val layout = partitionColumns(m) :+ BucketCol
+          val laid = l.frame.withColumn(BucketCol, bucketExpr(pkCols, n))
+            .repartition(layout.map(col): _*)
+          l.copy(frame = fold(laid, (layout ++ pkCols).distinct,
+            l.frame.schema.fieldNames.toSeq), clustered = true)
+        case None =>
+          l.copy(frame = fold(l.frame, pkCols, l.frame.schema.fieldNames.toSeq))
+      }
+    }
     val routed =
       if (!dynamicBucket || main.kind == "idx") deduped
       else {
@@ -865,7 +884,8 @@ class GraftCatalog(private[sources] val spark: SparkSession,
     val dynIdxReplace = dynamicBucket &&
       (main.kind == "idx" || compaction || !keepExisting)
     val staged = routed.map(l => l.staged.getOrElse {
-      writeDir(schema, table, m, l.frame, dir + l.suffix, l.kind, buckets)
+      writeDir(schema, table, m, l.frame, dir + l.suffix, l.kind, buckets,
+        clustered = l.clustered)
       dir + l.suffix
     })
     // Write-time changelog materialization (changelog-producer): the
@@ -1285,7 +1305,7 @@ class GraftCatalog(private[sources] val spark: SparkSession,
    */
   private[sources] def writeDir(schema: String, table: String, m: ObjectNode,
       frame: DataFrame, toDir: String, kind: String, buckets: Option[Int],
-      lead: Seq[String] = Nil): Unit = {
+      lead: Seq[String] = Nil, clustered: Boolean = false): Unit = {
     val (toWrite0, bucketPart) =
       if (!bucketLaid(kind)) (frame, Seq.empty)
       else buckets match {
@@ -1304,9 +1324,14 @@ class GraftCatalog(private[sources] val spark: SparkSession,
     // file per touched leaf dir, which is also Paimon's per-bucket
     // writer grouping. Plain partitioned tables (no bucket) keep the
     // narrow write — their file count is bounded by tasks × live
-    // partitions of the batch, the standard Spark trade.
-    val toWrite = if (bucketPart.nonEmpty) toWrite0.repartition(parted.map(col): _*)
-      else toWrite0
+    // partitions of the batch, the standard Spark trade. A `clustered`
+    // frame (see Leg) is written as it stands: every row's bucket is
+    // still computed from its key above, so placement never depends on
+    // the claim — a partition holding several leaves only writes more
+    // files.
+    val toWrite = if (bucketPart.nonEmpty && !clustered)
+      toWrite0.repartition(parted.map(col): _*)
+    else toWrite0
     // DV sidecar frames stay parquet regardless of the table's data
     // format (position lists, not data)
     val fmt = if (kind == "dv") "parquet" else fileFormat(m)
@@ -1508,6 +1533,16 @@ class GraftCatalog(private[sources] val spark: SparkSession,
     (if (snaps.size() == 0) None
     else resolveFrames(schema, table, m, filesOf(snaps.get(snaps.size() - 1))))
       .getOrElse(emptyFrame(m))
+  }
+
+  /** Whether [[headImage]] of `m` merges in fixed-bucket
+    * [[bucketedResolve]] legs, one bucket per partition: that image, or
+    * a filter or projection of it, lands as a [[Leg]] marked `clustered`
+    * (written without the layout shuffle). */
+  private[sources] def headMergesPerBucket(m: ObjectNode): Boolean = {
+    val snaps = m.get("snapshots").asInstanceOf[ArrayNode]
+    primaryKey(m).nonEmpty && bucketCount(m).exists(_ >= 1) && snaps.size() > 0 &&
+      !filesOf(snaps.get(snaps.size() - 1)).exists(_.kind == "dv")
   }
 
   /** Zone maps of every live dir (dir name → stats); empty map for
@@ -1981,15 +2016,18 @@ class GraftCatalog(private[sources] val spark: SparkSession,
    * beyond it Spark lists through a job.
    */
   private def groupFrames(m: ObjectNode, roots: Seq[(FileEntry, Path)],
-      withMeta: Boolean = false): Seq[DataFrame] = {
-    val chunk = spark.conf
-      .get("spark.sql.sources.parallelPartitionDiscovery.threshold", "32").toInt
+      withMeta: Boolean = false): Seq[DataFrame] =
     roots.map(r => readGroupOf(r._1)).distinct.flatMap { g =>
-      roots.filter(r => readGroupOf(r._1) == g).grouped(math.max(1, chunk))
+      roots.filter(r => readGroupOf(r._1) == g).grouped(math.max(1, discoveryChunk))
         .map(part => relationFor(m, part.head._1, part.map(_._2.toString), None,
           withMeta, withBucket = false))
     }
-  }
+
+  /** Most roots one relation lists without a listing job: Spark's
+    * `spark.sql.sources.parallelPartitionDiscovery.threshold` — beyond it
+    * Spark lists through a job. */
+  private[sources] def discoveryChunk: Int = spark.conf
+    .get("spark.sql.sources.parallelPartitionDiscovery.threshold", "32").toInt
 
   /**
    * The one way snapshot entries become frames: each mapped onto the
@@ -2061,12 +2099,18 @@ class GraftCatalog(private[sources] val spark: SparkSession,
     if (!fs.exists(p)) Seq.empty
     else fs.listStatus(p).toSeq.flatMap { st =>
       val nm = st.getPath.getName
-      if (nm.startsWith(s"$BucketCol="))
-        scala.util.Try(nm.stripPrefix(s"$BucketCol=").toInt).toOption
+      if (nm.startsWith(s"$BucketCol=")) bucketOfPath(nm)
       else if (depth > 0 && st.isDirectory && nm.contains("="))
         bucketsUnder(st.getPath, depth - 1)
       else Seq.empty
     }
+
+  /** `k` of the first `__bucket=k` segment of a `/`-separated relative
+    * path (a file of a bucket-laid dir, or one segment name); None when
+    * it has none. */
+  private[sources] def bucketOfPath(rel: String): Option[Int] =
+    rel.split('/').find(_.startsWith(s"$BucketCol="))
+      .flatMap(_.stripPrefix(s"$BucketCol=").toIntOption)
 
   /** `paths` (dirs, or files under `basePath`) read as one relation
     * mapped onto the current schema: every current column by stable
@@ -3194,7 +3238,7 @@ class GraftCatalog(private[sources] val spark: SparkSession,
       case Some(sf) if deleteKeys.columns.contains(sf) =>
         (deleteKeys.select((pk :+ sf).map(col): _*), None)
       case Some(sf) =>
-        (read(schema, table)
+        (headImage(schema, table, m)
           .join(deleteKeys.select(pk.map(col): _*), pk, "left_semi")
           .select((pk :+ sf).map(col): _*), Some(commitVersion(m)))
       case None => (deleteKeys.select(pk.map(col): _*), None)
@@ -3288,9 +3332,10 @@ class GraftCatalog(private[sources] val spark: SparkSession,
     // (its current residence, straight from the image being filtered).
     val extra = sequenceField(m).toSeq ++
       (if (crossPartition(m)) partitionColumns(m) else Seq.empty)
-    val victims = read(schema, table).filter(condition)
+    val victims = headImage(schema, table, m).filter(condition)
       .select((pk ++ extra).map(col): _*)
-    commit(schema, table, Seq(Leg("", "delete", victims)),
+    commit(schema, table,
+      Seq(Leg("", "delete", victims, clustered = headMergesPerBucket(m))),
       basis = Some(commitVersion(m)))
   }
 
@@ -3311,7 +3356,7 @@ class GraftCatalog(private[sources] val spark: SparkSession,
         if (crossPartition(m)) partitionColumns(m) else Seq.empty) match {
       case (None, Seq()) => victims.select(pk.map(col): _*)
       case (sf, parts) =>
-        read(schema, table).join(victims.select(pk.map(col): _*), pk, "left_semi")
+        headImage(schema, table, m).join(victims.select(pk.map(col): _*), pk, "left_semi")
           .select((pk ++ sf.toSeq ++ parts).map(col): _*)
     }
     commit(schema, table, Seq(Leg("", "delete", keys)),
@@ -3348,7 +3393,7 @@ class GraftCatalog(private[sources] val spark: SparkSession,
     // UPDATE semantics. Chained withColumn would feed earlier assignments
     // into later ones (SET a = b, b = a would fail to swap) with
     // map-iteration-order nondeterminism on top.
-    val updated = read(schema, table).filter(condition)
+    val updated = headImage(schema, table, m).filter(condition)
       .select(cur.fieldNames.toSeq.map(c =>
         assignments.get(c).map(_.as(c)).getOrElse(col(c))): _*)
     upsertFrom(schema, table, updated, basis = Some(commitVersion(m)))
@@ -4024,10 +4069,15 @@ object GraftCatalog {
     * coverage start (default: the previous head); `index` is the
     * dynamic-bucket index delta (rows, key count) the dir carries;
     * `staged` names a staging dir (relative to the table) already holding
-    * the leg's rows, written by [[GraftCatalog.writeDir]]. */
+    * the leg's rows, written by [[GraftCatalog.writeDir]]. `clustered`
+    * marks a fixed-bucket frame whose partitions each already hold whole
+    * layout leaves — [[GraftCatalog.bucketedResolve]]'s one-bucket legs,
+    * or a filter or projection of them — so its write skips the layout
+    * shuffle (see writeDir). */
   final case class Leg(suffix: String, kind: String, frame: DataFrame,
       retract: Boolean = false, from: Option[Long] = None,
-      index: Option[(DataFrame, Long)] = None, staged: Option[String] = None)
+      index: Option[(DataFrame, Long)] = None, staged: Option[String] = None,
+      clustered: Boolean = false)
 
   /** What a commit's snapshot keeps of the previous snapshot's file list. */
   sealed trait Inherit

@@ -47,11 +47,15 @@ trait GraftDeletionVectors { self: GraftCatalog =>
     StructField(DvFileCol, org.apache.spark.sql.types.StringType),
     StructField(DvPosCol, org.apache.spark.sql.types.LongType)))
 
-  /** Union of a snapshot's deletion-vector dirs: (file, pos) pairs. */
+  /** A snapshot's deletion-vector dirs as (file, pos) pairs: one relation
+    * per chunk of at most `spark.sql.sources.parallelPartitionDiscovery.threshold`
+    * dirs (as [[groupFrames]] chunks), so the plan does not grow with
+    * the DV commits and listing runs no job. */
   private[sources] def dvFrame(schema: String, table: String,
       dvEs: Seq[FileEntry]): DataFrame =
-    unionAllByName(dvEs.map(fe => spark.read.schema(dvStorageSchema)
-      .parquet(dirPath(schema, table, fe.dir).toString)))
+    unionAllByName(dvEs.grouped(math.max(1, discoveryChunk)).map(part =>
+      spark.read.schema(dvStorageSchema)
+        .parquet(part.map(fe => dirPath(schema, table, fe.dir).toString): _*)).toSeq)
 
   /** A DV position frame shrunk to the given buckets' files — refs carry
     * their `__bucket=k` path segment, and a position outside those files

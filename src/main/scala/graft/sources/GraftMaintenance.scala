@@ -200,7 +200,8 @@ trait GraftMaintenance { self: GraftCatalog =>
           readChangelogFull(schema, table, from, headId), from = Some(from)))
         else None
       } else None
-    commit(schema, table, Leg("", "data", headImage(schema, table, m)) +: cl.toSeq,
+    commit(schema, table, Leg("", "data", headImage(schema, table, m),
+        clustered = headMergesPerBucket(m)) +: cl.toSeq,
       InheritNone, basis = Some(commitVersion(m)), compaction = true)
   }
 
@@ -249,7 +250,7 @@ trait GraftMaintenance { self: GraftCatalog =>
     val entries = filesOf(snaps.get(snaps.size() - 1))
     val img = bucketedResolve(schema, table, m, entries, n,
       onlyBuckets = Some(buckets.distinct.sorted)).getOrElse(emptyFrame(m))
-    commit(schema, table, Seq(Leg("", "data", img)),
+    commit(schema, table, Seq(Leg("", "data", img, clustered = true)),
       InheritRetiring(buckets.toSet), basis = Some(commitVersion(m)),
       compaction = true)
   }
@@ -316,13 +317,10 @@ trait GraftMaintenance { self: GraftCatalog =>
         // the unpersisted inBuckets plan, which doubled the chosen
         // buckets' I/O on exactly this all-dead path.
         val zones = fileStatsFrom(schema, table, m)
-        def relBucket(rel: String): Option[Int] =
-          rel.split('/').find(_.startsWith(s"$BucketCol="))
-            .flatMap(_.stripPrefix(s"$BucketCol=").toIntOption)
         val chosen = buckets.toSet
         val holdsBytes = dataEs.exists { fe =>
           val inDir: Set[Int] = zones.get(fe.dir).filter(_.nonEmpty) match {
-            case Some(fm) => fm.keysIterator.flatMap(relBucket).toSet
+            case Some(fm) => fm.keysIterator.flatMap(bucketOfPath).toSet
             case None => bucketsUnder(dirPath(schema, table, fe.dir),
               partitionColumns(m).length).toSet
           }
@@ -362,15 +360,12 @@ trait GraftMaintenance { self: GraftCatalog =>
       .filter(fe => fe.kind == "data" || fe.kind == "delete")
     val perFile = fileStatsFrom(schema, table, m)
     val partDepth = partitionColumns(m).length
-    def fromPath(rel: String): Option[Int] =
-      rel.split('/').find(_.startsWith(s"$BucketCol="))
-        .flatMap(s => s.stripPrefix(s"$BucketCol=").toIntOption)
     def listed(fe: FileEntry): Set[Int] = bucketsUnder(
       dirPath(schema, table, fe.dir), if (fe.kind == "data") partDepth else 0).toSet
     val counts = mutable.Map.empty[Int, Int].withDefaultValue(0)
     entries.foreach { fe =>
       val present: Set[Int] = perFile.get(fe.dir).filter(_.nonEmpty) match {
-        case Some(fm) => fm.keysIterator.flatMap(fromPath).toSet
+        case Some(fm) => fm.keysIterator.flatMap(bucketOfPath).toSet
         case None => listed(fe)
       }
       (present -- fe.excludeBuckets).foreach(k => counts(k) += 1)
@@ -937,8 +932,7 @@ trait GraftMaintenance { self: GraftCatalog =>
             val nm = st.getPath.getName
             if (st.isDirectory) {
               if (nm.startsWith(s"$BucketCol=")) {
-                if (nm.stripPrefix(s"$BucketCol=").toIntOption
-                    .exists(common.contains))
+                if (bucketOfPath(nm).exists(common.contains))
                   fs.delete(st.getPath, true)
               } else if (nm.contains("=")) walk(st.getPath)
             }

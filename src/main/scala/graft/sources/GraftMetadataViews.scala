@@ -71,7 +71,7 @@ trait GraftMetadataViews { self: GraftCatalog =>
       // drop their sidecar entries so counts match what a reader plans
       val sidecar = perFile.get(fe.dir)
         .map(_.filter { case (rel, _) =>
-          !fe.excludeBuckets.exists(k => rel.split('/').contains(s"$BucketCol=$k"))
+          !bucketOfPath(rel).exists(fe.excludeBuckets.contains)
         })
         .filter(fm => fm.nonEmpty && fm.valuesIterator.forall(_.bytes >= 0))
       val (parts, bytes) = sidecar match {

@@ -50,8 +50,12 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
  * immediately after INSERT upserts, no compact prerequisite (the
  * reference behaves the same: Paimon PK reads merge at read time,
  * TrinoPageSourceBase.java). Pushed filters are applied on the merged
- * view (Catalyst then pushes them through the merge window into the
- * parquet scans where legal — PK predicates prune before the merge).
+ * view. On an unbucketed table Catalyst pushes PK predicates through the
+ * merge window into the scans, so they prune before the merge. On a
+ * bucketed table the per-bucket merge is a `mapPartitions`, which blocks
+ * pushdown: only bucket selection ([[GraftCatalog.readWhere]]'s
+ * primary-key equalities) and zone pruning narrow the input, and a key
+ * range filters after every bucket's rows have merged.
  */
 class GraftSparkCatalog extends TableCatalog with SupportsNamespaces
     with ProcedureCatalog with StagingTableCatalog {

@@ -75,6 +75,23 @@ class DirFramesSpec extends SparkSpecBase {
     assert(cat.read("db", "s12").count() === 12 * 20)
   }
 
+  test("a DV-applied read plans the same scans over 12 DV commits as over 2") {
+    val cat = freshCatalog()
+    def table(name: String, dvCommits: Int): DataFrame = {
+      appendTable(cat, name, 2, Map("deletion-vectors" -> "true"))
+      (1 to dvCommits).foreach(i => cat.deleteWhere("db", name, col("k") === 100 + i))
+      assert(cat.snapshotFileEntries("db", name).count(_.kind == "dv") === dvCommits)
+      cat.read("db", name)
+    }
+    val at2 = table("v2", 2)
+    val at12 = table("v12", 12)
+    assert(fileScans(at12) === fileScans(at2),
+      "a read over 12 DV dirs plans more scans than over 2")
+    assert(at2.count() === 38)
+    assert(at12.select("k").collect().map(_.getLong(0)).toSet ===
+      ((100L until 120L) ++ (200L until 220L)).toSet -- (101L to 112L))
+  }
+
   test("incremental DV rebuild reads only the changed buckets' leaves") {
     val cat = freshCatalog()
     val n = 8

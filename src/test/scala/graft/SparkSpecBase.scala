@@ -65,6 +65,25 @@ trait SparkSpecBase extends AnyFunSuite with BeforeAndAfterAll {
     scans.get()
   }
 
+  /** Shuffle exchanges of every query `body` runs, writes included
+    * (listener-observed, bus flushed), through adaptive plans and their
+    * query stages; a reused exchange does not count again. */
+  def shuffleExchangesDuring(body: => Unit): Int = {
+    val exchanges = new java.util.concurrent.atomic.AtomicInteger(0)
+    val l = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, d: Long): Unit =
+        exchanges.addAndGet(SparkSpecBase.shufflesIn(qe.executedPlan))
+      override def onFailure(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
+    }
+    org.apache.spark.GraftTestBus.waitUntilEmpty(spark.sparkContext)
+    spark.listenerManager.register(l)
+    try { body; org.apache.spark.GraftTestBus.waitUntilEmpty(spark.sparkContext) }
+    finally spark.listenerManager.unregister(l)
+    exchanges.get()
+  }
+
   /** Every data and tombstone dir of the head snapshot resolves its rows
     * under the ordinal its name carries: `snap-7`, `snap-7-del`,
     * `snap-7-r2` and a branch's `~/snap-7` all read 7. */
@@ -92,6 +111,18 @@ object SparkSpecBase {
       scansIn(i.relation.cachedPlan)
     case _: FileSourceScanExec => 1
     case o => o.children.map(scansIn).sum
+  }
+
+  /** Shuffle exchanges under `p`, through adaptive plans and their
+    * query stages. */
+  def shufflesIn(p: SparkPlan): Int = p match {
+    case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
+      shufflesIn(a.executedPlan)
+    case s: org.apache.spark.sql.execution.adaptive.QueryStageExec => shufflesIn(s.plan)
+    case _: org.apache.spark.sql.execution.exchange.ReusedExchangeExec => 0
+    case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeLike =>
+      1 + e.children.map(shufflesIn).sum
+    case o => o.children.map(shufflesIn).sum
   }
 
   lazy val session: SparkSession = {
