@@ -15,7 +15,9 @@ import org.apache.spark.sql.SparkSession
  * FEWER actions/stages, not faster kernels. Each run also reports its
  * Janino compile count: generated code that differs from query to query
  * (a plan that grows with the table's dirs, say) misses the codegen
- * cache and recompiles. Dev tool only; the driver uses Bench.
+ * cache and recompiles. A `[jobsites]` line per run counts its jobs by
+ * call site, so a job regression names where it comes from. Dev tool
+ * only; reported numbers come from Bench.
  *
  * Usage: sbt "runMain graft.JobProfile <sfDir> [-explain] <query>..."
  * (`-explain` also prints each query's executed plan after its runs).
@@ -52,12 +54,19 @@ object JobProfile {
       java.util.Collections.synchronizedList(new java.util.ArrayList[(Long, Long)])
     val jobStarts = new java.util.concurrent.ConcurrentHashMap[Int, Long]
     val verbose = sys.env.get("SPARK_GRAFT_PROFILE_VERBOSE").contains("1")
+    // Jobs per call site, reset per run: a job regression names its
+    // origin (`parquet at Tables.scala:45`, `count at ...`) in the run's
+    // summary line. Adaptive query stages all materialize from the same
+    // executor frame, so they count as one site.
+    val jobSites = new java.util.concurrent.ConcurrentHashMap[String, Integer]
     spark.sparkContext.addSparkListener(new SparkListener {
       override def onJobStart(j: SparkListenerJobStart): Unit = {
         jobs.incrementAndGet()
         jobStarts.put(j.jobId, j.time)
+        val cs = j.stageInfos.lastOption.map(_.name).getOrElse("?")
+        val site = if (cs.contains("withThreadLocalCaptured")) "AQE stage" else cs
+        jobSites.merge(site, 1, (a, b) => a + b)
         if (verbose) {
-          val cs = j.stageInfos.lastOption.map(_.name).getOrElse("?")
           val nTasks = j.stageInfos.map(_.numTasks).sum
           println(s"[job] $cs stages=${j.stageInfos.size} tasks=$nTasks")
         }
@@ -133,6 +142,7 @@ object JobProfile {
         // let the listener bus drain so counters attribute to this run
         Thread.sleep(300)
         jobSpans.clear()
+        jobSites.clear()
         val (j0, s0, t0, m0) =
           (jobs.get(), stages.get(), tasks.get(), taskMs.get())
         val c0 = compiles()
@@ -168,6 +178,12 @@ object JobProfile {
           f"taskTime=${(taskMs.get - m0) / 1e3}%.1fs " +
           f"(parallel-occupancy ${(taskMs.get - m0) / 1e3 / (wall * cpus.toInt) * 100}%.0f%%) " +
           f"jobWall=${covered / 1e3}%.2fs driverGap=$driverGap%.2fs")
+        locally {
+          import scala.jdk.CollectionConverters._
+          val sites = jobSites.asScala.toSeq.sortBy { case (k, n) => (-n.toInt, k) }
+          println(s"[jobsites] $name run$run " +
+            sites.map { case (k, n) => s"$k=$n" }.mkString(", "))
+        }
         if (sampleStacks) {
           import scala.jdk.CollectionConverters._
           val top = sampled.asScala.toSeq.sortBy(-_._2).take(20)

@@ -69,7 +69,7 @@ object ScaleUp {
 
     def replicate(name: String, offsets: Map[String, Long],
         mutate: (DataFrame, Int) => DataFrame = (df, _) => df): Unit = {
-      val df = spark.read.parquet(s"$src/$name.parquet")
+      val df = graft.sources.Tables.parquet(spark, s"$src/$name.parquet")
       val reps10: DataFrame = (0 until reps).map { r =>
         val shifted = df.select(df.columns.map { c =>
           offsets.get(c) match {
@@ -83,7 +83,7 @@ object ScaleUp {
       println(s"[scaleup] $name: ${df.count()} -> ${reps10.count()} rows")
     }
     def copy(name: String): Unit = {
-      spark.read.parquet(s"$src/$name.parquet")
+      graft.sources.Tables.parquet(spark, s"$src/$name.parquet")
         .write.mode("overwrite").parquet(s"$dst/$name.parquet")
       println(s"[scaleup] $name: copied 1x")
     }

@@ -8,7 +8,7 @@ import scala.collection.mutable
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions.{col, unix_micros}
+import org.apache.spark.sql.functions.{col, unix_date, unix_micros}
 import org.apache.spark.sql.types._
 
 /**
@@ -109,7 +109,7 @@ private[graft] object BloomIndex {
     * epoch micros, integrals → long, string as-is). */
   private def canonical(f: StructField): org.apache.spark.sql.Column = f.dataType match {
     case StringType => col(f.name)
-    case DateType => col(f.name).cast(IntegerType).cast(LongType)
+    case DateType => unix_date(col(f.name)).cast(LongType) // ANSI casts refuse DATE → INT
     case TimestampType => unix_micros(col(f.name))
     case _ => col(f.name).cast(LongType)
   }
@@ -199,8 +199,13 @@ private[graft] object BloomIndex {
       val sc = spark.sparkContext
       val proj = col("_metadata.file_path") +:
         idxFields.toSeq.map(f => canonical(f))
-      val df = spark.read.format(provider).load(dirPath.toString)
-        .select(proj: _*)
+      // a schema-less parquet read runs a one-task inference job first, so
+      // parquet is read with the indexed fields as its schema. Orc and
+      // avro infer on the driver, and avro stores byte/short columns as
+      // int, which its reader does not narrow to a given schema
+      val reader = spark.read.format(provider)
+      val df = (if (provider == "parquet") reader.schema(StructType(idxFields)) else reader)
+        .load(dirPath.toString).select(proj: _*)
       val bSizes = sc.broadcast(sizes)
       val confB = sc.broadcast(new FileStats.SerConf(sc.hadoopConfiguration))
       val dirStr = dirPath.toString

@@ -443,30 +443,38 @@ private[graft] object FileStats {
 
   /** List every data file of the given format under `dir` recursively as
     * (relative-path, absolute-path, length) — one metadata listing per
-    * dir level, no footer reads. None = dir missing or listing failed.
-    * A plain `listStatus` walk in `listFiles`' depth-first order: the
-    * located statuses `listFiles` builds load each file's permissions,
-    * which the local filesystem without native Hadoop answers by
-    * spawning one `ls` process per file. */
+    * dir level, no footer reads. None = dir missing or listing failed. */
   private def listDataFiles(fs: FileSystem, dir: Path,
-      fmt: String): Option[Seq[(String, String, Long)]] = {
-    val ext = "." + fmt
+      fmt: String): Option[Seq[(String, String, Long)]] =
     try {
-      if (!fs.exists(dir)) return None
-      val qdir = fs.makeQualified(dir).toString
-      val out = mutable.ArrayBuffer[(String, String, Long)]()
-      def walk(d: Path): Unit = fs.listStatus(d).foreach { st =>
-        val p = st.getPath
-        if (st.isDirectory) walk(p)
-        else if (p.getName.endsWith(ext)) {
-          val abs = p.toString
-          val rel = abs.stripPrefix(qdir).stripPrefix("/")
-          out += ((rel, abs, st.getLen))
-        }
-      }
-      walk(dir)
-      Some(out.toSeq)
+      if (!fs.exists(dir)) None
+      else Some(filesUnder(fs, dir, Seq("." + fmt)).map { case (rel, st) =>
+        (rel, st.getPath.toString, st.getLen)
+      })
     } catch { case scala.util.control.NonFatal(_) => None }
+
+  /** Name suffixes of the data files of every table format. */
+  val DataFileExts: Seq[String] = Seq(".parquet", ".orc", ".avro")
+
+  /** The files under `dir` whose names end in one of `exts`, recursively,
+    * as (path relative to `dir`, status), in `listFiles`' depth-first
+    * order. A plain `listStatus` walk: the located statuses `listFiles`
+    * builds load each file's permissions, which the local filesystem
+    * without native Hadoop answers by spawning one `ls` process per file.
+    * Throws what the listing throws, a missing `dir` included. */
+  def filesUnder(fs: FileSystem, dir: Path,
+      exts: Seq[String]): Seq[(String, org.apache.hadoop.fs.FileStatus)] = {
+    val qdir = fs.makeQualified(dir).toString
+    val out = mutable.ArrayBuffer[(String, org.apache.hadoop.fs.FileStatus)]()
+    def walk(d: Path): Unit = fs.listStatus(d).foreach { st =>
+      val p = st.getPath
+      if (st.isDirectory) walk(p)
+      else if (exts.exists(p.getName.endsWith)) {
+        out += ((p.toString.stripPrefix(qdir).stripPrefix("/"), st))
+      }
+    }
+    walk(dir)
+    out.toSeq
   }
 
   /**

@@ -763,20 +763,11 @@ trait GraftMaintenance { self: GraftCatalog =>
     // live partition paths per dir: one recursive metadata listing
     val dirParts: Map[String, Set[String]] = entries.map { fe =>
       val basePath = dirPath(schema, table, fe.dir)
-      val qbase = fs.makeQualified(basePath).toString
-      val acc = mutable.Set[String]()
-      if (fs.exists(basePath)) {
-        val it = fs.listFiles(basePath, true)
-        while (it.hasNext) {
-          val p = it.next().getPath
-          if (p.getName.endsWith(".parquet") || p.getName.endsWith(".orc")) {
-            val part = p.toString.stripPrefix(qbase).stripPrefix("/")
-              .split('/').dropRight(1).mkString("/")
-            if (part.nonEmpty) acc += part
-          }
-        }
-      }
-      fe.dir -> acc.toSet
+      val parts =
+        if (!fs.exists(basePath)) Seq.empty
+        else FileStats.filesUnder(fs, basePath, FileStats.DataFileExts)
+          .map(_._1.split('/').dropRight(1).mkString("/"))
+      fe.dir -> parts.filter(_.nonEmpty).toSet
     }.toMap
     val allParts = dirParts.values.flatten.toSet.toSeq.sorted
     if (allParts.isEmpty) return (Seq.empty,

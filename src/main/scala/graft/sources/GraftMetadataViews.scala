@@ -80,18 +80,8 @@ trait GraftMetadataViews { self: GraftCatalog =>
           GraftCatalog.filesTableListings.incrementAndGet()
           val p = dirPath(schema, table, fe.dir)
           // recursive: partitioned dirs nest part-files under col=value/
-          var n = 0
-          var b = 0L
-          val it = fs.listFiles(p, true)
-          while (it.hasNext) {
-            val st = it.next()
-            val nm = st.getPath.getName
-            if (nm.endsWith(".parquet") || nm.endsWith(".orc") ||
-                nm.endsWith(".avro")) {
-              n += 1; b += st.getLen
-            }
-          }
-          (n, b)
+          val files = FileStats.filesUnder(fs, p, FileStats.DataFileExts)
+          (files.size, files.map(_._2.getLen).sum)
       }
       (fe.dir, fe.kind, fe.schemaVersion, parts, bytes,
         fe.excludeBuckets.mkString(","))
@@ -134,42 +124,37 @@ trait GraftMetadataViews { self: GraftCatalog =>
       val base = dirPath(schema, table, fe.dir)
       val dirStats = perFile.getOrElse(fe.dir, Map.empty)
       if (fs.exists(base)) {
-        val qbase = fs.makeQualified(base).toString
-        val it = fs.listFiles(base, true)
-        while (it.hasNext) {
-          val st = it.next()
+        val files = FileStats.filesUnder(fs, base, FileStats.DataFileExts)
+        files.foreach { case (fileRel, st) =>
           val nm = st.getPath.getName
           val isParquet = nm.endsWith(".parquet")
-          if (isParquet || nm.endsWith(".orc") || nm.endsWith(".avro")) {
-            val fileRel = st.getPath.toString.stripPrefix(qbase).stripPrefix("/")
-            val rel = fileRel.split('/').dropRight(1).mkString("/")
-            val rows = dirStats.get(fileRel).map(_.rows).getOrElse {
-              FileStats.driverFooterReads.incrementAndGet() // tripwire
-              if (isParquet) {
-                val rd = org.apache.parquet.hadoop.ParquetFileReader.open(
-                  org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf))
-                try rd.getRecordCount finally rd.close()
-              } else if (nm.endsWith(".orc")) {
-                val rd = org.apache.orc.OrcFile.createReader(st.getPath,
-                  org.apache.orc.OrcFile.readerOptions(conf))
-                try rd.getNumberOfRows finally rd.close()
-              } else {
-                // avro: sum per-block record counts from block headers —
-                // I/O over the file, zero record decode
-                val in = new org.apache.avro.mapred.FsInput(st.getPath, conf)
-                val rd = new org.apache.avro.file.DataFileReader(in,
-                  new org.apache.avro.generic.GenericDatumReader[AnyRef]())
-                try {
-                  var n = 0L
-                  while (rd.hasNext) { n += rd.getBlockCount; rd.nextBlock() }
-                  n
-                } finally rd.close()
-              }
+          val rel = fileRel.split('/').dropRight(1).mkString("/")
+          val rows = dirStats.get(fileRel).map(_.rows).getOrElse {
+            FileStats.driverFooterReads.incrementAndGet() // tripwire
+            if (isParquet) {
+              val rd = org.apache.parquet.hadoop.ParquetFileReader.open(
+                org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf))
+              try rd.getRecordCount finally rd.close()
+            } else if (nm.endsWith(".orc")) {
+              val rd = org.apache.orc.OrcFile.createReader(st.getPath,
+                org.apache.orc.OrcFile.readerOptions(conf))
+              try rd.getNumberOfRows finally rd.close()
+            } else {
+              // avro: sum per-block record counts from block headers —
+              // I/O over the file, zero record decode
+              val in = new org.apache.avro.mapred.FsInput(st.getPath, conf)
+              val rd = new org.apache.avro.file.DataFileReader(in,
+                new org.apache.avro.generic.GenericDatumReader[AnyRef]())
+              try {
+                var n = 0L
+                while (rd.hasNext) { n += rd.getBlockCount; rd.nextBlock() }
+                n
+              } finally rd.close()
             }
-            val key = (rel, fe.kind)
-            val (f0, b0, r0) = agg.getOrElse(key, (0L, 0L, 0L))
-            agg(key) = (f0 + 1, b0 + st.getLen, r0 + rows)
           }
+          val key = (rel, fe.kind)
+          val (f0, b0, r0) = agg.getOrElse(key, (0L, 0L, 0L))
+          agg(key) = (f0 + 1, b0 + st.getLen, r0 + rows)
         }
       }
     }

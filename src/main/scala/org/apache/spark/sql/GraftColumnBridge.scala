@@ -24,6 +24,39 @@ object GraftColumnBridge {
       to: org.apache.spark.sql.types.DataType): Boolean =
     org.apache.spark.sql.types.DataType.equalsIgnoreCompatibleNullability(from, to)
 
+  /** The schema Spark's parquet inference (`ParquetUtils.inferSchema`
+    * without `mergeSchema`) derives from `file`, read from its footer on
+    * the calling thread instead of in a one-task Spark job. The footer
+    * is read the way the inference job reads it (row groups skipped,
+    * session Hadoop conf) and converted by the same `readSchemaFromFooter`
+    * with a converter built from this session's conf the way
+    * `mergeSchemasInParallel` builds it: the session's binary-as-string,
+    * INT96, timestamp-NTZ, nanos-as-long and unknown-annotation flags,
+    * the defaults for the rest. */
+  def parquetFooterSchema(spark: SparkSession,
+      file: org.apache.hadoop.fs.FileStatus): types.StructType = {
+    import org.apache.spark.sql.execution.datasources.parquet._
+    val state = spark.asInstanceOf[classic.SparkSession].sessionState
+    val conf = state.conf
+    val metadata = ParquetFooterReader.readFooter(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(file, state.newHadoopConf()),
+      org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS)
+    val converter = new ParquetToSparkSchemaConverter(
+      assumeBinaryIsString = conf.isParquetBinaryAsString,
+      assumeInt96IsTimestamp = conf.isParquetINT96AsTimestamp,
+      inferTimestampNTZ = conf.parquetInferTimestampNTZEnabled,
+      nanosAsLong = conf.legacyParquetNanosAsLong,
+      respectUnknownTypeAnnotation = conf.parquetReaderRespectUnknownTypeAnnotation)
+    ParquetFileFormat.readSchemaFromFooter(
+      new org.apache.parquet.hadoop.Footer(file.getPath, metadata), converter)
+  }
+
+  /** Whether Spark's file listing skips a file or dir of this name
+    * (`_`/`.`-prefixed names except parquet summary files, and
+    * in-flight `._COPYING_` copies). */
+  def hiddenPathName(name: String): Boolean =
+    org.apache.spark.util.HadoopFSUtils.shouldFilterOutPathName(name)
+
   /** DataFrame over an analyzed logical plan (the MERGE rewrite carries
     * the source subplan through to execution this way). */
   def dataFrame(spark: SparkSession,

@@ -173,4 +173,17 @@ class AvroFormatSpec extends SparkSpecBase {
     assert(gc.readWhere("db", "zdrv", col("id") < 50).count() ===
       gc.readWhere("db", "zdst", col("id") < 50).count())
   }
+
+  test("partition replacement finds avro partitions: expirePartitions and overwriteDynamic") {
+    import spark.implicits._
+    val rows = Seq((1L, "a"), (2L, "a"), (3L, "b"), (4L, "c"))
+    gc.createTable("db", "aparts", rows.toDF("id", "day").schema,
+      partitionBy = Seq("day"), options = Map("file.format" -> "avro"))
+    gc.append("db", "aparts", rows.toDF("id", "day"))
+    assert(gc.expirePartitions("db", "aparts", col("day") === "c") === Seq("day=c"))
+    gc.overwriteDynamic("db", "aparts", Seq((9L, "a")).toDF("id", "day"))
+    assert(gc.read("db", "aparts").select("id").as[Long].collect().sorted.toSeq
+      === Seq(3L, 9L))
+  }
 }
+

@@ -316,4 +316,44 @@ class BloomIndexSpec extends SparkSpecBase {
     assert(BloomIndex.sidecarLoads.get() === b2, "repeat lookup re-opened bitsets")
     assert(GraftCatalog.zoneSidecarLoads.get() === z1)
   }
+
+  test("a bloom build reads the indexed fields as its schema: one job on " +
+      "every format, no schema-inference job") {
+    import graft.sources.BloomIndex
+    import org.apache.hadoop.fs.Path
+    val rows = spark.range(0, N).selectExpr("id", "concat('n', id) AS name",
+      "CAST(id % 100 AS SHORT) AS s", "date_add(DATE'2024-01-01', CAST(id % 50 AS INT)) AS d",
+      "id * 2 AS val").repartition(4)
+    val cols = Set("id", "name", "s", "d")
+    for ((fmt, provider) <- Seq("parquet" -> "parquet", "orc" -> "orc",
+        "avro" -> "org.apache.spark.sql.avro.AvroFileFormat")) {
+      val dir = new Path(Files.createTempDirectory(s"graft-blbuild-$fmt").toString, "d")
+      rows.write.format(provider).save(dir.toString)
+      val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val files = fs.listStatus(dir).map(_.getPath.getName).filter(_.endsWith(s".$fmt"))
+      assert(files.length === 4)
+      var built: Option[Seq[String]] = None
+      val jobs = jobsDuring {
+        built = BloomIndex.build(spark, fs, dir, rows.schema, cols,
+          files.map(_ -> N / 4).toMap, provider = provider)
+      }
+      assert(built === Some(Seq("id", "name", "s", "d")), fmt)
+      assert(jobs === 1, fmt)
+      // every row's values are members of its file's bitsets (in the
+      // canonical domain: integral and date values as longs)
+      val f = files.head
+      val fb = BloomIndex.loadFile(fs, dir, s"spec-$fmt", f).get
+      val sample = spark.read.format(provider).load(new Path(dir, f).toString)
+        .selectExpr("id", "name", "CAST(s AS BIGINT)", "CAST(unix_date(d) AS BIGINT)")
+        .limit(20).collect()
+      assert(sample.nonEmpty)
+      sample.foreach { r =>
+        Seq("id", "name", "s", "d").zipWithIndex.foreach { case (c, i) =>
+          val (bits, words) = fb.cols(c)
+          assert(BloomIndex.mightContain(words, bits, r.get(i)),
+            s"$fmt: $c=${r.get(i)} missing from $f")
+        }
+      }
+    }
+  }
 }
