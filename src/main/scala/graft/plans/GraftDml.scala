@@ -108,9 +108,8 @@ class GraftDeleteRewrite extends Rule[LogicalPlan] {
         if d.resolved && d.condition.exists(
           _.isInstanceOf[org.apache.spark.sql.catalyst.expressions.SubqueryExpression]) =>
       d.table.collectFirst { case r: DataSourceV2Relation => r.table } match {
-        case Some(t: GraftSqlTable)
-            if t.coords.isDefined && (t.properties.containsKey("primary-key")
-              || "true" == t.properties.get("deletion-vectors")) =>
+        // tables that take a DELETE: PK tombstones or deletion vectors
+        case Some(t: GraftSqlTable) if t.coords.isDefined && t.canDelete =>
           val (wh, s, tb) = t.coords.get
           GraftDeleteCommand(wh, s, tb, Filter(d.condition, d.table),
             GraftDml.Assign("cond", d.condition))
@@ -406,8 +405,7 @@ case class GraftUpdateCommand(warehouse: String, schemaName: String,
     * condition/assignments re-bind BY NAME — which is why subqueries
     * (resolved plans pinned to the old exprIds) are refused here. */
   private def runDvUpdate(spark: SparkSession, gc: GraftCatalog): Seq[Row] = {
-    require(gc.tableOptions(schemaName, tableName)
-        .get("deletion-vectors").contains("true"),
+    require(gc.optionsOf(schemaName, tableName).deletionVectors,
       s"$schemaName.$tableName has no primary key — row-level UPDATE " +
         "needs one, or the deletion-vectors table option")
     def rebind(e: Expression): Column = {

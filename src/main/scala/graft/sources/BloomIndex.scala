@@ -55,8 +55,6 @@ import org.apache.spark.sql.types._
  */
 private[graft] object BloomIndex {
 
-  val OptionKey = "file-index.bloom-filter.columns"
-
   /** Sidecar directory inside each data dir; the leading dot hides the
     * whole subtree from parquet discovery. One JSON per data file. */
   val DirName = ".bloomidx"
@@ -186,7 +184,9 @@ private[graft] object BloomIndex {
       // `_metadata.file_path` plus the indexed columns, and `fileRows`
       // comes from the same zone collection that serves orc footers and
       // avro data-derived stats)
-      provider: String = "parquet"): Option[Seq[String]] = {
+      provider: String = "parquet",
+      // the table, named in the warning a failed build logs
+      table: String = "(unnamed)"): Option[Seq[String]] = {
     val idxFields = schema.fields.filter(f =>
       colsWanted.contains(f.name.toLowerCase) && indexable(f.dataType))
     if (idxFields.isEmpty || fileRows.isEmpty) return None
@@ -279,7 +279,15 @@ private[graft] object BloomIndex {
         1L
       }.fold(0L)(_ + _)
       if (written == fileRows.size.toLong) Some(names) else None
-    } catch { case scala.util.control.NonFatal(_) => None }
+    } catch {
+      // the dir goes unindexed (readers just don't bloom-prune it), but
+      // never silently: a build that fails on every commit would drop
+      // the table's bloom pruning with nothing in the logs
+      case scala.util.control.NonFatal(e) =>
+        org.slf4j.LoggerFactory.getLogger(getClass).warn(
+          s"bloom index build failed for $table at $dirPath; the dir gets no bloom index", e)
+        None
+    }
   }
 
   // Sidecars are immutable once their dir lands; cache per (manifest

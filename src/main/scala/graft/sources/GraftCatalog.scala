@@ -7,7 +7,7 @@ import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{array, col, explode, lit, md5, row_number, struct, when}
-import org.apache.spark.sql.types.{NumericType, StructField, StructType}
+import org.apache.spark.sql.types.{StructField, StructType}
 
 /**
  * Versioned table catalog over a warehouse directory — the Spark-native
@@ -217,385 +217,7 @@ class GraftCatalog(private[sources] val spark: SparkSession,
       s"partition column $p not in schema"))
     primaryKey.foreach(p => require(structType.fieldNames.contains(p),
       s"primary-key column $p not in schema"))
-    options.get("bucket").foreach { b =>
-      require(primaryKey.nonEmpty, "bucket option requires a primary key")
-      // -1 = DYNAMIC bucket mode (Paimon's bucket = -1): key→bucket
-      // assignment comes from a persisted hash index, buckets fill to
-      // `dynamic-bucket.target-row-num` keys and new ones open as needed
-      require(b.toInt >= 1 || b.toInt == -1,
-        s"bucket must be >= 1 (fixed) or -1 (dynamic), got $b")
-      if (partitionBy.nonEmpty) {
-        // Paimon's combined layout: `part=v/__bucket=k` dirs. With a FIXED
-        // bucket count the PK-table rule (partition ⊆ primary key)
-        // guarantees a key lives in exactly one partition, so per-bucket
-        // merge legs stay key-disjoint across partitions. DYNAMIC bucket
-        // mode (bucket = -1) lifts that rule — Paimon's CROSS-PARTITION
-        // UPSERT: the persisted index records each key's current
-        // (partition, bucket), an upsert whose partition differs from the
-        // recorded one tombstones the old partition's row in the same
-        // atomic snapshot, and the merge keys on (pk, partition) so each
-        // residence resolves independently (see [[dynamicRoute]]).
-        if (b.toInt != -1)
-          require(partitionBy.forall(primaryKey.contains),
-            "bucketed partitioned tables require every partition column to " +
-              "be part of the primary key (a key must live in exactly one " +
-              "partition); for keys that MOVE between partitions use " +
-              "dynamic bucket mode (bucket = -1, cross-partition upsert)")
-        else if (!partitionBy.forall(primaryKey.contains)) {
-          // cross-partition mode restrictions (v1): commit-order version
-          // races only — a user sequence column cannot arbitrate a move's
-          // tombstone (it carries no sequence value that beats the old
-          // partition's row), and the changelog/incremental protocols key
-          // per pk, which a same-ordinal move pair would tie.
-          require(!options.contains("sequence.field"),
-            "cross-partition upsert tables (partition not in primary key) " +
-              "do not support sequence.field")
-          require(options.getOrElse("merge-engine", "deduplicate") == "deduplicate",
-            "cross-partition upsert tables support only the deduplicate " +
-              "merge engine")
-        }
-      }
-      require(!structType.fieldNames.contains(BucketCol),
-        s"column name $BucketCol is reserved on bucketed tables")
-    }
-    options.get("dynamic-bucket.index-fold.deltas").foreach { t =>
-      require(options.get("bucket").contains("-1"),
-        "dynamic-bucket.index-fold.deltas applies to dynamic-bucket (bucket = -1) tables")
-      require(t.toInt >= 0,
-        s"dynamic-bucket.index-fold.deltas must be >= 0 (0 disables), got $t")
-    }
-    options.get("dynamic-bucket.target-row-num").foreach { t =>
-      require(options.get("bucket").contains("-1"),
-        "dynamic-bucket.target-row-num applies to dynamic-bucket (bucket = -1) tables")
-      require(t.toLong >= 1, s"dynamic-bucket.target-row-num must be >= 1, got $t")
-    }
-    // Paimon merge engines: how a PK table resolves multiple versions of
-    // one key. The in-task bucketed merge implements deduplicate only,
-    // so the two options are mutually exclusive here.
-    options.get("merge-engine").foreach { e =>
-      require(MergeEngines.contains(e),
-        s"merge-engine must be one of ${MergeEngines.mkString(", ")}, got $e")
-      require(primaryKey.nonEmpty, "merge-engine requires a primary key")
-      require(e == "deduplicate" || !options.contains("bucket"),
-        "bucketed tables support only the deduplicate merge engine")
-    }
-    // Sequence field (Paimon's `sequence.field`, a CoreOption the
-    // reference exposes via DDL like every other — TrinoTableOptionUtils):
-    // a USER column, not commit order, decides which version of a key
-    // wins — the out-of-order CDC ingestion contract (an event-time
-    // column keeps a late-arriving update from clobbering newer state).
-    // Largest value wins; ties fall back to commit order; NULL sorts
-    // smallest. Deduplicate engine only, as in Paimon (the field-wise
-    // engines fold ALL versions, so precedence has nothing to decide).
-    options.get("sequence.field").foreach { f =>
-      require(primaryKey.nonEmpty, "sequence.field requires a primary key")
-      val fld = structType.fields.find(_.name == f)
-      require(fld.isDefined, s"sequence.field column $f not in schema")
-      require(!primaryKey.contains(f),
-        s"sequence.field $f cannot be a primary-key column")
-      require(!partitionBy.contains(f),
-        s"sequence.field $f cannot be a partition column")
-      require(options.getOrElse("merge-engine", "deduplicate") == "deduplicate",
-        "sequence.field applies to the deduplicate merge engine only")
-      val dt = fld.get.dataType
-      require(dt.isInstanceOf[NumericType] ||
-        dt == org.apache.spark.sql.types.DateType ||
-        dt == org.apache.spark.sql.types.TimestampType ||
-        dt == org.apache.spark.sql.types.StringType,
-        s"sequence.field $f: ${dt.simpleString} is not an orderable " +
-          "sequence type (numeric/date/timestamp/string)")
-    }
-    // Row-kind field (Paimon's `rowkind.field`): a STRING column OF THE
-    // TABLE carries each record's CDC kind — `-D`/`-U` rows act as
-    // retractions (tombstones), everything else upserts — so a raw CDC
-    // feed lands through plain [[upsert]] without a separate changelog
-    // pipeline. Deduplicate PK tables only, like sequence.field.
-    options.get("rowkind.field").foreach { f =>
-      require(primaryKey.nonEmpty, "rowkind.field requires a primary key")
-      val fld = structType.fields.find(_.name == f)
-      require(fld.isDefined, s"rowkind.field column $f not in schema")
-      require(!primaryKey.contains(f),
-        s"rowkind.field $f cannot be a primary-key column")
-      require(fld.get.dataType == org.apache.spark.sql.types.StringType,
-        s"rowkind.field $f must be a string column, got " +
-          fld.get.dataType.simpleString)
-      // Field-wise engines and retractions (r16): the aggregation engine
-      // accepts `-U`/`-D` rows when every aggregated field's function
-      // has an exact retraction (sum/collect — see retractableField), or
-      // when remove-record-on-delete turns `-D` into whole-row removal;
-      // ignore-delete drops them. partial-update has no retract path.
-      // The rowkind column is excluded case-INSENSITIVELY, matching the
-      // runtime retract gate (the field lookup above already resolved
-      // it case-insensitively).
-      val engine = options.getOrElse("merge-engine", "deduplicate")
-      val aggRetractable = engine == "aggregation" && (
-        options.get("aggregation.remove-record-on-delete").contains("true") ||
-          structType.fields.filterNot(fd => primaryKey.contains(fd.name))
-            .filterNot(_.name.equalsIgnoreCase(f)).forall(fd =>
-              GraftCatalog.retractableField(
-                options.getOrElse(s"fields.${fd.name}.aggregate-function",
-                  "last_non_null"), fd.dataType)))
-      val puRemoves = engine == "partial-update" &&
-        options.get("partial-update.remove-record-on-delete").contains("true")
-      require(engine == "deduplicate" ||
-        options.get("ignore-delete").contains("true") || aggRetractable ||
-        puRemoves,
-        "rowkind.field on a field-wise merge engine requires " +
-          "ignore-delete=true, <engine>.remove-record-on-delete=true, " +
-          "or retractable aggregate functions (sum/collect) on every " +
-          "aggregated field")
-    }
-    // File format (Paimon's `file.format`, default parquet): ORC and
-    // AVRO write through Spark's native sources (Spark 4 bundles the
-    // avro source in spark-sql) — reads, merge-on-read, schema evolution
-    // (each dir is read at its WRITE-TIME schema and mapped forward by
-    // field id, so by-name file resolution suffices), compaction,
-    // streaming, changelog all work unchanged through the format-aware
-    // read/write seams. ORC footers carry min/max/null statistics like
-    // parquet, so ORC tables get zone maps, data skipping, and
-    // metadata-only countRows (r14; timestamp columns conservatively
-    // untracked — ORC timestamp stats are writer-zone sensitive). AVRO
-    // files carry no column statistics: zone stats are collected from
-    // the DATA at write time (r15). Bitsets and DV counts are sized
-    // from the per-file row counts zone collection produces for every
-    // format. The `$partitions` view counts ORC rows from footers and
-    // AVRO rows from block headers (I/O-only, no decode).
-    options.get("file.format").foreach { f =>
-      require(f == "parquet" || f == "orc" || f == "avro",
-        s"file.format must be parquet, orc or avro, got $f")
-      // Deletion vectors are format-independent (r17, matching Paimon —
-      // `deletion-vectors.enabled` is DDL-exposed unconditionally):
-      // ORC and AVRO readers expose no `_metadata.row_index`, so DV
-      // tables of both formats stamp a hidden write-time position
-      // column ([[OrcPosCol]]) into every data file instead. Positions
-      // exist from the FIRST commit by construction: `deletion-vectors`
-      // is an ImmutableOption, so it can only be set at create —
-      // spark-avro's refusal of schema fields absent from a file can
-      // never trigger, because no data file of such a table predates
-      // the column.
-      // bloom file indexes are format-independent since r16: the build
-      // reads `_metadata.file_path` + the indexed columns through the
-      // table's own source, and bitsets are sized from the per-file row
-      // counts the zone collection produces for ALL formats (parquet/orc
-      // footers; avro write-time data stats).
-    }
-    // File compression (Paimon's `file.compression`): per-table codec,
-    // validated against what the chosen format's Spark writer accepts.
-    options.get("file.compression").foreach { c =>
-      val fmt = options.getOrElse("file.format", "parquet")
-      val valid = fmt match {
-        case "orc" => Set("none", "snappy", "zlib", "zstd", "lz4")
-        case "avro" => Set("uncompressed", "snappy", "deflate", "bzip2",
-          "xz", "zstandard")
-        case _ => Set("none", "uncompressed", "snappy", "gzip", "zstd", "lz4")
-      }
-      require(valid(c.toLowerCase(java.util.Locale.ROOT)),
-        s"file.compression '$c' is not a valid $fmt codec " +
-          s"(${valid.toSeq.sorted.mkString(", ")})")
-    }
-    // Retention policy options (Paimon's snapshot.num-retained /
-    // snapshot.time-retained): applied automatically after every commit
-    // (see autoExpire) — validated here AND in setTableOptions (mutable).
-    validateRetentionOptions(options)
-    // Deletion vectors (Paimon's `deletion-vectors.enabled`), two scopes:
-    //
-    //  - APPEND-ONLY tables: row-level DELETE/UPDATE as per-file position
-    //    indexes written directly by deleteWhere/update — no copy-on-write
-    //    rewrite (TrinoTableOptionUtils surfaces the same CoreOption).
-    //  - PRIMARY-KEY tables (Paimon's flagship read-optimized mode): DVs
-    //    are BUILT at compaction over the version history
-    //    ([[buildDeletionVectors]]) so delete-heavy reads skip the
-    //    keep-latest merge for everything at or below the build — see
-    //    [[pkDvResolve]]. The mode pins merge-engine=deduplicate (a DV
-    //    build resolves keep-latest, not a field fold) and partition ⊆
-    //    primary key (a cross-partition move's two-residence resolution
-    //    has no per-ordinal split point). sequence.field composes (r15):
-    //    builds and hybrid reads race versions on (sequence, ordinal),
-    //    and post-build deltas arbitrate against the base's sequence.
-    options.get("deletion-vectors").foreach { v =>
-      require(v == "true" || v == "false",
-        s"deletion-vectors must be true or false, got $v")
-      if (v == "true") {
-        if (primaryKey.nonEmpty) {
-          require(options.getOrElse("merge-engine", "deduplicate") == "deduplicate",
-            "deletion-vectors on a primary-key table requires " +
-              "merge-engine=deduplicate (a DV build resolves keep-latest " +
-              "semantics; field-wise engines fold values instead)")
-          // sequence.field composes since r15: builds and hybrid reads
-          // order the version race by (sequence, ordinal) like every
-          // other resolution path, and post-build deltas arbitrate
-          // against the base version's sequence (a late lower-sequence
-          // row stays dead across a build)
-          require(partitionBy.forall(primaryKey.contains),
-            "deletion-vectors on a primary-key table requires partition " +
-              "columns inside the primary key (cross-partition upsert has " +
-              "no per-ordinal merge-free split point)")
-          require(!options.get("bucket").contains("-1"),
-            "deletion-vectors on a primary-key table requires a fixed " +
-              "bucket count (dynamic-bucket snapshots interleave hash-index " +
-              "dirs the merge-free base/delta split cannot order)")
-        }
-        // OrcPosCol: the write-time position stamp of ORC/AVRO DV data
-        // files — reserved on every DV table for uniformity
-        Seq(DvFileCol, DvPosCol, OrcPosCol).foreach(c =>
-          require(!structType.fieldNames.contains(c),
-            s"column name $c is reserved on deletion-vector tables"))
-      }
-    }
-    // Write-time changelog materialization (Paimon's `changelog-producer`,
-    // surfaced by the reference through TrinoTableOptionUtils's option
-    // mapping): `input` persists each commit's rows kinded as written,
-    // `lookup` persists full -U/+U/-D retraction pairs per commit (one
-    // before-image lookup paid at WRITE instead of by every consumer),
-    // `full-compaction` persists the accumulated diff at each compact().
-    options.get("changelog-producer").foreach { v =>
-      require(GraftCatalog.ChangelogProducers(v),
-        s"changelog-producer must be one of " +
-          s"${GraftCatalog.ChangelogProducers.toSeq.sorted.mkString(", ")}, got $v")
-      if (v != "none") {
-        require(primaryKey.nonEmpty,
-          "changelog-producer requires a primary-key table (append-only " +
-            "tables changelog as pure +I already — nothing to materialize)")
-        // Field-wise engines (partial-update / aggregation / first-row)
-        // take the lookup and full-compaction producers — Paimon surfaces
-        // ChangelogProducer for ALL PK tables, and these producers exist
-        // PRECISELY for patch tables (a patch row has no self-contained
-        // image, so the changelog must be materialized from the resolved
-        // image). Only `input` stays deduplicate-only: it trusts the
-        // writer's rows to BE the changelog, which a patch row is not.
-        if (options.getOrElse("merge-engine", "deduplicate") != "deduplicate")
-          require(v == "lookup" || v == "full-compaction",
-            "changelog-producer=input requires merge-engine=deduplicate " +
-              "(a field-wise engine's input row is a PATCH, not the " +
-              "changelog image — use the lookup or full-compaction " +
-              "producer, which materialize resolved-image pairs)")
-      }
-    }
-    options.get(BloomIndex.OptionKey)
-      .foreach(validateBloomColumns(_, structType, partitionBy, primaryKey))
-    // Sequence groups (Paimon's `fields.<seq-col>.sequence-group`): with
-    // partial-update, independent upstream streams own disjoint column
-    // GROUPS, each versioned by its own sequence column — a group's
-    // fields update (nulls included) only when a row carries a LARGER
-    // group-sequence value; rows with a null group sequence leave the
-    // group untouched. Fields outside every group keep the engine's
-    // plain latest-non-null rule.
-    val seqGroups = options.keys.filter(_.endsWith(".sequence-group"))
-      .map(_.stripPrefix("fields.").stripSuffix(".sequence-group")).toSeq
-    seqGroups.foreach { g =>
-      require(options.get("merge-engine").contains("partial-update"),
-        s"fields.$g.sequence-group requires merge-engine=partial-update")
-      require(structType.fieldNames.contains(g) && !primaryKey.contains(g),
-        s"sequence-group column $g unknown or a primary-key field")
-      val members = options(s"fields.$g.sequence-group").split(',')
-        .map(_.trim).filter(_.nonEmpty)
-      require(members.nonEmpty, s"fields.$g.sequence-group names no fields")
-      members.foreach { f =>
-        require(structType.fieldNames.contains(f) && !primaryKey.contains(f),
-          s"sequence-group member $f unknown or a primary-key field")
-        require(f != g, s"sequence-group column $g cannot be its own member")
-        require(!seqGroups.contains(f),
-          s"sequence-group member $f is itself a sequence-group column")
-      }
-    }
-    // a column may belong to at most one group
-    val allMembers = seqGroups.flatMap(g =>
-      options(s"fields.$g.sequence-group").split(',').map(_.trim).filter(_.nonEmpty))
-    require(allMembers.distinct.size == allMembers.size,
-      s"columns in multiple sequence-groups: ${allMembers.diff(allMembers.distinct).distinct.mkString(", ")}")
-    options.keys.filter(k => k.startsWith("fields.") &&
-        !k.endsWith(".sequence-group") && !k.endsWith(".distinct") &&
-        !k.endsWith(".nested-key")).foreach { k =>
-      require(options.get("merge-engine").contains("aggregation"),
-        s"$k requires merge-engine=aggregation")
-      val f = k.stripPrefix("fields.").stripSuffix(".aggregate-function")
-      require(k == s"fields.$f.aggregate-function" &&
-        structType.fieldNames.contains(f) && !primaryKey.contains(f),
-        s"bad aggregate-function option $k (unknown or primary-key field)")
-      require(FieldAggregates.contains(options(k)),
-        s"$k must be one of ${FieldAggregates.mkString(", ")}, got ${options(k)}")
-      if (options(k) == "sum" || options(k) == "product") {
-        val dt = structType(f).dataType
-        require(dt.isInstanceOf[NumericType],
-          s"$k: ${options(k)} requires a numeric field, $f is ${dt.simpleString}")
-      }
-      if (options(k) == "bool_and" || options(k) == "bool_or")
-        require(structType(f).dataType == org.apache.spark.sql.types.BooleanType,
-          s"$k: ${options(k)} requires a boolean field")
-      if (options(k) == "listagg")
-        require(structType(f).dataType == org.apache.spark.sql.types.StringType,
-          s"$k: listagg requires a string field")
-      if (options(k) == "collect")
-        require(structType(f).dataType.isInstanceOf[
-            org.apache.spark.sql.types.ArrayType],
-          s"$k: collect requires an array field, $f is " +
-            structType(f).dataType.simpleString)
-      if (options(k) == "merge_map")
-        require(structType(f).dataType.isInstanceOf[
-            org.apache.spark.sql.types.MapType],
-          s"$k: merge_map requires a map field, $f is " +
-            structType(f).dataType.simpleString)
-      // sketch folds carry SERIALIZED state (roaring bitmap / HLL) per
-      // version — the field must be binary
-      if (options(k) == "rbm32" || options(k) == "rbm64" ||
-          options(k) == "hll_sketch")
-        require(structType(f).dataType == org.apache.spark.sql.types.BinaryType,
-          s"$k: ${options(k)} requires a binary field (serialized sketch), " +
-            s"$f is ${structType(f).dataType.simpleString}")
-      if (options(k) == "nested_update") {
-        val ok = structType(f).dataType match {
-          case org.apache.spark.sql.types.ArrayType(
-            _: org.apache.spark.sql.types.StructType, _) => true
-          case _ => false
-        }
-        require(ok, s"$k: nested_update requires an array<row> field, " +
-          s"$f is ${structType(f).dataType.simpleString}")
-      }
-    }
-    // Paimon's `<engine>.remove-record-on-delete` (r16): a `-D` row
-    // through rowkind.field (or a deleteWhere) REMOVES the key outright
-    // — a tombstone path for the field-wise engines, whose fold then
-    // re-folds only the versions committed after the delete.
-    Seq("aggregation", "partial-update").foreach { eng =>
-      options.get(s"$eng.remove-record-on-delete").foreach { v =>
-        require(v == "true" || v == "false",
-          s"$eng.remove-record-on-delete must be true or false, got $v")
-        if (v == "true") {
-          require(options.get("merge-engine").contains(eng),
-            s"$eng.remove-record-on-delete requires merge-engine=$eng")
-          require(!options.get("ignore-delete").contains("true"),
-            s"$eng.remove-record-on-delete conflicts with " +
-              "ignore-delete=true (one drops deletes, the other applies them)")
-        }
-      }
-    }
-    // Paimon's `fields.<f>.nested-key` (nested_update companion): the
-    // nested columns that key the per-element upsert
-    options.keys.filter(k => k.startsWith("fields.") &&
-        k.endsWith(".nested-key")).foreach { k =>
-      val f = k.stripPrefix("fields.").stripSuffix(".nested-key")
-      require(k == s"fields.$f.nested-key" &&
-        options.get(s"fields.$f.aggregate-function").contains("nested_update"),
-        s"$k applies only alongside fields.$f.aggregate-function=nested_update")
-      val elem = structType(f).dataType
-        .asInstanceOf[org.apache.spark.sql.types.ArrayType]
-        .elementType.asInstanceOf[StructType]
-      options(k).split(',').map(_.trim).filter(_.nonEmpty).foreach { nk =>
-        require(elem.fieldNames.contains(nk),
-          s"$k: nested column $nk not in ${elem.simpleString}")
-      }
-    }
-    // Paimon's `fields.<f>.distinct` (collect companion): dedup the
-    // collected array at fold time.
-    options.keys.filter(k => k.startsWith("fields.") &&
-        k.endsWith(".distinct")).foreach { k =>
-      val f = k.stripPrefix("fields.").stripSuffix(".distinct")
-      require(k == s"fields.$f.distinct" &&
-        options.get(s"fields.$f.aggregate-function").contains("collect"),
-        s"$k applies only alongside fields.$f.aggregate-function=collect")
-      require(options(k) == "true" || options(k) == "false",
-        s"$k must be true or false, got ${options(k)}")
-    }
+    TableOptions.validate(TableOptions.Shape(structType, partitionBy, primaryKey, options))
     fs.mkdirs(tablePath(schema, table))
     val m = mapper.createObjectNode()
     m.put("name", table)
@@ -605,27 +227,19 @@ class GraftCatalog(private[sources] val spark: SparkSession,
     primaryKey.foreach(pks.add)
     val opts = m.putObject("options")
     options.foreach { case (k, v) => opts.put(k, v) }
-    val schemas = m.putArray("schemas")
-    val v0 = schemas.addObject()
-    v0.put("version", 0)
-    val fields = v0.putArray("fields")
+    val fields = m.putArray("schemas").addObject().put("version", 0).putArray("fields")
     structType.fields.zipWithIndex.foreach { case (f, i) =>
-      val fn = fields.addObject()
-      fn.put("id", i + 1)
-      fn.put("name", f.name)
-      fn.put("type", TypeMapping.fieldTrinoType(f))
-      // column comments persist in the manifest schema nodes
-      // (TrinoMetadataBase.java:212 carries column.getComment() the same way)
+      val fn = fields.addObject().put("id", i + 1).put("name", f.name)
+        .put("type", TypeMapping.fieldTrinoType(f))
+      // comments persist like TrinoMetadataBase.java:212's column.getComment()
       f.getComment().foreach(fn.put("comment", _))
     }
     m.put("currentSchemaVersion", 0)
     m.put("lastFieldId", structType.fields.length)
     m.putArray("snapshots")
     writeManifest(schema, table, m)
-    // Staging lineages carry an explicit creation stamp: sweepStaleStages
-    // ages from it, never from dir mtime (a trash dir renamed aside keeps
-    // the ORIGINAL table's ancient mtime and would otherwise be sweepable
-    // during the promote window).
+    // a staging lineage ages from its own creation stamp, never from dir
+    // mtime (a trash dir renamed aside keeps the original table's mtime)
     if (isStage(table)) stampStage(schema, table)
   }
 
@@ -805,8 +419,8 @@ class GraftCatalog(private[sources] val spark: SparkSession,
     // buckets (see bucketedResolve). Delete frames carry the PK columns,
     // so the same hash applies.
     val pkCols = primaryKey(m)
-    val buckets = optionOverrides.get("bucket").map(_.toInt)
-      .orElse(bucketCount(m)).filter(_ => pkCols.nonEmpty)
+    val buckets = TableOptions(optionOverrides).bucket
+      .orElse(optionsOf(m).bucket).filter(_ => pkCols.nonEmpty)
     // Dynamic bucket mode (Paimon's bucket = -1): key→bucket is NOT a
     // modular hash — it comes from the persisted hash index, so frames
     // are routed up front (existing keys to their recorded bucket, new
@@ -826,13 +440,13 @@ class GraftCatalog(private[sources] val spark: SparkSession,
     // case) pass through it unchanged. Skipped when a column type is
     // unorderable (maps): those tables keep the key-unique-batch contract.
     def foldable(df: DataFrame): Boolean =
-      !compaction && pkCols.nonEmpty && mergeEngine(m) == "deduplicate" &&
+      !compaction && pkCols.nonEmpty && optionsOf(m).mergeEngine == "deduplicate" &&
         df.schema.fields.forall(f =>
           org.apache.spark.sql.catalyst.expressions.RowOrdering
             .isOrderable(f.dataType))
     // `df` folded per `keys` tuple, keeping the columns `out`.
     def fold(df: DataFrame, keys: Seq[String], out: Seq[String]): DataFrame = {
-      val seqF = sequenceField(m).toSeq
+      val seqF = optionsOf(m).sequenceField.toSeq
       val valueCols = seqF ++ out.filterNot(c => keys.contains(c) || seqF.contains(c))
       if (valueCols.isEmpty) df.dropDuplicates(keys).select(out.map(col): _*)
       else df.groupBy(keys.map(col): _*)
@@ -893,7 +507,7 @@ class GraftCatalog(private[sources] val spark: SparkSession,
     // then read O(changelog files) per batch instead of paying the
     // before-image resolve (see readChangelogFull's file-served path).
     // An explicit `-cl` leg (full-compaction producer) is passed in.
-    val clProducerMode = changelogProducer(m)
+    val clProducerMode = optionsOf(m).changelogProducer
     def stagedOf(kind: String) = Some(routed.indexWhere(_.kind == kind))
       .filter(_ >= 0).map(staged)
     val produced: Option[Leg] =
@@ -951,12 +565,13 @@ class GraftCatalog(private[sources] val spark: SparkSession,
       val path = new Path(tablePath(schema, table), at(i))
       // the caller's columns: routing adds the dynamic bucket column
       val sch = legs.find(_.suffix == all(i).suffix).get.frame.schema
-      FileStats.collectWithFiles(spark, fs, path, sch, fileFormat(m)).map {
+      val opts = optionsOf(m)
+      FileStats.collectWithFiles(spark, fs, path, sch, opts.fileFormat).map {
         case (ds, fileZones) =>
-          val bloom = if (bloomColsOf(m).isEmpty) None
-            else BloomIndex.build(spark, fs, path, sch, bloomColsOf(m),
+          val bloom = if (opts.bloomColumns.isEmpty) None
+            else BloomIndex.build(spark, fs, path, sch, opts.bloomColumns,
                 fileZones.map { case (r, s) => r -> s.rows },
-                provider = providerFor(fileFormat(m)))
+                provider = providerFor(opts.fileFormat), table = s"$schema.$table")
               .map(cols => (java.util.UUID.randomUUID().toString, cols))
           val zoneToken = if (fileZones.isEmpty) None
             else Some(writeZoneSidecar(path, fileZones))
@@ -1334,14 +949,14 @@ class GraftCatalog(private[sources] val spark: SparkSession,
     else toWrite0
     // DV sidecar frames stay parquet regardless of the table's data
     // format (position lists, not data)
-    val fmt = if (kind == "dv") "parquet" else fileFormat(m)
+    val fmt = if (kind == "dv") "parquet" else optionsOf(m).fileFormat
     // ORC/AVRO DV tables: stamp the write-time positional identity
     // into every data file (see [[OrcPosCol]] — neither reader has a
     // `_metadata.row_index`; identity only needs to be stable and
     // unique, and monotonically_increasing_id is partition-prefixed
     // unique within the commit's job). Data files only: tombstones
     // and sidecars are never DV victims.
-    val stamped = if (kind == "data" && fmt != "parquet" && deletionVectors(m))
+    val stamped = if (kind == "data" && fmt != "parquet" && optionsOf(m).deletionVectors)
       toWrite.withColumn(OrcPosCol,
         org.apache.spark.sql.functions.monotonically_increasing_id())
     else toWrite
@@ -1349,7 +964,7 @@ class GraftCatalog(private[sources] val spark: SparkSession,
     // Paimon's file.compression: per-table codec for data files
     // (engine default — snappy — when unset). DV sidecars keep the
     // default; they are position lists, not data.
-    val writer = fileCompression(m).filter(_ => kind != "dv")
+    val writer = optionsOf(m).fileCompression.filter(_ => kind != "dv")
       .map(c => writer0.option("compression", c)).getOrElse(writer0)
     (if (parted.nonEmpty) writer.partitionBy(parted: _*) else writer)
       .save(new Path(tablePath(schema, table), toDir).toString)
@@ -1416,49 +1031,6 @@ class GraftCatalog(private[sources] val spark: SparkSession,
         writeManifest(schema, table, m)
       }
     }
-
-  /** Bloom-filter file index (Paimon's `file-index.bloom-filter.columns`)
-    * on a table of schema `st`: per-file membership bitsets for
-    * equality/IN lookups on columns no clustering helps. Append-only
-    * scope: that's the path [[readWhere]] prunes (PK point lookups
-    * already bucket-prune, and MoR resolution must see every delta
-    * anyway). Checked at create time and on every option change. */
-  private[sources] def validateBloomColumns(v: String, st: StructType,
-      partitionBy: Seq[String], primaryKey: Seq[String]): Unit = {
-    val cols = v.split(',').map(_.trim).filter(_.nonEmpty)
-    require(cols.nonEmpty,
-      s"${BloomIndex.OptionKey} must name at least one column")
-    cols.foreach { c =>
-      val f = st.fields.find(_.name.equalsIgnoreCase(c))
-      require(f.isDefined, s"bloom-filter column $c not in schema")
-      require(BloomIndex.indexable(f.get.dataType),
-        s"bloom-filter column $c: ${f.get.dataType.simpleString} has no " +
-          "canonical bloom domain (integral/date/timestamp/string only)")
-      require(!partitionBy.exists(_.equalsIgnoreCase(c)),
-        s"bloom-filter column $c is a partition column (partition values " +
-          "already prune via path-segment zones)")
-    }
-    require(primaryKey.isEmpty,
-      "bloom-filter index applies to append-only tables (PK tables " +
-        "point-look-up via bucket pruning; MoR reads must see every delta)")
-  }
-
-  private[sources] def validateRetentionOptions(options: Map[String, String]): Unit = {
-    options.get("snapshot.num-retained").foreach { v =>
-      require(v.toIntOption.exists(_ >= 1),
-        s"snapshot.num-retained must be a positive int, got $v")
-    }
-    options.get("snapshot.time-retained").foreach(
-      GraftCatalog.parseDurationMillis) // throws on bad syntax
-    Seq("compaction.max-file-dirs", "compaction.min.small-files").foreach(k =>
-      options.get(k).foreach { v =>
-        require(v.toIntOption.exists(_ >= 2), s"$k must be an int >= 2, got $v")
-      })
-    options.get("compaction.small-bytes").foreach { v =>
-      require(v.toLongOption.exists(_ > 0),
-        s"compaction.small-bytes must be a positive long, got $v")
-    }
-  }
 
   /** Idempotent manifest read-modify-write with rebase-and-retry: small
     * metadata mutations (consumer offsets, option changes) race data
@@ -1541,7 +1113,7 @@ class GraftCatalog(private[sources] val spark: SparkSession,
     * (written without the layout shuffle). */
   private[sources] def headMergesPerBucket(m: ObjectNode): Boolean = {
     val snaps = m.get("snapshots").asInstanceOf[ArrayNode]
-    primaryKey(m).nonEmpty && bucketCount(m).exists(_ >= 1) && snaps.size() > 0 &&
+    primaryKey(m).nonEmpty && optionsOf(m).bucket.exists(_ >= 1) && snaps.size() > 0 &&
       !filesOf(snaps.get(snaps.size() - 1)).exists(_.kind == "dv")
   }
 
@@ -1671,11 +1243,6 @@ class GraftCatalog(private[sources] val spark: SparkSession,
       table: String): Map[String, (String, Set[String])] =
     bloomIdxFrom(readManifest(schema, table))
 
-  /** Columns the table option asks to bloom-index (lower-cased). */
-  private def bloomColsOf(m: ObjectNode): Set[String] =
-    m.get("options").asInstanceOf[ObjectNode].path(BloomIndex.OptionKey)
-      .asText("").split(',').map(_.trim.toLowerCase).filter(_.nonEmpty).toSet
-
   /** Manifest bloom-index pointers: dir -> (cache token, indexed cols). */
   private def bloomIdxFrom(m: ObjectNode): Map[String, (String, Set[String])] = {
     if (!m.has("bloomIdx")) return Map.empty
@@ -1779,7 +1346,7 @@ class GraftCatalog(private[sources] val spark: SparkSession,
       case Some(buckets) =>
         // an empty selection proves no row matches (`k = 1 AND k = 2`)
         val slice = if (buckets.isEmpty) None
-          else bucketSlice(schema, table, m, entries, bucketCount(m).get, buckets)
+          else bucketSlice(schema, table, m, entries, optionsOf(m).bucket.get, buckets)
         return slice.getOrElse(emptyFrame(m)).filter(condition)
       case None => ()
     }
@@ -1807,7 +1374,7 @@ class GraftCatalog(private[sources] val spark: SparkSession,
     // dirs hold __bucket=k subdirs the per-file machinery doesn't
     // resolve) — computing per-file zone/bloom refinement for it would
     // be sidecar I/O thrown away, so that shape stays dir-level.
-    val bucketedCovered = coveredPk && bucketCount(m).isDefined
+    val bucketedCovered = coveredPk && optionsOf(m).bucket.isDefined
     // Per-FILE refinement inside surviving dirs — the reference's skip
     // unit (Paimon per-file field stats). A large append dir whose files
     // were written range-clustered (or just time-ordered) prunes to the
@@ -1846,7 +1413,7 @@ class GraftCatalog(private[sources] val spark: SparkSession,
     else if (!coveredPk)
       appendUnion(schema, table, m, picked, dvEntries)
         .drop("__ord", "__del").filter(condition)
-    else if (bucketCount(m).isEmpty)
+    else if (optionsOf(m).bucket.isEmpty)
       appendUnion(schema, table, m, picked, dvEntries)
         .select(currentFields(m).map(f => col(f.name)): _*).filter(condition)
     else {
@@ -2045,7 +1612,7 @@ class GraftCatalog(private[sources] val spark: SparkSession,
       entries: Seq[FileEntry], withMeta: Boolean = false,
       onlyBuckets: Option[Seq[Int]] = None, skipRetired: Boolean = false,
       files: Map[FileEntry, Seq[String]] = Map.empty): Seq[DataFrame] = {
-    val bucketed = bucketCount(m).isDefined
+    val bucketed = optionsOf(m).bucket.isDefined
     def keeps(fe: FileEntry, k: Int) = onlyBuckets.forall(_.contains(k)) &&
       !(skipRetired && fe.excludeBuckets.contains(k))
     val (own, flat) = entries.filterNot(fe => files.get(fe).exists(_.isEmpty))
@@ -2133,7 +1700,7 @@ class GraftCatalog(private[sources] val spark: SparkSession,
         // cross-partition tables: tombstones also carry their victim's
         // partition columns (the OLD residence) — the merge keys on
         // (pk, partition), so the tombstone must land in the right group
-        val keep = primaryKey(m).toSet ++ sequenceField(m) ++
+        val keep = primaryKey(m).toSet ++ optionsOf(m).sequenceField ++
           partitionColumns(m)
         val keepIds = curFields.filter(f => keep.contains(f.name)).map(_.id).toSet
         writeFieldsAll.filter(f => keepIds.contains(f.id))
@@ -2142,7 +1709,7 @@ class GraftCatalog(private[sources] val spark: SparkSession,
     // columns by write-time NAME, so the field-id mapping below works
     // identically); DV sidecar dirs alone are parquet-pinned (position
     // lists, not data)
-    val fmt = if (fe.kind == "dv") "parquet" else fileFormat(m)
+    val fmt = if (fe.kind == "dv") "parquet" else optionsOf(m).fileFormat
     // ORC/AVRO data files of DV tables carry their row identity as a
     // stored column ([[OrcPosCol]], stamped at write — neither reader
     // has a `_metadata.row_index`); a meta-requesting read pulls it
@@ -2151,7 +1718,7 @@ class GraftCatalog(private[sources] val spark: SparkSession,
     // spark-avro refuses schema fields absent from the file (ORC would
     // merely read nulls).
     val orcPos = withMeta && fmt != "parquet" && fe.kind == "data" &&
-      deletionVectors(m)
+      optionsOf(m).deletionVectors
     // Explicit write-time schema: without it, Spark's partition-dir
     // type inference would coerce string partition values that look
     // numeric ("0123" -> 123) and corrupt the round-trip.
@@ -2217,7 +1784,7 @@ class GraftCatalog(private[sources] val spark: SparkSession,
     // aggregation-engine frames always carry the retract flag so sibling
     // dirs with and without retract batches union by name; unflagged
     // dirs contribute constant false (their rows are all inserts)
-    val rkCols = if (mergeEngine(m) != "aggregation") Seq.empty
+    val rkCols = if (optionsOf(m).mergeEngine != "aggregation") Seq.empty
       else Seq((if (fe.retract)
         org.apache.spark.sql.functions.coalesce(col(RetractCol), lit(false))
       else lit(false)).as(RetractCol))
@@ -2251,7 +1818,7 @@ class GraftCatalog(private[sources] val spark: SparkSession,
     // before the bucketed dispatch: the hybrid read subsumes it.
     if (primaryKey(m).nonEmpty && entries.exists(_.kind == "dv"))
       return pkDvResolve(schema, table, m, entries)
-    bucketCount(m) match {
+    optionsOf(m).bucket match {
       case Some(n) if primaryKey(m).nonEmpty =>
         return bucketedResolve(schema, table, m, entries, n)
       case _ => ()
@@ -2276,7 +1843,7 @@ class GraftCatalog(private[sources] val spark: SparkSession,
         .filter(col("__rn") === 1 && !col("__del"))
         .drop("__ord", "__rn", "__del")
     }
-    Some(mergeEngine(m) match {
+    Some(optionsOf(m).mergeEngine match {
       case "deduplicate" => ordinalPick(earliest = false)
       case "first-row" => ordinalPick(earliest = true)
       case engine => // partial-update | aggregation
@@ -2302,9 +1869,9 @@ class GraftCatalog(private[sources] val spark: SparkSession,
       tombstones: Boolean = false): DataFrame = {
     val pk = primaryKey(m)
     val names = currentFields(m).map(_.name)
-    mergeEngine(m) match {
+    optionsOf(m).mergeEngine match {
       case "deduplicate" | "first-row" =>
-        val earliest = mergeEngine(m) == "first-row"
+        val earliest = optionsOf(m).mergeEngine == "first-row"
         val w = org.apache.spark.sql.expressions.Window
           .partitionBy(pk.map(col): _*)
           .orderBy(if (earliest) col("__ord").asc else col("__ord").desc)
@@ -2396,9 +1963,10 @@ class GraftCatalog(private[sources] val spark: SparkSession,
           org.apache.spark.sql.functions.struct(col("__ord").as("o"), col(f).as("v"))))
         .getField("v")
     val cur = currentFields(m)
+    val opts = optionsOf(m)
     // sequence-group routing (partial-update only): member field →
     // its group's sequence column; the seq column routes to itself
-    val groups = if (engine == "partial-update") sequenceGroups(m)
+    val groups = if (engine == "partial-update") opts.sequenceGroups
       else Map.empty[String, Seq[String]]
     val fieldGroup: Map[String, String] =
       groups.flatMap { case (g, ms) => ms.map(_ -> g) } ++
@@ -2431,7 +1999,7 @@ class GraftCatalog(private[sources] val spark: SparkSession,
           case Some(g) => groupPick(g, f.name)
           case None => lastNonNull(f.name)
         }
-      else fieldAggregate(m, f.name) match {
+      else opts.fieldAggregate(f.name) match {
         // retract inputs subtract (group inverse — exact, and associative
         // over a compacted prefix); insert-only history folds as before
         case "sum" =>
@@ -2481,7 +2049,7 @@ class GraftCatalog(private[sources] val spark: SparkSession,
             val versions = array_sort(
               collect_list(ordStruct(f.name, nonNullOnly = true)), cmp)
             val flat = flatten(transform(versions, x => x.getField("v")))
-            val merged = if (fieldCollectDistinct(m, f.name))
+            val merged = if (opts.fieldCollectDistinct(f.name))
               array_distinct(flat) else flat
             fwhen(fsize(versions) > 0, merged)
           } else {
@@ -2509,7 +2077,7 @@ class GraftCatalog(private[sources] val spark: SparkSession,
               fwhen(x.getField("r"),
                 fagg(x.getField("v"), acc, (aa, e) => removeFirst(aa, e)))
               .otherwise(fconcat(acc, x.getField("v"))))
-            val merged = if (fieldCollectDistinct(m, f.name))
+            val merged = if (opts.fieldCollectDistinct(f.name))
               array_distinct(folded) else folded
             fwhen(fsize(sorted) > 0, merged)
           }
@@ -2562,7 +2130,7 @@ class GraftCatalog(private[sources] val spark: SparkSession,
             collect_list(ordStruct(f.name, nonNullOnly = true)),
             (l, r) => fwhen(l.getField("o") < r.getField("o"), -1)
               .when(l.getField("o") > r.getField("o"), 1).otherwise(0))
-          val keys = fieldNestedKeys(m, f.name)
+          val keys = opts.fieldNestedKeys(f.name)
           val empty = array().cast(dt)
           val step: (org.apache.spark.sql.Column,
               org.apache.spark.sql.Column) => org.apache.spark.sql.Column =
@@ -2585,10 +2153,11 @@ class GraftCatalog(private[sources] val spark: SparkSession,
   /** Ops whose semantics assume latest-version-wins (tombstones,
     * changelogs, in-range merges) are deduplicate-only — same restriction
     * Paimon places on the field-wise merge engines. */
-  private[sources] def requireDeduplicate(m: ObjectNode, table: String, op: String): Unit =
-    require(mergeEngine(m) == "deduplicate",
-      s"$op on $table requires merge-engine=deduplicate, " +
-        s"table uses ${mergeEngine(m)}")
+  private[sources] def requireDeduplicate(m: ObjectNode, table: String, op: String): Unit = {
+    val engine = optionsOf(m).mergeEngine
+    require(engine == "deduplicate",
+      s"$op on $table requires merge-engine=deduplicate, table uses $engine")
+  }
 
   /** Tombstone-landing ops (deleteWhere, mergeCommit): deduplicate as
     * ever, plus the field-wise engines under their
@@ -2596,13 +2165,13 @@ class GraftCatalog(private[sources] val spark: SparkSession,
     * re-folds each key from the versions after its latest tombstone,
     * so a whole-row delete is well-defined there too. */
   private[sources] def requireTombstoneCapable(m: ObjectNode, table: String,
-      op: String): Unit =
-    require(mergeEngine(m) == "deduplicate" ||
-      ((mergeEngine(m) == "aggregation" ||
-        mergeEngine(m) == "partial-update") && removeRecordOnDelete(m)),
+      op: String): Unit = {
+    val opts = optionsOf(m) // removeRecordOnDelete: aggregation/partial-update only
+    require(opts.mergeEngine == "deduplicate" || opts.removeRecordOnDelete,
       s"$op on $table requires merge-engine=deduplicate (or a field-wise " +
-        s"engine with ${mergeEngine(m)}.remove-record-on-delete=true), " +
-        s"table uses ${mergeEngine(m)}")
+        s"engine with ${opts.mergeEngine}.remove-record-on-delete=true), " +
+        s"table uses ${opts.mergeEngine}")
+  }
 
   /** Changelog/incremental protocols resolve latest-in-range PER PRIMARY
     * KEY; a cross-partition MOVE lands a tombstone and the new image at
@@ -2707,7 +2276,7 @@ class GraftCatalog(private[sources] val spark: SparkSession,
           mergeKey.map(inSchema.fieldIndex).toArray,
           inSchema.fieldIndex("__ord"), inSchema.fieldIndex("__del"),
           curFields.map(f => inSchema.fieldIndex(f.name)).toArray, outSchema,
-          sequenceField(m).map(inSchema.fieldIndex).getOrElse(-1)))
+          optionsOf(m).sequenceField.map(inSchema.fieldIndex).getOrElse(-1)))
       }
     }
     if (legs.isEmpty) None else Some(unionAllByName(legs))
@@ -2773,46 +2342,36 @@ class GraftCatalog(private[sources] val spark: SparkSession,
     case _ => Seq.empty
   }
 
+  /** The table's options, parsed once from the manifest (typed view of
+    * the [[TableOptions]] registry). */
+  def optionsOf(schema: String, table: String): TableOptions =
+    optionsOf(readManifest(schema, table))
+
+  private[sources] def optionsOf(m: ObjectNode): TableOptions = {
+    val out = mutable.LinkedHashMap[String, String]()
+    Option(m.get("options")).foreach(o =>
+      o.fieldNames().forEachRemaining(k => out += k -> o.get(k).asText()))
+    TableOptions(out.toMap)
+  }
+
   /** Bucket count of a bucketed PK table (the `bucket` table option). */
   def bucketCountOf(schema: String, table: String): Option[Int] =
-    bucketCount(readManifest(schema, table))
-
-  private[sources] def bucketCount(m: ObjectNode): Option[Int] = {
-    val opts = m.get("options").asInstanceOf[ObjectNode]
-    if (opts != null && opts.has("bucket")) Some(opts.get("bucket").asText().toInt)
-    else None
-  }
+    optionsOf(schema, table).bucket
 
   /** PK-table merge engine (Paimon's `merge-engine` option): how multiple
     * versions of one key resolve at read/compaction. */
   def mergeEngineOf(schema: String, table: String): String =
-    mergeEngine(readManifest(schema, table))
-
-  private[sources] def mergeEngine(m: ObjectNode): String = {
-    val opts = m.get("options").asInstanceOf[ObjectNode]
-    if (opts != null && opts.has("merge-engine")) opts.get("merge-engine").asText()
-    else "deduplicate"
-  }
-
-  /** Paimon's `<engine>.remove-record-on-delete`: `-D` rows remove the
-    * key outright on a field-wise-engine table (the fold then re-folds
-    * only versions committed after the tombstone). Keyed by the table's
-    * OWN engine, matching Paimon's per-engine option names. */
-  private[sources] def removeRecordOnDelete(m: ObjectNode): Boolean = {
-    val opts = m.get("options").asInstanceOf[ObjectNode]
-    val key = s"${mergeEngine(m)}.remove-record-on-delete"
-    opts != null && opts.has(key) && opts.get(key).asText() == "true"
-  }
+    optionsOf(schema, table).mergeEngine
 
   /** User-declared version-order column (Paimon's `sequence.field`):
     * largest value wins per key, ties fall back to commit ordinal, NULL
     * sorts smallest. None = commit order (the default). */
   def sequenceFieldOf(schema: String, table: String): Option[String] =
-    sequenceField(readManifest(schema, table))
+    optionsOf(schema, table).sequenceField
 
   /** Data file format (Paimon's `file.format`): parquet (default), orc, avro. */
   def fileFormatOf(schema: String, table: String): String =
-    fileFormat(readManifest(schema, table))
+    optionsOf(schema, table).fileFormat
 
   /** Spark DataSource provider for a table format. The avro source is
     * BUNDLED in spark-sql on this distribution but not service-registered
@@ -2822,73 +2381,11 @@ class GraftCatalog(private[sources] val spark: SparkSession,
   private[sources] def providerFor(fmt: String): String =
     if (fmt == "avro") "org.apache.spark.sql.avro.AvroFileFormat" else fmt
 
-  private[sources] def fileFormat(m: ObjectNode): String = {
-    val opts = m.get("options").asInstanceOf[ObjectNode]
-    if (opts != null && opts.has("file.format")) opts.get("file.format").asText()
-    else "parquet"
-  }
-
-  private def fileCompression(m: ObjectNode): Option[String] = {
-    val opts = m.get("options").asInstanceOf[ObjectNode]
-    if (opts != null && opts.has("file.compression"))
-      Some(opts.get("file.compression").asText())
-    else None
-  }
-
-  private[sources] def sequenceField(m: ObjectNode): Option[String] = {
-    val opts = m.get("options").asInstanceOf[ObjectNode]
-    if (opts != null && opts.has("sequence.field"))
-      Some(opts.get("sequence.field").asText())
-    else None
-  }
-
-  /** Partial-update sequence-group declarations (Paimon's
-    * `fields.<seq-col>.sequence-group`): seq column → member fields. */
-  private[sources] def sequenceGroups(m: ObjectNode): Map[String, Seq[String]] = {
-    val opts = m.get("options").asInstanceOf[ObjectNode]
-    if (opts == null) return Map.empty
-    val out = mutable.LinkedHashMap[String, Seq[String]]()
-    opts.fieldNames().forEachRemaining { k =>
-      if (k.startsWith("fields.") && k.endsWith(".sequence-group")) {
-        val g = k.stripPrefix("fields.").stripSuffix(".sequence-group")
-        out += g -> opts.get(k).asText().split(',')
-          .map(_.trim).filter(_.nonEmpty).toSeq
-      }
-    }
-    out.toMap
-  }
-
   /** Newest-version-first window ordering for per-key resolution: the
     * sequence field (when declared) beats the commit ordinal; NULL
     * sequence sorts smallest, so `desc_nulls_last`. */
   private[sources] def newestFirst(m: ObjectNode): Seq[org.apache.spark.sql.Column] =
-    sequenceField(m).map(f => col(f).desc_nulls_last).toSeq :+ col("__ord").desc
-
-  /** Per-field aggregate function of the `aggregation` merge engine
-    * (Paimon's `fields.<name>.aggregate-function`); default carries the
-    * latest non-null value (`last_non_null`). */
-  /** `fields.<f>.distinct = true` (collect only): dedup the folded array. */
-  private def fieldCollectDistinct(m: ObjectNode, field: String): Boolean = {
-    val opts = m.get("options").asInstanceOf[ObjectNode]
-    val key = s"fields.$field.distinct"
-    opts != null && opts.has(key) && opts.get(key).asText() == "true"
-  }
-
-  private def fieldAggregate(m: ObjectNode, field: String): String = {
-    val opts = m.get("options").asInstanceOf[ObjectNode]
-    val key = s"fields.$field.aggregate-function"
-    if (opts != null && opts.has(key)) opts.get(key).asText() else "last_non_null"
-  }
-
-  /** `fields.<f>.nested-key` (nested_update only): nested columns keying
-    * the per-element upsert; empty → plain append semantics. */
-  private def fieldNestedKeys(m: ObjectNode, field: String): Seq[String] = {
-    val opts = m.get("options").asInstanceOf[ObjectNode]
-    val key = s"fields.$field.nested-key"
-    if (opts != null && opts.has(key))
-      opts.get(key).asText().split(',').map(_.trim).filter(_.nonEmpty).toSeq
-    else Seq.empty
-  }
+    optionsOf(m).sequenceField.map(f => col(f).desc_nulls_last).toSeq :+ col("__ord").desc
 
   /** The bucket a primary-key tuple hashes to — [[BucketSelect.bucketOf]]
     * over the key columns, the same expression on the write path
@@ -2906,7 +2403,7 @@ class GraftCatalog(private[sources] val spark: SparkSession,
     import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
     val m = readManifest(schema, table)
     val pk = primaryKey(m)
-    val n = bucketCount(m).getOrElse(
+    val n = optionsOf(m).bucket.getOrElse(
       throw new IllegalArgumentException(s"$schema.$table is not bucketed"))
     require(n != -1, s"$schema.$table is a dynamic-bucket table — " +
       "key→bucket is the index's, not a hash: use dynamicBucketFor")
@@ -2927,7 +2424,7 @@ class GraftCatalog(private[sources] val spark: SparkSession,
   private[sources] def selectBuckets(m: ObjectNode, chosen: Option[JsonNode],
       pred: org.apache.spark.sql.catalyst.expressions.Expression): Option[Seq[Int]] = {
     val pk = primaryKey(m)
-    bucketCount(m) match {
+    optionsOf(m).bucket match {
       case Some(n) if n >= 1 && pk.nonEmpty && isHead(m, chosen) =>
         val types = currentFields(m)
           .map(f => f.name -> TypeMapping.toSparkType(f.trinoType)).toMap
@@ -2963,7 +2460,7 @@ class GraftCatalog(private[sources] val spark: SparkSession,
       snapshotId: Option[Long] = None,
       asOfMillis: Option[Long] = None): DataFrame = {
     val m = readManifest(schema, table)
-    val n = bucketCount(m).getOrElse(
+    val n = optionsOf(m).bucket.getOrElse(
       throw new IllegalArgumentException(s"$schema.$table is not bucketed"))
     // dynamic tables (n == -1) have no static range — any existing
     // bucket id resolves, an unassigned one reads empty
@@ -3085,8 +2582,8 @@ class GraftCatalog(private[sources] val spark: SparkSession,
     // The batch must be key-unique across the two sides (mergeCommit's
     // contract — a key both upserted and retracted in one batch has no
     // defined winner at a shared ordinal).
-    val opts = tableOptions(schema, table)
-    opts.get("rowkind.field") match {
+    val opts = optionsOf(schema, table)
+    opts.rowkindField match {
       case Some(rk) if df.columns.exists(_.equalsIgnoreCase(rk)) =>
         val kind = org.apache.spark.sql.functions.upper(col(rk))
         // A NULL or unknown kind must fail loudly, not vanish: a null
@@ -3103,9 +2600,9 @@ class GraftCatalog(private[sources] val spark: SparkSession,
         val isRetract = kind === "-D" || kind === "D" || kind === "-U"
         // ignore-delete (Paimon): drop retractions instead of
         // tombstoning — the CDC-fed-patch-table mode
-        if (opts.get("ignore-delete").contains("true"))
+        if (opts.ignoreDelete)
           commit(schema, table, Seq(Leg("", "data", df.filter(!isRetract))), basis = basis)
-        else if (mergeEngineOf(schema, table) == "aggregation") {
+        else if (opts.mergeEngine == "aggregation") {
           // r16 retraction: `-U` (and `-D` without remove-record-on-
           // delete) rows land as RETRACT inputs the field-wise fold
           // inverts — sum subtracts, collect removes one occurrence per
@@ -3114,7 +2611,7 @@ class GraftCatalog(private[sources] val spark: SparkSession,
           // the data dir under ONE snapshot ordinal.
           val m = readManifest(schema, table)
           val pk = primaryKey(m)
-          val rrod = removeRecordOnDelete(m)
+          val rrod = opts.removeRecordOnDelete
           val isDel = kind === "-D" || kind === "D"
           val retracts = if (rrod) df.filter(kind === "-U")
             else df.filter(isRetract)
@@ -3131,12 +2628,12 @@ class GraftCatalog(private[sources] val spark: SparkSession,
               .filterNot(fd => pk.contains(fd.name))
               .filterNot(_.name.equalsIgnoreCase(rk))
               .filterNot(fd => GraftCatalog.retractableField(
-                fieldAggregate(m, fd.name),
+                opts.fieldAggregate(fd.name),
                 TypeMapping.toSparkType(fd.trinoType)))
               .map(_.name)
             require(bad.isEmpty,
               s"$schema.$table: retract rows (-U/-D) arrived but " +
-                s"field(s) ${bad.map(c => s"$c=${fieldAggregate(m, c)}")
+                s"field(s) ${bad.map(c => s"$c=${opts.fieldAggregate(c)}")
                   .mkString(", ")} have no exact retraction " +
                 s"(only ${RetractableAggs.mkString("/")} retract, and " +
                 "collect only over orderable element types — its fold " +
@@ -3144,7 +2641,7 @@ class GraftCatalog(private[sources] val spark: SparkSession,
                 "min/max/first/last/listagg/product/sketches cannot " +
                 "resurrect values a compacted prefix discarded — set " +
                 "aggregation.remove-record-on-delete=true or ignore-delete=true)")
-            require(changelogProducer(m) == "none",
+            require(opts.changelogProducer == "none",
               s"$schema.$table: retract inputs are not composed with a " +
                 "write-time changelog-producer yet — consume the table " +
                 "state directly or disable the producer")
@@ -3163,13 +2660,13 @@ class GraftCatalog(private[sources] val spark: SparkSession,
           } else commit(schema, table,
             Seq(Leg("", "data", data, retract = hasRetracts)), basis = basis)
         }
-        else if (mergeEngineOf(schema, table) == "partial-update") {
+        else if (opts.mergeEngine == "partial-update") {
           // partial-update + remove-record-on-delete (r16): `-D` rows
           // tombstone their keys (the fold re-patches from later
           // versions only); `-U` has no retraction on this engine —
           // a patch cannot be un-applied — so it refuses loudly.
           val m = readManifest(schema, table)
-          require(removeRecordOnDelete(m),
+          require(opts.removeRecordOnDelete,
             s"$schema.$table: rowkind.field on partial-update requires " +
               "partial-update.remove-record-on-delete=true or " +
               "ignore-delete=true")
@@ -3234,7 +2731,7 @@ class GraftCatalog(private[sources] val spark: SparkSession,
     // The fetched sequences derive from this head, so the commit carries
     // its version: a concurrent upsert of a deleted key aborts the merge
     // instead of outranking a tombstone that carries a stale sequence.
-    val (delKeys, fetchBasis) = sequenceField(m) match {
+    val (delKeys, fetchBasis) = optionsOf(m).sequenceField match {
       case Some(sf) if deleteKeys.columns.contains(sf) =>
         (deleteKeys.select((pk :+ sf).map(col): _*), None)
       case Some(sf) =>
@@ -3273,7 +2770,7 @@ class GraftCatalog(private[sources] val spark: SparkSession,
     // upserts land as a plain data commit — which also lets field-wise
     // merge engines (partial-update patch feeds) consume changelogs,
     // since no tombstone path is needed.
-    if (tableOptions(schema, table).get("ignore-delete").contains("true")) {
+    if (optionsOf(schema, table).ignoreDelete) {
       val ups = batch.filter(col(RowKindCol).isin("+I", "+U")).drop(RowKindCol)
       return Some(commit(schema, table, Seq(Leg("", "data", ups)),
         streamBatchId = batchId))
@@ -3319,7 +2816,7 @@ class GraftCatalog(private[sources] val spark: SparkSession,
       condition: org.apache.spark.sql.Column): Long = {
     val m = readManifest(schema, table)
     val pk = primaryKey(m)
-    if (pk.isEmpty && deletionVectors(m))
+    if (pk.isEmpty && optionsOf(m).deletionVectors)
       return deleteWhereDv(schema, table, m, condition)
     require(pk.nonEmpty, s"$schema.$table has no primary key — row-level " +
       "delete needs one (append-only tables: set deletion-vectors=true, " +
@@ -3330,7 +2827,7 @@ class GraftCatalog(private[sources] val spark: SparkSession,
     // upsert with a HIGHER sequence legitimately resurrects the key.
     // Cross-partition tables: carry the victim's partition columns too
     // (its current residence, straight from the image being filtered).
-    val extra = sequenceField(m).toSeq ++
+    val extra = optionsOf(m).sequenceField.toSeq ++
       (if (crossPartition(m)) partitionColumns(m) else Seq.empty)
     val victims = headImage(schema, table, m).filter(condition)
       .select((pk ++ extra).map(col): _*)
@@ -3352,7 +2849,7 @@ class GraftCatalog(private[sources] val spark: SparkSession,
     // (one delta-sized semi join) so the tombstone wins the version race.
     // Cross-partition tables: fetch each victim's current residence the
     // same way (partition values must ride the tombstone).
-    val keys = (sequenceField(m),
+    val keys = (optionsOf(m).sequenceField,
         if (crossPartition(m)) partitionColumns(m) else Seq.empty) match {
       case (None, Seq()) => victims.select(pk.map(col): _*)
       case (sf, parts) =>
@@ -3378,7 +2875,7 @@ class GraftCatalog(private[sources] val spark: SparkSession,
     // the update rather than being overwritten by the stale image.
     val m = readManifest(schema, table)
     val pk = primaryKey(m)
-    if (pk.isEmpty && deletionVectors(m))
+    if (pk.isEmpty && optionsOf(m).deletionVectors)
       return updateWhereDv(schema, table, condition, assignments)
     require(pk.nonEmpty, s"$schema.$table has no primary key — use overwrite")
     val cur = currentSchema(schema, table)
@@ -3853,33 +3350,6 @@ object GraftCatalog {
       case "d" => n * 86400000L
     }
   }
-
-  /** Structural options baked into the data layout / version-resolution
-    * semantics — immutable after create (see [[GraftCatalog.setTableOptions]]). */
-  val ImmutableOptions: Set[String] =
-    Set("bucket", "merge-engine", "sequence.field", "deletion-vectors",
-      "file.format", "changelog-producer")
-
-  /** `changelog-producer` modes (Paimon's ChangelogProducer enum, which
-    * the reference surfaces through TrinoTableOptionUtils.java's option
-    * mapping): `none` computes changelogs at read; the others persist
-    * row-kinded changelog files at write/compaction. */
-  val ChangelogProducers: Set[String] =
-    Set("none", "input", "lookup", "full-compaction")
-
-  /** PK-table merge engines (Paimon's `merge-engine` table option). */
-  val MergeEngines: Set[String] =
-    Set("deduplicate", "partial-update", "aggregation", "first-row")
-
-  /** Per-field functions of the `aggregation` merge engine. Every member
-    * is ASSOCIATIVE OVER PARTIALS — a compacted row holds the folded
-    * value and later versions fold onto it correctly — which is why
-    * Paimon's non-associative `count` (a materialized count re-counts as
-    * 1) is deliberately absent: rows carrying 1 with `sum` express it. */
-  val FieldAggregates: Set[String] =
-    Set("sum", "min", "max", "last_non_null", "bool_and", "bool_or",
-      "product", "listagg", "first_value", "first_non_null", "last_value",
-      "collect", "merge_map", "rbm32", "rbm64", "hll_sketch", "nested_update")
 
   /** Row-kind column of changelog reads: `+I` append, `+U` upsert,
     * `-D` delete (Flink/Paimon RowKind shorthand). */

@@ -175,7 +175,7 @@ trait GraftChangelog { self: GraftCatalog =>
     // (collapsed to the same newest-wins-per-key form this method
     // computes, so consumers see identical batches either way). `-U`
     // rows are dropped first: upsert mode carries no retraction arm.
-    if (changelogProducer(m) != "none")
+    if (optionsOf(m).changelogProducer != "none")
       changelogCover(m, fromSnapshotId, toSnapshotId).foreach { dirs =>
         return changelogFrame(schema, table, m, dirs)
           .map(f => collapseUpsertChangelog(m,
@@ -237,8 +237,8 @@ trait GraftChangelog { self: GraftCatalog =>
     // files carry no before images, so full mode falls through to the
     // read-time resolve there. Checked BEFORE the engine dispatch: a
     // field-wise table's producer files are resolved-image pairs too.
-    if (changelogProducer(m) == "lookup" ||
-        changelogProducer(m) == "full-compaction")
+    if (optionsOf(m).changelogProducer == "lookup" ||
+        optionsOf(m).changelogProducer == "full-compaction")
       changelogCover(m, fromSnapshotId, toSnapshotId).foreach { dirs =>
         return changelogFrame(schema, table, m, dirs)
           .map(collapseFullChangelog(m, _, dirs.size))
@@ -249,7 +249,7 @@ trait GraftChangelog { self: GraftCatalog =>
     // Field-wise engines (partial-update / aggregation / first-row) CAN
     // serve full changelog — a delta row is a PATCH, not the image, so
     // the after side must be the RESOLVED image, not the in-range winner.
-    if (mergeEngine(m) != "deduplicate")
+    if (optionsOf(m).mergeEngine != "deduplicate")
       return fieldwiseChangelogFull(schema, table, m, fromSnapshotId, toSnapshotId)
     val delta = changelogEntries(m, schema, table, fromSnapshotId, toSnapshotId)
     // unreachable on PK tables (DVs are append-only by construction);
@@ -289,7 +289,7 @@ trait GraftChangelog { self: GraftCatalog =>
     // back to every bucket — conservative, never wrong.
     val pre =
       if (fromSnapshotId == 0) emptyFrame(m)
-      else bucketCount(m) match {
+      else optionsOf(m).bucket match {
         case Some(n) =>
           val snaps0 = m.get("snapshots").asInstanceOf[ArrayNode]
           val sFrom = (0 until snaps0.size()).map(snaps0.get)
@@ -336,7 +336,7 @@ trait GraftChangelog { self: GraftCatalog =>
     // it carries the later commit ordinal; NULL sorts smallest). A late
     // batch that loses the version race produces NO change — emitting a
     // stale -U/+U pair would corrupt aggregate-maintaining consumers.
-    val beats = sequenceField(m) match {
+    val beats = optionsOf(m).sequenceField match {
       case Some(sf) => !preExists || col(s"__pre_$sf").isNull ||
         (col(sf).isNotNull && col(sf) >= col(s"__pre_$sf"))
       case None => lit(true)
@@ -353,10 +353,6 @@ trait GraftChangelog { self: GraftCatalog =>
   }
 
   // ---- write-time changelog materialization (changelog-producer) ---------
-
-  /** The table's `changelog-producer` mode (default `none`). */
-  private[sources] def changelogProducer(m: ObjectNode): String =
-    m.get("options").asInstanceOf[ObjectNode].path("changelog-producer").asText("none")
 
   /** Persisted changelog dirs from the manifest's changelog node:
     * dir → (snapshot id, write-time schema version, coverage-from
@@ -450,7 +446,7 @@ trait GraftChangelog { self: GraftCatalog =>
     // its read-time pairWithPreImage emits identical-image pairs too
     // (an upsert that rewrites the same row IS a logical event there).
     val netZero =
-      if (mergeEngine(m) == "deduplicate") lit(false)
+      if (optionsOf(m).mergeEngine == "deduplicate") lit(false)
       else existed && !dead &&
         (struct(names.map(c => col(s"__first.$c")): _*) <=>
           struct(names.map(c => col(s"__last.$c")): _*))
@@ -510,7 +506,7 @@ trait GraftChangelog { self: GraftCatalog =>
           dels.map(_.withColumn(RowKindCol, lit("-D")))
       return Some(kinded.reduce(_ unionByName _))
     }
-    if (mergeEngine(m) != "deduplicate") {
+    if (optionsOf(m).mergeEngine != "deduplicate") {
       // Field-wise lookup producer: a staged row is a PATCH, so the
       // persisted changelog must carry RESOLVED images on both sides —
       // exactly the pairs fieldwiseChangelogFull computes read-time,
@@ -564,7 +560,7 @@ trait GraftChangelog { self: GraftCatalog =>
     val headEntries =
       if (snaps.size() == 0) Seq.empty
       else filesOf(snaps.get(snaps.size() - 1))
-    val pre = bucketCount(m) match {
+    val pre = optionsOf(m).bucket match {
       // fixed buckets AND dynamic (-1): dynamic assignment is STICKY
       // (the .dbidx index routes every later version of a key to its
       // original bucket), so the staged dirs' buckets are exactly where

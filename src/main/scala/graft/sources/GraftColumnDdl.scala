@@ -119,21 +119,12 @@ trait GraftColumnDdl { self: GraftCatalog =>
         val arr = m.putArray("primaryKey")
         pk.foreach(p => arr.add(if (p == from) to else p))
       }
-      // keep the sequence.field option tracking its renamed column
-      if (sequenceField(m).contains(from))
-        m.get("options").asInstanceOf[ObjectNode].put("sequence.field", to)
-      // sequence-group declarations track renames too (key and members)
-      val sg = sequenceGroups(m)
-      if (sg.nonEmpty) {
-        val opts = m.get("options").asInstanceOf[ObjectNode]
-        sg.foreach { case (g, members) =>
-          val newG = if (g == from) to else g
-          val newMembers = members.map(f => if (f == from) to else f)
-          if (newG != g || newMembers != members) {
-            opts.remove(s"fields.$g.sequence-group")
-            opts.put(s"fields.$newG.sequence-group", newMembers.mkString(","))
-          }
-        }
+      // every option naming the column (by key or value) follows it —
+      // the registry declares which do
+      val opts = m.get("options").asInstanceOf[ObjectNode]
+      optionsOf(m).raw.foreach { case (k, v) =>
+        val (k2, v2) = TableOptions.renamed(k, v, from, to)
+        if ((k2, v2) != ((k, v))) { opts.remove(k); opts.put(k2, v2) }
       }
       fields.map(f => if (f.name == from) f.copy(name = to) else f)
     }
@@ -146,11 +137,9 @@ trait GraftColumnDdl { self: GraftCatalog =>
         s"cannot drop partition column $name")
       require(!primaryKey(m).contains(name),
         s"cannot drop primary-key column $name")
-      require(!sequenceField(m).contains(name),
-        s"cannot drop sequence.field column $name")
-      sequenceGroups(m).foreach { case (g, members) =>
-        require(g != name && !members.contains(name),
-          s"cannot drop column $name: it belongs to sequence-group $g")
+      optionsOf(m).raw.foreach { case (k, v) =>
+        require(!TableOptions.columnsOf(k, v).exists(_.equalsIgnoreCase(name)),
+          s"cannot drop column $name: table option $k references it")
       }
       fields.filterNot(_.name == name)
     }

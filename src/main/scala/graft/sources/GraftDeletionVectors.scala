@@ -24,11 +24,6 @@ trait GraftDeletionVectors { self: GraftCatalog =>
 
   // ---- deletion vectors (append-only row-level delete) -------------------
 
-  /** Is the `deletion-vectors` table option on? (Paimon's
-    * `deletion-vectors.enabled`; here scoped to append-only tables.) */
-  private[sources] def deletionVectors(m: ObjectNode): Boolean =
-    m.get("options").asInstanceOf[ObjectNode].path("deletion-vectors").asText("") == "true"
-
   /** DV dir → (affected data files table-relative, deleted-position count)
     * from the manifest's dvIndex node. */
   private[sources] def dvIndexFrom(m: ObjectNode): Map[String, (Seq[String], Long)] = {
@@ -178,7 +173,7 @@ trait GraftDeletionVectors { self: GraftCatalog =>
     require(base.forall(_.kind == "data"),
       s"$schema.$table: tombstone dir at or below DV-build ordinal " +
         s"$buildOrd — the merge-free base invariant does not hold")
-    val bucketed = bucketCount(m).isDefined
+    val bucketed = optionsOf(m).bucket.isDefined
     require(onlyBuckets.isEmpty || bucketed,
       s"$schema.$table is not bucketed — no bucket restriction applies")
     val baseLive: Option[DataFrame] =
@@ -214,7 +209,7 @@ trait GraftDeletionVectors { self: GraftCatalog =>
     baseLive match {
       case None => Some(deltaTop.filter(!col("__del")).select(names.map(col): _*))
       case Some(b) =>
-        sequenceField(m) match {
+        optionsOf(m).sequenceField match {
           case None =>
             // ordinal-only order: base ordinals are strictly below every
             // delta's, so ANY delta version supersedes its key's base
@@ -265,7 +260,7 @@ trait GraftDeletionVectors { self: GraftCatalog =>
     require(pk.nonEmpty,
       s"$schema.$table is append-only — its DVs are written directly by " +
         "deleteWhere/update; buildDeletionVectors serves primary-key tables")
-    require(deletionVectors(m),
+    require(optionsOf(m).deletionVectors,
       s"$schema.$table does not have deletion-vectors enabled")
     val snaps = m.get("snapshots").asInstanceOf[ArrayNode]
     if (snaps.size() == 0) return 0L
@@ -283,7 +278,7 @@ trait GraftDeletionVectors { self: GraftCatalog =>
     val delEs = entries.filter(_.kind == "delete")
     val dataEs = entries.filter(_.kind == "data")
     if (dataEs.isEmpty) return latest.get("id").asLong()
-    val bucketed = bucketCount(m).isDefined
+    val bucketed = optionsOf(m).bucket.isDefined
     // tombstones join the version race with null position identity
     def tombstoneFrame(es: Seq[FileEntry]): Option[DataFrame] =
       unionOption(dirFrames(schema, table, m, es))
@@ -339,7 +334,7 @@ trait GraftDeletionVectors { self: GraftCatalog =>
           // one driver listing per delta dir, zero jobs (the
           // readChangelogFull before-image pattern). A flat delta dir
           // (unknown layout) keeps every bucket — conservative.
-          val n = bucketCount(m).get
+          val n = optionsOf(m).bucket.get
           val changed = changedBucketsOf(schema, table,
             (deltaDataEs ++ delEs).map(_.dir)).getOrElse(0 until n)
           // only the touched buckets' leaves are read: per-build I/O is
@@ -359,12 +354,12 @@ trait GraftDeletionVectors { self: GraftCatalog =>
         }
       val baseVictims = baseScan.map { b0 =>
         val touchedCols = pk.map(col) ++
-          sequenceField(m).map(col).toSeq ++ Seq(col(DvFileCol), col(DvPosCol))
+          optionsOf(m).sequenceField.map(col).toSeq ++ Seq(col(DvFileCol), col(DvPosCol))
         val touched = b0.select(touchedCols: _*)
           .join(dvFrame(schema, table, dvEs),
             Seq(DvFileCol, DvPosCol), "left_anti") // already-dead rows don't re-count
           .join(deltaKeys, pk, "left_semi")
-        sequenceField(m) match {
+        optionsOf(m).sequenceField match {
           case None => touched.select(col(DvFileCol), col(DvPosCol))
           case Some(sf) =>
             // sequence arbitration: the delta top beats the base iff its

@@ -19,15 +19,6 @@ trait GraftDynamicBucket { self: GraftCatalog =>
 
   // ---- dynamic bucket (Paimon's bucket = -1) -----------------------------
 
-  /** Keys-per-bucket target of a dynamic-bucket table (Paimon's
-    * `dynamic-bucket.target-row-num`, same default). */
-  private def dynamicTargetRows(m: ObjectNode): Long = {
-    val opts = m.get("options").asInstanceOf[ObjectNode]
-    if (opts != null && opts.has("dynamic-bucket.target-row-num"))
-      opts.get("dynamic-bucket.target-row-num").asText().toLong
-    else 2000000L
-  }
-
   private def dynIdxSchema = StructType(Seq(
     StructField("__kh", org.apache.spark.sql.types.LongType),
     StructField("__b", org.apache.spark.sql.types.IntegerType)))
@@ -134,7 +125,7 @@ trait GraftDynamicBucket { self: GraftCatalog =>
    */
   def foldDynamicBucketIndex(schema: String, table: String): Long = {
     val m = readManifest(schema, table)
-    require(bucketCount(m).contains(-1),
+    require(optionsOf(m).bucket.contains(-1),
       s"$schema.$table is not a dynamic-bucket table")
     if (dynIdxDeltaCount(schema, table) <= 1) return -1L
     val idx = readDynamicIndex(schema, table, m)
@@ -303,7 +294,7 @@ trait GraftDynamicBucket { self: GraftCatalog =>
     val assignedOpt: Option[DataFrame] =
       if (kind != "data" || nNew == 0) None
       else {
-        val target = dynamicTargetRows(m)
+        val target = optionsOf(m).dynamicTargetRows
         val newKeys = allKeys.filter(col("__d") === 1)
           .join(sized(known.select("__kh")), Seq("__kh"), "left_anti")
           .select("__kh")
@@ -516,7 +507,7 @@ trait GraftDynamicBucket { self: GraftCatalog =>
   def dynamicBucketFor(schema: String, table: String,
       values: Seq[Any]): Option[Int] = {
     val m = readManifest(schema, table)
-    require(bucketCount(m).contains(-1),
+    require(optionsOf(m).bucket.contains(-1),
       s"$schema.$table is not a dynamic-bucket table")
     val pk = primaryKey(m)
     require(values.length == pk.length, s"expected ${pk.length} pk values")

@@ -36,27 +36,26 @@ trait GraftMaintenance { self: GraftCatalog =>
   private[sources] def autoMaintain(schema: String, table: String,
       fromCompaction: Boolean): Unit =
     if (!fromCompaction) try {
-      val opts = tableOptions(schema, table)
+      val opts = optionsOf(schema, table)
       // Paimon's write-only: ingestion-only writers skip ALL commit-time
       // maintenance (a dedicated maintenance job runs it elsewhere) —
       // the latency knob for high-frequency streaming commits
-      if (opts.get("write-only").contains("true")) return
-      opts.get("compaction.max-file-dirs").map(_.toInt).foreach { n =>
+      if (opts.writeOnly) return
+      opts.maxFileDirs.foreach { n =>
         compactIfNeeded(schema, table, maxFileDirs = n)
       }
       // Paimon's num-sorted-run.compaction-trigger: per-BUCKET compaction
       // of hot buckets once that many sorted runs accumulate — the
       // write-side maintenance shape that survives streaming ingest at
       // 100 TB (O(hot buckets) per call, never O(table)).
-      opts.get("num-sorted-run.compaction-trigger").map(_.toInt).foreach { n =>
+      opts.sortedRunTrigger.foreach { n =>
         compactHotBuckets(schema, table, trigger = n)
       }
       // Paimon's full-compaction.delta-commits: a FULL compact after
       // every N data commits since the last compaction snapshot —
       // the cadence knob for changelog-heavy PK tables where dir count
       // alone understates merge debt (many small same-bucket versions).
-      opts.get("full-compaction.delta-commits").map(_.toInt).foreach { n =>
-        require(n >= 1, "full-compaction.delta-commits must be >= 1")
+      opts.fullCompactionDeltaCommits.foreach { n =>
         val m = readManifest(schema, table)
         val snaps = m.get("snapshots").asInstanceOf[ArrayNode]
         val since = (0 until snaps.size()).map(snaps.get)
@@ -67,9 +66,8 @@ trait GraftMaintenance { self: GraftCatalog =>
       // data commits — the lookup-compaction rhythm that keeps a DV
       // table's reads merge-free WITHOUT rewriting data bytes (the build
       // is compaction-kind, so the counter resets and it never reenters).
-      opts.get("deletion-vectors.build-delta-commits").map(_.toInt).foreach { n =>
-        require(n >= 1, "deletion-vectors.build-delta-commits must be >= 1")
-        if (opts.get("deletion-vectors").contains("true") &&
+      opts.dvBuildDeltaCommits.foreach { n =>
+        if (opts.deletionVectors &&
             primaryKeyOf(schema, table).nonEmpty) {
           val m = readManifest(schema, table)
           val snaps = m.get("snapshots").asInstanceOf[ArrayNode]
@@ -78,11 +76,9 @@ trait GraftMaintenance { self: GraftCatalog =>
           if (since >= n) buildDeletionVectors(schema, table)
         }
       }
-      opts.get("compaction.min.small-files").map(_.toInt).foreach { n =>
+      opts.minSmallFiles.foreach { n =>
         if (primaryKeyOf(schema, table).isEmpty) {
-          val smallBytes = opts.get("compaction.small-bytes")
-            .map(_.toLong).getOrElse(32L << 20)
-          compactSmall(schema, table, smallBytes, minDirs = math.max(n, 2))
+          compactSmall(schema, table, opts.smallBytes, minDirs = math.max(n, 2))
         }
       }
       // Dynamic-bucket hash-index fold: streaming ingest fragments the
@@ -90,9 +86,8 @@ trait GraftMaintenance { self: GraftCatalog =>
       // live set folds into a single delta — O(keys), zero data bytes
       // rewritten (see foldDynamicBucketIndex). Never reentered: the
       // fold commit is kind "idx"/compaction, which skips autoMaintain.
-      if (opts.get("bucket").contains("-1")) {
-        val thresh = opts.get("dynamic-bucket.index-fold.deltas")
-          .map(_.toInt).getOrElse(32)
+      if (opts.dynamicBucket) {
+        val thresh = opts.indexFoldDeltas
         if (thresh > 0 && dynIdxDeltaCount(schema, table) >= thresh)
           foldDynamicBucketIndex(schema, table)
       }
@@ -107,16 +102,14 @@ trait GraftMaintenance { self: GraftCatalog =>
 
   private[sources] def autoExpire(schema: String, table: String): Unit =
     try {
-      val opts = tableOptions(schema, table)
-      if (opts.get("write-only").contains("true")) return // see autoMaintain
-      opts.get("snapshot.num-retained").map(_.toInt).foreach { n =>
+      val opts = optionsOf(schema, table)
+      if (opts.writeOnly) return // see autoMaintain
+      opts.snapshotNumRetained.foreach { n =>
         expireSnapshots(schema, table, keepLast = n)
       }
-      opts.get("snapshot.time-retained")
-        .map(GraftCatalog.parseDurationMillis).foreach { ms =>
-          expireSnapshotsOlderThan(schema, table,
-            System.currentTimeMillis() - ms)
-        }
+      opts.snapshotTimeRetainedMs.foreach { ms =>
+        expireSnapshotsOlderThan(schema, table, System.currentTimeMillis() - ms)
+      }
       // Paimon's tag.automatic-creation (process-time): the first commit
       // of each period pins its snapshot under a period-named tag —
       // periodic savepoints as a table contract (a tag is a retention
@@ -124,10 +117,9 @@ trait GraftMaintenance { self: GraftCatalog =>
       // `tag.num-retained-max` bounds the savepoint set: oldest
       // PERIOD-NAMED tags beyond the cap are deleted; manually named
       // tags are never touched.
-      if (opts.get("tag.automatic-creation").contains("process-time")) {
-        val period = opts.getOrElse("tag.creation-period", "daily")
+      if (opts.autoTags) {
         val now = java.time.ZonedDateTime.now(java.time.ZoneOffset.UTC)
-        val name = period match {
+        val name = opts.tagPeriod match {
           case "daily" => now.toLocalDate.toString
           case "hourly" =>
             f"${now.toLocalDate} ${now.getHour}%02d".replace(' ', 'T')
@@ -138,7 +130,7 @@ trait GraftMaintenance { self: GraftCatalog =>
         if (!existing.contains(name))
           snapshots(schema, table).lastOption.foreach(s =>
             createTag(schema, table, name, Some(s.id)))
-        opts.get("tag.num-retained-max").map(_.toInt).foreach { cap =>
+        opts.tagNumRetainedMax.foreach { cap =>
           val auto = tags(schema, table).keys.toSeq
             .filter(_.matches("\\d{4}-\\d{2}-\\d{2}(T\\d{2})?")).sorted
           auto.dropRight(cap).foreach(deleteTag(schema, table, _))
@@ -150,19 +142,17 @@ trait GraftMaintenance { self: GraftCatalog =>
       // column) is older than the cutoff expire after each commit. The
       // inner commit re-enters autoExpire; it terminates because the
       // re-entry finds nothing expired.
-      opts.get("partition.expiration-time")
-        .map(GraftCatalog.parseDurationMillis).foreach { ms =>
-          val pcols = partitionColumnsOf(schema, table)
-          opts.get("partition.expiration.column").orElse(pcols.headOption)
-            .foreach { pc =>
-              val cutoff = java.time.LocalDate.ofInstant(
-                java.time.Instant.ofEpochMilli(System.currentTimeMillis() - ms),
-                java.time.ZoneOffset.UTC).toString
-              expirePartitions(schema, table,
-                col(pc).cast(org.apache.spark.sql.types.DateType) <
-                  lit(cutoff).cast(org.apache.spark.sql.types.DateType))
-            }
-        }
+      opts.partitionExpirationMs.foreach { ms =>
+        opts.partitionExpirationColumn.orElse(partitionColumnsOf(schema, table).headOption)
+          .foreach { pc =>
+            val cutoff = java.time.LocalDate.ofInstant(
+              java.time.Instant.ofEpochMilli(System.currentTimeMillis() - ms),
+              java.time.ZoneOffset.UTC).toString
+            expirePartitions(schema, table,
+              col(pc).cast(org.apache.spark.sql.types.DateType) <
+                lit(cutoff).cast(org.apache.spark.sql.types.DateType))
+          }
+      }
     } catch {
       case scala.util.control.NonFatal(e) => // see autoMaintain: log, never throw
         org.slf4j.LoggerFactory.getLogger(getClass)
@@ -190,7 +180,7 @@ trait GraftMaintenance { self: GraftCatalog =>
     // and consumers read only files). The first compaction emits the
     // whole image as +I, exactly Paimon's initial full-compaction scan.
     val cl: Option[Leg] =
-      if (changelogProducer(m) == "full-compaction" &&
+      if (optionsOf(m).changelogProducer == "full-compaction" &&
           primaryKey(m).nonEmpty) {
         val snaps = m.get("snapshots").asInstanceOf[ArrayNode]
         val headId = if (snaps.size() == 0) 0L
@@ -233,7 +223,7 @@ trait GraftMaintenance { self: GraftCatalog =>
    */
   def compactBuckets(schema: String, table: String, buckets: Seq[Int]): Long = {
     val m = readManifest(schema, table)
-    val n = bucketCount(m).getOrElse(throw new IllegalArgumentException(
+    val n = optionsOf(m).bucket.getOrElse(throw new IllegalArgumentException(
       s"$schema.$table is not bucketed — per-bucket compaction needs a " +
         "fixed bucket layout; use compact() or compactSmall()"))
     require(n >= 1, s"$schema.$table uses dynamic bucket mode — compact() " +
@@ -352,7 +342,7 @@ trait GraftMaintenance { self: GraftCatalog =>
    */
   def bucketSortedRuns(schema: String, table: String): Map[Int, Int] = {
     val m = readManifest(schema, table)
-    val n = bucketCount(m).getOrElse(return Map.empty)
+    val n = optionsOf(m).bucket.getOrElse(return Map.empty)
     if (n < 1 || primaryKey(m).isEmpty) return Map.empty
     val snaps = m.get("snapshots").asInstanceOf[ArrayNode]
     if (snaps.size() == 0) return Map.empty
@@ -406,7 +396,7 @@ trait GraftMaintenance { self: GraftCatalog =>
   def rescaleBucket(schema: String, table: String, newBuckets: Int): Long = {
     require(newBuckets >= 1, s"bucket count must be >= 1, got $newBuckets")
     val m = readManifest(schema, table)
-    val old = bucketCount(m).getOrElse(throw new IllegalArgumentException(
+    val old = optionsOf(m).bucket.getOrElse(throw new IllegalArgumentException(
       s"$schema.$table is not bucketed — set `bucket` at create"))
     require(old != -1, s"$schema.$table is a dynamic-bucket table — it " +
       "sizes itself (dynamic-bucket.target-row-num); rescale applies to " +
@@ -417,7 +407,7 @@ trait GraftMaintenance { self: GraftCatalog =>
     if (old == newBuckets) return headId
     commit(schema, table, Seq(Leg("", "data", headImage(schema, table, m))),
       InheritNone, basis = Some(commitVersion(m)), compaction = true,
-      optionOverrides = Map("bucket" -> newBuckets.toString))
+      optionOverrides = Map(TableOptions.Bucket.key -> newBuckets.toString))
   }
 
   /**
@@ -464,7 +454,7 @@ trait GraftMaintenance { self: GraftCatalog =>
       require(n != "__range" && !(zorder && n == "__z"),
         s"sortCompact reserves column name $n (rename the column first)")
     }
-    require(bucketCount(m).isEmpty || primaryKey(m).isEmpty,
+    require(optionsOf(m).bucket.isEmpty || primaryKey(m).isEmpty,
       s"$schema.$table is bucketed — its layout is the read contract; " +
         "use compact() instead")
     val cur = currentSchema(schema, table)

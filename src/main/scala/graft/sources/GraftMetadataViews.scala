@@ -394,7 +394,7 @@ trait GraftMetadataViews { self: GraftCatalog =>
     val declared = Seq(
       "partition-by" -> partitionColumns(m).mkString(","),
       "primary-key" -> primaryKey(m).mkString(",")).filter(_._2.nonEmpty)
-    val rows = declared ++ tableOptions(schema, table).toSeq
+    val rows = declared ++ optionsOf(m).raw.toSeq
     spark.createDataFrame(rows).toDF("key", "value")
   }
 }

@@ -363,15 +363,15 @@ class GraftSparkCatalog extends TableCatalog with SupportsNamespaces
       if (statsSound && pk.isEmpty && entries.forall(e => statsPair._1.contains(e.dir)))
         Some(entries.map(e => statsPair._1(e.dir).rows).sum)
       else None
-    val tblOpts = gc.tableOptions(schemaName, tableName)
+    val tblOpts = gc.optionsOf(schemaName, tableName)
     new GraftSqlTable(parquet, partitionCols,
-      tblOpts ++
+      tblOpts.raw ++
         (if (pk.nonEmpty) Map("primary-key" -> pk.mkString(",")) else Map.empty),
       morRead, commitInsert(schemaName, tableName) _,
       cond => { gc.deleteWhere(schemaName, tableName, cond); () },
       // PK tables delete via tombstones; append-only tables via deletion
       // vectors when the option is on (both land one snapshot commit)
-      canDelete = pk.nonEmpty || tblOpts.get("deletion-vectors").contains("true"),
+      canDelete = pk.nonEmpty || tblOpts.deletionVectors,
       coords = Some((warehouse, schemaName, tableName)),
       zoneStatsIn = zoneStatsIn, exactRowCountIn = exactRowCountIn,
       fileZonesIn = fileZonesIn,
@@ -430,7 +430,7 @@ class GraftSparkCatalog extends TableCatalog with SupportsNamespaces
         Seq.empty, Some(schema), classOf[ParquetFileFormat]),
       partitionCols, opts, None, commitInsert(ns1(ident.namespace), ident.name) _,
       cond => { gc.deleteWhere(ns1(ident.namespace), ident.name, cond); () },
-      canDelete = pk.nonEmpty || opts.get("deletion-vectors").contains("true"))
+      canDelete = pk.nonEmpty || TableOptions(opts).deletionVectors)
   }
 
   override def dropTable(ident: Identifier): Boolean =
@@ -655,7 +655,7 @@ private[graft] class GraftSqlTable(delegate: ParquetTable,
       * the incoming partitions — Spark's OverwritePartitionsDynamic). */
     commitInsert: (org.apache.spark.sql.DataFrame, String) => Unit,
     commitDelete: Column => Unit,
-    canDelete: Boolean,
+    private[graft] val canDelete: Boolean,
     /** (warehouse, schema, table) — lets the UPDATE rewrite rule route the
       * statement back into the owning catalog (graft.plans.GraftDml). */
     private[graft] val coords: Option[(String, String, String)] = None,

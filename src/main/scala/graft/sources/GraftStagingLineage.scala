@@ -1,7 +1,5 @@
 package graft.sources
 
-import scala.collection.mutable
-
 import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
@@ -152,59 +150,48 @@ trait GraftStagingLineage { self: GraftCatalog =>
     }
   }
 
-  def tableOptions(schema: String, table: String): Map[String, String] = {
-    val opts = readManifest(schema, table).get("options").asInstanceOf[ObjectNode]
-    val out = mutable.LinkedHashMap[String, String]()
-    opts.fieldNames().forEachRemaining(k => out += k -> opts.get(k).asText())
-    out.toMap
-  }
+  def tableOptions(schema: String, table: String): Map[String, String] =
+    optionsOf(schema, table).raw
 
   /**
    * Mutate table options post-create — the reference's
    * `setTableProperties` surface (TrinoMetadata.java:115 → Paimon
-   * `SchemaChange.setOption`). STRUCTURAL options baked into the data
-   * layout or version-resolution semantics (`bucket`, `merge-engine`,
-   * `sequence.field`, `deletion-vectors`, `fields.*`) are immutable —
-   * changing them would reinterpret bytes already on disk. Mutable
-   * options (e.g. `file-index.bloom-filter.columns`) take effect for
-   * FUTURE commits; mixed state is sound because every dir's manifest
-   * pointer carries its own `{token, cols}`, so a dir indexed under the
-   * old column set keeps serving exactly its own sidecars.
+   * `SchemaChange.setOption`). Options the [[TableOptions]] registry
+   * declares immutable (baked into the data layout or version-resolution
+   * semantics) refuse — changing them would reinterpret bytes already on
+   * disk. The map the table would have is checked as createTable checks
+   * it, against the current schema. Mutable options (e.g.
+   * `file-index.bloom-filter.columns`) take effect for FUTURE commits;
+   * mixed state is sound because every dir's manifest pointer carries
+   * its own `{token, cols}`, so a dir indexed under the old column set
+   * keeps serving exactly its own sidecars.
    */
   def setTableOptions(schema: String, table: String,
       options: Map[String, String]): Unit = {
     require(options.nonEmpty, "no options to set")
-    options.keys.foreach(requireMutableOption)
-    // same validation createTable applies, against the CURRENT schema
-    options.get(BloomIndex.OptionKey).foreach(validateBloomColumns(_,
-      currentSchema(schema, table), partitionColumnsOf(schema, table),
-      primaryKeyOf(schema, table)))
-    validateRetentionOptions(options)
-    retryManifestUpdate {
-      val m = readManifest(schema, table)
-      val opts = m.get("options").asInstanceOf[ObjectNode]
-      options.foreach { case (k, v) => opts.put(k, v) }
-      writeManifest(schema, table, m)
-    }
+    options.keys.foreach(TableOptions.requireMutable)
+    updateOptions(schema, table)(opts => options.foreach { case (k, v) => opts.put(k, v) })
   }
 
-  private def requireMutableOption(k: String): Unit =
-    require(!GraftCatalog.ImmutableOptions.contains(k) && !k.startsWith("fields."),
-      s"option $k is immutable (baked into the data layout / merge " +
-        "semantics) — recreate the table to change it")
-
   /** Remove mutable table options (`ALTER TABLE ... UNSET`); structural
-    * options refuse exactly as in [[setTableOptions]]. Unknown keys are
-    * a no-op, matching Paimon's removeOption. */
+    * options refuse exactly as in [[setTableOptions]], and the remaining
+    * map is checked the same way. Unknown keys are a no-op, matching
+    * Paimon's removeOption. */
   def removeTableOptions(schema: String, table: String,
       keys: Seq[String]): Unit = {
-    keys.foreach(requireMutableOption)
-    retryManifestUpdate {
-      val m = readManifest(schema, table)
-      val opts = m.get("options").asInstanceOf[ObjectNode]
-      keys.foreach(opts.remove)
-      writeManifest(schema, table, m)
-    }
+    keys.foreach(TableOptions.requireMutable)
+    updateOptions(schema, table)(opts => keys.foreach(opts.remove))
+  }
+
+  /** Apply `change` to the manifest's options and land it, provided the
+    * result validates against the table's current shape. */
+  private def updateOptions(schema: String, table: String)(
+      change: ObjectNode => Unit): Unit = retryManifestUpdate {
+    val m = readManifest(schema, table)
+    change(m.get("options").asInstanceOf[ObjectNode])
+    TableOptions.validate(TableOptions.Shape(currentSchema(schema, table),
+      partitionColumns(m), primaryKey(m), optionsOf(m).raw))
+    writeManifest(schema, table, m)
   }
 
 }

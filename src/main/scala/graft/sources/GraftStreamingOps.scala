@@ -286,12 +286,12 @@ trait GraftStreamingOps { self: GraftCatalog =>
         "readChangelogStream (it maps schemas by field id)")
     // a DV dir's (file, pos) parquet would match the snap-* glob and be
     // emitted as data; and a delete is not expressible file-level anyway
-    require(!deletionVectors(m),
+    require(!optionsOf(m).deletionVectors,
       s"$schema.$table has deletion-vectors enabled — file-level " +
         "streaming cannot express deletes; use a primary-key table for CDC")
     val target = StructType(currentFields(m).map(f =>
       StructField(f.name, TypeMapping.toSparkType(f.trinoType))))
-    val fmt = fileFormat(m)
+    val fmt = optionsOf(m).fileFormat
     val reader = spark.readStream.schema(target)
     maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
     reader.option("pathGlobFilter", s"*.$fmt").format(providerFor(fmt))

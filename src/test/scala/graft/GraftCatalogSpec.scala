@@ -1107,6 +1107,29 @@ class GraftCatalogSpec extends SparkSpecBase {
     cat.createTable("db", "oppk", abSchema, primaryKey = Seq("id"))
     intercept[IllegalArgumentException](cat.setTableOptions("db", "oppk",
       Map("file-index.bloom-filter.columns" -> "id")))
+    // ALTER checks the map the table would have exactly as CREATE does
+    cat.createTable("db", "opb", abSchema, primaryKey = Seq("id"),
+      options = Map("bucket" -> "2"))
+    Seq("rowkind.field" -> "nope", "file.compression" -> "bogus",
+      "dynamic-bucket.target-row-num" -> "0",
+      "num-sorted-run.compaction-trigger" -> "x",
+      "tag.creation-period" -> "weekly").foreach { case (k, v) =>
+      val e = intercept[IllegalArgumentException](
+        cat.setTableOptions("db", "opb", Map(k -> v)))
+      assert(e.getMessage.contains(k), e.getMessage)
+    }
+    assert(cat.tableOptions("db", "opb") === Map("bucket" -> "2"))
+    // unsetting ignore-delete would leave -U/-D rows a max fold cannot retract
+    cat.createTable("db", "oprk", StructType(abSchema.fields ++ Seq(
+      StructField("v", LongType), StructField("op", StringType))),
+      primaryKey = Seq("id"), options = Map("merge-engine" -> "aggregation",
+        "fields.v.aggregate-function" -> "max", "rowkind.field" -> "op",
+        "ignore-delete" -> "true"))
+    val e = intercept[IllegalArgumentException](
+      cat.removeTableOptions("db", "oprk", Seq("ignore-delete")))
+    assert(e.getMessage.contains("rowkind.field on a field-wise merge engine"),
+      e.getMessage)
+    assert(cat.tableOptions("db", "oprk").get("ignore-delete") === Some("true"))
   }
 
   test("retention table options auto-expire on commit; pins hold") {
