@@ -2,8 +2,7 @@ package graft.sources
 
 import scala.collection.mutable
 
-import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
-import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
+import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{array, col, explode, lit, md5, row_number, struct, when}
@@ -54,7 +53,7 @@ class GraftCatalog(private[sources] val spark: SparkSession,
   extends GraftMetadataViews with GraftChangelog
     with GraftDeletionVectors with GraftMaintenance
     with GraftDynamicBucket with GraftTagsBranches with GraftStreamingOps
-    with GraftColumnDdl with GraftStagingLineage {
+    with GraftColumnDdl with GraftStagingLineage with ManifestStore {
 
   import GraftCatalog._
 
@@ -183,8 +182,6 @@ class GraftCatalog(private[sources] val spark: SparkSession,
     * for the SQL catalog (branch lineages, `~/` shared refs). */
   def dirLocation(schema: String, table: String, dir: String): String =
     dirPath(schema, table, dir).toString
-  private def manifestPath(schema: String, table: String) =
-    new Path(tablePath(schema, table), "manifest.json")
 
   // ---- schema (namespace) ops -------------------------------------------
 
@@ -219,25 +216,10 @@ class GraftCatalog(private[sources] val spark: SparkSession,
       s"primary-key column $p not in schema"))
     TableOptions.validate(TableOptions.Shape(structType, partitionBy, primaryKey, options))
     fs.mkdirs(tablePath(schema, table))
-    val m = mapper.createObjectNode()
-    m.put("name", table)
-    val parts = m.putArray("partitions")
-    partitionBy.foreach(parts.add)
-    val pks = m.putArray("primaryKey")
-    primaryKey.foreach(pks.add)
-    val opts = m.putObject("options")
-    options.foreach { case (k, v) => opts.put(k, v) }
-    val fields = m.putArray("schemas").addObject().put("version", 0).putArray("fields")
-    structType.fields.zipWithIndex.foreach { case (f, i) =>
-      val fn = fields.addObject().put("id", i + 1).put("name", f.name)
-        .put("type", TypeMapping.fieldTrinoType(f))
-      // comments persist like TrinoMetadataBase.java:212's column.getComment()
-      f.getComment().foreach(fn.put("comment", _))
-    }
-    m.put("currentSchemaVersion", 0)
-    m.put("lastFieldId", structType.fields.length)
-    m.putArray("snapshots")
-    writeManifest(schema, table, m)
+    writeManifest(schema, table, Manifest.create(table,
+      structType.fields.toSeq.zipWithIndex.map { case (f, i) =>
+        FieldInfo(i + 1, f.name, TypeMapping.fieldTrinoType(f), f.getComment())
+      }, options, partitionBy, primaryKey))
     // a staging lineage ages from its own creation stamp, never from dir
     // mtime (a trash dir renamed aside keeps the original table's mtime)
     if (isStage(table)) stampStage(schema, table)
@@ -295,7 +277,7 @@ class GraftCatalog(private[sources] val spark: SparkSession,
     fs.rename(tablePath(schema, from), tablePath(schema, to))
     GraftCatalog.purgeHeadCache(fs.makeQualified(tablePath(schema, from)).toString)
     val m = readManifest(schema, to)
-    m.put("name", to)
+    m.rename(to)
     writeManifest(schema, to, m)
   }
 
@@ -308,7 +290,7 @@ class GraftCatalog(private[sources] val spark: SparkSession,
     * head it was built against, so a concurrent commit aborts it. */
   def overwrite(schema: String, table: String, df: DataFrame): Long =
     commit(schema, table, Seq(Leg("", "data", df)), InheritNone,
-      basis = Some(commitVersion(readManifest(schema, table))))
+      basis = Some(readManifest(schema, table).commitVersion))
 
   /**
    * Dynamic partition overwrite (Paimon's `dynamic-partition-overwrite`):
@@ -324,10 +306,11 @@ class GraftCatalog(private[sources] val spark: SparkSession,
    * tables only.
    */
   def overwriteDynamic(schema: String, table: String, df: DataFrame): Long = {
-    val pcols = partitionColumnsOf(schema, table)
+    val m = readManifest(schema, table)
+    val pcols = m.partitionColumns
     require(pcols.nonEmpty,
       s"$schema.$table is not partitioned — use overwrite")
-    require(primaryKeyOf(schema, table).isEmpty,
+    require(m.primaryKey.isEmpty,
       s"$schema.$table has a primary key — upsert is the per-key " +
         "overwrite; dynamic partition overwrite serves append-only tables")
     // distinct partition tuples present in the incoming data — the
@@ -336,8 +319,7 @@ class GraftCatalog(private[sources] val spark: SparkSession,
     val incoming = df.select(pcols.map(col): _*).distinct().collect()
     // an empty frame names no partitions — nothing to replace, no-op
     // (a FULL overwrite-to-empty is overwrite()'s job, never implicit)
-    if (incoming.isEmpty)
-      return snapshots(schema, table).lastOption.map(_.id).getOrElse(0L)
+    if (incoming.isEmpty) return m.headId
     val matchTuple = incoming.map { r =>
       pcols.zipWithIndex.map { case (c, i) =>
         if (r.isNullAt(i)) col(c).isNull else col(c) === lit(r.get(i))
@@ -380,7 +362,6 @@ class GraftCatalog(private[sources] val spark: SparkSession,
   private[sources] def commit(schema: String, table: String, legs: Seq[Leg],
       inherit: Inherit = InheritAll, basis: Option[Long] = None,
       compaction: Boolean = false,
-      dvIndexEntry: Option[(Seq[String], Long)] = None,
       // Options applied atomically WITH the snapshot in the same manifest
       // CAS — the bucket-rescale path: data written under the new layout
       // and the option that describes it become visible together.
@@ -391,11 +372,11 @@ class GraftCatalog(private[sources] val spark: SparkSession,
     def staleBasis(b: Long, now: Long) = new java.util.ConcurrentModificationException(
       s"$schema.$table: a concurrent writer moved the head (manifest v$b -> " +
         s"v$now) since this commit's content was derived — re-run against the new head")
-    basis.foreach(b => if (commitVersion(m) != b) throw staleBasis(b, commitVersion(m)))
+    basis.foreach(b => if (m.commitVersion != b) throw staleBasis(b, m.commitVersion))
     val main = legs.head
     val keepExisting = inherit != InheritNone
     if (legs.exists(_.kind == "data")) {
-      val cur = currentSchema(schema, table).fieldNames
+      val cur = currentSchema(m).fieldNames
       // a retract batch (aggregation engine) carries the hidden flag
       // column as its last field — everything else must still align
       legs.filter(_.kind == "data").foreach { l =>
@@ -404,8 +385,6 @@ class GraftCatalog(private[sources] val spark: SparkSession,
           s"dataframe columns ${l.frame.schema.fieldNames.mkString(",")} != table ${expect.mkString(",")}")
       }
     }
-    val snaps = m.get("snapshots").asInstanceOf[ArrayNode]
-    val lastId = if (snaps.size() == 0) 0L else snaps.get(snaps.size() - 1).get("id").asLong()
     // Data is written to a UNIQUE dot-staging dir (invisible to snap-*
     // globs and never another writer's target), then RENAMED to its
     // ordinal dir at land time via an exclusive FileContext rename —
@@ -418,9 +397,9 @@ class GraftCatalog(private[sources] val spark: SparkSession,
     // one bucket across ALL deltas and merge-on-read never crosses
     // buckets (see bucketedResolve). Delete frames carry the PK columns,
     // so the same hash applies.
-    val pkCols = primaryKey(m)
+    val pkCols = m.primaryKey
     val buckets = TableOptions(optionOverrides).bucket
-      .orElse(optionsOf(m).bucket).filter(_ => pkCols.nonEmpty)
+      .orElse(m.options.bucket).filter(_ => pkCols.nonEmpty)
     // Dynamic bucket mode (Paimon's bucket = -1): key→bucket is NOT a
     // modular hash — it comes from the persisted hash index, so frames
     // are routed up front (existing keys to their recorded bucket, new
@@ -440,13 +419,13 @@ class GraftCatalog(private[sources] val spark: SparkSession,
     // case) pass through it unchanged. Skipped when a column type is
     // unorderable (maps): those tables keep the key-unique-batch contract.
     def foldable(df: DataFrame): Boolean =
-      !compaction && pkCols.nonEmpty && optionsOf(m).mergeEngine == "deduplicate" &&
+      !compaction && pkCols.nonEmpty && m.options.mergeEngine == "deduplicate" &&
         df.schema.fields.forall(f =>
           org.apache.spark.sql.catalyst.expressions.RowOrdering
             .isOrderable(f.dataType))
     // `df` folded per `keys` tuple, keeping the columns `out`.
     def fold(df: DataFrame, keys: Seq[String], out: Seq[String]): DataFrame = {
-      val seqF = optionsOf(m).sequenceField.toSeq
+      val seqF = m.options.sequenceField.toSeq
       val valueCols = seqF ++ out.filterNot(c => keys.contains(c) || seqF.contains(c))
       if (valueCols.isEmpty) df.dropDuplicates(keys).select(out.map(col): _*)
       else df.groupBy(keys.map(col): _*)
@@ -469,7 +448,7 @@ class GraftCatalog(private[sources] val spark: SparkSession,
       if (l.kind != "data" || !foldable(l.frame)) l
       else foldLayout match {
         case Some(n) =>
-          val layout = partitionColumns(m) :+ BucketCol
+          val layout = m.partitionColumns :+ BucketCol
           val laid = l.frame.withColumn(BucketCol, bucketExpr(pkCols, n))
             .repartition(layout.map(col): _*)
           l.copy(frame = fold(laid, (layout ++ pkCols).distinct,
@@ -507,13 +486,13 @@ class GraftCatalog(private[sources] val spark: SparkSession,
     // then read O(changelog files) per batch instead of paying the
     // before-image resolve (see readChangelogFull's file-served path).
     // An explicit `-cl` leg (full-compaction producer) is passed in.
-    val clProducerMode = optionsOf(m).changelogProducer
+    val clProducerMode = m.options.changelogProducer
     def stagedOf(kind: String) = Some(routed.indexWhere(_.kind == kind))
       .filter(_ >= 0).map(staged)
     val produced: Option[Leg] =
       if (!legs.exists(_.kind == "cl") &&
           (clProducerMode == "input" || clProducerMode == "lookup") &&
-          primaryKey(m).nonEmpty && keepExisting && !compaction &&
+          m.primaryKey.nonEmpty && keepExisting && !compaction &&
           (main.kind == "data" || main.kind == "delete"))
         producerChangelog(schema, table, m, clProducerMode,
           stagedOf("data"), stagedOf("delete")).map(Leg("-cl", "cl", _))
@@ -525,12 +504,12 @@ class GraftCatalog(private[sources] val spark: SparkSession,
     // Dynamic-bucket index routing and a lookup changelog's before
     // images are derived from THIS head: such a commit carries its basis
     // even when the caller passed none.
-    val fence = basis.orElse(Some(commitVersion(m)).filter(_ =>
+    val fence = basis.orElse(Some(m.commitVersion).filter(_ =>
       dynamicBucket || (produced.isDefined && clProducerMode == "lookup")))
     // The files' write-time schema version — pinned BEFORE any conflict
     // rebase (a concurrent DDL may bump the current version; these bytes
     // are at THIS version and map forward by field id like any other dir).
-    val sv = m.get("currentSchemaVersion").asInt()
+    val sv = m.currentSchemaVersion
     // Zone maps: aggregate each data leg's footer stats into the manifest
     // (Paimon manifests carry per-file field stats the same way;
     // TrinoMetadataBase.applyFilter prunes splits with them). Dirs are
@@ -565,7 +544,7 @@ class GraftCatalog(private[sources] val spark: SparkSession,
       val path = new Path(tablePath(schema, table), at(i))
       // the caller's columns: routing adds the dynamic bucket column
       val sch = legs.find(_.suffix == all(i).suffix).get.frame.schema
-      val opts = optionsOf(m)
+      val opts = m.options
       FileStats.collectWithFiles(spark, fs, path, sch, opts.fileFormat).map {
         case (ds, fileZones) =>
           val bloom = if (opts.bloomColumns.isEmpty) None
@@ -594,27 +573,20 @@ class GraftCatalog(private[sources] val spark: SparkSession,
     commitTestHook()
     val fileLegs = all.filter(_.kind != "cl")
     /** Build the snapshot entry against manifest `mm` and CAS it in. */
-    def land(mm: ObjectNode, landId: Long, landDir: String): Unit = {
-      val sn2 = mm.get("snapshots").asInstanceOf[ArrayNode]
-      val lastTs = if (sn2.size() == 0) 0L
-        else sn2.get(sn2.size() - 1).get("timestampMillis").asLong()
+    def land(mm: Manifest, landId: Long, landDir: String): Unit = {
+      val prev = mm.head
+      // head carries the dir-level aggregate (the manifest-list's
+      // partition-stats analog) + the sidecar token; per-file zones
+      // stay in the dir's immutable `.zones.json`
       legStats.foreach { case (suffix, ds, zoneToken, _) =>
-        val statsNode =
-          if (mm.has("dirStats")) mm.get("dirStats").asInstanceOf[ObjectNode]
-          else mm.putObject("dirStats")
-        // head carries the dir-level aggregate (the manifest-list's
-        // partition-stats analog) + the sidecar token; per-file zones
-        // stay in the dir's immutable `.zones.json`
-        val dn = statsNode.putObject(landDir + suffix)
-        FileStats.toJson(dn, ds)
-        zoneToken.foreach(dn.put("filesExt", _))
+        mm.putDirStats(landDir + suffix, ds, zoneToken)
       }
+      val inheritable = if (keepExisting) prev.fold(Seq.empty[FileEntry])(_.files)
+        else Seq.empty
       // a full index fold supersedes prior index-only dirs — they drop
       // from the file list exactly like a minor compaction's victims
       val droppedIdxDirs: Set[String] =
-        if (dynIdxReplace && keepExisting && sn2.size() > 0)
-          filesOf(sn2.get(sn2.size() - 1))
-            .filter(_.kind == "idx").map(_.dir).toSet
+        if (dynIdxReplace) inheritable.filter(_.kind == "idx").map(_.dir).toSet
         else Set.empty
       val allReplaced = droppedIdxDirs ++ (inherit match {
         case InheritAllExcept(dirs) => dirs
@@ -625,11 +597,7 @@ class GraftCatalog(private[sources] val spark: SparkSession,
         case _ => Set.empty[Int]
       }
       val prevFiles: Seq[FileEntry] = {
-        val inherited =
-          if (keepExisting && sn2.size() > 0)
-            filesOf(sn2.get(sn2.size() - 1))
-              .filterNot(fe => allReplaced.contains(fe.dir))
-          else Seq.empty
+        val inherited = inheritable.filterNot(fe => allReplaced.contains(fe.dir))
         if (retired.isEmpty) inherited
         else inherited.map(fe => fe.copy(excludeBuckets =
           (fe.excludeBuckets ++ retired).distinct.sorted))
@@ -641,114 +609,52 @@ class GraftCatalog(private[sources] val spark: SparkSession,
       // dropped — {baseId, added, removed} — so writeManifest never
       // re-serializes inherited entries for EITHER shape and every
       // commit's head delta stays O(its own change), never O(table dirs)
-      // (see deflateSnapshots/inflateSnapshots).
-      val baseId: Option[Long] =
-        if (keepExisting && sn2.size() > 0 && prevFiles.nonEmpty)
-          Some(sn2.get(sn2.size() - 1).get("id").asLong())
-        else None
-      if (optionOverrides.nonEmpty) {
-        val on = if (mm.has("options")) mm.get("options").asInstanceOf[ObjectNode]
-          else mm.putObject("options")
-        optionOverrides.foreach { case (k, v) => on.put(k, v) }
-      }
-      val sn = sn2.addObject()
-      sn.put("id", landId)
-      sn.put("timestampMillis",
-        math.max(System.currentTimeMillis(), lastTs + 1)) // strictly increasing
-      // Compaction rewrites bytes, not logical content — the changelog scan
-      // skips snapshots carrying this marker (Paimon: compaction produces no
-      // changelog entries).
-      if (compaction) sn.put("compaction", true)
-      // Commit kind for the $snapshots operational view (Paimon's
-      // commitKind): what KIND of change this snapshot represents.
-      sn.put("commitKind",
+      // (see Manifest.deflate).
+      val baseId: Option[Long] = prev.filter(_ => prevFiles.nonEmpty).map(_.id)
+      if (optionOverrides.nonEmpty) mm.putOptions(optionOverrides)
+      val added = fileLegs.map(l =>
+        FileEntry(landDir + l.suffix, sv, l.kind, retract = l.retract))
+      mm.appendSnapshot(landId,
+        // strictly increasing
+        math.max(System.currentTimeMillis(), prev.fold(0L)(_.timestampMillis) + 1),
+        compaction,
+        // Commit kind for the $snapshots operational view (Paimon's
+        // commitKind): what KIND of change this snapshot represents.
         if (compaction) "compact"
         else if (!keepExisting) "overwrite"
         else if (fileLegs.size > 1) "merge"
         else if (main.kind == "delete" || main.kind == "dv") "delete"
-        else "append")
+        else "append",
+        prevFiles, added, baseId, allReplaced.toSeq.sorted, retired.toSeq.sorted)
       // Deletion-vector index: which data files the new DV dir touches and
       // how many positions it deletes — the manifest-side summary that lets
       // reads split clean files (pure vectorized scan) from dirty files
       // (position anti-join) without opening the DV itself, and lets
       // countRows stay metadata-only by subtraction.
-      dvIndexEntry.foreach { case (files, rows) =>
-        val idx = if (mm.has("dvIndex")) mm.get("dvIndex").asInstanceOf[ObjectNode]
-          else mm.putObject("dvIndex")
-        val e = idx.putObject(landDir + all.find(_.kind == "dv").fold("")(_.suffix))
-        e.put("rows", rows)
-        val fa = e.putArray("files")
-        files.foreach(fa.add)
-      }
+      all.foreach(l => l.dvIndex.foreach { case (files, rows) =>
+        mm.putDvIndex(landDir + l.suffix, files, rows)
+      })
       // Changelog-producer registration: the `-cl` dir, its write-time
       // schema version, and its coverage link (the snapshot its rows
       // change FROM — the previous head unless the leg names an explicit
       // range, as full-compaction does).
       all.find(_.kind == "cl").foreach { l =>
-        // the new snapshot is already appended — the previous head sits
-        // one element back
-        val prevId = if (sn2.size() < 2) 0L
-          else sn2.get(sn2.size() - 2).get("id").asLong()
-        val cn = if (mm.has("changelog")) mm.get("changelog").asInstanceOf[ObjectNode]
-          else mm.putObject("changelog")
-        val e = cn.putObject(landDir + l.suffix)
-        e.put("id", landId)
-        e.put("ver", sv)
-        e.put("from", l.from.getOrElse(prevId))
+        mm.putChangelog(landDir + l.suffix, landId, sv,
+          l.from.getOrElse(prev.fold(0L)(_.id)))
       }
       // Bloom-index pointer: which columns this dir's sidecar indexes,
       // plus a cache token (fresh per build — an ordinal reused after
       // rollback never serves a stale cached index).
       legStats.foreach { case (suffix, _, _, bloom) =>
-        bloom.foreach { case (token, bcols) =>
-          val bn = if (mm.has("bloomIdx")) mm.get("bloomIdx").asInstanceOf[ObjectNode]
-            else mm.putObject("bloomIdx")
-          val e = bn.putObject(landDir + suffix)
-          e.put("token", token)
-          val ca = e.putArray("cols")
-          bcols.foreach(ca.add)
-        }
+        bloom.foreach { case (token, bcols) => mm.putBloomIdx(landDir + suffix, token, bcols) }
       }
       // Dynamic-bucket index pointer: this dir carries a `.dbidx` delta
       // with that many key assignments — readDynamicIndex unions exactly
       // the flagged dirs of the current snapshot, zero FS probes.
-      dynIdxKeys.foreach { keys =>
-        // full-fold commits rebuild the node: their delta records EVERY
-        // live key, so any older flag would double-count
-        if (dynIdxReplace) mm.remove("dynIdx")
-        val dn = if (mm.has("dynIdx")) mm.get("dynIdx").asInstanceOf[ObjectNode]
-          else mm.putObject("dynIdx")
-        dn.putObject(landDir).put("keys", keys)
-      }
-      def addEntry(arr: ArrayNode, fe: FileEntry): Unit = {
-        val e = arr.addObject(); e.put("dir", fe.dir); e.put("schemaVersion", fe.schemaVersion)
-        if (fe.kind != "data") e.put("kind", fe.kind)
-        if (fe.retract) e.put("rk", true)
-        if (fe.excludeBuckets.nonEmpty) {
-          val xa = e.putArray("xb"); fe.excludeBuckets.foreach(xa.add)
-        }
-      }
-      val fArr = sn.putArray("files")
-      val added = fileLegs.map(l =>
-        FileEntry(landDir + l.suffix, sv, l.kind, retract = l.retract))
-      (prevFiles ++ added).foreach(addEntry(fArr, _))
-      baseId.foreach { b =>
-        sn.put("baseId", b)
-        val aArr = sn.putArray("added")
-        added.foreach(addEntry(aArr, _))
-        if (allReplaced.nonEmpty) {
-          val rArr = sn.putArray("removed")
-          allReplaced.toSeq.sorted.foreach(rArr.add)
-        }
-        if (retired.nonEmpty) {
-          // O(1) delta for a per-bucket compaction: inflate applies the
-          // exclusion to every INHERITED entry instead of re-serializing
-          // the whole list with per-entry `xb` fields.
-          val xArr = sn.putArray("xbuckets")
-          retired.toSeq.sorted.foreach(xArr.add)
-        }
-      }
-      streamBatchId.foreach(b => mm.put("lastStreamBatchId", b))
+      // Full-fold commits rebuild the node: their delta records EVERY
+      // live key, so any older flag would double-count.
+      dynIdxKeys.foreach(mm.putDynIdx(landDir, _, replace = dynIdxReplace))
+      streamBatchId.foreach(mm.setLastStreamBatchId)
       writeManifest(schema, table, mm)
     }
     // Optimistic concurrency (Paimon's commit protocol), two fences:
@@ -847,7 +753,7 @@ class GraftCatalog(private[sources] val spark: SparkSession,
       renamed
     }
     var cur = m
-    var landId = lastId + 1
+    var landId = m.headId + 1
     var attempts = 0
     // Basis-free commits retry to a TIME budget, not a fixed attempt
     // count (Paimon's commit retries until a configurable deadline):
@@ -880,17 +786,14 @@ class GraftCatalog(private[sources] val spark: SparkSession,
       // conflict — a dir claim or the manifest CAS was lost
       val fresh = readManifest(schema, table)
       fence.foreach { b =>
-        if (commitVersion(fresh) != b) throw staleBasis(b, commitVersion(fresh))
+        if (fresh.commitVersion != b) throw staleBasis(b, fresh.commitVersion)
         throw new java.util.ConcurrentModificationException(
           s"$schema.$table: ${lost.fold(target)(target + all(_).suffix)} is " +
             "claimed by a concurrent writer (or a dead attempt's leftover) — " +
             "re-run; sweepOrphanDirs reclaims orphan dirs")
       }
       cur = fresh
-      val fsnaps = cur.get("snapshots").asInstanceOf[ArrayNode]
-      val head = if (fsnaps.size() == 0) 0L
-        else fsnaps.get(fsnaps.size() - 1).get("id").asLong()
-      landId = math.max(head + 1, landId + 1)
+      landId = math.max(cur.headId + 1, landId + 1)
       // Jittered exponential backoff before the next round: without it,
       // N writers re-collide immediately and the slowest can lose every
       // round (observed: 8-writer storms starving one writer). Jitter
@@ -918,7 +821,7 @@ class GraftCatalog(private[sources] val spark: SparkSession,
    * partition columns carried by the frame — [[sortCompact]]'s
    * `__range`, whose subdirs it then lands as separate legs.
    */
-  private[sources] def writeDir(schema: String, table: String, m: ObjectNode,
+  private[sources] def writeDir(schema: String, table: String, m: Manifest,
       frame: DataFrame, toDir: String, kind: String, buckets: Option[Int],
       lead: Seq[String] = Nil, clustered: Boolean = false): Unit = {
     val (toWrite0, bucketPart) =
@@ -926,11 +829,11 @@ class GraftCatalog(private[sources] val spark: SparkSession,
       else buckets match {
         case Some(-1) => (frame, Seq(BucketCol)) // pre-routed via the hash index
         case Some(n) =>
-          (frame.withColumn(BucketCol, bucketExpr(primaryKey(m), n)), Seq(BucketCol))
+          (frame.withColumn(BucketCol, bucketExpr(m.primaryKey, n)), Seq(BucketCol))
         case None => (frame, Seq.empty)
       }
     val parted =
-      lead ++ (if (kind == "data") partitionColumns(m) else Seq.empty) ++ bucketPart
+      lead ++ (if (kind == "data") m.partitionColumns else Seq.empty) ++ bucketPart
     // Cluster the batch by its physical layout keys before a bucketed
     // write: without this, EVERY task writes a file into every
     // (partition, bucket) it holds rows for — tasks × buckets files
@@ -949,14 +852,14 @@ class GraftCatalog(private[sources] val spark: SparkSession,
     else toWrite0
     // DV sidecar frames stay parquet regardless of the table's data
     // format (position lists, not data)
-    val fmt = if (kind == "dv") "parquet" else optionsOf(m).fileFormat
+    val fmt = if (kind == "dv") "parquet" else m.options.fileFormat
     // ORC/AVRO DV tables: stamp the write-time positional identity
     // into every data file (see [[OrcPosCol]] — neither reader has a
     // `_metadata.row_index`; identity only needs to be stable and
     // unique, and monotonically_increasing_id is partition-prefixed
     // unique within the commit's job). Data files only: tombstones
     // and sidecars are never DV victims.
-    val stamped = if (kind == "data" && fmt != "parquet" && optionsOf(m).deletionVectors)
+    val stamped = if (kind == "data" && fmt != "parquet" && m.options.deletionVectors)
       toWrite.withColumn(OrcPosCol,
         org.apache.spark.sql.functions.monotonically_increasing_id())
     else toWrite
@@ -964,7 +867,7 @@ class GraftCatalog(private[sources] val spark: SparkSession,
     // Paimon's file.compression: per-table codec for data files
     // (engine default — snappy — when unset). DV sidecars keep the
     // default; they are position lists, not data.
-    val writer = optionsOf(m).fileCompression.filter(_ => kind != "dv")
+    val writer = m.options.fileCompression.filter(_ => kind != "dv")
       .map(c => writer0.option("compression", c)).getOrElse(writer0)
     (if (parted.nonEmpty) writer.partitionBy(parted: _*) else writer)
       .save(new Path(tablePath(schema, table), toDir).toString)
@@ -1017,48 +920,19 @@ class GraftCatalog(private[sources] val spark: SparkSession,
     // a streaming consumer commits offsets WHILE ingest commits data, so
     // the manifest CAS races routinely — idempotent rebase-and-retry
     val m = readManifest(schema, table)
-    val c = if (m.has("consumers")) m.get("consumers").asInstanceOf[ObjectNode]
-      else m.putObject("consumers")
-    c.put(consumerId, nextSnapshotId)
+    m.putConsumer(consumerId, nextSnapshotId)
     writeManifest(schema, table, m)
   }
 
   def dropConsumer(schema: String, table: String, consumerId: String): Unit =
     retryManifestUpdate {
       val m = readManifest(schema, table)
-      if (m.has("consumers")) {
-        m.get("consumers").asInstanceOf[ObjectNode].remove(consumerId)
-        writeManifest(schema, table, m)
-      }
+      if (m.removeConsumer(consumerId)) writeManifest(schema, table, m)
     }
-
-  /** Idempotent manifest read-modify-write with rebase-and-retry: small
-    * metadata mutations (consumer offsets, option changes) race data
-    * commits routinely and always re-apply cleanly onto the new head. */
-  private[sources] def retryManifestUpdate(body: => Unit): Unit = {
-    var attempts = 0
-    var done = false
-    while (!done) {
-      try { body; done = true }
-      catch {
-        case e: java.util.ConcurrentModificationException =>
-          attempts += 1
-          if (attempts >= 8) throw e
-      }
-    }
-  }
 
   /** All registered consumers → next unprocessed snapshot id. */
   def consumerOffsets(schema: String, table: String): Map[String, Long] =
-    consumerOffsetsFrom(readManifest(schema, table))
-
-  private[sources] def consumerOffsetsFrom(m: ObjectNode): Map[String, Long] = {
-    if (!m.has("consumers")) return Map.empty
-    val c = m.get("consumers").asInstanceOf[ObjectNode]
-    val out = mutable.LinkedHashMap[String, Long]()
-    c.fieldNames().forEachRemaining(k => out += k -> c.get(k).asLong())
-    out.toMap
-  }
+    readManifest(schema, table).consumers
 
   /** One row per consumer: id + next unprocessed snapshot (Paimon's
     * `$consumers` table). */
@@ -1070,13 +944,8 @@ class GraftCatalog(private[sources] val spark: SparkSession,
 
   // ---- reads + time travel ----------------------------------------------
 
-  def snapshots(schema: String, table: String): Seq[SnapshotInfo] = {
-    val snaps = readManifest(schema, table).get("snapshots").asInstanceOf[ArrayNode]
-    (0 until snaps.size()).map { i =>
-      val s = snaps.get(i)
-      SnapshotInfo(s.get("id").asLong(), s.get("timestampMillis").asLong())
-    }
-  }
+  def snapshots(schema: String, table: String): Seq[SnapshotInfo] =
+    readManifest(schema, table).snapshots.map(s => SnapshotInfo(s.id, s.timestampMillis))
 
   /**
    * Read a table at the latest snapshot, a specific snapshot id, or the
@@ -1088,10 +957,9 @@ class GraftCatalog(private[sources] val spark: SparkSession,
   def read(schema: String, table: String, snapshotId: Option[Long] = None,
       asOfMillis: Option[Long] = None): DataFrame = {
     val m = readManifest(schema, table)
-    val chosen = chooseSnapshot(m, schema, table, snapshotId, asOfMillis)
-    chosen match {
+    m.chooseSnapshot(snapshotId, asOfMillis, spark.conf, s"$schema.$table") match {
       case None => emptyFrame(m)
-      case Some(s) => resolveFrames(schema, table, m, filesOf(s))
+      case Some(s) => resolveFrames(schema, table, m, s.files)
         .getOrElse(emptyFrame(m))
     }
   }
@@ -1100,42 +968,21 @@ class GraftCatalog(private[sources] val spark: SparkSession,
     * [[read]] builds, pinned to one manifest read so a compaction can
     * fence its commit on exactly that manifest's version. */
   private[sources] def headImage(schema: String, table: String,
-      m: ObjectNode): DataFrame = {
-    val snaps = m.get("snapshots").asInstanceOf[ArrayNode]
-    (if (snaps.size() == 0) None
-    else resolveFrames(schema, table, m, filesOf(snaps.get(snaps.size() - 1))))
-      .getOrElse(emptyFrame(m))
-  }
+      m: Manifest): DataFrame =
+    m.head.flatMap(s => resolveFrames(schema, table, m, s.files)).getOrElse(emptyFrame(m))
 
   /** Whether [[headImage]] of `m` merges in fixed-bucket
     * [[bucketedResolve]] legs, one bucket per partition: that image, or
     * a filter or projection of it, lands as a [[Leg]] marked `clustered`
     * (written without the layout shuffle). */
-  private[sources] def headMergesPerBucket(m: ObjectNode): Boolean = {
-    val snaps = m.get("snapshots").asInstanceOf[ArrayNode]
-    primaryKey(m).nonEmpty && optionsOf(m).bucket.exists(_ >= 1) && snaps.size() > 0 &&
-      !filesOf(snaps.get(snaps.size() - 1)).exists(_.kind == "dv")
-  }
+  private[sources] def headMergesPerBucket(m: Manifest): Boolean =
+    m.primaryKey.nonEmpty && m.options.bucket.exists(_ >= 1) &&
+      m.head.exists(!_.files.exists(_.kind == "dv"))
 
   /** Zone maps of every live dir (dir name → stats); empty map for
     * pre-stats manifests — those dirs are simply never pruned. */
   def dirStats(schema: String, table: String): Map[String, FileStats.DirStats] =
-    dirStatsFrom(readManifest(schema, table))
-
-  private[sources] def dirStatsFrom(m: ObjectNode): Map[String, FileStats.DirStats] = {
-    if (!m.has("dirStats")) return Map.empty
-    val node = m.get("dirStats").asInstanceOf[ObjectNode]
-    val out = mutable.LinkedHashMap[String, FileStats.DirStats]()
-    node.fieldNames().forEachRemaining { d =>
-      val n = node.get(d)
-      // entries from ANY other stats format are ignored, not trusted —
-      // older writers lack this format's guarantees, newer writers may
-      // have changed zone semantics this reader would misinterpret
-      if (n.has("v") && n.get("v").asInt() == FileStats.FormatVersion)
-        out += d -> FileStats.fromJson(n)
-    }
-    out.toMap
-  }
+    readManifest(schema, table).dirStats
 
   /** Per-FILE zones of every live dir (dir → relative file path → stats)
     * — the reference's actual skip unit (Paimon manifests carry per-file
@@ -1143,14 +990,6 @@ class GraftCatalog(private[sources] val spark: SparkSession,
     * zones existed; those dirs prune at dir granularity only. */
   def fileStats(schema: String, table: String): Map[String, Map[String, FileStats.DirStats]] =
     fileStatsFrom(schema, table, readManifest(schema, table))
-
-  /** Both zone granularities from ONE manifest read — table resolution
-    * must not pay two JSON parses per query. */
-  def allStats(schema: String, table: String)
-      : (Map[String, FileStats.DirStats], Map[String, Map[String, FileStats.DirStats]]) = {
-    val m = readManifest(schema, table)
-    (dirStatsFrom(m), fileStatsFrom(schema, table, m))
-  }
 
   /**
    * Per-file zones, resolving the hierarchical layout: head entries carry
@@ -1165,18 +1004,11 @@ class GraftCatalog(private[sources] val spark: SparkSession,
    * inner map) — conservative, never wrong.
    */
   private[sources] def fileStatsFrom(schema: String, table: String,
-      m: ObjectNode): Map[String, Map[String, FileStats.DirStats]] = {
-    if (!m.has("dirStats")) return Map.empty
-    val node = m.get("dirStats").asInstanceOf[ObjectNode]
+      m: Manifest): Map[String, Map[String, FileStats.DirStats]] = {
+    val zones = m.fileZones
     val out = mutable.LinkedHashMap[String, Map[String, FileStats.DirStats]]()
-    val ext = mutable.ArrayBuffer[(String, String)]() // dir -> sidecar token
-    node.fieldNames().forEachRemaining { d =>
-      val n = node.get(d)
-      if (n.has("v") && n.get("v").asInt() == FileStats.FormatVersion) {
-        if (n.has("filesExt")) ext += d -> n.get("filesExt").asText()
-        else out += d -> FileStats.filesFromJson(n)
-      }
-    }
+    zones.foreach { case (d, z) => z.foreach(out += d -> _) }
+    val ext = zones.flatMap { case (d, z) => z.left.toOption.map(d -> _) } // dir -> sidecar token
     if (ext.nonEmpty) {
       val cache = GraftCatalog.zoneSidecarCache
       var missing = ext.filterNot(e => cache.containsKey(e._2))
@@ -1241,21 +1073,7 @@ class GraftCatalog(private[sources] val spark: SparkSession,
     * indexed cols); test/ops visibility. */
   private[graft] def bloomIndexInfo(schema: String,
       table: String): Map[String, (String, Set[String])] =
-    bloomIdxFrom(readManifest(schema, table))
-
-  /** Manifest bloom-index pointers: dir -> (cache token, indexed cols). */
-  private def bloomIdxFrom(m: ObjectNode): Map[String, (String, Set[String])] = {
-    if (!m.has("bloomIdx")) return Map.empty
-    val node = m.get("bloomIdx").asInstanceOf[ObjectNode]
-    val out = scala.collection.mutable.LinkedHashMap[String, (String, Set[String])]()
-    node.fieldNames().forEachRemaining { d =>
-      val e = node.get(d)
-      val cols = scala.collection.mutable.Set[String]()
-      e.get("cols").forEach(c => cols += c.asText())
-      out += d -> ((e.get("token").asText(), cols.toSet))
-    }
-    out.toMap
-  }
+    readManifest(schema, table).bloomIdx
 
   /**
    * Refine the zone-kept file selections with the per-file bloom index:
@@ -1264,12 +1082,12 @@ class GraftCatalog(private[sources] val spark: SparkSession,
    * negatives ⇒ provably no matching row). Dirs without an index, or
    * predicates without membership constraints, pass through untouched.
    */
-  private def bloomRefine(schema: String, table: String, m: ObjectNode,
+  private def bloomRefine(schema: String, table: String, m: Manifest,
       resolved: org.apache.spark.sql.catalyst.expressions.Expression,
       perFile: Map[String, Map[String, FileStats.DirStats]],
       selections: Seq[(FileEntry, Option[Seq[String]])])
       : Seq[(FileEntry, Option[Seq[String]])] = {
-    val idx = bloomIdxFrom(m)
+    val idx = m.bloomIdx
     if (idx.isEmpty) return selections
     val constraints = FileStats.eqConstraints(resolved)
     if (constraints.isEmpty) return selections
@@ -1294,14 +1112,14 @@ class GraftCatalog(private[sources] val spark: SparkSession,
     }
   }
 
-  private def zonePrunable(m: ObjectNode, entries: Seq[FileEntry]): Boolean = {
-    val cur = m.get("currentSchemaVersion").asInt()
+  private def zonePrunable(m: Manifest, entries: Seq[FileEntry]): Boolean = {
+    val cur = m.currentSchemaVersion
     // Deletion-vector entries don't block pruning: DVs only REMOVE rows,
     // so a dir's zones stay a sound superset of its live values — pruning
     // on them can only keep too much, never drop a live row.
     entries.forall(e =>
       (e.kind == "data" && e.schemaVersion == cur) || e.kind == "dv") &&
-      primaryKey(m).isEmpty
+      m.primaryKey.isEmpty
   }
 
   /**
@@ -1329,8 +1147,8 @@ class GraftCatalog(private[sources] val spark: SparkSession,
       snapshotId: Option[Long] = None,
       asOfMillis: Option[Long] = None): DataFrame = {
     val m = readManifest(schema, table)
-    val chosen = chooseSnapshot(m, schema, table, snapshotId, asOfMillis)
-    val entries = chosen.map(filesOf).getOrElse(Seq.empty)
+    val chosen = m.chooseSnapshot(snapshotId, asOfMillis, spark.conf, s"$schema.$table")
+    val entries = chosen.map(_.files).getOrElse(Seq.empty)
     // read(...)'s frame over THIS manifest read — built only on fallback
     // (it lists and plans every dir of the snapshot)
     lazy val full = resolveFrames(schema, table, m, entries)
@@ -1346,7 +1164,7 @@ class GraftCatalog(private[sources] val spark: SparkSession,
       case Some(buckets) =>
         // an empty selection proves no row matches (`k = 1 AND k = 2`)
         val slice = if (buckets.isEmpty) None
-          else bucketSlice(schema, table, m, entries, optionsOf(m).bucket.get, buckets)
+          else bucketSlice(schema, table, m, entries, m.options.bucket.get, buckets)
         return slice.getOrElse(emptyFrame(m)).filter(condition)
       case None => ()
     }
@@ -1357,24 +1175,24 @@ class GraftCatalog(private[sources] val spark: SparkSession,
     // version from a pruned file (it is either DV'd or THE live one).
     // Post-build deltas make pruning unsound again (a pruned old version
     // could mask a delta race) — those fall back to read().filter.
-    val pk0 = primaryKey(m)
+    val pk0 = m.primaryKey
     val coveredPk = pk0.nonEmpty && entries.exists(_.kind == "dv") && {
       val bo = entries.filter(_.kind == "dv").map(entryOrdinal).max
-      val cur = m.get("currentSchemaVersion").asInt()
+      val cur = m.currentSchemaVersion
       entries.filterNot(_.kind == "dv").forall(fe =>
         fe.kind == "data" && entryOrdinal(fe) <= bo && fe.schemaVersion == cur)
     }
     if (entries.isEmpty || !(zonePrunable(m, entries) || coveredPk)) return full
     if (resolved.isEmpty) return full
     val (dvEntries, dataEntries) = entries.partition(_.kind == "dv")
-    val stats = dirStatsFrom(m)
+    val stats = m.dirStats
     val kept = dataEntries.filter(fe =>
       stats.get(fe.dir).forall(FileStats.mightMatch(_, resolved.get)))
     // The bucketed covered-PK branch below reads whole kept dirs (its
     // dirs hold __bucket=k subdirs the per-file machinery doesn't
     // resolve) — computing per-file zone/bloom refinement for it would
     // be sidecar I/O thrown away, so that shape stays dir-level.
-    val bucketedCovered = coveredPk && optionsOf(m).bucket.isDefined
+    val bucketedCovered = coveredPk && m.options.bucket.isDefined
     // Per-FILE refinement inside surviving dirs — the reference's skip
     // unit (Paimon per-file field stats). A large append dir whose files
     // were written range-clustered (or just time-ordered) prunes to the
@@ -1413,9 +1231,9 @@ class GraftCatalog(private[sources] val spark: SparkSession,
     else if (!coveredPk)
       appendUnion(schema, table, m, picked, dvEntries)
         .drop("__ord", "__del").filter(condition)
-    else if (optionsOf(m).bucket.isEmpty)
+    else if (m.options.bucket.isEmpty)
       appendUnion(schema, table, m, picked, dvEntries)
-        .select(currentFields(m).map(f => col(f.name)): _*).filter(condition)
+        .select(m.currentFields.map(f => col(f.name)): _*).filter(condition)
     else {
       // bucketed covered base: dirs hold __bucket=k subdirs that
       // appendUnion's per-file machinery doesn't resolve — DIR-level
@@ -1424,7 +1242,7 @@ class GraftCatalog(private[sources] val spark: SparkSession,
       unionAllByName(dirFrames(schema, table, m, picked.map(_._1), withMeta = true))
         .join(dvFrame(schema, table, dvEntries),
           Seq(DvFileCol, DvPosCol), "left_anti")
-        .select(currentFields(m).map(f => col(f.name)): _*).filter(condition)
+        .select(m.currentFields.map(f => col(f.name)): _*).filter(condition)
     }
   }
 
@@ -1502,10 +1320,10 @@ class GraftCatalog(private[sources] val spark: SparkSession,
       snapshotId: Option[Long] = None,
       asOfMillis: Option[Long] = None): Option[Long] = {
     val m = readManifest(schema, table)
-    val chosen = chooseSnapshot(m, schema, table, snapshotId, asOfMillis)
+    val chosen = m.chooseSnapshot(snapshotId, asOfMillis, spark.conf, s"$schema.$table")
     if (chosen.isEmpty) return Some(0L)
-    val stats = dirStatsFrom(m)
-    val counts = filesOf(chosen.get).filter(_.kind == "data")
+    val stats = m.dirStats
+    val counts = chosen.get.files.filter(_.kind == "data")
       .map(fe => stats.get(fe.dir).map(_.rows))
     if (counts.exists(_.isEmpty)) None else Some(counts.flatten.sum)
   }
@@ -1525,9 +1343,9 @@ class GraftCatalog(private[sources] val spark: SparkSession,
       snapshotId: Option[Long] = None,
       asOfMillis: Option[Long] = None): Option[Long] = {
     val m = readManifest(schema, table)
-    val chosen = chooseSnapshot(m, schema, table, snapshotId, asOfMillis)
+    val chosen = m.chooseSnapshot(snapshotId, asOfMillis, spark.conf, s"$schema.$table")
     if (chosen.isEmpty) return Some(0L)
-    val entries = filesOf(chosen.get)
+    val entries = chosen.get.files
     // DV-covered PK snapshot (every data dir at/below the newest build,
     // no tombstone dirs): the live image holds exactly one row per key,
     // so the count is metadata-exact by subtraction — the read-optimized
@@ -1536,29 +1354,29 @@ class GraftCatalog(private[sources] val spark: SparkSession,
     // DV-applied image). Retired-bucket marks at/below a build don't
     // break this: the build DV'd those rows positionally, and dir stats
     // count them, so the subtraction stays exact.
-    if (primaryKey(m).nonEmpty) {
+    if (m.primaryKey.nonEmpty) {
       val dvEs0 = entries.filter(_.kind == "dv")
       if (dvEs0.isEmpty) return None
       val buildOrd = dvEs0.map(entryOrdinal).max
       val others = entries.filterNot(_.kind == "dv")
       if (!others.forall(fe => fe.kind == "data" && entryOrdinal(fe) <= buildOrd))
         return None
-      val stats0 = dirStatsFrom(m)
+      val stats0 = m.dirStats
       val counts0 = others.map(fe => stats0.get(fe.dir).map(_.rows))
-      val dvIdx0 = dvIndexFrom(m)
+      val dvIdx0 = m.dvIndex
       val dvRows0 = dvEs0.map(e => dvIdx0.get(e.dir).map(_._2))
       return if (counts0.exists(_.isEmpty) || dvRows0.exists(_.isEmpty)) None
         else Some(counts0.flatten.sum - dvRows0.flatten.sum)
     }
     if (!zonePrunable(m, entries)) return None
     val (dvEs, dataEs) = entries.partition(_.kind == "dv")
-    val stats = dirStatsFrom(m)
+    val stats = m.dirStats
     val counts = dataEs.map(fe => stats.get(fe.dir).map(_.rows))
     if (counts.exists(_.isEmpty)) return None
     // Deletion vectors subtract exactly: a position can be deleted only
     // once (deleteWhere evaluates its predicate over the DV-applied
     // image, so an already-deleted row is invisible to later deletes).
-    val dvIdx = dvIndexFrom(m)
+    val dvIdx = m.dvIndex
     val dvRows = dvEs.map(e => dvIdx.get(e.dir).map(_._2))
     if (dvRows.exists(_.isEmpty)) None
     else Some(counts.flatten.sum - dvRows.flatten.sum)
@@ -1582,7 +1400,7 @@ class GraftCatalog(private[sources] val spark: SparkSession,
    * listing stays on the driver as it does for one-dir relations —
    * beyond it Spark lists through a job.
    */
-  private def groupFrames(m: ObjectNode, roots: Seq[(FileEntry, Path)],
+  private def groupFrames(m: Manifest, roots: Seq[(FileEntry, Path)],
       withMeta: Boolean = false): Seq[DataFrame] =
     roots.map(r => readGroupOf(r._1)).distinct.flatMap { g =>
       roots.filter(r => readGroupOf(r._1) == g).grouped(math.max(1, discoveryChunk))
@@ -1608,15 +1426,15 @@ class GraftCatalog(private[sources] val spark: SparkSession,
    * read. No frame carries the bucket column, so all of them share one
    * column layout and union with [[unionAllByName]].
    */
-  private[sources] def dirFrames(schema: String, table: String, m: ObjectNode,
+  private[sources] def dirFrames(schema: String, table: String, m: Manifest,
       entries: Seq[FileEntry], withMeta: Boolean = false,
       onlyBuckets: Option[Seq[Int]] = None, skipRetired: Boolean = false,
       files: Map[FileEntry, Seq[String]] = Map.empty): Seq[DataFrame] = {
-    val bucketed = optionsOf(m).bucket.isDefined
+    val bucketed = m.options.bucket.isDefined
     def keeps(fe: FileEntry, k: Int) = onlyBuckets.forall(_.contains(k)) &&
       !(skipRetired && fe.excludeBuckets.contains(k))
     val (own, flat) = entries.filterNot(fe => files.get(fe).exists(_.isEmpty))
-      .partition(fe => fe.kind == "data" && partitionColumns(m).nonEmpty)
+      .partition(fe => fe.kind == "data" && m.partitionColumns.nonEmpty)
     val ownFrames = own.map { fe =>
       val base = dirPath(schema, table, fe.dir).toString
       val sub = files.get(fe)
@@ -1685,11 +1503,11 @@ class GraftCatalog(private[sources] val spark: SparkSession,
     * the tombstone flag `__del` merge-on-read uses. `fe` describes how
     * the paths were written (kind, write-time schema version, retract
     * flag); a changelog (`cl`) dir adds its `_row_kind` column. */
-  private def relationFor(m: ObjectNode, fe: FileEntry, paths: Seq[String],
+  private def relationFor(m: Manifest, fe: FileEntry, paths: Seq[String],
       basePath: Option[String], withMeta: Boolean,
       withBucket: Boolean): DataFrame = {
-    val curFields = currentFields(m)
-    val allSchemas = schemaVersions(m)
+    val curFields = m.currentFields
+    val allSchemas = m.schemaVersions
     val writeFieldsAll = allSchemas(fe.schemaVersion)
     // Delete files carry only the primary-key columns (write-time names)
     // — plus the sequence field on `sequence.field` tables, where a
@@ -1700,8 +1518,8 @@ class GraftCatalog(private[sources] val spark: SparkSession,
         // cross-partition tables: tombstones also carry their victim's
         // partition columns (the OLD residence) — the merge keys on
         // (pk, partition), so the tombstone must land in the right group
-        val keep = primaryKey(m).toSet ++ optionsOf(m).sequenceField ++
-          partitionColumns(m)
+        val keep = m.primaryKey.toSet ++ m.options.sequenceField ++
+          m.partitionColumns
         val keepIds = curFields.filter(f => keep.contains(f.name)).map(_.id).toSet
         writeFieldsAll.filter(f => keepIds.contains(f.id))
       } else writeFieldsAll
@@ -1709,7 +1527,7 @@ class GraftCatalog(private[sources] val spark: SparkSession,
     // columns by write-time NAME, so the field-id mapping below works
     // identically); DV sidecar dirs alone are parquet-pinned (position
     // lists, not data)
-    val fmt = if (fe.kind == "dv") "parquet" else optionsOf(m).fileFormat
+    val fmt = if (fe.kind == "dv") "parquet" else m.options.fileFormat
     // ORC/AVRO data files of DV tables carry their row identity as a
     // stored column ([[OrcPosCol]], stamped at write — neither reader
     // has a `_metadata.row_index`); a meta-requesting read pulls it
@@ -1718,7 +1536,7 @@ class GraftCatalog(private[sources] val spark: SparkSession,
     // spark-avro refuses schema fields absent from the file (ORC would
     // merely read nulls).
     val orcPos = withMeta && fmt != "parquet" && fe.kind == "data" &&
-      optionsOf(m).deletionVectors
+      m.options.deletionVectors
     // Explicit write-time schema: without it, Spark's partition-dir
     // type inference would coerce string partition values that look
     // numeric ("0123" -> 123) and corrupt the round-trip.
@@ -1784,7 +1602,7 @@ class GraftCatalog(private[sources] val spark: SparkSession,
     // aggregation-engine frames always carry the retract flag so sibling
     // dirs with and without retract batches union by name; unflagged
     // dirs contribute constant false (their rows are all inserts)
-    val rkCols = if (optionsOf(m).mergeEngine != "aggregation") Seq.empty
+    val rkCols = if (m.options.mergeEngine != "aggregation") Seq.empty
       else Seq((if (fe.retract)
         org.apache.spark.sql.functions.coalesce(col(RetractCol), lit(false))
       else lit(false)).as(RetractCol))
@@ -1810,20 +1628,20 @@ class GraftCatalog(private[sources] val spark: SparkSession,
    * engines — partial map-side combine, no sort; window for the
    * ordinal-wise ones).
    */
-  private[sources] def resolveFrames(schema: String, table: String, m: ObjectNode,
+  private[sources] def resolveFrames(schema: String, table: String, m: Manifest,
       entries: Seq[FileEntry]): Option[DataFrame] = {
     if (entries.isEmpty) return None
     // PK tables carrying deletion vectors (built at compaction) read
     // merge-free below the build ordinal — see pkDvResolve. Checked
     // before the bucketed dispatch: the hybrid read subsumes it.
-    if (primaryKey(m).nonEmpty && entries.exists(_.kind == "dv"))
+    if (m.primaryKey.nonEmpty && entries.exists(_.kind == "dv"))
       return pkDvResolve(schema, table, m, entries)
-    optionsOf(m).bucket match {
-      case Some(n) if primaryKey(m).nonEmpty =>
+    m.options.bucket match {
+      case Some(n) if m.primaryKey.nonEmpty =>
         return bucketedResolve(schema, table, m, entries, n)
       case _ => ()
     }
-    val pk = primaryKey(m)
+    val pk = m.primaryKey
     if (pk.isEmpty) {
       // Append-only: plain union, minus any deletion-vector positions.
       val (dvEs, dataEs) = entries.partition(_.kind == "dv")
@@ -1843,7 +1661,7 @@ class GraftCatalog(private[sources] val spark: SparkSession,
         .filter(col("__rn") === 1 && !col("__del"))
         .drop("__ord", "__rn", "__del")
     }
-    Some(optionsOf(m).mergeEngine match {
+    Some(m.options.mergeEngine match {
       case "deduplicate" => ordinalPick(earliest = false)
       case "first-row" => ordinalPick(earliest = true)
       case engine => // partial-update | aggregation
@@ -1865,13 +1683,13 @@ class GraftCatalog(private[sources] val spark: SparkSession,
     * field-wise fold honors (versions at or below a key's latest
     * tombstone are dead) — without the flag the input must be
     * tombstone-free. */
-  private[sources] def resolveVersions(m: ObjectNode, all: DataFrame,
+  private[sources] def resolveVersions(m: Manifest, all: DataFrame,
       tombstones: Boolean = false): DataFrame = {
-    val pk = primaryKey(m)
-    val names = currentFields(m).map(_.name)
-    optionsOf(m).mergeEngine match {
+    val pk = m.primaryKey
+    val names = m.currentFields.map(_.name)
+    m.options.mergeEngine match {
       case "deduplicate" | "first-row" =>
-        val earliest = optionsOf(m).mergeEngine == "first-row"
+        val earliest = m.options.mergeEngine == "first-row"
         val w = org.apache.spark.sql.expressions.Window
           .partitionBy(pk.map(col): _*)
           .orderBy(if (earliest) col("__ord").asc else col("__ord").desc)
@@ -1890,7 +1708,7 @@ class GraftCatalog(private[sources] val spark: SparkSession,
     * incremental DV rebuild's base scan and the field-wise lookup
     * producer's before-image read. */
   private[sources] def keyBoundPrunedUnion(schema: String, table: String,
-      m: ObjectNode, entries: Seq[FileEntry], keyed: DataFrame,
+      m: Manifest, entries: Seq[FileEntry], keyed: DataFrame,
       pk: Seq[String], withMeta: Boolean = false): Option[DataFrame] = {
     import org.apache.spark.sql.functions.{max => fmax, min => fmin}
     val bounds = keyed.select(pk.flatMap(k => Seq(
@@ -1928,11 +1746,11 @@ class GraftCatalog(private[sources] val spark: SparkSession,
     * [[resolveFrames]] (snapshot reads) and the write-time `lookup`
     * changelog producer (which folds a staged patch batch onto the
     * touched keys' resolved images). */
-  private def fieldwiseFold(m: ObjectNode, all0: DataFrame,
+  private def fieldwiseFold(m: Manifest, all0: DataFrame,
       engine: String, tombstones: Boolean = false,
       retracts: Boolean = false): DataFrame = {
-    val pk = primaryKey(m)
-    val names = currentFields(m).map(_.name)
+    val pk = m.primaryKey
+    val names = m.currentFields.map(_.name)
     // remove-record-on-delete (aggregation, r16): versions at or below a
     // key's latest tombstone ordinal are dead — the key re-aggregates
     // from later versions only, and disappears when none follow. The
@@ -1962,8 +1780,8 @@ class GraftCatalog(private[sources] val spark: SparkSession,
         org.apache.spark.sql.functions.when(col(f).isNotNull,
           org.apache.spark.sql.functions.struct(col("__ord").as("o"), col(f).as("v"))))
         .getField("v")
-    val cur = currentFields(m)
-    val opts = optionsOf(m)
+    val cur = m.currentFields
+    val opts = m.options
     // sequence-group routing (partial-update only): member field →
     // its group's sequence column; the seq column routes to itself
     val groups = if (engine == "partial-update") opts.sequenceGroups
@@ -2153,8 +1971,8 @@ class GraftCatalog(private[sources] val spark: SparkSession,
   /** Ops whose semantics assume latest-version-wins (tombstones,
     * changelogs, in-range merges) are deduplicate-only — same restriction
     * Paimon places on the field-wise merge engines. */
-  private[sources] def requireDeduplicate(m: ObjectNode, table: String, op: String): Unit = {
-    val engine = optionsOf(m).mergeEngine
+  private[sources] def requireDeduplicate(m: Manifest, table: String, op: String): Unit = {
+    val engine = m.options.mergeEngine
     require(engine == "deduplicate",
       s"$op on $table requires merge-engine=deduplicate, table uses $engine")
   }
@@ -2164,9 +1982,9 @@ class GraftCatalog(private[sources] val spark: SparkSession,
     * `<engine>.remove-record-on-delete=true` option (r16) — the fold
     * re-folds each key from the versions after its latest tombstone,
     * so a whole-row delete is well-defined there too. */
-  private[sources] def requireTombstoneCapable(m: ObjectNode, table: String,
+  private[sources] def requireTombstoneCapable(m: Manifest, table: String,
       op: String): Unit = {
-    val opts = optionsOf(m) // removeRecordOnDelete: aggregation/partial-update only
+    val opts = m.options // removeRecordOnDelete: aggregation/partial-update only
     require(opts.mergeEngine == "deduplicate" || opts.removeRecordOnDelete,
       s"$op on $table requires merge-engine=deduplicate (or a field-wise " +
         s"engine with ${opts.mergeEngine}.remove-record-on-delete=true), " +
@@ -2178,7 +1996,7 @@ class GraftCatalog(private[sources] val spark: SparkSession,
     * ONE ordinal, which that resolution would tie arbitrarily — refuse
     * at definition time (consuming a changelog INTO a cross-partition
     * table via applyChangelog remains supported). */
-  private[sources] def refuseCrossPartition(m: ObjectNode, table: String, op: String): Unit =
+  private[sources] def refuseCrossPartition(m: Manifest, table: String, op: String): Unit =
     require(!crossPartition(m),
       s"$op on $table is not supported for cross-partition upsert tables " +
         "(partition not in primary key): a move's tombstone and new image " +
@@ -2200,19 +2018,19 @@ class GraftCatalog(private[sources] val spark: SparkSession,
    * (a 100 TB table with 4096 buckets merges ~25 GB per task of raw
    * input, and only live key versions are retained in the map).
    */
-  private[sources] def bucketedResolve(schema: String, table: String, m: ObjectNode,
+  private[sources] def bucketedResolve(schema: String, table: String, m: Manifest,
       entries: Seq[FileEntry], n: Int,
       onlyBuckets: Option[Seq[Int]] = None): Option[DataFrame] = {
-    val curFields = currentFields(m)
+    val curFields = m.currentFields
     val outSchema = StructType(curFields.map(f =>
       StructField(f.name, TypeMapping.toSparkType(f.trinoType))))
-    val pk = primaryKey(m)
+    val pk = m.primaryKey
     // Enumerate the buckets that actually EXIST in this snapshot's dirs
     // rather than trusting the current `bucket` option: after a
     // rescaleBucket, older snapshots keep their original layout (a
     // different k range) and must resolve under it — the option only
     // describes the CURRENT snapshot. O(dirs) metadata listings.
-    val partCols = partitionColumns(m)
+    val partCols = m.partitionColumns
     // `__bucket=k` leaves sit directly under a flat dir, or nested below
     // `col=value` partition dirs (data dirs of a partitioned bucketed
     // table; tombstone dirs stay flat — their files CARRY the partition
@@ -2276,7 +2094,7 @@ class GraftCatalog(private[sources] val spark: SparkSession,
           mergeKey.map(inSchema.fieldIndex).toArray,
           inSchema.fieldIndex("__ord"), inSchema.fieldIndex("__del"),
           curFields.map(f => inSchema.fieldIndex(f.name)).toArray, outSchema,
-          optionsOf(m).sequenceField.map(inSchema.fieldIndex).getOrElse(-1)))
+          m.options.sequenceField.map(inSchema.fieldIndex).getOrElse(-1)))
       }
     }
     if (legs.isEmpty) None else Some(unionAllByName(legs))
@@ -2289,28 +2107,7 @@ class GraftCatalog(private[sources] val spark: SparkSession,
       snapshotId: Option[Long] = None,
       asOfMillis: Option[Long] = None): Option[Long] = {
     val m = readManifest(schema, table)
-    chooseSnapshot(m, schema, table, snapshotId, asOfMillis)
-      .map(_.get("id").asLong())
-  }
-
-  /** Snapshot selection shared by reads and the SQL catalog: explicit
-    * id/timestamp beats session defaults beats latest. */
-  private[sources] def chooseSnapshot(m: ObjectNode, schema: String, table: String,
-      snapshotId: Option[Long], asOfMillis: Option[Long]): Option[JsonNode] = {
-    val snaps = m.get("snapshots").asInstanceOf[ArrayNode]
-    val sessionSnap = spark.conf.getOption(GraftOptions.ScanSnapshotId).map(_.toLong)
-    val sessionAsOf = spark.conf.getOption(GraftOptions.ScanTimestampMillis).map(_.toLong)
-    val wantId = snapshotId.orElse(sessionSnap)
-    val wantTs = asOfMillis.orElse(sessionAsOf)
-    val all = (0 until snaps.size()).map(snaps.get)
-    (wantId, wantTs) match {
-      case (Some(id), _) =>
-        val s = all.find(_.get("id").asLong() == id)
-        require(s.isDefined, s"no snapshot $id for $schema.$table")
-        s
-      case (None, Some(ts)) => all.reverse.find(_.get("timestampMillis").asLong() <= ts)
-      case _ => all.lastOption
-    }
+    m.chooseSnapshot(snapshotId, asOfMillis, spark.conf, s"$schema.$table").map(_.id)
   }
 
   /** File entries of the selected snapshot (empty before any commit) —
@@ -2319,40 +2116,26 @@ class GraftCatalog(private[sources] val spark: SparkSession,
       snapshotId: Option[Long] = None,
       asOfMillis: Option[Long] = None): Seq[FileEntry] = {
     val m = readManifest(schema, table)
-    chooseSnapshot(m, schema, table, snapshotId, asOfMillis)
-      .map(filesOf).getOrElse(Seq.empty)
+    m.chooseSnapshot(snapshotId, asOfMillis, spark.conf, s"$schema.$table")
+      .map(_.files).getOrElse(Seq.empty)
   }
 
   /** Current schema version number (increments per column DDL). */
   def currentSchemaVersionOf(schema: String, table: String): Int =
-    readManifest(schema, table).get("currentSchemaVersion").asInt()
-
-  // ---- manifest plumbing -------------------------------------------------
+    readManifest(schema, table).currentSchemaVersion
 
   /** Partition columns declared at create time (empty for old manifests). */
   def partitionColumnsOf(schema: String, table: String): Seq[String] =
-    partitionColumns(readManifest(schema, table))
+    readManifest(schema, table).partitionColumns
 
   /** Primary-key columns declared at create time (empty = append-only). */
   def primaryKeyOf(schema: String, table: String): Seq[String] =
-    primaryKey(readManifest(schema, table))
+    readManifest(schema, table).primaryKey
 
-  private[sources] def primaryKey(m: ObjectNode): Seq[String] = m.get("primaryKey") match {
-    case arr: ArrayNode => (0 until arr.size()).map(arr.get(_).asText())
-    case _ => Seq.empty
-  }
-
-  /** The table's options, parsed once from the manifest (typed view of
-    * the [[TableOptions]] registry). */
+  /** The table's options, parsed from the manifest (typed view of the
+    * [[TableOptions]] registry). */
   def optionsOf(schema: String, table: String): TableOptions =
-    optionsOf(readManifest(schema, table))
-
-  private[sources] def optionsOf(m: ObjectNode): TableOptions = {
-    val out = mutable.LinkedHashMap[String, String]()
-    Option(m.get("options")).foreach(o =>
-      o.fieldNames().forEachRemaining(k => out += k -> o.get(k).asText()))
-    TableOptions(out.toMap)
-  }
+    readManifest(schema, table).options
 
   /** Bucket count of a bucketed PK table (the `bucket` table option). */
   def bucketCountOf(schema: String, table: String): Option[Int] =
@@ -2384,8 +2167,8 @@ class GraftCatalog(private[sources] val spark: SparkSession,
   /** Newest-version-first window ordering for per-key resolution: the
     * sequence field (when declared) beats the commit ordinal; NULL
     * sequence sorts smallest, so `desc_nulls_last`. */
-  private[sources] def newestFirst(m: ObjectNode): Seq[org.apache.spark.sql.Column] =
-    optionsOf(m).sequenceField.map(f => col(f).desc_nulls_last).toSeq :+ col("__ord").desc
+  private[sources] def newestFirst(m: Manifest): Seq[org.apache.spark.sql.Column] =
+    m.options.sequenceField.map(f => col(f).desc_nulls_last).toSeq :+ col("__ord").desc
 
   /** The bucket a primary-key tuple hashes to — [[BucketSelect.bucketOf]]
     * over the key columns, the same expression on the write path
@@ -2402,13 +2185,13 @@ class GraftCatalog(private[sources] val spark: SparkSession,
   def bucketFor(schema: String, table: String, values: Seq[Any]): Int = {
     import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
     val m = readManifest(schema, table)
-    val pk = primaryKey(m)
-    val n = optionsOf(m).bucket.getOrElse(
+    val pk = m.primaryKey
+    val n = m.options.bucket.getOrElse(
       throw new IllegalArgumentException(s"$schema.$table is not bucketed"))
     require(n != -1, s"$schema.$table is a dynamic-bucket table — " +
       "key→bucket is the index's, not a hash: use dynamicBucketFor")
     require(values.length == pk.length, s"expected ${pk.length} pk values")
-    val cur = currentFields(m).map(f => f.name -> f.trinoType).toMap
+    val cur = m.currentFields.map(f => f.name -> f.trinoType).toMap
     val tz = Some(spark.sessionState.conf.sessionLocalTimeZone)
     BucketSelect.bucketOfLiterals(pk.zip(values).map { case (c, v) =>
       Cast(Literal(v), TypeMapping.toSparkType(cur(c)), tz)
@@ -2421,22 +2204,16 @@ class GraftCatalog(private[sources] val spark: SparkSession,
     * this same manifest read. The `bucket` option describes the head's
     * layout only (an older snapshot may predate a rescaleBucket), so time
     * travel never selects. None = read every bucket. */
-  private[sources] def selectBuckets(m: ObjectNode, chosen: Option[JsonNode],
+  private[sources] def selectBuckets(m: Manifest, chosen: Option[Manifest.Snapshot],
       pred: org.apache.spark.sql.catalyst.expressions.Expression): Option[Seq[Int]] = {
-    val pk = primaryKey(m)
-    optionsOf(m).bucket match {
-      case Some(n) if n >= 1 && pk.nonEmpty && isHead(m, chosen) =>
-        val types = currentFields(m)
+    val pk = m.primaryKey
+    m.options.bucket match {
+      case Some(n) if n >= 1 && pk.nonEmpty && m.isHead(chosen) =>
+        val types = m.currentFields
           .map(f => f.name -> TypeMapping.toSparkType(f.trinoType)).toMap
         BucketSelect.select(pk.map(c => c -> types(c)), n, pred)
       case _ => None
     }
-  }
-
-  private def isHead(m: ObjectNode, chosen: Option[JsonNode]): Boolean = {
-    val snaps = m.get("snapshots").asInstanceOf[ArrayNode]
-    chosen.exists(s => snaps.size() > 0 &&
-      s.get("id").asLong() == snaps.get(snaps.size() - 1).get("id").asLong())
   }
 
   /** Whether a read at `snapshotId` / `asOfMillis` (or the session's scan
@@ -2445,7 +2222,7 @@ class GraftCatalog(private[sources] val spark: SparkSession,
   private[graft] def readsHead(schema: String, table: String,
       snapshotId: Option[Long], asOfMillis: Option[Long]): Boolean = {
     val m = readManifest(schema, table)
-    isHead(m, chooseSnapshot(m, schema, table, snapshotId, asOfMillis))
+    m.isHead(m.chooseSnapshot(snapshotId, asOfMillis, spark.conf, s"$schema.$table"))
   }
 
   /**
@@ -2460,16 +2237,16 @@ class GraftCatalog(private[sources] val spark: SparkSession,
       snapshotId: Option[Long] = None,
       asOfMillis: Option[Long] = None): DataFrame = {
     val m = readManifest(schema, table)
-    val n = optionsOf(m).bucket.getOrElse(
+    val n = m.options.bucket.getOrElse(
       throw new IllegalArgumentException(s"$schema.$table is not bucketed"))
     // dynamic tables (n == -1) have no static range — any existing
     // bucket id resolves, an unassigned one reads empty
     require(bucket >= 0 && (n == -1 || bucket < n),
       s"bucket $bucket out of range [0, $n)")
-    val target = StructType(currentFields(m).map(f =>
+    val target = StructType(m.currentFields.map(f =>
       StructField(f.name, TypeMapping.toSparkType(f.trinoType))))
-    chooseSnapshot(m, schema, table, snapshotId, asOfMillis)
-      .flatMap(s => bucketSlice(schema, table, m, filesOf(s), n, Seq(bucket)))
+    m.chooseSnapshot(snapshotId, asOfMillis, spark.conf, s"$schema.$table")
+      .flatMap(s => bucketSlice(schema, table, m, s.files, n, Seq(bucket)))
       .getOrElse(spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], target))
   }
@@ -2478,7 +2255,7 @@ class GraftCatalog(private[sources] val spark: SparkSession,
     * restricted to those legs when deletion vectors are live (a point
     * lookup on a DV table reads 1/N of the data too), else the bucketed
     * per-leg merge. None = nothing to read. */
-  private def bucketSlice(schema: String, table: String, m: ObjectNode,
+  private def bucketSlice(schema: String, table: String, m: Manifest,
       entries: Seq[FileEntry], n: Int, buckets: Seq[Int]): Option[DataFrame] =
     if (entries.exists(_.kind == "dv"))
       pkDvResolve(schema, table, m, entries, onlyBuckets = Some(buckets))
@@ -2506,18 +2283,19 @@ class GraftCatalog(private[sources] val spark: SparkSession,
       joinType: String = "inner"): DataFrame = {
     require(Seq("inner", "left").contains(joinType),
       s"bucketedJoin supports inner/left, got $joinType")
-    val n = bucketCountOf(schema, leftTable).getOrElse(
+    val (lm, rm) = (readManifest(schema, leftTable), readManifest(schema, rightTable))
+    val n = lm.options.bucket.getOrElse(
       throw new IllegalArgumentException(s"$schema.$leftTable is not bucketed"))
-    val rn = bucketCountOf(schema, rightTable).getOrElse(
+    val rn = rm.options.bucket.getOrElse(
       throw new IllegalArgumentException(s"$schema.$rightTable is not bucketed"))
     require(n >= 1 && rn >= 1, "dynamic-bucket tables have no static " +
       "hash contract — co-located join requires fixed bucket counts")
     require(n == rn, s"bucket counts differ: $n vs $rn — co-located join " +
       "requires identical bucketing")
-    val lSchema = currentSchema(schema, leftTable)
-    val rSchema = currentSchema(schema, rightTable)
-    val lPk = primaryKeyOf(schema, leftTable)
-    val rPk = primaryKeyOf(schema, rightTable)
+    val lSchema = currentSchema(lm)
+    val rSchema = currentSchema(rm)
+    val lPk = lm.primaryKey
+    val rPk = rm.primaryKey
     require(lPk.length == rPk.length &&
       lPk.map(lSchema(_).dataType) == rPk.map(rSchema(_).dataType),
       "primary keys are not hash-compatible (column count/types must match)")
@@ -2574,15 +2352,16 @@ class GraftCatalog(private[sources] val spark: SparkSession,
     * of having its rows overwritten by the stale image. */
   private def upsertFrom(schema: String, table: String, df: DataFrame,
       basis: Option[Long]): Long = {
-    require(primaryKeyOf(schema, table).nonEmpty,
-      s"$schema.$table has no primary key — use append")
+    val m = readManifest(schema, table)
+    val pk = m.primaryKey
+    require(pk.nonEmpty, s"$schema.$table has no primary key — use append")
     // rowkind.field (Paimon): the batch carries its own CDC kinds — `-D`
     // and `-U` rows retract their keys (tombstones, sequence-aware via
     // mergeCommit), everything else upserts, in ONE atomic snapshot.
     // The batch must be key-unique across the two sides (mergeCommit's
     // contract — a key both upserted and retracted in one batch has no
     // defined winner at a shared ordinal).
-    val opts = optionsOf(schema, table)
+    val opts = m.options
     opts.rowkindField match {
       case Some(rk) if df.columns.exists(_.equalsIgnoreCase(rk)) =>
         val kind = org.apache.spark.sql.functions.upper(col(rk))
@@ -2609,8 +2388,6 @@ class GraftCatalog(private[sources] val spark: SparkSession,
           // element (see RetractableAggs). With remove-record-on-delete,
           // `-D` rows instead tombstone their keys outright, paired with
           // the data dir under ONE snapshot ordinal.
-          val m = readManifest(schema, table)
-          val pk = primaryKey(m)
           val rrod = opts.removeRecordOnDelete
           val isDel = kind === "-D" || kind === "D"
           val retracts = if (rrod) df.filter(kind === "-U")
@@ -2624,7 +2401,7 @@ class GraftCatalog(private[sources] val spark: SparkSession,
             // fold cannot execute (e.g. collect over an unorderable
             // element type, whose array_position removal would throw)
             // would poison the table with a committed batch.
-            val bad = currentFields(m)
+            val bad = m.currentFields
               .filterNot(fd => pk.contains(fd.name))
               .filterNot(_.name.equalsIgnoreCase(rk))
               .filterNot(fd => GraftCatalog.retractableField(
@@ -2665,7 +2442,6 @@ class GraftCatalog(private[sources] val spark: SparkSession,
           // tombstone their keys (the fold re-patches from later
           // versions only); `-U` has no retraction on this engine —
           // a patch cannot be un-applied — so it refuses loudly.
-          val m = readManifest(schema, table)
           require(opts.removeRecordOnDelete,
             s"$schema.$table: rowkind.field on partial-update requires " +
               "partial-update.remove-record-on-delete=true or " +
@@ -2679,7 +2455,6 @@ class GraftCatalog(private[sources] val spark: SparkSession,
           val dels = df.filter(isRetract)
           if (dels.isEmpty) commit(schema, table, Seq(Leg("", "data", ups)), basis = basis)
           else {
-            val pk = primaryKey(m)
             require(ups.join(dels, pk, "left_semi").isEmpty,
               "a key cannot be both written and deleted in one batch")
             commit(schema, table, Seq(Leg("", "data", ups),
@@ -2694,7 +2469,6 @@ class GraftCatalog(private[sources] val spark: SparkSession,
           // drop retractions whose key the batch also upserts (mirrors
           // applyChangelog's treatment of `-U`) — they would otherwise
           // trip mergeCommit's key-disjoint contract.
-          val pk = primaryKeyOf(schema, table)
           val dels = df.filter(isRetract).join(ups, pk, "left_anti")
           if (dels.isEmpty) commit(schema, table, Seq(Leg("", "data", ups)), basis = basis)
           else mergeCommit(schema, table, ups, dels, basis = basis)
@@ -2715,9 +2489,9 @@ class GraftCatalog(private[sources] val spark: SparkSession,
   def mergeCommit(schema: String, table: String, upserts: DataFrame,
       deleteKeys: DataFrame, streamBatchId: Option[Long] = None,
       basis: Option[Long] = None): Long = {
-    val pk = primaryKeyOf(schema, table)
-    require(pk.nonEmpty, s"$schema.$table has no primary key — MERGE needs one")
     val m = readManifest(schema, table)
+    val pk = m.primaryKey
+    require(pk.nonEmpty, s"$schema.$table has no primary key — MERGE needs one")
     requireTombstoneCapable(m, s"$schema.$table", "mergeCommit")
     // Both dirs share one ordinal, so an overlapping key would resolve to
     // an arbitrary winner at read time — enforce the contract here (a
@@ -2731,13 +2505,13 @@ class GraftCatalog(private[sources] val spark: SparkSession,
     // The fetched sequences derive from this head, so the commit carries
     // its version: a concurrent upsert of a deleted key aborts the merge
     // instead of outranking a tombstone that carries a stale sequence.
-    val (delKeys, fetchBasis) = optionsOf(m).sequenceField match {
+    val (delKeys, fetchBasis) = m.options.sequenceField match {
       case Some(sf) if deleteKeys.columns.contains(sf) =>
         (deleteKeys.select((pk :+ sf).map(col): _*), None)
       case Some(sf) =>
         (headImage(schema, table, m)
           .join(deleteKeys.select(pk.map(col): _*), pk, "left_semi")
-          .select((pk :+ sf).map(col): _*), Some(commitVersion(m)))
+          .select((pk :+ sf).map(col): _*), Some(m.commitVersion))
       case None => (deleteKeys.select(pk.map(col): _*), None)
     }
     commit(schema, table,
@@ -2760,17 +2534,18 @@ class GraftCatalog(private[sources] val spark: SparkSession,
    */
   def applyChangelog(schema: String, table: String, batch: DataFrame,
       batchId: Option[Long] = None): Option[Long] = {
-    val pk = primaryKeyOf(schema, table)
+    val m = readManifest(schema, table)
+    val pk = m.primaryKey
     require(pk.nonEmpty, s"$schema.$table has no primary key — changelogs " +
       "apply to PK tables (append-only consumers just append)")
     require(batch.columns.contains(RowKindCol),
       s"changelog batch needs a $RowKindCol column")
-    if (batchId.exists(_ <= lastStreamBatchId(schema, table))) return None
+    if (batchId.exists(_ <= m.lastStreamBatchId)) return None
     // Paimon's `ignore-delete`: retractions are silently DROPPED and the
     // upserts land as a plain data commit — which also lets field-wise
     // merge engines (partial-update patch feeds) consume changelogs,
     // since no tombstone path is needed.
-    if (optionsOf(schema, table).ignoreDelete) {
+    if (m.options.ignoreDelete) {
       val ups = batch.filter(col(RowKindCol).isin("+I", "+U")).drop(RowKindCol)
       return Some(commit(schema, table, Seq(Leg("", "data", ups)),
         streamBatchId = batchId))
@@ -2779,7 +2554,7 @@ class GraftCatalog(private[sources] val spark: SparkSession,
     // `-D` rows keep the sequence column when the replica declares one:
     // a stale source tombstone then loses the replica's own version race
     // instead of clobbering newer state — out-of-order CDC convergence.
-    val seqCols = sequenceFieldOf(schema, table).filter(batch.columns.contains).toSeq
+    val seqCols = m.options.sequenceField.filter(batch.columns.contains).toSeq
     val deletes = batch.filter(col(RowKindCol) === "-D")
       .select((pk ++ seqCols).map(col): _*)
     Some(mergeCommit(schema, table, upserts, deletes, streamBatchId = batchId))
@@ -2815,8 +2590,8 @@ class GraftCatalog(private[sources] val spark: SparkSession,
   def deleteWhere(schema: String, table: String,
       condition: org.apache.spark.sql.Column): Long = {
     val m = readManifest(schema, table)
-    val pk = primaryKey(m)
-    if (pk.isEmpty && optionsOf(m).deletionVectors)
+    val pk = m.primaryKey
+    if (pk.isEmpty && m.options.deletionVectors)
       return deleteWhereDv(schema, table, m, condition)
     require(pk.nonEmpty, s"$schema.$table has no primary key — row-level " +
       "delete needs one (append-only tables: set deletion-vectors=true, " +
@@ -2827,13 +2602,13 @@ class GraftCatalog(private[sources] val spark: SparkSession,
     // upsert with a HIGHER sequence legitimately resurrects the key.
     // Cross-partition tables: carry the victim's partition columns too
     // (its current residence, straight from the image being filtered).
-    val extra = optionsOf(m).sequenceField.toSeq ++
-      (if (crossPartition(m)) partitionColumns(m) else Seq.empty)
+    val extra = m.options.sequenceField.toSeq ++
+      (if (crossPartition(m)) m.partitionColumns else Seq.empty)
     val victims = headImage(schema, table, m).filter(condition)
       .select((pk ++ extra).map(col): _*)
     commit(schema, table,
       Seq(Leg("", "delete", victims, clustered = headMergesPerBucket(m))),
-      basis = Some(commitVersion(m)))
+      basis = Some(m.commitVersion))
   }
 
   /** Tombstone-commit the given victim KEYS (PK tables; the SQL
@@ -2842,22 +2617,22 @@ class GraftCatalog(private[sources] val spark: SparkSession,
   private[graft] def deleteRowsByKey(schema: String, table: String,
       victims: DataFrame): Long = {
     val m = readManifest(schema, table)
-    val pk = primaryKey(m)
+    val pk = m.primaryKey
     require(pk.nonEmpty, s"$schema.$table has no primary key")
     requireTombstoneCapable(m, s"$schema.$table", "deleteWhere")
     // sequence.field tables: fetch each victim's current sequence value
     // (one delta-sized semi join) so the tombstone wins the version race.
     // Cross-partition tables: fetch each victim's current residence the
     // same way (partition values must ride the tombstone).
-    val keys = (optionsOf(m).sequenceField,
-        if (crossPartition(m)) partitionColumns(m) else Seq.empty) match {
+    val keys = (m.options.sequenceField,
+        if (crossPartition(m)) m.partitionColumns else Seq.empty) match {
       case (None, Seq()) => victims.select(pk.map(col): _*)
       case (sf, parts) =>
         headImage(schema, table, m).join(victims.select(pk.map(col): _*), pk, "left_semi")
           .select((pk ++ sf.toSeq ++ parts).map(col): _*)
     }
     commit(schema, table, Seq(Leg("", "delete", keys)),
-      basis = Some(commitVersion(m)))
+      basis = Some(m.commitVersion))
   }
 
 
@@ -2874,11 +2649,11 @@ class GraftCatalog(private[sources] val spark: SparkSession,
     // head's version, so a concurrent upsert of an updated key aborts
     // the update rather than being overwritten by the stale image.
     val m = readManifest(schema, table)
-    val pk = primaryKey(m)
-    if (pk.isEmpty && optionsOf(m).deletionVectors)
+    val pk = m.primaryKey
+    if (pk.isEmpty && m.options.deletionVectors)
       return updateWhereDv(schema, table, condition, assignments)
     require(pk.nonEmpty, s"$schema.$table has no primary key — use overwrite")
-    val cur = currentSchema(schema, table)
+    val cur = currentSchema(m)
     assignments.keys.foreach { c =>
       require(cur.fieldNames.contains(c), s"unknown column $c")
       // Assigning a PK column would upsert under the NEW key and leave the
@@ -2893,300 +2668,20 @@ class GraftCatalog(private[sources] val spark: SparkSession,
     val updated = headImage(schema, table, m).filter(condition)
       .select(cur.fieldNames.toSeq.map(c =>
         assignments.get(c).map(_.as(c)).getOrElse(col(c))): _*)
-    upsertFrom(schema, table, updated, basis = Some(commitVersion(m)))
+    upsertFrom(schema, table, updated, basis = Some(m.commitVersion))
   }
 
 
-
-  private[sources] def partitionColumns(m: ObjectNode): Seq[String] = m.get("partitions") match {
-    case arr: ArrayNode => (0 until arr.size()).map(arr.get(_).asText())
-    case _ => Seq.empty
-  }
-
-  private[sources] def currentFields(m: ObjectNode): Seq[FieldInfo] =
-    schemaVersions(m)(m.get("currentSchemaVersion").asInt())
-
-  private[sources] def schemaVersions(m: ObjectNode): Map[Int, Seq[FieldInfo]] = {
-    val schemas = m.get("schemas").asInstanceOf[ArrayNode]
-    (0 until schemas.size()).map { i =>
-      val s = schemas.get(i)
-      val fields = s.get("fields").asInstanceOf[ArrayNode]
-      s.get("version").asInt() -> (0 until fields.size()).map { j =>
-        val f = fields.get(j)
-        FieldInfo(f.get("id").asInt(), f.get("name").asText(), f.get("type").asText(),
-          if (f.has("comment")) Some(f.get("comment").asText()) else None)
-      }
-    }.toMap
-  }
 
   /** Zero-row DataFrame with the table's current schema. */
-  private[sources] def emptyFrame(m: ObjectNode): DataFrame =
+  private[sources] def emptyFrame(m: Manifest): DataFrame =
     spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      StructType(currentFields(m).map(f =>
+      StructType(m.currentFields.map(f =>
         StructField(f.name, TypeMapping.toSparkType(f.trinoType)))))
 
-  private def entryOf(e: JsonNode): FileEntry =
-    FileEntry(e.get("dir").asText(), e.get("schemaVersion").asInt(),
-      if (e.has("kind")) e.get("kind").asText() else "data",
-      if (e.has("xb")) {
-        val xa = e.get("xb").asInstanceOf[ArrayNode]
-        (0 until xa.size()).map(xa.get(_).asInt())
-      } else Nil,
-      retract = e.has("rk") && e.get("rk").asBoolean())
-
-  private[sources] def filesOf(snap: JsonNode): Seq[FileEntry] = {
-    val fArr = snap.get("files").asInstanceOf[ArrayNode]
-    (0 until fArr.size()).map(i => entryOf(fArr.get(i)))
-  }
-
-  /**
-   * Entries ADDED by snapshot `all(i)` relative to its immediate
-   * predecessor — the per-snapshot delta the changelog scan, the
-   * `$snapshots` view, and the rows rate limit all want. Additive
-   * commits carry it verbatim in their delta-form `added` field
-   * (O(delta), no diff at all); full-form entries (first snapshot,
-   * overwrite/compact, entries re-materialized after expiration, legacy
-   * manifests) fall back to the positional set difference.
-   */
-  private[sources] def addedEntries(all: scala.collection.Seq[JsonNode], i: Int): Seq[FileEntry] = {
-    val s = all(i)
-    val delta = s match {
-      case o: ObjectNode if o.has("added") && o.has("baseId") && i > 0 &&
-          o.get("baseId").asLong() == all(i - 1).get("id").asLong() =>
-        val aArr = o.get("added").asInstanceOf[ArrayNode]
-        Some((0 until aArr.size()).map(j => entryOf(aArr.get(j))))
-      case _ => None
-    }
-    delta.getOrElse {
-      val prevDirs = if (i == 0) Set.empty[String]
-        else filesOf(all(i - 1)).map(_.dir).toSet
-      filesOf(s).filterNot(fe => prevDirs.contains(fe.dir))
-    }
-  }
-
-  /** `manifest-v<N>.json` → N. */
-  private[sources] def manifestFileVersion(name: String): Option[Long] =
-    if (name.startsWith("manifest-v") && name.endsWith(".json"))
-      name.stripPrefix("manifest-v").stripSuffix(".json").toLongOption
-    else None
-
-  /**
-   * Highest committed manifest file of a table. Manifests are IMMUTABLE
-   * versioned files (`manifest-v<N>.json`, Paimon's snapshot-N model):
-   * nothing is ever rewritten in place, so readers can never observe a
-   * torn or stale-checksum manifest — they list and open the max
-   * version. A pre-versioning `manifest.json` is honored as fallback.
-   */
-  private def currentManifestFile(schema: String, table: String)
-      : Option[org.apache.hadoop.fs.FileStatus] = {
-    val dir = tablePath(schema, table)
-    val listed =
-      try fs.listStatus(dir)
-      catch { case _: java.io.FileNotFoundException => return None }
-    val versioned = listed.flatMap(st =>
-      manifestFileVersion(st.getPath.getName).map(v => (st, v)))
-    if (versioned.nonEmpty) Some(versioned.maxBy(_._2)._1)
-    else {
-      val legacy = manifestPath(schema, table)
-      try Some(fs.getFileStatus(legacy))
-      catch { case _: java.io.FileNotFoundException => None }
-    }
-  }
-
-  private[sources] def tableManifestExists(schema: String, table: String): Boolean =
-    currentManifestFile(schema, table).isDefined
-
-  private def fcFor(p: Path): org.apache.hadoop.fs.FileContext =
+  private[sources] def fcFor(p: Path): org.apache.hadoop.fs.FileContext =
     org.apache.hadoop.fs.FileContext.getFileContext(
       fs.makeQualified(p).toUri, spark.sparkContext.hadoopConfiguration)
-
-  private[sources] def readManifest(schema: String, table: String): ObjectNode = {
-    val st = currentManifestFile(schema, table)
-    require(st.isDefined, s"no table $schema.$table")
-    val p = st.get.getPath
-    // Heads are IMMUTABLE versioned files landed by CAS (a version path
-    // is written exactly once per table lifetime — rollback/expiration
-    // bump the version, never rewrite one), so caching the
-    // parsed+inflated node is coherent; freshness comes from the listing
-    // in currentManifestFile, which still runs per read. The key carries
-    // mtime+length and drop/rename purge the table's prefix, so a
-    // DROPPED-then-recreated table (whose numbering restarts at v1 on
-    // the same path) can never serve the old table's head. Callers
-    // MUTATE the returned node (commit's land, evolveSchema), so the
-    // cache hands out deep copies — still cheaper than bytes + parse +
-    // inflate, and on an object store it saves the GET entirely.
-    val key = s"${fs.makeQualified(p)}#${st.get.getModificationTime}#${st.get.getLen}"
-    val cache = GraftCatalog.headCache
-    val cached = cache.get(key)
-    val m = if (cached != null) cached
-    else {
-      val in = fcFor(p).open(fs.makeQualified(p))
-      val parsed = try mapper.readTree(in).asInstanceOf[ObjectNode] finally in.close()
-      inflateSnapshots(parsed)
-      GraftCatalog.headCacheLoads.incrementAndGet()
-      if (cache.size > GraftCatalog.HeadCacheCap) cache.clear()
-      cache.put(key, parsed)
-      parsed
-    }
-    m.deepCopy[ObjectNode]()
-  }
-
-  /**
-   * Materialize each snapshot's full file list from the head's DELTA
-   * form: an additive snapshot serializes as `{baseId, added}` (its base
-   * is the immediately preceding snapshot; writeManifest guarantees
-   * this by materializing any entry whose base was expired away), so the
-   * in-memory shape every reader sees is identical to the legacy full
-   * form — `files` arrays all the way — while the serialized head stays
-   * O(total dirs). Materialization shares entry NODES with the base
-   * (reference appends, no copies), so inflating costs less than the
-   * full-form JSON parse it replaces. Both `baseId`/`added` and the
-   * materialized `files` stay on the node for the write-side round trip.
-   */
-  private def inflateSnapshots(m: ObjectNode): Unit = {
-    if (!m.has("snapshots")) return
-    val snaps = m.get("snapshots").asInstanceOf[ArrayNode]
-    var prev: ObjectNode = null
-    (0 until snaps.size()).foreach { i =>
-      val s = snaps.get(i).asInstanceOf[ObjectNode]
-      if (!s.has("files")) {
-        require(s.has("baseId") && s.has("added") && prev != null &&
-          s.get("baseId").asLong() == prev.get("id").asLong(),
-          s"corrupt manifest: snapshot ${s.path("id")} has neither a " +
-            "full file list nor a delta resolvable against its " +
-            "predecessor")
-        val full = mapper.createArrayNode()
-        val prevArr = prev.get("files").asInstanceOf[ArrayNode]
-        // Per-bucket compaction delta: retire these buckets on every
-        // inherited entry. Entries are DEEP-COPIED before mutation —
-        // prevArr's nodes are shared with the predecessor's own list.
-        val xb: Seq[Int] = if (s.has("xbuckets")) {
-          val xArr = s.get("xbuckets").asInstanceOf[ArrayNode]
-          (0 until xArr.size()).map(xArr.get(_).asInt())
-        } else Nil
-        def inherit(e: JsonNode): JsonNode =
-          if (xb.isEmpty) e
-          else {
-            val c = e.deepCopy[JsonNode]().asInstanceOf[ObjectNode]
-            val cur = if (c.has("xb")) {
-              val xa = c.get("xb").asInstanceOf[ArrayNode]
-              (0 until xa.size()).map(xa.get(_).asInt())
-            } else Nil
-            val merged = (cur ++ xb).distinct.sorted
-            val xa = c.putArray("xb"); merged.foreach(xa.add)
-            c
-          }
-        if (s.has("removed")) {
-          val rArr = s.get("removed").asInstanceOf[ArrayNode]
-          val rm = (0 until rArr.size()).map(rArr.get(_).asText()).toSet
-          (0 until prevArr.size()).foreach { j =>
-            val e = prevArr.get(j)
-            if (!rm.contains(e.get("dir").asText())) full.add(inherit(e))
-          }
-        } else if (xb.isEmpty) full.addAll(prevArr)
-        else (0 until prevArr.size()).foreach(j => full.add(inherit(prevArr.get(j))))
-        full.addAll(s.get("added").asInstanceOf[ArrayNode])
-        s.set[JsonNode]("files", full)
-      }
-      prev = s
-    }
-  }
-
-  /**
-   * Serialized-form deflation, the inverse of [[inflateSnapshots]]: for
-   * every snapshot whose recorded base IS the immediately preceding
-   * serialized snapshot, detach the materialized `files` array (returned
-   * for re-attachment after the write — the in-memory node must stay
-   * fully materialized for the caller); for a snapshot whose base was
-   * dropped (expiration keeping a tag-pinned middle snapshot), strip the
-   * stale delta fields and keep the full list. No comparisons, no
-   * copies — O(snapshots) pointer work per write.
-   */
-  private def deflateSnapshots(m: ObjectNode): Seq[(ObjectNode, JsonNode)] = {
-    if (!m.has("snapshots")) return Seq.empty
-    val snaps = m.get("snapshots").asInstanceOf[ArrayNode]
-    val detached = mutable.ArrayBuffer[(ObjectNode, JsonNode)]()
-    var prevId = Long.MinValue
-    (0 until snaps.size()).foreach { i =>
-      val s = snaps.get(i).asInstanceOf[ObjectNode]
-      if (s.has("baseId")) {
-        if (s.get("baseId").asLong() == prevId && s.has("added"))
-          detached += s -> s.remove("files")
-        else { s.remove("baseId"); s.remove("added"); s.remove("removed")
-          s.remove("xbuckets") }
-      }
-      prevId = s.get("id").asLong()
-    }
-    detached.toSeq
-  }
-
-  /**
-   * Manifest CAS by EXCLUSIVE rename (Paimon's commit protocol): the new
-   * manifest is serialized to a unique temp file and renamed — without
-   * overwrite — to `manifest-v<basis+1>.json`. If that version already
-   * exists, a concurrent writer won: ConcurrentModificationException, the
-   * caller re-reads and retries (see `commit`'s rebase loop). Versioned
-   * manifests are immutable, so there is no read-torn or lost-update
-   * window: the rename either creates the next version or fails. (HDFS
-   * and posix give exclusive rename atomically; within one JVM a lock
-   * closes the local check-then-rename window; object stores want a
-   * conditional PUT here, same contract.) A crash mid-commit leaves at
-   * worst an orphan temp file. The last 10 versions are retained for
-   * in-flight readers; older ones are deleted best-effort.
-   */
-  private[sources] def writeManifest(schema: String, table: String, m: ObjectNode): Unit = {
-    val dir = tablePath(schema, table)
-    val version = commitVersion(m) + 1
-    m.put("commitVersion", version)
-    val fc = fcFor(dir)
-    val tmp = fs.makeQualified(new Path(dir,
-      s".manifest.tmp-${java.util.UUID.randomUUID()}"))
-    // serialize the DELTA form (snapshot file lists as {baseId, added},
-    // per-file zones as sidecar tokens) and restore the in-memory
-    // materialized shape immediately after — see deflateSnapshots
-    val detached = deflateSnapshots(m)
-    val bytes =
-      try mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(m)
-      finally detached.foreach { case (s, f) => s.set[JsonNode]("files", f) }
-    manifestBytesWritten.addAndGet(bytes.length)
-    lastManifestBytes.set(bytes.length)
-    GraftCatalog.manifestWritesGlobal.incrementAndGet()
-    GraftCatalog.manifestBytesGlobal.addAndGet(bytes.length)
-    val out = fc.create(tmp,
-      java.util.EnumSet.of(org.apache.hadoop.fs.CreateFlag.CREATE,
-        org.apache.hadoop.fs.CreateFlag.OVERWRITE))
-    try out.write(bytes)
-    finally out.close()
-    val dst = fs.makeQualified(new Path(dir, s"manifest-v$version.json"))
-    val won = commitLockImpl.publishIfAbsent(fs, fc, tmp, dst)
-    if (!won) {
-      try fc.delete(tmp, false) catch { case _: java.io.IOException => () }
-      throw new java.util.ConcurrentModificationException(
-        s"$schema.$table manifest version $version was committed " +
-          "concurrently — re-read and retry")
-    }
-    // Pre-warm the head cache with the node just landed (its serialized
-    // form IS the file content): the committer's next readManifest — and
-    // any other catalog instance in this process — skips the parse.
-    try {
-      val st = fs.getFileStatus(dst)
-      if (GraftCatalog.headCache.size > GraftCatalog.HeadCacheCap)
-        GraftCatalog.headCache.clear()
-      GraftCatalog.headCache.put(
-        s"$dst#${st.getModificationTime}#${st.getLen}", m.deepCopy[ObjectNode]())
-    } catch { case scala.util.control.NonFatal(_) => () }
-    // retention + legacy cleanup, best-effort (failures leave extra
-    // immutable files, never a broken table)
-    try {
-      val legacy = manifestPath(schema, table)
-      if (fs.exists(legacy)) fs.delete(legacy, false)
-      fs.listStatus(dir).foreach { st =>
-        manifestFileVersion(st.getPath.getName).foreach { v =>
-          if (v <= version - 10) fs.delete(st.getPath, false)
-        }
-      }
-    } catch { case _: java.io.IOException => () }
-  }
 }
 
 object GraftCatalog {
@@ -3263,11 +2758,11 @@ object GraftCatalog {
 
   /** Parsed-head cache keyed by the immutable `manifest-v<N>.json` path
     * (each version is CAS'd into existence exactly once — content can
-    * never change under a cached key). Stores the inflated node; readers
-    * receive deep copies. [[headCacheLoads]] counts cold parses. */
+    * never change under a cached key). Stores the inflated manifest;
+    * readers receive deep copies. [[headCacheLoads]] counts cold parses. */
   private[sources] val HeadCacheCap = 64
   private[sources] val headCache =
-    new java.util.concurrent.ConcurrentHashMap[String, ObjectNode]()
+    new java.util.concurrent.ConcurrentHashMap[String, Manifest]()
   private[graft] val headCacheLoads =
     new java.util.concurrent.atomic.AtomicLong(0L)
 
@@ -3538,6 +3033,8 @@ object GraftCatalog {
     * [[GraftCatalog.RetractCol]]); `from` is a changelog leg's explicit
     * coverage start (default: the previous head); `index` is the
     * dynamic-bucket index delta (rows, key count) the dir carries;
+    * `dvIndex` is a deletion-vector dir's manifest summary (the data
+    * files it touches, the positions it deletes);
     * `staged` names a staging dir (relative to the table) already holding
     * the leg's rows, written by [[GraftCatalog.writeDir]]. `clustered`
     * marks a fixed-bucket frame whose partitions each already hold whole
@@ -3547,7 +3044,7 @@ object GraftCatalog {
   final case class Leg(suffix: String, kind: String, frame: DataFrame,
       retract: Boolean = false, from: Option[Long] = None,
       index: Option[(DataFrame, Long)] = None, staged: Option[String] = None,
-      clustered: Boolean = false)
+      clustered: Boolean = false, dvIndex: Option[(Seq[String], Long)] = None)
 
   /** What a commit's snapshot keeps of the previous snapshot's file list. */
   sealed trait Inherit
@@ -3564,11 +3061,6 @@ object GraftCatalog {
     * serialized delta stays O(1) (one `xbuckets` list, applied at
     * inflate). Expiration reclaims retired subdirs. */
   final case class InheritRetiring(buckets: Set[Int]) extends Inherit
-
-  /** The manifest's CAS version (0 before the first versioned write) —
-    * the basis a derived-content commit fences on. */
-  private[sources] def commitVersion(m: ObjectNode): Long =
-    m.path("commitVersion").asLong(0L)
 }
 
 /**

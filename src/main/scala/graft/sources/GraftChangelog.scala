@@ -2,8 +2,6 @@ package graft.sources
 
 import scala.collection.mutable
 
-import com.fasterxml.jackson.databind.JsonNode
-import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -37,17 +35,15 @@ trait GraftChangelog { self: GraftCatalog =>
     require(fromSnapshotId <= toSnapshotId,
       s"fromSnapshotId $fromSnapshotId > toSnapshotId $toSnapshotId")
     val m = readManifest(schema, table)
-    if (primaryKey(m).nonEmpty)
+    if (m.primaryKey.nonEmpty)
       requireDeduplicate(m, s"$schema.$table", "readIncremental")
     refuseCrossPartition(m, s"$schema.$table", "readIncremental")
-    val snaps = m.get("snapshots").asInstanceOf[ArrayNode]
-    val all = (0 until snaps.size()).map(snaps.get)
     def entriesAt(id: Long): Seq[FileEntry] =
       if (id == 0) Seq.empty
       else {
-        val s = all.find(_.get("id").asLong() == id)
+        val s = m.snapshot(id)
         require(s.isDefined, s"no snapshot $id for $schema.$table")
-        filesOf(s.get)
+        s.get.files
       }
     val before = entriesAt(fromSnapshotId).map(_.dir).toSet
     val delta = entriesAt(toSnapshotId).filterNot(fe => before.contains(fe.dir))
@@ -107,7 +103,7 @@ trait GraftChangelog { self: GraftCatalog =>
     require(fromSnapshotId <= toSnapshotId,
       s"fromSnapshotId $fromSnapshotId > toSnapshotId $toSnapshotId")
     val m = readManifest(schema, table)
-    if (primaryKey(m).nonEmpty)
+    if (m.primaryKey.nonEmpty)
       requireDeduplicate(m, s"$schema.$table", "readChangelog")
     refuseCrossPartition(m, s"$schema.$table", "readChangelog")
     val delta = changelogEntries(m, schema, table, fromSnapshotId, toSnapshotId)
@@ -115,7 +111,7 @@ trait GraftChangelog { self: GraftCatalog =>
     def emptyChangelog = spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], target)
     if (delta.isEmpty) return emptyChangelog
-    val pk = primaryKey(m)
+    val pk = m.primaryKey
     if (pk.isEmpty) {
       // Append-only changelog, DV-aware: a deletion-vector commit in
       // range emits `-D` retractions carrying the FULL before image —
@@ -127,7 +123,7 @@ trait GraftChangelog { self: GraftCatalog =>
       // `+I` rows anti-join the in-range DV pairs, and `-D` resolution
       // is restricted to files already visible at `fromSnapshotId`.
       val (dvDelta, dataDelta) = delta.partition(_.kind == "dv")
-      val names = currentFields(m).map(_.name)
+      val names = m.currentFields.map(_.name)
       val dv = if (dvDelta.isEmpty) None
         else Some(dvFrame(schema, table, dvDelta))
       val inserts = unionOption(dirFrames(schema, table, m, dataDelta,
@@ -136,7 +132,7 @@ trait GraftChangelog { self: GraftCatalog =>
           .select(names.map(col): _*).withColumn(RowKindCol, lit("+I"))
       }
       val deletes = dv.flatMap { d =>
-        val idx = dvIndexFrom(m)
+        val idx = m.dvIndex
         // A dv dir with no dvIndex entry (e.g. a foreign-writer manifest)
         // can't be narrowed to its touched files — fall back to resolving
         // against EVERY before-snapshot file (the semi-join on (file, pos)
@@ -148,12 +144,8 @@ trait GraftChangelog { self: GraftCatalog =>
           else Some(dvDelta.flatMap(e => idx(e.dir)._1).distinct)
         val beforeEntries: Seq[FileEntry] =
           if (fromSnapshotId == 0) Seq.empty
-          else {
-            val snaps = m.get("snapshots").asInstanceOf[ArrayNode]
-            (0 until snaps.size()).map(snaps.get)
-              .find(_.get("id").asLong() == fromSnapshotId)
-              .map(filesOf).getOrElse(Seq.empty).filter(_.kind == "data")
-          }
+          else m.snapshot(fromSnapshotId).map(_.files).getOrElse(Seq.empty)
+            .filter(_.kind == "data")
         val subsets: Map[FileEntry, Seq[String]] = touched.fold(
             Map.empty[FileEntry, Seq[String]]) { t =>
           beforeEntries.map { fe =>
@@ -175,7 +167,7 @@ trait GraftChangelog { self: GraftCatalog =>
     // (collapsed to the same newest-wins-per-key form this method
     // computes, so consumers see identical batches either way). `-U`
     // rows are dropped first: upsert mode carries no retraction arm.
-    if (optionsOf(m).changelogProducer != "none")
+    if (m.options.changelogProducer != "none")
       changelogCover(m, fromSnapshotId, toSnapshotId).foreach { dirs =>
         return changelogFrame(schema, table, m, dirs)
           .map(f => collapseUpsertChangelog(m,
@@ -225,7 +217,7 @@ trait GraftChangelog { self: GraftCatalog =>
     require(fromSnapshotId <= toSnapshotId,
       s"fromSnapshotId $fromSnapshotId > toSnapshotId $toSnapshotId")
     val m = readManifest(schema, table)
-    val pk = primaryKey(m)
+    val pk = m.primaryKey
     require(pk.nonEmpty, s"$schema.$table is append-only — full changelog " +
       "needs a primary-key table (no before image exists); use readChangelog")
     refuseCrossPartition(m, s"$schema.$table", "readChangelogFull")
@@ -237,8 +229,8 @@ trait GraftChangelog { self: GraftCatalog =>
     // files carry no before images, so full mode falls through to the
     // read-time resolve there. Checked BEFORE the engine dispatch: a
     // field-wise table's producer files are resolved-image pairs too.
-    if (optionsOf(m).changelogProducer == "lookup" ||
-        optionsOf(m).changelogProducer == "full-compaction")
+    if (m.options.changelogProducer == "lookup" ||
+        m.options.changelogProducer == "full-compaction")
       changelogCover(m, fromSnapshotId, toSnapshotId).foreach { dirs =>
         return changelogFrame(schema, table, m, dirs)
           .map(collapseFullChangelog(m, _, dirs.size))
@@ -249,7 +241,7 @@ trait GraftChangelog { self: GraftCatalog =>
     // Field-wise engines (partial-update / aggregation / first-row) CAN
     // serve full changelog — a delta row is a PATCH, not the image, so
     // the after side must be the RESOLVED image, not the in-range winner.
-    if (optionsOf(m).mergeEngine != "deduplicate")
+    if (m.options.mergeEngine != "deduplicate")
       return fieldwiseChangelogFull(schema, table, m, fromSnapshotId, toSnapshotId)
     val delta = changelogEntries(m, schema, table, fromSnapshotId, toSnapshotId)
     // unreachable on PK tables (DVs are append-only by construction);
@@ -263,7 +255,7 @@ trait GraftChangelog { self: GraftCatalog =>
     if (delta.isEmpty)
       return spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], target)
-    val names = currentFields(m).map(_.name)
+    val names = m.currentFields.map(_.name)
     // scratch-name reservation, mirroring sortCompact's __range/__z guard
     require(!names.exists(n => n.startsWith("__pre_") || n == "__rn" || n == "__e"),
       s"$schema.$table has columns colliding with readChangelogFull scratch " +
@@ -289,17 +281,15 @@ trait GraftChangelog { self: GraftCatalog =>
     // back to every bucket — conservative, never wrong.
     val pre =
       if (fromSnapshotId == 0) emptyFrame(m)
-      else optionsOf(m).bucket match {
+      else m.options.bucket match {
         case Some(n) =>
-          val snaps0 = m.get("snapshots").asInstanceOf[ArrayNode]
-          val sFrom = (0 until snaps0.size()).map(snaps0.get)
-            .find(_.get("id").asLong() == fromSnapshotId).get // checked above
+          val sFrom = m.snapshot(fromSnapshotId).get // checked above
           changedBucketsOf(schema, table, delta.map(_.dir)) match {
             case Some(changed) =>
-              bucketedResolve(schema, table, m, filesOf(sFrom), n, Some(changed))
+              bucketedResolve(schema, table, m, sFrom.files, n, Some(changed))
                 .getOrElse(emptyFrame(m))
             case None if n >= 1 => // flat delta dir: keep every bucket
-              bucketedResolve(schema, table, m, filesOf(sFrom), n,
+              bucketedResolve(schema, table, m, sFrom.files, n,
                   Some(0 until n)).getOrElse(emptyFrame(m))
             case None =>
               // dynamic buckets have no static range to enumerate — the
@@ -320,10 +310,10 @@ trait GraftChangelog { self: GraftCatalog =>
    * columns plus a `__del` tombstone flag (tombstone rows carry nulls
    * outside the key/sequence columns); `pre`: the resolved before image.
    */
-  private def pairWithPreImage(m: ObjectNode, news: DataFrame,
+  private def pairWithPreImage(m: Manifest, news: DataFrame,
       pre: DataFrame): DataFrame = {
-    val pk = primaryKey(m)
-    val names = currentFields(m).map(_.name)
+    val pk = m.primaryKey
+    val names = m.currentFields.map(_.name)
     val preR = pre.select(names.map(c => col(c).as(s"__pre_$c")): _*)
     val joined = news.join(preR,
       pk.map(k => news(k) === col(s"__pre_$k")).reduce(_ && _), "left")
@@ -336,7 +326,7 @@ trait GraftChangelog { self: GraftCatalog =>
     // it carries the later commit ordinal; NULL sorts smallest). A late
     // batch that loses the version race produces NO change — emitting a
     // stale -U/+U pair would corrupt aggregate-maintaining consumers.
-    val beats = optionsOf(m).sequenceField match {
+    val beats = m.options.sequenceField match {
       case Some(sf) => !preExists || col(s"__pre_$sf").isNull ||
         (col(sf).isNotNull && col(sf) >= col(s"__pre_$sf"))
       case None => lit(true)
@@ -354,29 +344,14 @@ trait GraftChangelog { self: GraftCatalog =>
 
   // ---- write-time changelog materialization (changelog-producer) ---------
 
-  /** Persisted changelog dirs from the manifest's changelog node:
-    * dir → (snapshot id, write-time schema version, coverage-from
-    * EXCLUSIVE — the snapshot the dir's rows change FROM). */
-  private[sources] def changelogIndexFrom(m: ObjectNode): Map[String, (Long, Int, Long)] = {
-    if (!m.has("changelog")) return Map.empty
-    val node = m.get("changelog").asInstanceOf[ObjectNode]
-    val out = mutable.LinkedHashMap[String, (Long, Int, Long)]()
-    node.fieldNames().forEachRemaining { d =>
-      val e = node.get(d)
-      out += d -> ((e.get("id").asLong(), e.get("ver").asInt(),
-        e.get("from").asLong()))
-    }
-    out.toMap
-  }
-
   /** Persisted changelog dirs (dir, write-time schema version) read
     * through [[dirFrames]]: table columns, `_row_kind`, and `__ord`, the
     * carrier's snapshot ordinal; None when there are none. */
-  private def changelogFrame(schema: String, table: String, m: ObjectNode,
+  private def changelogFrame(schema: String, table: String, m: Manifest,
       dirs: Seq[(String, Int)]): Option[DataFrame] =
     unionOption(dirFrames(schema, table, m,
       dirs.map { case (d, v) => FileEntry(d, v, "cl") }))
-      .map(_.select((currentFields(m).map(_.name) :+ RowKindCol :+ "__ord")
+      .map(_.select((m.currentFields.map(_.name) :+ RowKindCol :+ "__ord")
         .map(col): _*))
 
   /**
@@ -386,16 +361,14 @@ trait GraftChangelog { self: GraftCatalog =>
    * pre-producer history, a foreign writer). Compaction-kind snapshots
    * in a gap are fine — they change bytes, not content.
    */
-  private def changelogCover(m: ObjectNode, fromId: Long,
+  private def changelogCover(m: Manifest, fromId: Long,
       toId: Long): Option[Seq[(String, Int)]] = {
     if (fromId >= toId) return Some(Seq.empty)
-    val carriers = changelogIndexFrom(m).toSeq
+    val carriers = m.changelog.toSeq
       .map { case (d, (id, ver, from)) => (id, d, ver, from) }
       .filter { case (id, _, _, _) => id > fromId && id <= toId }
       .sortBy(_._1)
-    val snaps = m.get("snapshots").asInstanceOf[ArrayNode]
-    val kindOf = (0 until snaps.size()).map(snaps.get)
-      .map(s => s.get("id").asLong() -> s.has("compaction")).toMap
+    val kindOf = m.snapshots.map(s => s.id -> s.compaction).toMap
     // snapshot ids are dense ordinals: every id in a gap must be PRESENT
     // (not expired away — an absent id is unknown history, never "no
     // change") and compaction-kind
@@ -423,12 +396,12 @@ trait GraftChangelog { self: GraftCatalog =>
    * image; a key inserted and deleted inside the range nets to nothing.
    * `parts` is [[changelogFrame]]'s union of `carriers` dirs.
    */
-  private def collapseFullChangelog(m: ObjectNode, parts: DataFrame,
+  private def collapseFullChangelog(m: Manifest, parts: DataFrame,
       carriers: Int): DataFrame = {
     import org.apache.spark.sql.functions.{min_by, max_by}
-    val names = currentFields(m).map(_.name)
+    val names = m.currentFields.map(_.name)
     if (carriers == 1) return parts.select((names :+ RowKindCol).map(col): _*)
-    val pk = primaryKey(m)
+    val pk = m.primaryKey
     // within one commit a key has at most one logical event; a -U sorts
     // before its +U partner so first/last land on the right halves
     val ordKey = col("__ord") * 2 +
@@ -446,7 +419,7 @@ trait GraftChangelog { self: GraftCatalog =>
     // its read-time pairWithPreImage emits identical-image pairs too
     // (an upsert that rewrites the same row IS a logical event there).
     val netZero =
-      if (optionsOf(m).mergeEngine == "deduplicate") lit(false)
+      if (m.options.mergeEngine == "deduplicate") lit(false)
       else existed && !dead &&
         (struct(names.map(c => col(s"__first.$c")): _*) <=>
           struct(names.map(c => col(s"__last.$c")): _*))
@@ -461,12 +434,12 @@ trait GraftChangelog { self: GraftCatalog =>
   /** Upsert-mode collapse: the key's LAST in-range event wins (-U rows
     * were already dropped by the caller) — the same newest-wins rule the
     * read-time upsert resolve applies. Join-free. */
-  private def collapseUpsertChangelog(m: ObjectNode, parts: DataFrame,
+  private def collapseUpsertChangelog(m: Manifest, parts: DataFrame,
       carriers: Int): DataFrame = {
     import org.apache.spark.sql.functions.max_by
-    val names = currentFields(m).map(_.name)
+    val names = m.currentFields.map(_.name)
     if (carriers == 1) return parts.select((names :+ RowKindCol).map(col): _*)
-    val pk = primaryKey(m)
+    val pk = m.primaryKey
     val ev = struct(col(RowKindCol).as("__k") +: names.map(col): _*)
     parts.groupBy(pk.map(col): _*)
       .agg(max_by(ev, col("__ord")).as("__last"))
@@ -487,15 +460,15 @@ trait GraftChangelog { self: GraftCatalog =>
    * bucket 100 TB table looks up a handful of bucket legs, never the
    * image.
    */
-  private[sources] def producerChangelog(schema: String, table: String, m: ObjectNode,
+  private[sources] def producerChangelog(schema: String, table: String, m: Manifest,
       producer: String, dataDir: Option[String],
       delDir: Option[String]): Option[DataFrame] = {
-    val names = currentFields(m).map(_.name)
+    val names = m.currentFields.map(_.name)
     // a staged dir reads like a committed one of its kind (a tombstone
     // dir's non-key columns come back null)
     def stagedBack(d: String, kind: String): DataFrame =
       unionOption(dirFrames(schema, table, m,
-          Seq(FileEntry(d, m.get("currentSchemaVersion").asInt(), kind))))
+          Seq(FileEntry(d, m.currentSchemaVersion, kind))))
         .map(_.select(names.map(col): _*)).getOrElse(emptyFrame(m))
     val ups = dataDir.map(stagedBack(_, "data"))
     val dels = delDir.map(stagedBack(_, "delete"))
@@ -506,7 +479,7 @@ trait GraftChangelog { self: GraftCatalog =>
           dels.map(_.withColumn(RowKindCol, lit("-D")))
       return Some(kinded.reduce(_ unionByName _))
     }
-    if (optionsOf(m).mergeEngine != "deduplicate") {
+    if (m.options.mergeEngine != "deduplicate") {
       // Field-wise lookup producer: a staged row is a PATCH, so the
       // persisted changelog must carry RESOLVED images on both sides —
       // exactly the pairs fieldwiseChangelogFull computes read-time,
@@ -522,13 +495,11 @@ trait GraftChangelog { self: GraftCatalog =>
       // arm then emits their before images. Within one snapshot the data
       // and delete dirs are key-disjoint (the commit contract), so the
       // anti-join cannot swallow a same-batch patch.
-      val pk = primaryKey(m)
+      val pk = m.primaryKey
       val delKeys = dels.map(_.select(pk.map(col): _*).distinct())
       val keys = (ups.map(_.select(pk.map(col): _*)).toSeq ++ delKeys)
         .reduce(_ unionByName _).distinct()
-      val snaps0 = m.get("snapshots").asInstanceOf[ArrayNode]
-      val headEs = if (snaps0.size() == 0) Seq.empty
-        else filesOf(snaps0.get(snaps0.size() - 1))
+      val headEs = m.headFiles
       // before-image file I/O is zone-pruned to the files the staged
       // keys can live in (field-wise tables are never bucketed — the
       // create guard pins bucket to deduplicate — so key-bound zones
@@ -556,11 +527,8 @@ trait GraftChangelog { self: GraftCatalog =>
     // lookup: full retraction pairs against the pre-commit image
     val news = (ups.map(_.withColumn("__del", lit(false))).toSeq ++
       dels.map(_.withColumn("__del", lit(true)))).reduce(_ unionByName _)
-    val snaps = m.get("snapshots").asInstanceOf[ArrayNode]
-    val headEntries =
-      if (snaps.size() == 0) Seq.empty
-      else filesOf(snaps.get(snaps.size() - 1))
-    val pre = optionsOf(m).bucket match {
+    val headEntries = m.headFiles
+    val pre = m.options.bucket match {
       // fixed buckets AND dynamic (-1): dynamic assignment is STICKY
       // (the .dbidx index routes every later version of a key to its
       // original bucket), so the staged dirs' buckets are exactly where
@@ -610,8 +578,8 @@ trait GraftChangelog { self: GraftCatalog =>
    * one before-image read.
    */
   private def fieldwiseChangelogFull(schema: String, table: String,
-      m: ObjectNode, fromSnapshotId: Long, toSnapshotId: Long): DataFrame = {
-    val pk = primaryKey(m)
+      m: Manifest, fromSnapshotId: Long, toSnapshotId: Long): DataFrame = {
+    val pk = m.primaryKey
     val delta = changelogEntries(m, schema, table, fromSnapshotId, toSnapshotId)
     val target = changelogSchema(m)
     // scratch-name collisions are validated by pairResolvedImages below
@@ -637,10 +605,10 @@ trait GraftChangelog { self: GraftCatalog =>
     * kinds. Shared by [[fieldwiseChangelogFull]] (read-time) and the
     * field-wise `lookup` producer (the same pairing paid once at
     * write). */
-  private def pairResolvedImages(m: ObjectNode, after: DataFrame,
+  private def pairResolvedImages(m: Manifest, after: DataFrame,
       before: DataFrame): DataFrame = {
-    val pk = primaryKey(m)
-    val names = currentFields(m).map(_.name)
+    val pk = m.primaryKey
+    val names = m.currentFields.map(_.name)
     require(!names.exists(n => n.startsWith("__pre_") || n == "__e"),
       "table has columns colliding with changelog scratch names (__pre_*, __e)")
     val preR = before.select(names.map(c => col(c).as(s"__pre_$c")): _*)
@@ -667,8 +635,8 @@ trait GraftChangelog { self: GraftCatalog =>
   }
 
   /** The changelog row type: current table columns + `_row_kind`. */
-  private[sources] def changelogSchema(m: ObjectNode): StructType =
-    StructType(currentFields(m).map(f =>
+  private[sources] def changelogSchema(m: Manifest): StructType =
+    StructType(m.currentFields.map(f =>
       StructField(f.name, TypeMapping.toSparkType(f.trinoType))) :+
       StructField(RowKindCol, org.apache.spark.sql.types.StringType))
 
@@ -679,19 +647,16 @@ trait GraftChangelog { self: GraftCatalog =>
     * (fromId, toId] — per-snapshot set difference against its immediate
     * predecessor, so an overwrite inside the range contributes only its
     * own dirs and a compaction contributes nothing. */
-  private def changelogEntries(m: ObjectNode, schema: String, table: String,
+  private def changelogEntries(m: Manifest, schema: String, table: String,
       fromId: Long, toId: Long): Seq[FileEntry] = {
-    val snaps = m.get("snapshots").asInstanceOf[ArrayNode]
-    val all = (0 until snaps.size()).map(snaps.get)
-    def exists(id: Long) = id == 0 || all.exists(_.get("id").asLong() == id)
+    val all = m.snapshots
+    def exists(id: Long) = id == 0 || all.exists(_.id == id)
     require(exists(fromId), s"no snapshot $fromId for $schema.$table " +
       "(expired snapshots cannot be replayed as changelog)")
     require(exists(toId), s"no snapshot $toId for $schema.$table")
     all.zipWithIndex
-      .filter { case (s, _) =>
-        val id = s.get("id").asLong(); id > fromId && id <= toId }
-      .filterNot { case (s, _) => s.has("compaction") }
-      .flatMap { case (_, i) => addedEntries(all, i) }
+      .filter { case (s, _) => s.id > fromId && s.id <= toId && !s.compaction }
+      .flatMap { case (_, i) => m.addedAt(i) }
   }
 
   /**
@@ -723,12 +688,12 @@ trait GraftChangelog { self: GraftCatalog =>
     // through fieldwiseChangelogFull's resolved-image pairs.
     val m0 = readManifest(schema, table)
     refuseCrossPartition(m0, s"$schema.$table", "readChangelogStream")
-    if (primaryKey(m0).nonEmpty && mode == "upsert")
+    if (m0.primaryKey.nonEmpty && mode == "upsert")
       requireDeduplicate(m0, s"$schema.$table", "readChangelogStream")
     // deletion-vector commits stream fine: readChangelog resolves each
     // DV batch to full-image `-D` retractions (no refusal needed)
     if (mode == "full")
-      require(primaryKey(m0).nonEmpty, s"$schema.$table is append-only — " +
+      require(m0.primaryKey.nonEmpty, s"$schema.$table is append-only — " +
         "full changelog mode needs a primary-key table")
     val r = spark.readStream.format("graft.sources.GraftChangelogProvider")
       .option("warehouse", warehouse)
@@ -760,17 +725,12 @@ trait GraftChangelog { self: GraftCatalog =>
   def snapshotDeltaRows(schema: String, table: String, fromExclusive: Long,
       to: Long): Seq[(Long, Long)] = {
     val m = readManifest(schema, table)
-    val snaps = m.get("snapshots").asInstanceOf[ArrayNode]
-    val stats = dirStatsFrom(m)
-    val all = (0 until snaps.size()).map(snaps.get)
-    val out = mutable.ArrayBuffer[(Long, Long)]()
-    all.indices.foreach { i =>
-      val id = all(i).get("id").asLong()
-      if (id > fromExclusive && id <= to)
-        out += id -> addedEntries(all, i).filter(_.kind == "data")
+    val stats = m.dirStats
+    m.snapshots.zipWithIndex.collect {
+      case (s, i) if s.id > fromExclusive && s.id <= to =>
+        s.id -> m.addedAt(i).filter(_.kind == "data")
           .flatMap(fe => stats.get(fe.dir)).map(_.rows).sum
     }
-    out.toSeq
   }
 
   /** [[readIncremental]] between two TAGS (Paimon's

@@ -2,7 +2,6 @@ package graft.sources
 
 import scala.collection.mutable
 
-import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -20,9 +19,11 @@ trait GraftColumnDdl { self: GraftCatalog =>
 
   // ---- column DDL (metadata-only, stable field ids) ----------------------
 
-  def currentSchema(schema: String, table: String): StructType = {
-    val m = readManifest(schema, table)
-    StructType(currentFields(m).map { f =>
+  def currentSchema(schema: String, table: String): StructType =
+    currentSchema(readManifest(schema, table))
+
+  private[sources] def currentSchema(m: Manifest): StructType =
+    StructType(m.currentFields.map { f =>
       val base = StructField(f.name, TypeMapping.toSparkType(f.trinoType))
       // char(n) columns surface as StringType + Spark's char metadata, so
       // the engine's OWN semantics rules engage on the SQL surface:
@@ -40,13 +41,12 @@ trait GraftColumnDdl { self: GraftCatalog =>
       }
       f.comment.map(sf.withComment).getOrElse(sf)
     })
-  }
 
   def addColumn(schema: String, table: String, field: StructField): Unit =
     evolveSchema(schema, table) { (m, fields) =>
       require(!fields.exists(_.name == field.name), s"column ${field.name} exists")
-      val nextId = m.get("lastFieldId").asInt() + 1
-      m.put("lastFieldId", nextId)
+      val nextId = m.lastFieldId + 1
+      m.setLastFieldId(nextId)
       fields :+ FieldInfo(nextId, field.name,
         TypeMapping.fieldTrinoType(field), field.getComment())
     }
@@ -68,7 +68,7 @@ trait GraftColumnDdl { self: GraftCatalog =>
       // bucket-key column would route new versions of an existing key to
       // a DIFFERENT __bucket=k dir — the per-bucket merge would surface
       // the key twice and point lookups would miss pre-widening rows.
-      require(!primaryKey(m).contains(name),
+      require(!m.primaryKey.contains(name),
         s"cannot change the type of primary-key column $name — bucket " +
           "placement and merge-on-read key identity depend on it")
       val f = fields.find(_.name == name).getOrElse(
@@ -109,22 +109,15 @@ trait GraftColumnDdl { self: GraftCatalog =>
       require(!fields.exists(_.name == to), s"column $to exists")
       // keep the partition and primary-key lists consistent with the
       // rename, or future commits/reads would reference a stale name
-      val parts = partitionColumns(m)
-      if (parts.contains(from)) {
-        val arr = m.putArray("partitions")
-        parts.foreach(p => arr.add(if (p == from) to else p))
-      }
-      val pk = primaryKey(m)
-      if (pk.contains(from)) {
-        val arr = m.putArray("primaryKey")
-        pk.foreach(p => arr.add(if (p == from) to else p))
-      }
+      def renamed(cols: Seq[String]) = cols.map(c => if (c == from) to else c)
+      if (m.partitionColumns.contains(from))
+        m.setPartitionColumns(renamed(m.partitionColumns))
+      if (m.primaryKey.contains(from)) m.setPrimaryKey(renamed(m.primaryKey))
       // every option naming the column (by key or value) follows it —
       // the registry declares which do
-      val opts = m.get("options").asInstanceOf[ObjectNode]
-      optionsOf(m).raw.foreach { case (k, v) =>
+      m.options.raw.foreach { case (k, v) =>
         val (k2, v2) = TableOptions.renamed(k, v, from, to)
-        if ((k2, v2) != ((k, v))) { opts.remove(k); opts.put(k2, v2) }
+        if ((k2, v2) != ((k, v))) { m.removeOptions(Seq(k)); m.putOptions(Seq(k2 -> v2)) }
       }
       fields.map(f => if (f.name == from) f.copy(name = to) else f)
     }
@@ -133,11 +126,11 @@ trait GraftColumnDdl { self: GraftCatalog =>
     evolveSchema(schema, table) { (m, fields) =>
       require(fields.exists(_.name == name), s"no column $name")
       require(fields.length > 1, "cannot drop the last column")
-      require(!partitionColumns(m).contains(name),
+      require(!m.partitionColumns.contains(name),
         s"cannot drop partition column $name")
-      require(!primaryKey(m).contains(name),
+      require(!m.primaryKey.contains(name),
         s"cannot drop primary-key column $name")
-      optionsOf(m).raw.foreach { case (k, v) =>
+      m.options.raw.foreach { case (k, v) =>
         require(!TableOptions.columnsOf(k, v).exists(_.equalsIgnoreCase(name)),
           s"cannot drop column $name: table option $k references it")
       }
@@ -203,36 +196,13 @@ trait GraftColumnDdl { self: GraftCatalog =>
       p +: nestedPathsOf(t, p)
     }
 
-  /** The column's nested-id map valid at `version`: the newest recorded
-    * map at or below it (naming only changes at recorded versions), or
-    * the oldest recorded one for pre-history versions (identical naming
-    * — the first nested op snapshots the pre-op structure). None = the
-    * column was never nested-evolved (name-identity mapping applies). */
-  private def nestedIdsAt(m: ObjectNode, colId: Int,
-      version: Int): Option[Map[String, Int]] = {
-    if (!m.has("nestedIds")) return None
-    val colNode = m.get("nestedIds").asInstanceOf[ObjectNode].get(colId.toString)
-    if (colNode == null) return None
-    val node = colNode.asInstanceOf[ObjectNode]
-    val versions = mutable.ArrayBuffer.empty[Int]
-    node.fieldNames().forEachRemaining { k =>
-      if (k != "_last") versions += k.toInt
-    }
-    if (versions.isEmpty) return None
-    val pick = versions.filter(_ <= version).maxOption.getOrElse(versions.min)
-    val vn = node.get(pick.toString).asInstanceOf[ObjectNode]
-    val out = mutable.LinkedHashMap[String, Int]()
-    vn.fieldNames().forEachRemaining(p => out += p -> vn.get(p).asInt())
-    Some(out.toMap)
-  }
-
   /** Current-naming nested path → write-time path for files of `colId`
     * written at schema version `w` (None = the member didn't exist).
     * Name identity when the column was never nested-evolved. */
-  private[sources] def nestedCurToWrite(m: ObjectNode, colId: Int,
+  private[sources] def nestedCurToWrite(m: Manifest, colId: Int,
       w: Int): String => Option[String] = {
-    val cur = nestedIdsAt(m, colId, m.get("currentSchemaVersion").asInt())
-    val write = nestedIdsAt(m, colId, w)
+    val cur = m.nestedIdsAt(colId, m.currentSchemaVersion)
+    val write = m.nestedIdsAt(colId, w)
     (cur, write) match {
       case (Some(c), Some(wr)) =>
         val writeById = wr.map(_.swap)
@@ -269,29 +239,20 @@ trait GraftColumnDdl { self: GraftCatalog =>
       }
       val newType = editType(segs.tail, top.trinoType)
       // nested-id lineage
-      val root = if (m.has("nestedIds")) m.get("nestedIds").asInstanceOf[ObjectNode]
-        else m.putObject("nestedIds")
-      val colNode =
-        if (root.has(top.id.toString)) root.get(top.id.toString).asInstanceOf[ObjectNode]
-        else root.putObject(top.id.toString)
-      val curVersion = m.get("currentSchemaVersion").asInt()
-      val prior: Map[String, Int] = nestedIdsAt(m, top.id, curVersion) match {
+      val curVersion = m.currentSchemaVersion
+      val prior: Map[String, Int] = m.nestedIdsAt(top.id, curVersion) match {
         case Some(existing) => existing
         case None =>
           // first nested op on this column: snapshot the pre-op structure
           // (valid for EVERY older version — naming never changed before)
           var n = 0
           val snap = nestedPathsOf(top.trinoType).map { p => n += 1; p -> n }.toMap
-          colNode.put("_last", n)
-          val vn = colNode.putObject(curVersion.toString)
-          snap.toSeq.sortBy(_._2).foreach { case (p, i) => vn.put(p, i) }
+          m.putNestedIds(top.id, curVersion, snap, n)
           snap
       }
-      var last = colNode.get("_last").asInt()
+      var last = m.nestedLastId(top.id)
       val next = editIds(segs.tail, prior, () => { last += 1; last })
-      colNode.put("_last", last)
-      val vn = colNode.putObject((curVersion + 1).toString)
-      next.toSeq.sortBy(_._2).foreach { case (p, i) => vn.put(p, i) }
+      m.putNestedIds(top.id, curVersion + 1, next, last)
       fields.map(f => if (f.id == top.id) f.copy(trinoType = newType) else f)
     }
 
@@ -378,21 +339,15 @@ trait GraftColumnDdl { self: GraftCatalog =>
       case (_, t) => e.cast(t)
     }
 
+  /** Land `f`'s edit of the current fields as the next schema version,
+    * provided the resulting table still passes the [[TableOptions]]
+    * checks CREATE and ALTER run (reserved column names included). */
   private def evolveSchema(schema: String, table: String)(
-      f: (ObjectNode, Seq[FieldInfo]) => Seq[FieldInfo]): Unit = {
+      f: (Manifest, Seq[FieldInfo]) => Seq[FieldInfo]): Unit = {
     val m = readManifest(schema, table)
-    val next = f(m, currentFields(m))
-    val version = m.get("currentSchemaVersion").asInt() + 1
-    val schemas = m.get("schemas").asInstanceOf[ArrayNode]
-    val vn = schemas.addObject()
-    vn.put("version", version)
-    val fields = vn.putArray("fields")
-    next.foreach { fi =>
-      val fn = fields.addObject()
-      fn.put("id", fi.id); fn.put("name", fi.name); fn.put("type", fi.trinoType)
-      fi.comment.foreach(fn.put("comment", _))
-    }
-    m.put("currentSchemaVersion", version)
+    m.addSchemaVersion(f(m, m.currentFields))
+    TableOptions.validate(TableOptions.Shape(currentSchema(m),
+      m.partitionColumns, m.primaryKey, m.options.raw))
     writeManifest(schema, table, m)
   }
 

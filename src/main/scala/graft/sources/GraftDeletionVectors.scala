@@ -2,7 +2,6 @@ package graft.sources
 
 import scala.collection.mutable
 
-import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -23,20 +22,6 @@ import GraftCatalog._
 trait GraftDeletionVectors { self: GraftCatalog =>
 
   // ---- deletion vectors (append-only row-level delete) -------------------
-
-  /** DV dir → (affected data files table-relative, deleted-position count)
-    * from the manifest's dvIndex node. */
-  private[sources] def dvIndexFrom(m: ObjectNode): Map[String, (Seq[String], Long)] = {
-    if (!m.has("dvIndex")) return Map.empty
-    val node = m.get("dvIndex").asInstanceOf[ObjectNode]
-    val out = mutable.LinkedHashMap[String, (Seq[String], Long)]()
-    node.fieldNames().forEachRemaining { d =>
-      val e = node.get(d)
-      val files = (0 until e.get("files").size()).map(e.get("files").get(_).asText())
-      out += d -> (files, e.get("rows").asLong())
-    }
-    out.toMap
-  }
 
   private def dvStorageSchema = StructType(Seq(
     StructField(DvFileCol, org.apache.spark.sql.types.StringType),
@@ -74,7 +59,7 @@ trait GraftDeletionVectors { self: GraftCatalog =>
    * DV application. Output keeps the `__ord`/`__del` bookkeeping columns
    * for the caller to drop.
    */
-  private[sources] def appendUnion(schema: String, table: String, m: ObjectNode,
+  private[sources] def appendUnion(schema: String, table: String, m: Manifest,
       selections: Seq[(FileEntry, Option[Seq[String]])],
       dvEs: Seq[FileEntry]): DataFrame = {
     type Sel = (FileEntry, Option[Seq[String]])
@@ -82,7 +67,7 @@ trait GraftDeletionVectors { self: GraftCatalog =>
       dirFrames(schema, table, m, sels.map(_._1), withMeta = meta,
         files = sels.collect { case (fe, Some(fs)) => fe -> fs }.toMap)
     if (dvEs.isEmpty) return unionAllByName(frames(selections, meta = false))
-    val idx = dvIndexFrom(m)
+    val idx = m.dvIndex
     // every DV commit writes its index; `known = false` only for a
     // manifest from a foreign writer — then every file is treated dirty
     // (correct, just joins more)
@@ -159,11 +144,11 @@ trait GraftDeletionVectors { self: GraftCatalog =>
    * bucket's slice contains every version of its keys: the point-lookup
    * path reads 1/N of a 100 TB DV table, not the resolved image.
    */
-  private[sources] def pkDvResolve(schema: String, table: String, m: ObjectNode,
+  private[sources] def pkDvResolve(schema: String, table: String, m: Manifest,
       entries: Seq[FileEntry],
       onlyBuckets: Option[Seq[Int]] = None): Option[DataFrame] = {
-    val pk = primaryKey(m)
-    val names = currentFields(m).map(_.name)
+    val pk = m.primaryKey
+    val names = m.currentFields.map(_.name)
     val dvEs = entries.filter(_.kind == "dv")
     val buildOrd = dvEs.map(entryOrdinal).max
     val (base, delta) = entries.filterNot(_.kind == "dv")
@@ -173,7 +158,7 @@ trait GraftDeletionVectors { self: GraftCatalog =>
     require(base.forall(_.kind == "data"),
       s"$schema.$table: tombstone dir at or below DV-build ordinal " +
         s"$buildOrd — the merge-free base invariant does not hold")
-    val bucketed = optionsOf(m).bucket.isDefined
+    val bucketed = m.options.bucket.isDefined
     require(onlyBuckets.isEmpty || bucketed,
       s"$schema.$table is not bucketed — no bucket restriction applies")
     val baseLive: Option[DataFrame] =
@@ -209,7 +194,7 @@ trait GraftDeletionVectors { self: GraftCatalog =>
     baseLive match {
       case None => Some(deltaTop.filter(!col("__del")).select(names.map(col): _*))
       case Some(b) =>
-        optionsOf(m).sequenceField match {
+        m.options.sequenceField match {
           case None =>
             // ordinal-only order: base ordinals are strictly below every
             // delta's, so ANY delta version supersedes its key's base
@@ -256,16 +241,14 @@ trait GraftDeletionVectors { self: GraftCatalog =>
    */
   def buildDeletionVectors(schema: String, table: String): Long = {
     val m = readManifest(schema, table)
-    val pk = primaryKey(m)
+    val pk = m.primaryKey
     require(pk.nonEmpty,
       s"$schema.$table is append-only — its DVs are written directly by " +
         "deleteWhere/update; buildDeletionVectors serves primary-key tables")
-    require(optionsOf(m).deletionVectors,
+    require(m.options.deletionVectors,
       s"$schema.$table does not have deletion-vectors enabled")
-    val snaps = m.get("snapshots").asInstanceOf[ArrayNode]
-    if (snaps.size() == 0) return 0L
-    val latest = snaps.get(snaps.size() - 1)
-    val entries = filesOf(latest)
+    val latest = m.head.getOrElse(return 0L)
+    val entries = latest.files
     // Per-bucket-compacted history COMPOSES: the build reads retired
     // buckets too (it never asks dirFrames to skip them), so their
     // rows enter the version race, lose to their compacted copies (the
@@ -277,8 +260,8 @@ trait GraftDeletionVectors { self: GraftCatalog =>
     val dvEs = entries.filter(_.kind == "dv")
     val delEs = entries.filter(_.kind == "delete")
     val dataEs = entries.filter(_.kind == "data")
-    if (dataEs.isEmpty) return latest.get("id").asLong()
-    val bucketed = optionsOf(m).bucket.isDefined
+    if (dataEs.isEmpty) return latest.id
+    val bucketed = m.options.bucket.isDefined
     // tombstones join the version race with null position identity
     def tombstoneFrame(es: Seq[FileEntry]): Option[DataFrame] =
       unionOption(dirFrames(schema, table, m, es))
@@ -308,14 +291,14 @@ trait GraftDeletionVectors { self: GraftCatalog =>
       delEs.forall(entryOrdinal(_) > buildOrd)
     val victimsUnpersisted: DataFrame = if (incremental) {
       if (deltaDataEs.isEmpty && delEs.isEmpty)
-        return latest.get("id").asLong() // no post-build commits: no-op
+        return latest.id // no post-build commits: no-op
       val deltaData = unionOption(dirFrames(schema, table, m, deltaDataEs,
         withMeta = true))
       val allDelta = (deltaData, tombstoneFrame(delEs)) match {
         case (Some(d), Some(t)) => d.unionByName(t.select(d.columns.map(col): _*))
         case (Some(d), None) => d
         case (None, Some(t)) => t
-        case (None, None) => return latest.get("id").asLong() // nothing to read
+        case (None, None) => return latest.id // nothing to read
       }
       val ranked = allDelta.withColumn("__rn", row_number().over(w))
       // (a) versions superseded WITHIN the delta — O(delta) window (a
@@ -334,7 +317,7 @@ trait GraftDeletionVectors { self: GraftCatalog =>
           // one driver listing per delta dir, zero jobs (the
           // readChangelogFull before-image pattern). A flat delta dir
           // (unknown layout) keeps every bucket — conservative.
-          val n = optionsOf(m).bucket.get
+          val n = m.options.bucket.get
           val changed = changedBucketsOf(schema, table,
             (deltaDataEs ++ delEs).map(_.dir)).getOrElse(0 until n)
           // only the touched buckets' leaves are read: per-build I/O is
@@ -354,12 +337,12 @@ trait GraftDeletionVectors { self: GraftCatalog =>
         }
       val baseVictims = baseScan.map { b0 =>
         val touchedCols = pk.map(col) ++
-          optionsOf(m).sequenceField.map(col).toSeq ++ Seq(col(DvFileCol), col(DvPosCol))
+          m.options.sequenceField.map(col).toSeq ++ Seq(col(DvFileCol), col(DvPosCol))
         val touched = b0.select(touchedCols: _*)
           .join(dvFrame(schema, table, dvEs),
             Seq(DvFileCol, DvPosCol), "left_anti") // already-dead rows don't re-count
           .join(deltaKeys, pk, "left_semi")
-        optionsOf(m).sequenceField match {
+        m.options.sequenceField match {
           case None => touched.select(col(DvFileCol), col(DvPosCol))
           case Some(sf) =>
             // sequence arbitration: the delta top beats the base iff its
@@ -403,17 +386,17 @@ trait GraftDeletionVectors { self: GraftCatalog =>
     try {
       val perFile = victims.groupBy(DvFileCol)
         .agg(org.apache.spark.sql.functions.count(lit(1)).as("n")).collect()
-      if (perFile.isEmpty && delEs.isEmpty) return latest.get("id").asLong()
+      if (perFile.isEmpty && delEs.isEmpty) return latest.id
       val files = perFile.map(_.getString(0)).toSeq.sorted
       val rows = perFile.map(_.getLong(1)).sum
       commit(schema, table,
-        Seq(Leg("", "dv", victims.sortWithinPartitions(DvFileCol, DvPosCol))),
+        Seq(Leg("", "dv", victims.sortWithinPartitions(DvFileCol, DvPosCol),
+          dvIndex = Some((files, rows)))),
         InheritAllExcept(delEs.map(_.dir).toSet),
         // victims are (file, pos) pairs derived from THIS head — abort
         // if a concurrent commit moved it (same contract as deleteWhereDv)
-        basis = Some(commitVersion(m)),
-        compaction = true, // bytes re-indexed, no logical change: changelog skips it
-        dvIndexEntry = Some((files, rows)))
+        basis = Some(m.commitVersion),
+        compaction = true) // bytes re-indexed, no logical change: changelog skips it
     } finally { victims.unpersist(); () }
   }
 
@@ -429,13 +412,11 @@ trait GraftDeletionVectors { self: GraftCatalog =>
    * Returns the new snapshot id (or the current one if nothing matched
    * — no empty snapshots).
    */
-  private[sources] def deleteWhereDv(schema: String, table: String, m: ObjectNode,
+  private[sources] def deleteWhereDv(schema: String, table: String, m: Manifest,
       condition: org.apache.spark.sql.Column): Long = {
-    val snaps = m.get("snapshots").asInstanceOf[ArrayNode]
-    if (snaps.size() == 0) return 0L
-    val latest = snaps.get(snaps.size() - 1)
-    val (dvEs, dataEs) = filesOf(latest).partition(_.kind == "dv")
-    if (dataEs.isEmpty) return latest.get("id").asLong()
+    val latest = m.head.getOrElse(return 0L)
+    val (dvEs, dataEs) = latest.files.partition(_.kind == "dv")
+    if (dataEs.isEmpty) return latest.id
     val withMeta = unionAllByName(dirFrames(schema, table, m, dataEs, withMeta = true))
     // evaluate the predicate over the DV-APPLIED image: an already-deleted
     // row must be invisible, or positions would double-count
@@ -449,15 +430,16 @@ trait GraftDeletionVectors { self: GraftCatalog =>
       // row count is bounded by deleted positions, file count by the table
       val perFile = victims.groupBy(DvFileCol)
         .agg(org.apache.spark.sql.functions.count(lit(1)).as("n")).collect()
-      if (perFile.isEmpty) return latest.get("id").asLong()
+      if (perFile.isEmpty) return latest.id
       val files = perFile.map(_.getString(0)).toSeq.sorted
       val rows = perFile.map(_.getLong(1)).sum
       commit(schema, table,
-        Seq(Leg("", "dv", victims.sortWithinPartitions(DvFileCol, DvPosCol))),
+        Seq(Leg("", "dv", victims.sortWithinPartitions(DvFileCol, DvPosCol),
+          dvIndex = Some((files, rows)))),
         // victims are (file, pos) pairs derived from THIS manifest's file
         // set — a concurrent compact/overwrite would retire those files,
         // so the commit must abort if the head moved (see commit()).
-        basis = Some(commitVersion(m)), dvIndexEntry = Some((files, rows)))
+        basis = Some(m.commitVersion))
     } finally { victims.unpersist(); () }
   }
 
@@ -478,15 +460,13 @@ trait GraftDeletionVectors { self: GraftCatalog =>
       condition: org.apache.spark.sql.Column,
       assignments: Map[String, org.apache.spark.sql.Column]): Long = {
     val m = readManifest(schema, table)
-    val cur = currentSchema(schema, table)
+    val cur = currentSchema(m)
     assignments.keys.foreach { c =>
       require(cur.fieldNames.contains(c), s"unknown column $c")
     }
-    val snaps = m.get("snapshots").asInstanceOf[ArrayNode]
-    if (snaps.size() == 0) return 0L
-    val latest = snaps.get(snaps.size() - 1)
-    val (dvEs, dataEs) = filesOf(latest).partition(_.kind == "dv")
-    if (dataEs.isEmpty) return latest.get("id").asLong()
+    val latest = m.head.getOrElse(return 0L)
+    val (dvEs, dataEs) = latest.files.partition(_.kind == "dv")
+    if (dataEs.isEmpty) return latest.id
     val withMeta = unionAllByName(dirFrames(schema, table, m, dataEs, withMeta = true))
     // evaluate over the DV-APPLIED image: an already-retracted row must
     // be invisible, or its position would be deleted twice
@@ -498,7 +478,7 @@ trait GraftDeletionVectors { self: GraftCatalog =>
     try {
       val perFile = matched.groupBy(DvFileCol)
         .agg(org.apache.spark.sql.functions.count(lit(1)).as("n")).collect()
-      if (perFile.isEmpty) return latest.get("id").asLong()
+      if (perFile.isEmpty) return latest.id
       val files = perFile.map(_.getString(0)).toSeq.sorted
       val rows = perFile.map(_.getLong(1)).sum
       // ONE select evaluating every assignment against the OLD row (SQL
@@ -507,8 +487,8 @@ trait GraftDeletionVectors { self: GraftCatalog =>
         assignments.get(c).map(_.as(c)).getOrElse(col(c))): _*)
       commit(schema, table, Seq(Leg("", "data", updated),
           Leg("-dv", "dv", matched.select(col(DvFileCol), col(DvPosCol))
-            .sortWithinPartitions(DvFileCol, DvPosCol))),
-        basis = Some(commitVersion(m)), dvIndexEntry = Some((files, rows)))
+            .sortWithinPartitions(DvFileCol, DvPosCol), dvIndex = Some((files, rows)))),
+        basis = Some(m.commitVersion))
     } finally { matched.unpersist(); () }
   }
 }

@@ -1,6 +1,5 @@
 package graft.sources
 
-import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -28,9 +27,9 @@ trait GraftDynamicBucket { self: GraftCatalog =>
     * under dynamic bucket): the index tracks each key's current
     * partition and upserts may MOVE a key, tombstoning its old
     * residence. */
-  private[sources] def crossPartition(m: ObjectNode): Boolean = {
-    val parts = partitionColumns(m)
-    val pk = primaryKey(m)
+  private[sources] def crossPartition(m: Manifest): Boolean = {
+    val parts = m.partitionColumns
+    val pk = m.primaryKey
     parts.nonEmpty && pk.nonEmpty && !parts.forall(pk.contains)
   }
 
@@ -38,14 +37,14 @@ trait GraftDynamicBucket { self: GraftCatalog =>
     * values: POSITIONAL names (`__p0`, `__p1`, …) so a partition-column
     * rename never strands old `.dbidx` files (the partitions list keeps
     * its order across renames). */
-  private def dynIdxPartFields(m: ObjectNode): Seq[StructField] = {
-    val byName = currentFields(m).map(f => f.name -> f).toMap
-    partitionColumns(m).zipWithIndex.map { case (c, i) =>
+  private def dynIdxPartFields(m: Manifest): Seq[StructField] = {
+    val byName = m.currentFields.map(f => f.name -> f).toMap
+    m.partitionColumns.zipWithIndex.map { case (c, i) =>
       StructField(s"__p$i", TypeMapping.toSparkType(byName(c).trinoType))
     }
   }
 
-  private def dynIdxSchemaFor(m: ObjectNode): StructType =
+  private def dynIdxSchemaFor(m: Manifest): StructType =
     if (!crossPartition(m)) dynIdxSchema
     else StructType(dynIdxSchema.fields ++ dynIdxPartFields(m))
 
@@ -61,17 +60,10 @@ trait GraftDynamicBucket { self: GraftCatalog =>
    * O(keys) bytes read DISTRIBUTED, never collected to the driver.
    */
   private def readDynamicIndex(schema: String, table: String,
-      m: ObjectNode): DataFrame = {
-    val dirs: Seq[String] =
-      if (!m.has("dynIdx")) Seq.empty
-      else {
-        val dn = m.get("dynIdx").asInstanceOf[ObjectNode]
-        val snaps = m.get("snapshots").asInstanceOf[ArrayNode]
-        if (snaps.size() == 0) Seq.empty
-        else filesOf(snaps.get(snaps.size() - 1))
-          .filter(fe => (fe.kind == "data" || fe.kind == "idx") &&
-            dn.has(fe.dir)).map(_.dir)
-      }
+      m: Manifest): DataFrame = {
+    val flagged = m.dynIdx
+    val dirs: Seq[String] = m.headFiles.filter(fe =>
+      (fe.kind == "data" || fe.kind == "idx") && flagged.contains(fe.dir)).map(_.dir)
     val idxSchema = dynIdxSchemaFor(m)
     if (dirs.isEmpty)
       spark.createDataFrame(
@@ -100,11 +92,8 @@ trait GraftDynamicBucket { self: GraftCatalog =>
     * union — the fragmentation metric the index-only fold triggers on. */
   def dynIdxDeltaCount(schema: String, table: String): Int = {
     val m = readManifest(schema, table)
-    if (!m.has("dynIdx")) return 0
-    val dn = m.get("dynIdx").asInstanceOf[ObjectNode]
-    val snaps = m.get("snapshots").asInstanceOf[ArrayNode]
-    if (snaps.size() == 0) 0
-    else filesOf(snaps.get(snaps.size() - 1)).count(fe => dn.has(fe.dir))
+    val flagged = m.dynIdx
+    m.headFiles.count(fe => flagged.contains(fe.dir))
   }
 
   /**
@@ -125,7 +114,7 @@ trait GraftDynamicBucket { self: GraftCatalog =>
    */
   def foldDynamicBucketIndex(schema: String, table: String): Long = {
     val m = readManifest(schema, table)
-    require(optionsOf(m).bucket.contains(-1),
+    require(m.options.bucket.contains(-1),
       s"$schema.$table is not a dynamic-bucket table")
     if (dynIdxDeltaCount(schema, table) <= 1) return -1L
     val idx = readDynamicIndex(schema, table, m)
@@ -136,15 +125,15 @@ trait GraftDynamicBucket { self: GraftCatalog =>
     if (keys == 0) return -1L
     val empty = spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      currentSchema(schema, table))
+      currentSchema(m))
     commit(schema, table, Seq(Leg("", "idx", empty, index = Some((folded, keys)))),
-      basis = Some(commitVersion(m)), compaction = true)
+      basis = Some(m.commitVersion), compaction = true)
   }
 
   /** Latest index record per key of a cross-partition table — apply
     * AFTER any batch-key semi join so a micro-batch never shuffles the
     * whole index through the latest-wins aggregate. */
-  private def dynIdxLatest(m: ObjectNode, idx: DataFrame): DataFrame = {
+  private def dynIdxLatest(m: Manifest, idx: DataFrame): DataFrame = {
     val partIdx = dynIdxPartFields(m).map(_.name)
     val payload = org.apache.spark.sql.functions.struct(
       (col("__io") +: col("__b") +: partIdx.map(col)): _*)
@@ -198,14 +187,14 @@ trait GraftDynamicBucket { self: GraftCatalog =>
    * Returns (routed main frame, routed delete frame, index delta with
    * its key count — None when the commit assigns nothing new).
    */
-  private[sources] def dynamicRoute(schema: String, table: String, m: ObjectNode,
+  private[sources] def dynamicRoute(schema: String, table: String, m: Manifest,
       df: DataFrame, deleteDf: Option[DataFrame], kind: String,
       fold: Boolean, reset: Boolean):
       (DataFrame, Option[DataFrame], Option[(DataFrame, Long)]) = {
-    val pk = primaryKey(m)
+    val pk = m.primaryKey
     val hash = xxhash64(pk.map(col): _*)
     val crossPart = crossPartition(m)
-    val partCols = partitionColumns(m)
+    val partCols = m.partitionColumns
     val fn = org.apache.spark.sql.functions
     /** Read an observed-metrics long, null-safe (empty frames aggregate
       * count to 0 but sums to null). */
@@ -294,7 +283,7 @@ trait GraftDynamicBucket { self: GraftCatalog =>
     val assignedOpt: Option[DataFrame] =
       if (kind != "data" || nNew == 0) None
       else {
-        val target = optionsOf(m).dynamicTargetRows
+        val target = m.options.dynamicTargetRows
         val newKeys = allKeys.filter(col("__d") === 1)
           .join(sized(known.select("__kh")), Seq("__kh"), "left_anti")
           .select("__kh")
@@ -507,11 +496,11 @@ trait GraftDynamicBucket { self: GraftCatalog =>
   def dynamicBucketFor(schema: String, table: String,
       values: Seq[Any]): Option[Int] = {
     val m = readManifest(schema, table)
-    require(optionsOf(m).bucket.contains(-1),
+    require(m.options.bucket.contains(-1),
       s"$schema.$table is not a dynamic-bucket table")
-    val pk = primaryKey(m)
+    val pk = m.primaryKey
     require(values.length == pk.length, s"expected ${pk.length} pk values")
-    val cur = currentFields(m).map(f => f.name -> f.trinoType).toMap
+    val cur = m.currentFields.map(f => f.name -> f.trinoType).toMap
     val row = spark.range(1).select(pk.zip(values).map { case (c, v) =>
       lit(v).cast(TypeMapping.toSparkType(cur(c))).as(c)
     }: _*)
@@ -538,14 +527,14 @@ trait GraftDynamicBucket { self: GraftCatalog =>
     require(crossPartition(m),
       s"$schema.$table is not a cross-partition upsert table — " +
         "use dynamicBucketFor / bucketFor")
-    val pk = primaryKey(m)
+    val pk = m.primaryKey
     require(values.length == pk.length, s"expected ${pk.length} pk values")
-    val cur = currentFields(m).map(f => f.name -> f.trinoType).toMap
+    val cur = m.currentFields.map(f => f.name -> f.trinoType).toMap
     val row = spark.range(1).select(pk.zip(values).map { case (c, v) =>
       lit(v).cast(TypeMapping.toSparkType(cur(c))).as(c)
     }: _*)
     val kh = row.select(xxhash64(pk.map(col): _*).as("h")).head().getLong(0)
-    val nParts = partitionColumns(m).length
+    val nParts = m.partitionColumns.length
     readDynamicIndex(schema, table, m).filter(col("__kh") === kh)
       .orderBy(col("__io").desc).collect().headOption.map { r =>
         ((0 until nParts).map(i => r.get(r.fieldIndex(s"__p$i"))),

@@ -2,8 +2,6 @@ package graft.sources
 
 import scala.collection.mutable
 
-import com.fasterxml.jackson.databind.JsonNode
-import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -36,7 +34,8 @@ trait GraftMaintenance { self: GraftCatalog =>
   private[sources] def autoMaintain(schema: String, table: String,
       fromCompaction: Boolean): Unit =
     if (!fromCompaction) try {
-      val opts = optionsOf(schema, table)
+      val m = readManifest(schema, table)
+      val opts = m.options
       // Paimon's write-only: ingestion-only writers skip ALL commit-time
       // maintenance (a dedicated maintenance job runs it elsewhere) —
       // the latency knob for high-frequency streaming commits
@@ -56,28 +55,20 @@ trait GraftMaintenance { self: GraftCatalog =>
       // the cadence knob for changelog-heavy PK tables where dir count
       // alone understates merge debt (many small same-bucket versions).
       opts.fullCompactionDeltaCommits.foreach { n =>
-        val m = readManifest(schema, table)
-        val snaps = m.get("snapshots").asInstanceOf[ArrayNode]
-        val since = (0 until snaps.size()).map(snaps.get)
-          .reverse.takeWhile(!_.has("compaction")).size
-        if (since >= n) compact(schema, table)
+        if (readManifest(schema, table).commitsSinceCompaction >= n)
+          compact(schema, table)
       }
       // PK deletion-vector maintenance cadence: build DVs after every N
       // data commits — the lookup-compaction rhythm that keeps a DV
       // table's reads merge-free WITHOUT rewriting data bytes (the build
       // is compaction-kind, so the counter resets and it never reenters).
       opts.dvBuildDeltaCommits.foreach { n =>
-        if (opts.deletionVectors &&
-            primaryKeyOf(schema, table).nonEmpty) {
-          val m = readManifest(schema, table)
-          val snaps = m.get("snapshots").asInstanceOf[ArrayNode]
-          val since = (0 until snaps.size()).map(snaps.get)
-            .reverse.takeWhile(!_.has("compaction")).size
-          if (since >= n) buildDeletionVectors(schema, table)
-        }
+        if (opts.deletionVectors && m.primaryKey.nonEmpty &&
+            readManifest(schema, table).commitsSinceCompaction >= n)
+          buildDeletionVectors(schema, table)
       }
       opts.minSmallFiles.foreach { n =>
-        if (primaryKeyOf(schema, table).isEmpty) {
+        if (m.primaryKey.isEmpty) {
           compactSmall(schema, table, opts.smallBytes, minDirs = math.max(n, 2))
         }
       }
@@ -102,7 +93,8 @@ trait GraftMaintenance { self: GraftCatalog =>
 
   private[sources] def autoExpire(schema: String, table: String): Unit =
     try {
-      val opts = optionsOf(schema, table)
+      val m = readManifest(schema, table)
+      val opts = m.options
       if (opts.writeOnly) return // see autoMaintain
       opts.snapshotNumRetained.foreach { n =>
         expireSnapshots(schema, table, keepLast = n)
@@ -143,7 +135,7 @@ trait GraftMaintenance { self: GraftCatalog =>
       // inner commit re-enters autoExpire; it terminates because the
       // re-entry finds nothing expired.
       opts.partitionExpirationMs.foreach { ms =>
-        opts.partitionExpirationColumn.orElse(partitionColumnsOf(schema, table).headOption)
+        opts.partitionExpirationColumn.orElse(m.partitionColumns.headOption)
           .foreach { pc =>
             val cutoff = java.time.LocalDate.ofInstant(
               java.time.Instant.ofEpochMilli(System.currentTimeMillis() - ms),
@@ -180,19 +172,17 @@ trait GraftMaintenance { self: GraftCatalog =>
     // and consumers read only files). The first compaction emits the
     // whole image as +I, exactly Paimon's initial full-compaction scan.
     val cl: Option[Leg] =
-      if (optionsOf(m).changelogProducer == "full-compaction" &&
-          primaryKey(m).nonEmpty) {
-        val snaps = m.get("snapshots").asInstanceOf[ArrayNode]
-        val headId = if (snaps.size() == 0) 0L
-          else snaps.get(snaps.size() - 1).get("id").asLong()
-        val from = changelogIndexFrom(m).values.map(_._1).maxOption.getOrElse(0L)
+      if (m.options.changelogProducer == "full-compaction" &&
+          m.primaryKey.nonEmpty) {
+        val headId = m.headId
+        val from = m.changelog.values.map(_._1).maxOption.getOrElse(0L)
         if (headId > from) Some(Leg("-cl", "cl",
           readChangelogFull(schema, table, from, headId), from = Some(from)))
         else None
       } else None
     commit(schema, table, Leg("", "data", headImage(schema, table, m),
         clustered = headMergesPerBucket(m)) +: cl.toSeq,
-      InheritNone, basis = Some(commitVersion(m)), compaction = true)
+      InheritNone, basis = Some(m.commitVersion), compaction = true)
   }
 
   /**
@@ -223,25 +213,24 @@ trait GraftMaintenance { self: GraftCatalog =>
    */
   def compactBuckets(schema: String, table: String, buckets: Seq[Int]): Long = {
     val m = readManifest(schema, table)
-    val n = optionsOf(m).bucket.getOrElse(throw new IllegalArgumentException(
+    val n = m.options.bucket.getOrElse(throw new IllegalArgumentException(
       s"$schema.$table is not bucketed — per-bucket compaction needs a " +
         "fixed bucket layout; use compact() or compactSmall()"))
     require(n >= 1, s"$schema.$table uses dynamic bucket mode — compact() " +
       "folds its key index atomically; per-bucket compaction serves fixed layouts")
-    require(primaryKey(m).nonEmpty,
+    require(m.primaryKey.nonEmpty,
       s"$schema.$table is append-only — use compactSmall for minor maintenance")
     require(buckets.nonEmpty, "no buckets given")
     require(buckets.forall(b => b >= 0 && b < n),
       s"buckets must be in [0, $n), got ${buckets.mkString(", ")}")
-    val snaps = m.get("snapshots").asInstanceOf[ArrayNode]
-    require(snaps.size() > 0, s"$schema.$table has no snapshots")
-    if (filesOf(snaps.get(snaps.size() - 1)).exists(_.kind == "dv"))
+    require(m.head.isDefined, s"$schema.$table has no snapshots")
+    val entries = m.headFiles
+    if (entries.exists(_.kind == "dv"))
       return compactBucketsDv(schema, table, buckets.distinct.sorted)
-    val entries = filesOf(snaps.get(snaps.size() - 1))
     val img = bucketedResolve(schema, table, m, entries, n,
       onlyBuckets = Some(buckets.distinct.sorted)).getOrElse(emptyFrame(m))
     commit(schema, table, Seq(Leg("", "data", img, clustered = true)),
-      InheritRetiring(buckets.toSet), basis = Some(commitVersion(m)),
+      InheritRetiring(buckets.toSet), basis = Some(m.commitVersion),
       compaction = true)
   }
 
@@ -265,14 +254,13 @@ trait GraftMaintenance { self: GraftCatalog =>
       buckets: Seq[Int]): Long = {
     buildDeletionVectors(schema, table) // restore the covered invariant
     val m = readManifest(schema, table)
-    val basis = Some(commitVersion(m))
-    val snaps = m.get("snapshots").asInstanceOf[ArrayNode]
-    val entries = filesOf(snaps.get(snaps.size() - 1))
+    val basis = Some(m.commitVersion)
+    val entries = m.headFiles
     val (dvEs, dataEs) = entries.partition(_.kind == "dv")
     require(entries.forall(fe => fe.kind == "data" || fe.kind == "dv"),
       s"$schema.$table: tombstone dirs survived a DV build — " +
         "the covered invariant does not hold")
-    val names = currentFields(m).map(_.name)
+    val names = m.currentFields.map(_.name)
     // only the chosen buckets' leaves are read, minus each inherited
     // entry's RETIRED buckets (prior folds): their rows are dead to the
     // head — without this they are re-read and re-anti-joined on every
@@ -280,7 +268,7 @@ trait GraftMaintenance { self: GraftCatalog =>
     // same dead bytes forever
     val inBuckets = unionOption(dirFrames(schema, table, m, dataEs,
         withMeta = true, onlyBuckets = Some(buckets), skipRetired = true))
-      .getOrElse(return snaps.get(snaps.size() - 1).get("id").asLong())
+      .getOrElse(return m.headId)
     val live = (if (dvEs.isEmpty) inBuckets
       // the anti-join side shrinks to the chosen buckets' positions
       else inBuckets.join(
@@ -312,12 +300,11 @@ trait GraftMaintenance { self: GraftCatalog =>
           val inDir: Set[Int] = zones.get(fe.dir).filter(_.nonEmpty) match {
             case Some(fm) => fm.keysIterator.flatMap(bucketOfPath).toSet
             case None => bucketsUnder(dirPath(schema, table, fe.dir),
-              partitionColumns(m).length).toSet
+              m.partitionColumns.length).toSet
           }
           (inDir -- fe.excludeBuckets).exists(chosen.contains)
         }
-        if (!holdsBytes)
-          return snaps.get(snaps.size() - 1).get("id").asLong()
+        if (!holdsBytes) return m.headId
         return commit(schema, table,
           Seq(Leg("", "data", live.select(names.map(col): _*))),
           InheritRetiring(buckets.toSet), basis, compaction = true)
@@ -327,9 +314,8 @@ trait GraftMaintenance { self: GraftCatalog =>
       commit(schema, table,
         Seq(Leg("", "data", live.select(names.map(col): _*)),
           Leg("-dv", "dv", live.select(col(DvFileCol), col(DvPosCol))
-            .sortWithinPartitions(DvFileCol, DvPosCol))),
-        InheritRetiring(buckets.toSet), basis, compaction = true,
-        dvIndexEntry = Some((files, rows)))
+            .sortWithinPartitions(DvFileCol, DvPosCol), dvIndex = Some((files, rows)))),
+        InheritRetiring(buckets.toSet), basis, compaction = true)
     } finally { live.unpersist(); () }
   }
 
@@ -342,14 +328,11 @@ trait GraftMaintenance { self: GraftCatalog =>
    */
   def bucketSortedRuns(schema: String, table: String): Map[Int, Int] = {
     val m = readManifest(schema, table)
-    val n = optionsOf(m).bucket.getOrElse(return Map.empty)
-    if (n < 1 || primaryKey(m).isEmpty) return Map.empty
-    val snaps = m.get("snapshots").asInstanceOf[ArrayNode]
-    if (snaps.size() == 0) return Map.empty
-    val entries = filesOf(snaps.get(snaps.size() - 1))
-      .filter(fe => fe.kind == "data" || fe.kind == "delete")
+    val n = m.options.bucket.getOrElse(return Map.empty)
+    if (n < 1 || m.primaryKey.isEmpty) return Map.empty
+    val entries = m.headFiles.filter(fe => fe.kind == "data" || fe.kind == "delete")
     val perFile = fileStatsFrom(schema, table, m)
-    val partDepth = partitionColumns(m).length
+    val partDepth = m.partitionColumns.length
     def listed(fe: FileEntry): Set[Int] = bucketsUnder(
       dirPath(schema, table, fe.dir), if (fe.kind == "data") partDepth else 0).toSet
     val counts = mutable.Map.empty[Int, Int].withDefaultValue(0)
@@ -396,17 +379,14 @@ trait GraftMaintenance { self: GraftCatalog =>
   def rescaleBucket(schema: String, table: String, newBuckets: Int): Long = {
     require(newBuckets >= 1, s"bucket count must be >= 1, got $newBuckets")
     val m = readManifest(schema, table)
-    val old = optionsOf(m).bucket.getOrElse(throw new IllegalArgumentException(
+    val old = m.options.bucket.getOrElse(throw new IllegalArgumentException(
       s"$schema.$table is not bucketed — set `bucket` at create"))
     require(old != -1, s"$schema.$table is a dynamic-bucket table — it " +
       "sizes itself (dynamic-bucket.target-row-num); rescale applies to " +
       "fixed-bucket layouts")
-    val snaps = m.get("snapshots").asInstanceOf[ArrayNode]
-    val headId = if (snaps.size() == 0) 0L
-      else snaps.get(snaps.size() - 1).get("id").asLong()
-    if (old == newBuckets) return headId
+    if (old == newBuckets) return m.headId
     commit(schema, table, Seq(Leg("", "data", headImage(schema, table, m))),
-      InheritNone, basis = Some(commitVersion(m)), compaction = true,
+      InheritNone, basis = Some(m.commitVersion), compaction = true,
       optionOverrides = Map(TableOptions.Bucket.key -> newBuckets.toString))
   }
 
@@ -450,14 +430,14 @@ trait GraftMaintenance { self: GraftCatalog =>
     // BucketCol reservation in createTable): a user column with either
     // name would be silently overwritten by withColumn and corrupted in
     // the rewritten snapshot.
-    currentFields(m).map(_.name).foreach { n =>
+    m.currentFields.map(_.name).foreach { n =>
       require(n != "__range" && !(zorder && n == "__z"),
         s"sortCompact reserves column name $n (rename the column first)")
     }
-    require(optionsOf(m).bucket.isEmpty || primaryKey(m).isEmpty,
+    require(m.options.bucket.isEmpty || m.primaryKey.isEmpty,
       s"$schema.$table is bucketed — its layout is the read contract; " +
         "use compact() instead")
-    val cur = currentSchema(schema, table)
+    val cur = currentSchema(m)
     by.foreach(c => require(cur.fieldNames.contains(c), s"unknown column $c"))
     // Linear order: range-partition + sort by the columns themselves.
     // Z-order: range-partition + sort by the interleaved-bit z-value, so
@@ -495,7 +475,7 @@ trait GraftMaintenance { self: GraftCatalog =>
         else rangeDirs.toSeq.map(rd => Leg(s"-r${rd.stripPrefix("__range=")}",
           "data", img, staged = Some(s"$staging/$rd")))
       commit(schema, table, legs, InheritNone,
-        basis = Some(commitVersion(m)), compaction = true)
+        basis = Some(m.commitVersion), compaction = true)
     } finally {
       // landed ranges moved out; an aborted attempt's unclaimed ones go
       try fs.delete(new Path(tablePath(schema, table), staging), true)
@@ -590,14 +570,13 @@ trait GraftMaintenance { self: GraftCatalog =>
     require(smallBytes > 0, "smallBytes must be positive")
     require(minDirs >= 2, "minDirs must be >= 2 (one dir has nothing to merge)")
     val m = readManifest(schema, table)
-    require(primaryKey(m).isEmpty,
+    require(m.primaryKey.isEmpty,
       s"$schema.$table has a primary key — use compact(): per-key version " +
         "ordinals interleave across dirs, so only the full image merges soundly")
-    val snaps = m.get("snapshots").asInstanceOf[ArrayNode]
-    if (snaps.size() == 0) return None
-    val entries = filesOf(snaps.get(snaps.size() - 1))
+    if (m.head.isEmpty) return None
+    val entries = m.headFiles
     // a DV-dirty dir: any dir some deletion-vector entry names a file in
-    val dirtyDirs: Set[String] = dvIndexFrom(m).values
+    val dirtyDirs: Set[String] = m.dvIndex.values
       .flatMap(_._1).map(_.takeWhile(_ != '/')).toSet
     val candidates = entries.filter(e => e.kind == "data" &&
       !dirtyDirs.contains(dirKey(e.dir)) &&
@@ -613,7 +592,7 @@ trait GraftMaintenance { self: GraftCatalog =>
     // as DV deletes.
     Some(commit(schema, table, Seq(Leg("", "data", img)),
       InheritAllExcept(candidates.map(_.dir).toSet),
-      basis = Some(commitVersion(m)), compaction = true))
+      basis = Some(m.commitVersion), compaction = true))
   }
 
   /**
@@ -627,31 +606,28 @@ trait GraftMaintenance { self: GraftCatalog =>
   def expireSnapshots(schema: String, table: String, keepLast: Int): Seq[Long] = {
     require(keepLast >= 1, "must keep at least the current snapshot")
     val m = readManifest(schema, table)
-    val snaps = m.get("snapshots").asInstanceOf[ArrayNode]
-    val all = (0 until snaps.size()).map(snaps.get)
+    val all = m.snapshots
     if (all.size <= keepLast) return Seq.empty
     // Tagged snapshots are pinned (a tag is a retention promise), and so
     // is everything a registered consumer has not yet processed
     // (Paimon's consumer-id: never expire unread history).
-    val tagged = tags(schema, table).values.toSet
+    val tagged = m.tags.values.toSet
     // keep next-1 too: it is the consumer's exclusive replay BASIS — the
     // changelog range (next-1, to] needs that snapshot's position so the
     // per-snapshot set difference stays exact (dropping it would attribute
     // already-processed history to the oldest retained snapshot and
     // over-replay it)
-    val minUnconsumed = consumerOffsetsFrom(m).values.minOption
+    val minUnconsumed = m.consumers.values.minOption
       .map(n => math.max(1L, n - 1)).getOrElse(Long.MaxValue)
     val (candidates, kept0) = all.splitAt(all.size - keepLast)
-    val (pinned, dropped) = candidates.partition { s =>
-      val id = s.get("id").asLong()
-      tagged.contains(id) || id >= minUnconsumed
-    }
+    val (pinned, dropped) = candidates.partition(s =>
+      tagged.contains(s.id) || s.id >= minUnconsumed)
     if (dropped.isEmpty) return Seq.empty
-    val kept = (pinned ++ kept0).sortBy(_.get("id").asLong())
+    val kept = (pinned ++ kept0).sortBy(_.id)
     dropSnapshots(schema, table, m, kept, dropped)
     try sweepOrphanDirs(schema, table)
     catch { case _: java.io.IOException => () }
-    dropped.map(_.get("id").asLong())
+    dropped.map(_.id)
   }
 
   /**
@@ -665,24 +641,22 @@ trait GraftMaintenance { self: GraftCatalog =>
   def expireSnapshotsOlderThan(schema: String, table: String,
       olderThanMillis: Long): Seq[Long] = {
     val m = readManifest(schema, table)
-    val snaps = m.get("snapshots").asInstanceOf[ArrayNode]
-    val all = (0 until snaps.size()).map(snaps.get)
+    val all = m.snapshots
     if (all.isEmpty) return Seq.empty
-    val tagged = tags(schema, table).values.toSet
+    val tagged = m.tags.values.toSet
     // next-1 kept as the consumer's exclusive replay basis (see above)
-    val minUnconsumed = consumerOffsetsFrom(m).values.minOption
+    val minUnconsumed = m.consumers.values.minOption
       .map(n => math.max(1L, n - 1)).getOrElse(Long.MaxValue)
-    val currentId = all.last.get("id").asLong()
+    val currentId = all.last.id
     val (dropped, kept) = all.partition { s =>
-      val id = s.get("id").asLong()
-      s.get("timestampMillis").asLong() < olderThanMillis &&
-        id != currentId && !tagged.contains(id) && id < minUnconsumed
+      s.timestampMillis < olderThanMillis &&
+        s.id != currentId && !tagged.contains(s.id) && s.id < minUnconsumed
     }
     if (dropped.isEmpty) return Seq.empty
     dropSnapshots(schema, table, m, kept, dropped)
     try sweepOrphanDirs(schema, table)
     catch { case _: java.io.IOException => () }
-    dropped.map(_.get("id").asLong())
+    dropped.map(_.id)
   }
 
   /**
@@ -719,18 +693,17 @@ trait GraftMaintenance { self: GraftCatalog =>
       newData: Option[DataFrame]): (Seq[String], Option[Long]) = {
     import scala.jdk.CollectionConverters._
     val m = readManifest(schema, table)
-    require(primaryKey(m).isEmpty,
+    require(m.primaryKey.isEmpty,
       s"$schema.$table has a primary key — partition expiration serves " +
         "append-only tables; use deleteWhere for row-level PK deletes")
-    require(dvIndexFrom(m).isEmpty,
+    require(m.dvIndex.isEmpty,
       s"$schema.$table has live deletion vectors — compact() first so no " +
         "DV names a file this commit would retire")
-    val pcols = partitionColumnsOf(schema, table)
+    val pcols = m.partitionColumns
     require(pcols.nonEmpty, s"$schema.$table is not partitioned")
-    val snaps = m.get("snapshots").asInstanceOf[ArrayNode]
-    if (snaps.size() == 0) return (Seq.empty,
+    if (m.head.isEmpty) return (Seq.empty,
       newData.map(d => commit(schema, table, Seq(Leg("", "data", d)))))
-    val allEntries = filesOf(snaps.get(snaps.size() - 1)).filter(_.kind == "data")
+    val allEntries = m.headFiles.filter(_.kind == "data")
     // Candidate prefilter from the head's dir-level zones (partition
     // columns carry path-segment zones): a dir the evaluator PROVES
     // cannot hold a row matching `where` holds no expired partition, so
@@ -742,7 +715,7 @@ trait GraftMaintenance { self: GraftCatalog =>
       .queryExecution.analyzed.collectFirst {
         case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition
       }
-    val headStats = dirStatsFrom(m)
+    val headStats = m.dirStats
     val entries = resolvedCond match {
       case Some(cond) => allEntries.filter(fe =>
         headStats.get(fe.dir).forall(FileStats.mightMatch(_, cond)))
@@ -766,7 +739,7 @@ trait GraftMaintenance { self: GraftCatalog =>
     // as Spark partition discovery types them: unescape the path value,
     // NULL for the default-partition token, explicit cast to the
     // declared column type (never inference).
-    val sch = currentSchema(schema, table)
+    val sch = currentSchema(m)
     val typeOf = sch.fields.map(f => f.name.toLowerCase -> f.dataType).toMap
     val rows = allParts.map { pp =>
       val vals = pp.split('/').map(_.split("=", 2)).map { kv =>
@@ -803,7 +776,7 @@ trait GraftMaintenance { self: GraftCatalog =>
     }
     val sid = commit(schema, table, Seq(Leg("", "data", img)),
       InheritAllExcept(affected.map(_.dir).toSet),
-      basis = Some(commitVersion(m)))
+      basis = Some(m.commitVersion))
     (expired.toSeq.sorted, Some(sid))
   }
 
@@ -822,10 +795,8 @@ trait GraftMaintenance { self: GraftCatalog =>
   def sweepOrphanDirs(schema: String, table: String,
       graceMillis: Long = 3600000L): Seq[String] = {
     val m = readManifest(schema, table)
-    val snaps = m.get("snapshots").asInstanceOf[ArrayNode]
-    val referenced = (0 until snaps.size()).map(snaps.get)
-      .flatMap(filesOf).map(_.dir).toSet ++
-      changelogIndexFrom(m).keySet // producer changelog dirs are live too
+    val referenced = m.snapshots.flatMap(_.files).map(_.dir).toSet ++
+      m.changelog.keySet // producer changelog dirs are live too
     val cutoff = System.currentTimeMillis() - graceMillis
     // a local dir another lineage of the same base still references
     // (a branch inheriting it, or the base after a fast-forward) is not
@@ -845,46 +816,24 @@ trait GraftMaintenance { self: GraftCatalog =>
   }
 
   /** Shared tail of [[expireSnapshots]] and [[rollbackTo]]: rewrite the
-    * snapshot list to `kept`, remove the zone maps of newly-orphaned
-    * dirs, commit the manifest FIRST and delete orphan dirs after (a
-    * crash between the two leaves unreferenced dirs, never a dangling
+    * snapshot list to `kept` (dropping what was keyed by the dropped
+    * snapshots), remove the dir-keyed entries of newly-orphaned dirs,
+    * commit the manifest FIRST and delete orphan dirs after (a crash
+    * between the two leaves unreferenced dirs, never a dangling
     * manifest). */
-  private def dropSnapshots(schema: String, table: String, m: ObjectNode,
-      kept: Seq[JsonNode], dropped: Seq[JsonNode]): Unit = {
-    val keptDirs = kept.flatMap(filesOf).map(_.dir).toSet
-    val orphanDirs = dropped.flatMap(filesOf).map(_.dir).distinct
+  private def dropSnapshots(schema: String, table: String, m: Manifest,
+      kept: Seq[Manifest.Snapshot], dropped: Seq[Manifest.Snapshot]): Unit = {
+    val keptDirs = kept.flatMap(_.files).map(_.dir).toSet
+    val orphanDirs = dropped.flatMap(_.files).map(_.dir).distinct
       .filterNot(keptDirs.contains)
-    val arr = m.putArray("snapshots")
-    kept.foreach(arr.add)
-    if (m.has("dirStats")) {
-      val statsNode = m.get("dirStats").asInstanceOf[ObjectNode]
-      orphanDirs.foreach(statsNode.remove)
-    }
-    if (m.has("dvIndex")) {
-      val idxNode = m.get("dvIndex").asInstanceOf[ObjectNode]
-      orphanDirs.foreach(idxNode.remove)
-    }
-    if (m.has("bloomIdx")) {
-      val bNode = m.get("bloomIdx").asInstanceOf[ObjectNode]
-      orphanDirs.foreach(bNode.remove)
-    }
-    if (m.has("dynIdx")) {
-      val dNode = m.get("dynIdx").asInstanceOf[ObjectNode]
-      orphanDirs.foreach(dNode.remove)
-    }
     // changelog dirs belong to their snapshot: dropped snapshot → entry
     // removed here, dir deleted below with the other orphans
-    val deadClDirs: Seq[String] =
-      if (!m.has("changelog")) Seq.empty
-      else {
-        val cn = m.get("changelog").asInstanceOf[ObjectNode]
-        val droppedIds = dropped.map(_.get("id").asLong()).toSet
-        val dead = changelogIndexFrom(m).collect {
-          case (d, (id, _, _)) if droppedIds.contains(id) => d
-        }.toSeq
-        dead.foreach(cn.remove)
-        dead
-      }
+    val droppedIds = dropped.map(_.id).toSet
+    val deadClDirs = m.changelog.collect {
+      case (d, (id, _, _)) if droppedIds.contains(id) => d
+    }.toSeq
+    m.keepSnapshots(kept)
+    m.dropDirs(orphanDirs ++ deadClDirs)
     writeManifest(schema, table, m)
     // Cross-lineage pinning: a dir still referenced by ANY other lineage
     // of the same base table (a branch that inherited it, or the base
@@ -903,7 +852,7 @@ trait GraftMaintenance { self: GraftCatalog =>
     // can need that subtree, so its bytes are reclaimed in place. Dirs a
     // sibling lineage (branch) still references are left whole: the
     // other lineage's entries may carry no exclusion.
-    val keptRefs = kept.flatMap(filesOf).groupBy(_.dir)
+    val keptRefs = kept.flatMap(_.files).groupBy(_.dir)
       .filter { case (_, fes) => fes.forall(_.excludeBuckets.nonEmpty) }
     keptRefs.foreach { case (d, fes) =>
       val common = fes.map(_.excludeBuckets.toSet).reduce(_ intersect _)
@@ -934,14 +883,13 @@ trait GraftMaintenance { self: GraftCatalog =>
    */
   def rollbackTo(schema: String, table: String, snapshotId: Long): Unit = {
     val m = readManifest(schema, table)
-    val snaps = m.get("snapshots").asInstanceOf[ArrayNode]
-    val all = (0 until snaps.size()).map(snaps.get)
-    require(all.exists(_.get("id").asLong() == snapshotId),
+    val all = m.snapshots
+    require(all.exists(_.id == snapshotId),
       s"no snapshot $snapshotId for $schema.$table")
-    val (kept, dropped) = all.partition(_.get("id").asLong() <= snapshotId)
+    val (kept, dropped) = all.partition(_.id <= snapshotId)
     if (dropped.isEmpty) return
-    val droppedIds = dropped.map(_.get("id").asLong()).toSet
-    val pinning = tags(schema, table).filter(kv => droppedIds.contains(kv._2))
+    val droppedIds = dropped.map(_.id).toSet
+    val pinning = m.tags.filter(kv => droppedIds.contains(kv._2))
     require(pinning.isEmpty, s"cannot roll back $schema.$table past tagged " +
       s"snapshot(s) ${pinning.map(kv => s"${kv._1}→${kv._2}").mkString(", ")} — " +
       "delete the tag(s) first")
@@ -962,17 +910,16 @@ trait GraftMaintenance { self: GraftCatalog =>
   def resolvedSnapshotId(schema: String, table: String,
       upTo: Option[Long] = None): Option[Long] = {
     val m = readManifest(schema, table)
-    val snaps = m.get("snapshots").asInstanceOf[ArrayNode]
-    val cur = m.get("currentSchemaVersion").asInt()
-    val pk = primaryKey(m)
+    val cur = m.currentSchemaVersion
+    val pk = m.primaryKey
     def ordinal(dir: String) = dirKey(dir).stripPrefix("snap-").takeWhile(_.isDigit)
-    (0 until snaps.size()).reverseIterator.map(snaps.get).collectFirst {
-      case s if upTo.forall(s.get("id").asLong() <= _) && {
-        val entries = filesOf(s)
+    m.snapshots.reverseIterator.collectFirst {
+      case s if upTo.forall(s.id <= _) && {
+        val entries = s.files
         entries.nonEmpty &&
           entries.forall(e => e.kind == "data" && e.schemaVersion == cur) &&
           (pk.isEmpty || entries.map(e => ordinal(e.dir)).distinct.size == 1)
-      } => s.get("id").asLong()
+      } => s.id
     }
   }
 

@@ -2,8 +2,6 @@ package graft.sources
 
 import scala.collection.mutable
 
-import com.fasterxml.jackson.databind.JsonNode
-import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -28,18 +26,11 @@ trait GraftMetadataViews { self: GraftCatalog =>
     * added file dirs. */
   def snapshotsTable(schema: String, table: String): DataFrame = {
     val m = readManifest(schema, table)
-    val snaps = m.get("snapshots").asInstanceOf[ArrayNode]
-    val all = (0 until snaps.size()).map(snaps.get)
-    val rows = all.indices.map { i =>
-      val s = all(i)
+    val rows = m.snapshots.zipWithIndex.map { case (s, i) =>
       // set difference, not count difference: overwrite/compact snapshots
       // reference fewer dirs than their predecessor but still ADD dirs
-      val commitKind =
-        if (s.has("commitKind")) s.get("commitKind").asText()
-        else if (s.has("compaction")) "compact" // pre-r5 manifests
-        else "append"
-      (s.get("id").asLong(), s.get("timestampMillis").asLong(), commitKind,
-        filesOf(s).map(_.dir).distinct.size, addedEntries(all, i).map(_.dir).distinct.size)
+      (s.id, s.timestampMillis, s.commitKind,
+        s.files.map(_.dir).distinct.size, m.addedAt(i).map(_.dir).distinct.size)
     }
     spark.createDataFrame(rows).toDF(
       "snapshot_id", "timestamp_millis", "commit_kind", "n_file_dirs", "n_added_dirs")
@@ -50,13 +41,11 @@ trait GraftMetadataViews { self: GraftCatalog =>
   def filesTable(schema: String, table: String,
       snapshotId: Option[Long] = None): DataFrame = {
     val m = readManifest(schema, table)
-    val snaps = m.get("snapshots").asInstanceOf[ArrayNode]
-    val all = (0 until snaps.size()).map(snaps.get)
     val chosen = snapshotId match {
       case Some(id) =>
-        val s = all.find(_.get("id").asLong() == id)
+        val s = m.snapshot(id)
         require(s.isDefined, s"no snapshot $id for $schema.$table"); s
-      case None => all.lastOption
+      case None => m.head
     }
     // Per-dir file counts/bytes answer from the ZONE SIDECARS (the same
     // manifest tier `$partitions` reads — per-file entries now carry the
@@ -66,7 +55,7 @@ trait GraftMetadataViews { self: GraftCatalog =>
     // back to the filesystem — bounded by those dirs alone, counted by
     // the tripwire below.
     val perFile = fileStatsFrom(schema, table, m)
-    val rows = chosen.map(filesOf).getOrElse(Seq.empty).map { fe =>
+    val rows = chosen.map(_.files).getOrElse(Seq.empty).map { fe =>
       // retired buckets' subtrees may already be reclaimed from disk —
       // drop their sidecar entries so counts match what a reader plans
       val sidecar = perFile.get(fe.dir)
@@ -115,8 +104,8 @@ trait GraftMetadataViews { self: GraftCatalog =>
   def partitionsTable(schema: String, table: String,
       snapshotId: Option[Long] = None): DataFrame = {
     val m = readManifest(schema, table)
-    val entries = chooseSnapshot(m, schema, table, snapshotId, None)
-      .map(filesOf).getOrElse(Seq.empty)
+    val entries = m.chooseSnapshot(snapshotId, None, spark.conf, s"$schema.$table")
+      .map(_.files).getOrElse(Seq.empty)
     val conf = spark.sparkContext.hadoopConfiguration
     val perFile = fileStatsFrom(schema, table, m)
     val agg = mutable.LinkedHashMap[(String, String), (Long, Long, Long)]()
@@ -181,40 +170,22 @@ trait GraftMetadataViews { self: GraftCatalog =>
         .map(v => ("head", st.getPath.getName, v, st.getLen)))
       .sortBy(_._3)
     val m = readManifest(schema, table)
-    val zones = mutable.ArrayBuffer[(String, String, Long, Long)]()
-    if (m.has("dirStats")) {
-      val sn = m.get("dirStats").asInstanceOf[ObjectNode]
-      sn.fieldNames().forEachRemaining { d =>
-        if (sn.get(d).has("filesExt")) {
-          val p = new Path(new Path(tp, d), GraftCatalog.ZoneSidecar)
-          if (fs.exists(p))
-            zones += (("zones", s"$d/${GraftCatalog.ZoneSidecar}", -1L,
-              fs.getFileStatus(p).getLen))
-        }
-      }
+    val zones = m.zoneSidecarDirs.flatMap { d =>
+      val p = new Path(new Path(tp, d), GraftCatalog.ZoneSidecar)
+      if (!fs.exists(p)) None
+      else Some(("zones", s"$d/${GraftCatalog.ZoneSidecar}", -1L,
+        fs.getFileStatus(p).getLen))
     }
-    val blooms = mutable.ArrayBuffer[(String, String, Long, Long)]()
-    if (m.has("bloomIdx")) {
-      val bn = m.get("bloomIdx").asInstanceOf[ObjectNode]
-      bn.fieldNames().forEachRemaining { d =>
-        val p = new Path(new Path(tp, d), BloomIndex.DirName)
-        if (fs.exists(p))
-          blooms += (("bloom", s"$d/${BloomIndex.DirName}", -1L,
-            fs.getContentSummary(p).getLength))
-      }
+    // a dir-keyed sidecar tree, sized when present on disk
+    def trees(kind: String, dirs: Iterable[String], sub: String) = dirs.toSeq.flatMap { d =>
+      val p = new Path(new Path(tp, d), sub)
+      if (!fs.exists(p)) None
+      else Some((kind, s"$d/$sub", -1L, fs.getContentSummary(p).getLength))
     }
-    val dynIdxs = mutable.ArrayBuffer[(String, String, Long, Long)]()
-    if (m.has("dynIdx")) {
-      val dn = m.get("dynIdx").asInstanceOf[ObjectNode]
-      dn.fieldNames().forEachRemaining { d =>
-        val p = new Path(new Path(tp, d), GraftCatalog.DynIdxDir)
-        if (fs.exists(p))
-          dynIdxs += (("dynidx", s"$d/${GraftCatalog.DynIdxDir}", -1L,
-            fs.getContentSummary(p).getLength))
-      }
-    }
-    spark.createDataFrame(heads ++ zones.toSeq.sortBy(_._2) ++
-        blooms.toSeq.sortBy(_._2) ++ dynIdxs.toSeq.sortBy(_._2))
+    val blooms = trees("bloom", m.bloomIdx.keys, BloomIndex.DirName)
+    val dynIdxs = trees("dynidx", m.dynIdx.keys, GraftCatalog.DynIdxDir)
+    spark.createDataFrame(heads ++ zones.sortBy(_._2) ++
+        blooms.sortBy(_._2) ++ dynIdxs.sortBy(_._2))
       .toDF("artifact", "path", "head_version", "size_bytes")
   }
 
@@ -234,10 +205,7 @@ trait GraftMetadataViews { self: GraftCatalog =>
   def analyzeTable(schema: String, table: String): Long = {
     import org.apache.spark.sql.functions.{approx_count_distinct, avg, count,
       length, max => fmax, min => fmin, sum}
-    val m = readManifest(schema, table)
-    val snaps = m.get("snapshots").asInstanceOf[ArrayNode]
-    val sid = if (snaps.size() == 0) 0L
-      else snaps.get(snaps.size() - 1).get("id").asLong()
+    val sid = readManifest(schema, table).headId
     val df = read(schema, table)
     val fields = df.schema.fields.toSeq
     def atomic(dt: org.apache.spark.sql.types.DataType) = dt match {
@@ -269,23 +237,16 @@ trait GraftMetadataViews { self: GraftCatalog =>
     def opt[T](name: String): Option[T] =
       if (r.schema.fieldNames.contains(name) && !r.isNullAt(r.fieldIndex(name)))
         Some(r.getAs[T](name)) else None
+    val stats = Manifest.Statistics(sid, System.currentTimeMillis(),
+      r.getAs[Long]("__rows"), fields.map { f =>
+        f.name -> Manifest.ColumnStats(f.dataType.simpleString,
+          opt[Long](s"__n_${f.name}"), opt[Long](s"__d_${f.name}"),
+          opt[String](s"__mn_${f.name}"), opt[String](s"__mx_${f.name}"),
+          opt[java.lang.Double](s"__l_${f.name}").map(_.doubleValue()))
+      })
     retryManifestUpdate {
       val mm = readManifest(schema, table)
-      val st = mm.putObject("statistics")
-      st.put("snapshotId", sid)
-      st.put("analyzedAtMillis", System.currentTimeMillis())
-      st.put("rows", r.getAs[Long]("__rows"))
-      val colsNode = st.putObject("cols")
-      fields.foreach { f =>
-        val cn = colsNode.putObject(f.name)
-        cn.put("dataType", f.dataType.simpleString)
-        opt[Long](s"__n_${f.name}").foreach(cn.put("nulls", _))
-        opt[Long](s"__d_${f.name}").foreach(cn.put("ndv", _))
-        opt[String](s"__mn_${f.name}").foreach(cn.put("min", _))
-        opt[String](s"__mx_${f.name}").foreach(cn.put("max", _))
-        opt[java.lang.Double](s"__l_${f.name}").foreach(d =>
-          cn.put("avgLen", d.doubleValue()))
-      }
+      mm.putStatistics(stats)
       writeManifest(schema, table, mm)
     }
     sid
@@ -305,32 +266,23 @@ trait GraftMetadataViews { self: GraftCatalog =>
       snapshotId: Option[Long] = None, asOfMillis: Option[Long] = None)
       : Option[(Long, Map[String, (Option[Long], Option[Long], Option[Double])])] = {
     val m = readManifest(schema, table)
-    if (!m.has("statistics")) return None
-    val st = m.get("statistics").asInstanceOf[ObjectNode]
-    val chosen = chooseSnapshot(m, schema, table, snapshotId, asOfMillis)
-      .map(_.get("id").asLong())
-    if (!chosen.contains(st.get("snapshotId").asLong())) {
+    val st = m.statistics.getOrElse(return None)
+    val chosen = m.chooseSnapshot(snapshotId, asOfMillis, spark.conf, s"$schema.$table")
+      .map(_.id)
+    if (!chosen.contains(st.snapshotId)) {
       // surfaced, not silent (r16): a stale-stats fallback flips join
       // strategies with nothing in the logs — at 100× scale an operator
       // needs to know WHY a broadcast became a shuffle. `$statistics`
       // carries the same signal as a `stale` column.
       org.slf4j.LoggerFactory.getLogger(getClass).info(
         s"$schema.$table: ANALYZE statistics are STALE (analyzed snapshot " +
-          s"${st.get("snapshotId").asLong()}, scanning ${chosen.getOrElse(-1L)})" +
+          s"${st.snapshotId}, scanning ${chosen.getOrElse(-1L)})" +
           " — planning falls back to file-size estimates; re-run ANALYZE")
       return None
     }
-    val colsNode = st.get("cols").asInstanceOf[ObjectNode]
-    val cols = mutable.LinkedHashMap[String,
-      (Option[Long], Option[Long], Option[Double])]()
-    colsNode.fieldNames().forEachRemaining { name =>
-      val c = colsNode.get(name).asInstanceOf[ObjectNode]
-      cols += name.toLowerCase(java.util.Locale.ROOT) -> ((
-        if (c.has("ndv")) Some(c.get("ndv").asLong()) else None,
-        if (c.has("nulls")) Some(c.get("nulls").asLong()) else None,
-        if (c.has("avgLen")) Some(c.get("avgLen").asDouble()) else None))
-    }
-    Some((st.get("rows").asLong(), cols.toMap))
+    Some((st.rows, st.cols.map { case (name, c) =>
+      name.toLowerCase(java.util.Locale.ROOT) -> ((c.ndv, c.nulls, c.avgLen))
+    }.toMap))
   }
 
   /** `t$statistics`: one row per column from the last [[analyzeTable]]
@@ -341,31 +293,15 @@ trait GraftMetadataViews { self: GraftCatalog =>
     * [[analyzeStatsOf]] gate never serves stale stats). */
   def statisticsTable(schema: String, table: String): DataFrame = {
     val m = readManifest(schema, table)
-    val snaps = m.get("snapshots").asInstanceOf[ArrayNode]
-    val head = if (snaps.size() == 0) 0L
-      else snaps.get(snaps.size() - 1).get("id").asLong()
+    val head = m.headId
     val rows: Seq[(String, String, Long, Long, Long, Long, String, String,
-        java.lang.Double, Boolean)] =
-      if (!m.has("statistics")) Seq.empty
-      else {
-        val st = m.get("statistics").asInstanceOf[ObjectNode]
-        val sid = st.get("snapshotId").asLong()
-        val nrows = st.get("rows").asLong()
-        val cols = st.get("cols").asInstanceOf[ObjectNode]
-        val out = mutable.ArrayBuffer[(String, String, Long, Long, Long, Long,
-          String, String, java.lang.Double, Boolean)]()
-        cols.fieldNames().forEachRemaining { name =>
-          val c = cols.get(name).asInstanceOf[ObjectNode]
-          out += ((name, c.get("dataType").asText(), sid, nrows,
-            if (c.has("nulls")) c.get("nulls").asLong() else 0L,
-            if (c.has("ndv")) c.get("ndv").asLong() else 0L,
-            if (c.has("min")) c.get("min").asText() else null,
-            if (c.has("max")) c.get("max").asText() else null,
-            if (c.has("avgLen")) Double.box(c.get("avgLen").asDouble()) else null,
-            sid != head))
-        }
-        out.toSeq
+        java.lang.Double, Boolean)] = m.statistics.toSeq.flatMap { st =>
+      st.cols.map { case (name, c) =>
+        (name, c.dataType, st.snapshotId, st.rows, c.nulls.getOrElse(0L),
+          c.ndv.getOrElse(0L), c.min.orNull, c.max.orNull,
+          c.avgLen.map(Double.box).orNull, st.snapshotId != head)
       }
+    }
     spark.createDataFrame(rows).toDF("column_name", "data_type", "snapshot_id",
       "row_count", "null_count", "ndv", "min", "max", "avg_len", "stale")
   }
@@ -381,7 +317,7 @@ trait GraftMetadataViews { self: GraftCatalog =>
   /** One row per (schema version, field): the full evolution history. */
   def schemasTable(schema: String, table: String): DataFrame = {
     val m = readManifest(schema, table)
-    val rows = schemaVersions(m).toSeq.sortBy(_._1).flatMap { case (v, fields) =>
+    val rows = m.schemaVersions.toSeq.sortBy(_._1).flatMap { case (v, fields) =>
       fields.map(f => (v, f.id, f.name, f.trinoType, f.comment))
     }
     spark.createDataFrame(rows).toDF(
@@ -392,9 +328,9 @@ trait GraftMetadataViews { self: GraftCatalog =>
   def optionsTable(schema: String, table: String): DataFrame = {
     val m = readManifest(schema, table)
     val declared = Seq(
-      "partition-by" -> partitionColumns(m).mkString(","),
-      "primary-key" -> primaryKey(m).mkString(",")).filter(_._2.nonEmpty)
-    val rows = declared ++ optionsOf(m).raw.toSeq
+      "partition-by" -> m.partitionColumns.mkString(","),
+      "primary-key" -> m.primaryKey.mkString(",")).filter(_._2.nonEmpty)
+    val rows = declared ++ m.options.raw.toSeq
     spark.createDataFrame(rows).toDF("key", "value")
   }
 }

@@ -248,13 +248,19 @@ class GraftSparkCatalog extends TableCatalog with SupportsNamespaces
     // fall through to CREATE paths (saveAsTable / createOrReplace).
     if (!tableExists(ident))
       throw new NoSuchTableException(Seq(schemaName, tableName))
-    val entries = gc.snapshotFileEntries(schemaName, tableName, snapshotId, asOfMillis)
-    val curVersion = gc.currentSchemaVersionOf(schemaName, tableName)
-    val pk = gc.primaryKeyOf(schemaName, tableName)
+    // ONE manifest read serves the whole resolution: the chosen
+    // snapshot's entries, the table's shape and options, and the stats
+    // thunks below
+    val m = gc.readManifest(schemaName, tableName)
+    val entries = m.chooseSnapshot(snapshotId, asOfMillis, spark.conf,
+      s"$schemaName.$tableName").map(_.files).getOrElse(Seq.empty)
+    val curVersion = m.currentSchemaVersion
+    val pk = m.primaryKey
+    val tblOpts = m.options
     // Bucketed PK tables always scan through the merge bridge: their file
     // layout carries the physical __bucket partition dirs, which a raw
     // ParquetTable would surface as a column.
-    val bucketCount = gc.bucketCountOf(schemaName, tableName)
+    val bucketCount = tblOpts.bucket
     val bucketed = bucketCount.isDefined
     // A partitioned table spanning several snapshot dirs cannot feed one
     // ParquetTable: Spark's partition discovery requires all col=value
@@ -262,12 +268,13 @@ class GraftSparkCatalog extends TableCatalog with SupportsNamespaces
     // (CONFLICTING_DIRECTORY_STRUCTURES). Those read through the V1
     // bridge, which unions the dirs per-entry and zone-prunes via
     // readWhere.
-    val partitioned = gc.partitionColumnsOf(schemaName, tableName).nonEmpty
+    val partitionCols = m.partitionColumns
+    val partitioned = partitionCols.nonEmpty
     // ORC tables (file.format=orc) read through the V1 merge bridge —
     // the raw-file fast path below is a ParquetTable; the bridge's
     // gc.read is format-aware and serves the same resolved image.
     val resolvedAsFiles =
-      gc.fileFormatOf(schemaName, tableName) == "parquet" &&
+      tblOpts.fileFormat == "parquet" &&
       entries.forall(e => e.kind == "data" && e.schemaVersion == curVersion) &&
         (pk.isEmpty || (entries.size <= 1 && !bucketed)) &&
         (!partitioned || entries.size <= 1)
@@ -307,7 +314,7 @@ class GraftSparkCatalog extends TableCatalog with SupportsNamespaces
     def dirPath(dir: String): String =
       gc.dirLocation(schemaName, tableName, dir)
     val paths = if (resolvedAsFiles) entries.map(e => dirPath(e.dir)) else Seq.empty
-    val schema = gc.currentSchema(schemaName, tableName)
+    val schema = gc.currentSchema(m)
     val parquet = ParquetTable(s"$catalogName.$schemaName.$tableName",
       spark.asInstanceOf[classic.SparkSession],
       new CaseInsensitiveStringMap(Map.empty[String, String].asJava),
@@ -329,17 +336,16 @@ class GraftSparkCatalog extends TableCatalog with SupportsNamespaces
     val statsSound =
       entries.forall(e => e.kind == "data" && e.schemaVersion == curVersion) &&
         (pk.isEmpty || resolvedAsFiles)
-    // ONE manifest read + JSON parse, shared by all three stats thunks
-    // and deferred until a zone rule actually consults them (all three
-    // closures capture the same LazyRef).
+    // Parsed from the resolution's manifest, shared by all three stats
+    // thunks and deferred until a zone rule actually consults them (all
+    // three closures capture the same LazyRef).
     lazy val statsPair =
-      if (statsSound) gc.allStats(schemaName, tableName)
+      if (statsSound) (m.dirStats, gc.fileStatsFrom(schemaName, tableName, m))
       else (Map.empty[String, graft.sources.FileStats.DirStats],
         Map.empty[String, Map[String, graft.sources.FileStats.DirStats]])
     val zoneStatsIn = () => if (statsSound)
       Some(entries.flatMap(e => statsPair._1.get(e.dir).map(dirPath(e.dir) -> _)).toMap)
       else None
-    val partitionCols = gc.partitionColumnsOf(schemaName, tableName)
     // Per-file zones serve two rules: GraftZonePrune's finer path cut
     // (unpartitioned tables only — gated in the rule, since file paths
     // lose the col=value segments partitioned scans need) and
@@ -363,7 +369,6 @@ class GraftSparkCatalog extends TableCatalog with SupportsNamespaces
       if (statsSound && pk.isEmpty && entries.forall(e => statsPair._1.contains(e.dir)))
         Some(entries.map(e => statsPair._1(e.dir).rows).sum)
       else None
-    val tblOpts = gc.optionsOf(schemaName, tableName)
     new GraftSqlTable(parquet, partitionCols,
       tblOpts.raw ++
         (if (pk.nonEmpty) Map("primary-key" -> pk.mkString(",")) else Map.empty),

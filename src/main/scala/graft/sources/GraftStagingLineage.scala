@@ -1,6 +1,5 @@
 package graft.sources
 
-import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -170,7 +169,7 @@ trait GraftStagingLineage { self: GraftCatalog =>
       options: Map[String, String]): Unit = {
     require(options.nonEmpty, "no options to set")
     options.keys.foreach(TableOptions.requireMutable)
-    updateOptions(schema, table)(opts => options.foreach { case (k, v) => opts.put(k, v) })
+    updateOptions(schema, table)(_.putOptions(options))
   }
 
   /** Remove mutable table options (`ALTER TABLE ... UNSET`); structural
@@ -180,17 +179,17 @@ trait GraftStagingLineage { self: GraftCatalog =>
   def removeTableOptions(schema: String, table: String,
       keys: Seq[String]): Unit = {
     keys.foreach(TableOptions.requireMutable)
-    updateOptions(schema, table)(opts => keys.foreach(opts.remove))
+    updateOptions(schema, table)(_.removeOptions(keys))
   }
 
   /** Apply `change` to the manifest's options and land it, provided the
     * result validates against the table's current shape. */
   private def updateOptions(schema: String, table: String)(
-      change: ObjectNode => Unit): Unit = retryManifestUpdate {
+      change: Manifest => Unit): Unit = retryManifestUpdate {
     val m = readManifest(schema, table)
-    change(m.get("options").asInstanceOf[ObjectNode])
-    TableOptions.validate(TableOptions.Shape(currentSchema(schema, table),
-      partitionColumns(m), primaryKey(m), optionsOf(m).raw))
+    change(m)
+    TableOptions.validate(TableOptions.Shape(currentSchema(m),
+      m.partitionColumns, m.primaryKey, m.options.raw))
     writeManifest(schema, table, m)
   }
 

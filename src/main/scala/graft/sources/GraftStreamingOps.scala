@@ -18,10 +18,8 @@ import GraftCatalog._
 trait GraftStreamingOps { self: GraftCatalog =>
 
   /** Highest streaming batchId committed to this table (-1 = none). */
-  def lastStreamBatchId(schema: String, table: String): Long = {
-    val m = readManifest(schema, table)
-    if (m.has("lastStreamBatchId")) m.get("lastStreamBatchId").asLong() else -1L
-  }
+  def lastStreamBatchId(schema: String, table: String): Long =
+    readManifest(schema, table).lastStreamBatchId
 
   /**
    * Idempotent micro-batch append: commits the batch as one snapshot and
@@ -153,9 +151,9 @@ trait GraftStreamingOps { self: GraftCatalog =>
             if (bucketedDim) bucketedLookup(schema, dimTable, batch.toDF(), joinKeys)
             else {
               val m = readManifest(schema, dimTable)
-              val head = chooseSnapshot(m, schema, dimTable, None, None)
-                .map(_.get("id").asLong()).getOrElse(0L)
-              val dimKey = (head, commitVersion(m))
+              val head = m.chooseSnapshot(None, None, spark.conf, s"$schema.$dimTable")
+                .map(_.id).getOrElse(0L)
+              val dimKey = (head, m.commitVersion)
               val dim0 = cachedDim.get() match {
                 case Some((k, df)) if k == dimKey => df
                 case stale =>
@@ -213,12 +211,13 @@ trait GraftStreamingOps { self: GraftCatalog =>
    */
   def bucketedLookup(schema: String, dimTable: String, batch: DataFrame,
       joinKeys: Seq[String]): DataFrame = {
-    val n = bucketCountOf(schema, dimTable).getOrElse(
+    val m = readManifest(schema, dimTable)
+    val n = m.options.bucket.getOrElse(
       throw new IllegalArgumentException(s"$schema.$dimTable is not bucketed"))
     require(n >= 1, "dynamic-bucket dims have no static hash contract — " +
       "bucketed lookup requires a fixed bucket count")
-    val dSchema = currentSchema(schema, dimTable)
-    val pk = primaryKeyOf(schema, dimTable)
+    val dSchema = currentSchema(m)
+    val pk = m.primaryKey
     require(joinKeys.length == pk.length &&
       joinKeys.map(k => batch.schema(k).dataType) == pk.map(dSchema(_).dataType),
       s"join keys $joinKeys are not hash-compatible with ${dimTable}'s " +
@@ -274,24 +273,24 @@ trait GraftStreamingOps { self: GraftCatalog =>
    */
   def readStream(schema: String, table: String,
       maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    require(primaryKeyOf(schema, table).isEmpty,
+    val m = readManifest(schema, table)
+    require(m.primaryKey.isEmpty,
       s"$schema.$table has a primary key — use readChangelogStream (PK " +
         "tables stream as row-kinded upsert changelogs)")
-    require(partitionColumnsOf(schema, table).isEmpty,
+    require(m.partitionColumns.isEmpty,
       s"$schema.$table is partitioned — partition values live in dir names, " +
         "which the glob file stream cannot resolve; use readChangelogStream")
-    val m = readManifest(schema, table)
-    require(m.get("currentSchemaVersion").asInt() == 0,
+    require(m.currentSchemaVersion == 0,
       s"$schema.$table has evolved schemas — compact() first or use " +
         "readChangelogStream (it maps schemas by field id)")
     // a DV dir's (file, pos) parquet would match the snap-* glob and be
     // emitted as data; and a delete is not expressible file-level anyway
-    require(!optionsOf(m).deletionVectors,
+    require(!m.options.deletionVectors,
       s"$schema.$table has deletion-vectors enabled — file-level " +
         "streaming cannot express deletes; use a primary-key table for CDC")
-    val target = StructType(currentFields(m).map(f =>
+    val target = StructType(m.currentFields.map(f =>
       StructField(f.name, TypeMapping.toSparkType(f.trinoType))))
-    val fmt = optionsOf(m).fileFormat
+    val fmt = m.options.fileFormat
     val reader = spark.readStream.schema(target)
     maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
     reader.option("pathGlobFilter", s"*.$fmt").format(providerFor(fmt))

@@ -2,8 +2,6 @@ package graft.sources
 
 import scala.collection.mutable
 
-import com.fasterxml.jackson.databind.JsonNode
-import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -26,37 +24,25 @@ trait GraftTagsBranches { self: GraftCatalog =>
   def createTag(schema: String, table: String, tag: String,
       snapshotId: Option[Long] = None): Long = {
     val m = readManifest(schema, table)
-    val snaps = m.get("snapshots").asInstanceOf[ArrayNode]
-    require(snaps.size() > 0, s"$schema.$table has no snapshots to tag")
-    val id = snapshotId.getOrElse(snaps.get(snaps.size() - 1).get("id").asLong())
-    require((0 until snaps.size()).exists(i => snaps.get(i).get("id").asLong() == id),
-      s"no snapshot $id for $schema.$table")
-    val t = if (m.has("tags")) m.get("tags").asInstanceOf[ObjectNode]
-      else m.putObject("tags")
-    require(!t.has(tag), s"tag $tag already exists")
-    t.put(tag, id)
+    require(m.head.isDefined, s"$schema.$table has no snapshots to tag")
+    val id = snapshotId.getOrElse(m.headId)
+    require(m.snapshot(id).isDefined, s"no snapshot $id for $schema.$table")
+    require(!m.tags.contains(tag), s"tag $tag already exists")
+    m.putTag(tag, id)
     writeManifest(schema, table, m)
     id
   }
 
   def deleteTag(schema: String, table: String, tag: String): Unit = {
     val m = readManifest(schema, table)
-    require(m.has("tags") && m.get("tags").has(tag), s"no tag $tag")
-    m.get("tags").asInstanceOf[ObjectNode].remove(tag)
+    require(m.tags.contains(tag), s"no tag $tag")
+    m.removeTag(tag)
     writeManifest(schema, table, m)
   }
 
   /** All tags → snapshot ids. */
-  def tags(schema: String, table: String): Map[String, Long] = {
-    val m = readManifest(schema, table)
-    if (!m.has("tags")) Map.empty
-    else {
-      val t = m.get("tags").asInstanceOf[ObjectNode]
-      val out = mutable.LinkedHashMap[String, Long]()
-      t.fieldNames().forEachRemaining(k => out += k -> t.get(k).asLong())
-      out.toMap
-    }
-  }
+  def tags(schema: String, table: String): Map[String, Long] =
+    readManifest(schema, table).tags
 
   /** Read the snapshot a tag pins. */
   def readTag(schema: String, table: String, tag: String): DataFrame = {
@@ -95,12 +81,8 @@ trait GraftTagsBranches { self: GraftCatalog =>
         branches.filterNot(br.contains).map(b => s"$base$BranchSep$b")
     siblings.flatMap { t =>
       if (!tableManifestExists(schema, t)) Seq.empty
-      else {
-        val sm = readManifest(schema, t)
-        val snaps = sm.get("snapshots").asInstanceOf[ArrayNode]
-        (0 until snaps.size()).flatMap(i => filesOf(snaps.get(i)))
-          .map(fe => baseRelativeDir(t, fe.dir))
-      }
+      else readManifest(schema, t).snapshots.flatMap(_.files)
+        .map(fe => baseRelativeDir(t, fe.dir))
     }.toSet
   }
 
@@ -136,85 +118,16 @@ trait GraftTagsBranches { self: GraftCatalog =>
     require(!tableManifestExists(schema, bt),
       s"branch $branch of $schema.$table exists")
     val m = readManifest(schema, table)
-    val snaps = m.get("snapshots").asInstanceOf[ArrayNode]
-    val headId =
-      if (snaps.size() == 0) 0L
-      else snaps.get(snaps.size() - 1).get("id").asLong()
-    val fromId = fromTag.map(t => tags(schema, table).getOrElse(t,
+    val fromId = fromTag.map(t => m.tags.getOrElse(t,
         throw new IllegalArgumentException(s"no tag $t on $schema.$table")))
-      .orElse(fromSnapshotId).getOrElse(headId)
-    require(fromId == 0L || (0 until snaps.size()).exists(i =>
-      snaps.get(i).get("id").asLong() == fromId),
+      .orElse(fromSnapshotId).getOrElse(m.headId)
+    require(fromId == 0L || m.snapshot(fromId).isDefined,
       s"no snapshot $fromId for $schema.$table")
-    // truncate the log at the branch point; entry nodes are SHARED across
-    // snapshots after inflation, so guard the in-place dir rewrite
-    val keptArr = mapper.createArrayNode()
-    (0 until snaps.size()).foreach { i =>
-      val s = snaps.get(i).asInstanceOf[ObjectNode]
-      if (s.get("id").asLong() <= fromId) keptArr.add(s)
-    }
-    def markEntries(arr: ArrayNode): Unit =
-      (0 until arr.size()).foreach { j =>
-        val e = arr.get(j).asInstanceOf[ObjectNode]
-        val d = e.get("dir").asText()
-        if (!d.startsWith(BaseRelMarker)) e.put("dir", BaseRelMarker + d)
-      }
-    (0 until keptArr.size()).foreach { i =>
-      val s = keptArr.get(i).asInstanceOf[ObjectNode]
-      markEntries(s.get("files").asInstanceOf[ArrayNode])
-      if (s.has("added")) markEntries(s.get("added").asInstanceOf[ArrayNode])
-      if (s.has("removed")) {
-        val r = s.get("removed").asInstanceOf[ArrayNode]
-        val marked = (0 until r.size()).map { j =>
-          val d = r.get(j).asText()
-          if (d.startsWith(BaseRelMarker)) d else BaseRelMarker + d
-        }
-        r.removeAll()
-        marked.foreach(r.add)
-      }
-    }
-    m.set[JsonNode]("snapshots", keptArr)
-    val keptDirs = (0 until keptArr.size())
-      .flatMap(i => filesOf(keptArr.get(i))).map(_.dir).toSet
-    // per-dir aux state (zones, DV index, blooms, dynamic-bucket flags)
-    // follows the entries: keys re-marked, values shared by reference;
-    // entries of truncated-away dirs dropped
-    Seq("dirStats", "dvIndex", "bloomIdx", "dynIdx").foreach { f =>
-      if (m.has(f)) {
-        val old = m.get(f).asInstanceOf[ObjectNode]
-        val next = mapper.createObjectNode()
-        old.fieldNames().forEachRemaining { k =>
-          val marked = if (k.startsWith(BaseRelMarker)) k else BaseRelMarker + k
-          if (keptDirs.contains(marked)) next.set[JsonNode](marked, old.get(k))
-        }
-        m.set[JsonNode](f, next)
-      }
-    }
-    // tags at-or-before the branch point carry over (their snapshots are
-    // in the inherited log); consumers and streaming-sink idempotence
-    // state stay with the base — the branch is a fresh consumption scope
-    if (m.has("tags")) {
-      val old = m.get("tags").asInstanceOf[ObjectNode]
-      val next = mapper.createObjectNode()
-      old.fieldNames().forEachRemaining { k =>
-        if (old.get(k).asLong() <= fromId) next.put(k, old.get(k).asLong())
-      }
-      m.set[JsonNode]("tags", next)
-    }
-    m.remove("consumers")
-    m.remove("lastStreamBatchId")
-    // producer changelog dirs stay with the base lineage (their node keys
-    // are base-local dirs); the branch recomputes changelogs at read and
-    // re-materializes from its own commits
-    m.remove("changelog")
-    if (m.has("statistics") &&
-        m.get("statistics").get("snapshotId").asLong() > fromId)
-      m.remove("statistics")
-    m.remove("commitVersion") // fresh CAS lineage: first write lands v1
-    m.put("name", bt)
-    m.put("branchOf", table)
-    m.put("branchBaseId", fromId)
-    m.put("branchCreatedMillis", System.currentTimeMillis())
+    // every dir reference (log entries and per-dir side state: zones, DV
+    // index, blooms, dynamic-bucket flags) takes the base-relative
+    // sharing form; values are shared by reference
+    m.forkBranch(bt, table, fromId, System.currentTimeMillis(),
+      d => if (d.startsWith(BaseRelMarker)) d else BaseRelMarker + d)
     fs.mkdirs(tablePath(schema, bt))
     writeManifest(schema, bt, m)
   }
@@ -250,40 +163,36 @@ trait GraftTagsBranches { self: GraftCatalog =>
       s"no branch $branch of $schema.$table")
     val m = readManifest(schema, table)
     val bm = readManifest(schema, bt)
-    val snaps = m.get("snapshots").asInstanceOf[ArrayNode]
-    val bsnaps = bm.get("snapshots").asInstanceOf[ArrayNode]
+    val snaps = m.snapshots
+    val bsnaps = bm.snapshots
     val out = mutable.ArrayBuffer[(Long, String, String)]()
-    if (bsnaps.size() < snaps.size())
+    if (bsnaps.size < snaps.size)
       out += ((-1L, "base_longer",
-        s"base has ${snaps.size()} snapshots, branch has ${bsnaps.size()} — " +
+        s"base has ${snaps.size} snapshots, branch has ${bsnaps.size} — " +
           "the base advanced past the branch point"))
-    (0 until math.min(snaps.size(), bsnaps.size())).foreach { i =>
-      val a = snaps.get(i)
-      val b = bsnaps.get(i)
-      val aid = a.get("id").asLong()
-      val bid = b.get("id").asLong()
-      if (aid != bid)
-        out += ((i.toLong, "id_mismatch", s"base snapshot $aid vs branch $bid"))
+    snaps.zip(bsnaps).zipWithIndex.foreach { case ((a, b), i) =>
+      if (a.id != b.id)
+        out += ((i.toLong, "id_mismatch", s"base snapshot ${a.id} vs branch ${b.id}"))
       else {
-        val aDirs = filesOf(a).map(fe => baseRelativeDir(table, fe.dir)).toSet
-        val bDirs = filesOf(b).map(fe => baseRelativeDir(bt, fe.dir)).toSet
+        val aDirs = a.files.map(fe => baseRelativeDir(table, fe.dir)).toSet
+        val bDirs = b.files.map(fe => baseRelativeDir(bt, fe.dir)).toSet
         if (aDirs != bDirs)
           out += ((i.toLong, "dirs_differ",
-            s"snapshot $aid: base-only [${(aDirs -- bDirs).toSeq.sorted.mkString(",")}], " +
+            s"snapshot ${a.id}: base-only [${(aDirs -- bDirs).toSeq.sorted.mkString(",")}], " +
               s"branch-only [${(bDirs -- aDirs).toSeq.sorted.mkString(",")}]"))
       }
     }
-    val aSchemas = m.get("schemas").asInstanceOf[ArrayNode]
-    val bSchemas = bm.get("schemas").asInstanceOf[ArrayNode]
-    if (aSchemas.size() > bSchemas.size())
+    val aSchemas = m.schemaVersions
+    val bSchemas = bm.schemaVersions
+    if (aSchemas.size > bSchemas.size)
       out += ((-1L, "schema_diverged",
-        s"base has ${aSchemas.size()} schema versions, branch has ${bSchemas.size()}"))
-    else (0 until aSchemas.size()).foreach { i =>
-      if (aSchemas.get(i) != bSchemas.get(i))
-        out += ((i.toLong, "schema_diverged", s"schema version $i differs"))
+        s"base has ${aSchemas.size} schema versions, branch has ${bSchemas.size}"))
+    else aSchemas.keys.toSeq.sorted.foreach { v =>
+      if (!bSchemas.get(v).contains(aSchemas(v)))
+        out += ((v.toLong, "schema_diverged", s"schema version $v differs"))
     }
     if (out.isEmpty) {
-      val ahead = bsnaps.size() - snaps.size()
+      val ahead = bsnaps.size - snaps.size
       out += ((-1L, if (ahead > 0) "fast_forwardable" else "in_sync",
         s"branch is $ahead snapshot(s) ahead of the base"))
     }
@@ -298,97 +207,36 @@ trait GraftTagsBranches { self: GraftCatalog =>
       s"no branch $branch of $schema.$table")
     val m = readManifest(schema, table)
     val bm = readManifest(schema, bt)
-    val snaps = m.get("snapshots").asInstanceOf[ArrayNode]
-    val bsnaps = bm.get("snapshots").asInstanceOf[ArrayNode]
+    val snaps = m.snapshots
+    val bsnaps = bm.snapshots
     def diverged(why: String) = throw new IllegalStateException(
       s"cannot fast-forward $schema.$table to branch $branch: $why — " +
         "the base advanced since the branch point; create a fresh branch " +
         "from the current head and replay the work instead")
-    if (bsnaps.size() < snaps.size()) diverged("the base log is longer than the branch log")
-    (0 until snaps.size()).foreach { i =>
-      val a = snaps.get(i)
-      val b = bsnaps.get(i)
-      if (a.get("id").asLong() != b.get("id").asLong())
-        diverged(s"snapshot ids differ at position $i")
-      val aDirs = filesOf(a).map(fe => baseRelativeDir(table, fe.dir)).toSet
-      val bDirs = filesOf(b).map(fe => baseRelativeDir(bt, fe.dir)).toSet
-      if (aDirs != bDirs)
-        diverged(s"snapshot ${a.get("id").asLong()} references different dirs")
+    if (bsnaps.size < snaps.size) diverged("the base log is longer than the branch log")
+    snaps.zip(bsnaps).zipWithIndex.foreach { case ((a, b), i) =>
+      if (a.id != b.id) diverged(s"snapshot ids differ at position $i")
+      val aDirs = a.files.map(fe => baseRelativeDir(table, fe.dir)).toSet
+      val bDirs = b.files.map(fe => baseRelativeDir(bt, fe.dir)).toSet
+      if (aDirs != bDirs) diverged(s"snapshot ${a.id} references different dirs")
     }
-    val aSchemas = m.get("schemas").asInstanceOf[ArrayNode]
-    val bSchemas = bm.get("schemas").asInstanceOf[ArrayNode]
-    if (aSchemas.size() > bSchemas.size()) diverged("schema history diverged")
-    (0 until aSchemas.size()).foreach { i =>
-      if (aSchemas.get(i) != bSchemas.get(i)) diverged("schema history diverged")
-    }
-    val headId =
-      if (bsnaps.size() == 0) 0L
-      else bsnaps.get(bsnaps.size() - 1).get("id").asLong()
-    if (bsnaps.size() == snaps.size()) return headId // nothing to adopt
+    val aSchemas = m.schemaVersions
+    val bSchemas = bm.schemaVersions
+    if (aSchemas.size > bSchemas.size ||
+        aSchemas.exists { case (v, fs) => !bSchemas.get(v).contains(fs) })
+      diverged("schema history diverged")
+    val headId = bm.headId
+    if (bsnaps.size == snaps.size) return headId // nothing to adopt
     // dir reference conversion INTO the base lineage: base-relative form,
-    // then plain for base-local names, `~/`-marked for everything shared
-    def toBaseRef(dir: String): String = {
+    // then plain for base-local names, `~/`-marked for everything shared.
+    // The changelog node rides along: its keys are dirs too, and the
+    // adopted snapshots keep their ids, so branch-built producer coverage
+    // survives the fast-forward (pre-fork coverage was dropped at branch
+    // creation and falls back to read-time resolution).
+    bm.adoptAsBase(table, m, { dir =>
       val r = baseRelativeDir(bt, dir)
       if (r.contains("/")) BaseRelMarker + r else r
-    }
-    def convertEntries(arr: ArrayNode): Unit =
-      (0 until arr.size()).foreach { j =>
-        val e = arr.get(j).asInstanceOf[ObjectNode]
-        e.put("dir", toBaseRef(e.get("dir").asText()))
-      }
-    (0 until bsnaps.size()).foreach { i =>
-      val s = bsnaps.get(i).asInstanceOf[ObjectNode]
-      convertEntries(s.get("files").asInstanceOf[ArrayNode])
-      if (s.has("added")) convertEntries(s.get("added").asInstanceOf[ArrayNode])
-      if (s.has("removed")) {
-        val r = s.get("removed").asInstanceOf[ArrayNode]
-        val conv = (0 until r.size()).map(j => toBaseRef(r.get(j).asText()))
-        r.removeAll()
-        conv.foreach(r.add)
-      }
-    }
-    // "changelog" rides along: its keys are dirs too, and the adopted
-    // snapshots keep their ids, so branch-built producer coverage
-    // survives the fast-forward (pre-fork coverage was dropped at branch
-    // creation and falls back to read-time resolution)
-    Seq("dirStats", "dvIndex", "bloomIdx", "dynIdx", "changelog").foreach { f =>
-      if (bm.has(f)) {
-        val old = bm.get(f).asInstanceOf[ObjectNode]
-        val next = mapper.createObjectNode()
-        old.fieldNames().forEachRemaining(k =>
-          next.set[JsonNode](toBaseRef(k), old.get(k)))
-        bm.set[JsonNode](f, next)
-      }
-    }
-    // retention promises merge; the base's win on a name conflict
-    if (m.has("tags")) {
-      val baseTags = m.get("tags").asInstanceOf[ObjectNode]
-      val next =
-        if (bm.has("tags")) bm.get("tags").asInstanceOf[ObjectNode]
-        else bm.putObject("tags")
-      baseTags.fieldNames().forEachRemaining(k =>
-        next.put(k, baseTags.get(k).asLong()))
-    }
-    // consumption scopes stay with the base lineage
-    bm.remove("consumers")
-    m.get("consumers") match {
-      case c: ObjectNode => bm.set[JsonNode]("consumers", c)
-      case _ => ()
-    }
-    bm.remove("lastStreamBatchId")
-    m.get("lastStreamBatchId") match {
-      case b: JsonNode if !b.isMissingNode && !b.isNull =>
-        bm.set[JsonNode]("lastStreamBatchId", b)
-      case _ => ()
-    }
-    bm.put("name", table)
-    bm.remove("branchOf")
-    bm.remove("branchBaseId")
-    bm.remove("branchCreatedMillis")
-    // continue the BASE's CAS chain — concurrent base commits lose/abort
-    if (m.has("commitVersion"))
-      bm.set[JsonNode]("commitVersion", m.get("commitVersion"))
-    else bm.remove("commitVersion")
+    })
     writeManifest(schema, table, bm)
     headId
   }
@@ -423,14 +271,9 @@ trait GraftTagsBranches { self: GraftCatalog =>
     import spark.implicits._
     branchNames(schema, table).map { b =>
       val bm = readManifest(schema, s"$table$BranchSep$b")
-      val snaps = bm.get("snapshots").asInstanceOf[ArrayNode]
-      val head =
-        if (snaps.size() == 0) 0L
-        else snaps.get(snaps.size() - 1).get("id").asLong()
-      val baseId = bm.path("branchBaseId").asLong(0L)
-      (b, baseId, head,
-        (0 until snaps.size()).count(i => snaps.get(i).get("id").asLong() > baseId).toLong,
-        bm.path("branchCreatedMillis").asLong(0L))
+      val baseId = bm.branchBaseId
+      (b, baseId, bm.headId, bm.snapshots.count(_.id > baseId).toLong,
+        bm.branchCreatedMillis)
     }.toDF("branch", "base_snapshot_id", "head_snapshot_id",
       "commits_since_branch", "created_millis")
   }

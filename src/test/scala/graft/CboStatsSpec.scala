@@ -95,6 +95,22 @@ class CboStatsSpec extends SparkSpecBase {
     } finally spark.conf.set("spark.sql.cbo.enabled", cbo)
   }
 
+  test("rollback drops the statistics of the snapshots it drops") {
+    gc.createTable("db", "rb", spark.range(0).toDF("id").schema)
+    (0 until 3).foreach(i => gc.append("db", "rb", spark.range(i * 100, i * 100 + 100).toDF("id")))
+    assert(gc.analyzeTable("db", "rb") === 3L)
+    gc.rollbackTo("db", "rb", 1L)
+    gc.append("db", "rb", spark.range(1000, 1001).toDF("id"))
+    gc.append("db", "rb", spark.range(1001, 1002).toDF("id"))
+    // ids are reused: the head is snapshot 3 again, holding 102 live rows
+    assert(gc.snapshots("db", "rb").map(_.id) === Seq(1L, 2L, 3L))
+    assert(gc.read("db", "rb").count() === 102L)
+    // the 300-row numbers died with the snapshot they described
+    assert(gc.analyzeStatsOf("db", "rb") === None)
+    val st = gc.statisticsTable("db", "rb")
+    assert(st.filter(!col("stale")).count() === 0L, st.collect().mkString("\n"))
+  }
+
   test("stale statistics are never served: a new commit detaches them") {
     import spark.implicits._
     gc.append("db", "dim", Seq((999999L, "y")).toDF("k", "pad"))

@@ -175,6 +175,27 @@ class TableOptionsSpec extends SparkSpecBase {
     assert(cat.tableOptions("db", "ok") === good)
   }
 
+  test("column DDL refuses the column names the registry reserves") {
+    val cat = freshCatalog()
+    cat.createTable("db", "bk", schemaOf("id" -> LongType, "v" -> LongType),
+      options = Map("bucket" -> "2"), primaryKey = Seq("id"))
+    val e1 = intercept[IllegalArgumentException](
+      cat.addColumn("db", "bk", StructField("__bucket", IntegerType)))
+    assert(e1.getMessage.contains("column name __bucket is reserved on bucketed tables"))
+    val e2 = intercept[IllegalArgumentException](cat.renameColumn("db", "bk", "v", "__bucket"))
+    assert(e2.getMessage.contains("column name __bucket is reserved on bucketed tables"))
+    cat.createTable("db", "dv", schemaOf("id" -> LongType),
+      options = Map("deletion-vectors" -> "true"))
+    val e3 = intercept[IllegalArgumentException](
+      cat.addColumn("db", "dv", StructField("__file", StringType)))
+    assert(e3.getMessage.contains("column name __file is reserved on deletion-vector tables"))
+    // nothing landed: the schemas are unchanged and ALTER still works
+    assert(cat.currentSchema("db", "bk").fieldNames.toSeq === Seq("id", "v"))
+    assert(cat.currentSchema("db", "dv").fieldNames.toSeq === Seq("id"))
+    cat.setTableOptions("db", "bk", Map("snapshot.num-retained" -> "5"))
+    cat.setTableOptions("db", "dv", Map("snapshot.num-retained" -> "5"))
+  }
+
   test("a failed bloom build returns no index and logs a warning") {
     import org.apache.logging.log4j.{Level, LogManager}
     import org.apache.logging.log4j.core.{LogEvent, Logger}
