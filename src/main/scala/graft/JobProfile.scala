@@ -4,7 +4,6 @@ import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
   SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 
 /**
  * Measurement tool (guide §1): runs named queries and reports, per query,
@@ -16,11 +15,20 @@ import org.apache.spark.sql.SparkSession
  * Janino compile count: generated code that differs from query to query
  * (a plan that grows with the table's dirs, say) misses the codegen
  * cache and recompiles. A `[jobsites]` line per run counts its jobs by
- * call site, so a job regression names where it comes from. Dev tool
- * only; reported numbers come from Bench.
+ * call site, so a job regression names where it comes from, and the
+ * commit-protocol metadata counters — manifest writes and bytes, zone
+ * and bloom sidecar loads, driver footer reads — so a warehouse
+ * query's drift is attributable to a named step. Dev tool only;
+ * reported numbers come from Bench.
  *
  * Usage: sbt "runMain graft.JobProfile <sfDir> [-explain] <query>..."
  * (`-explain` also prints each query's executed plan after its runs).
+ * For warehouse cost attribution, profile the slowest `catalog_*` bench
+ * queries: catalog_cross_partition catalog_bucket_compact
+ * catalog_bucketed_join catalog_dv_bucket_fold catalog_dynamic_bucket
+ * catalog_stream_changelog_full catalog_rescale
+ * catalog_partitioned_bucket catalog_bucketed_mor catalog_dv_sequence
+ * catalog_avro_mor.
  */
 object JobProfile {
   def main(args: Array[String]): Unit = {
@@ -28,19 +36,21 @@ object JobProfile {
     val names = args.drop(1).filterNot(_ == "-explain")
     val explain = args.contains("-explain")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.localSession(cpus)
     // Janino compiles of generated code (whole-stage, projections,
     // predicates): each one is a codegen-cache miss
     def compiles(): Long =
       org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    // process-wide commit-protocol counters: the queries build their own
+    // catalogs, so per-instance counters cannot see them
+    val metaNames = Seq("manifestWrites", "manifestBytes", "zoneSidecarLoads",
+      "bloomSidecarLoads", "driverFooterReads")
+    def metaCounters(): Seq[Long] = {
+      import graft.sources.{BloomIndex, FileStats, GraftCatalog}
+      Seq(GraftCatalog.manifestWritesGlobal.get(), GraftCatalog.manifestBytesGlobal.get(),
+        GraftCatalog.zoneSidecarLoads.get(), BloomIndex.sidecarLoads.get(),
+        FileStats.driverFooterReads.get())
+    }
     val jobs = new AtomicInteger
     val stages = new AtomicInteger
     val tasks = new AtomicInteger
@@ -146,6 +156,7 @@ object JobProfile {
         val (j0, s0, t0, m0) =
           (jobs.get(), stages.get(), tasks.get(), taskMs.get())
         val c0 = compiles()
+        val meta0 = metaCounters()
         sampled.clear()
         ticks.set(0)
         janinoTicks.set(0)
@@ -177,7 +188,9 @@ object JobProfile {
           f"tasks=${tasks.get - t0} compiles=${compiles() - c0} " +
           f"taskTime=${(taskMs.get - m0) / 1e3}%.1fs " +
           f"(parallel-occupancy ${(taskMs.get - m0) / 1e3 / (wall * cpus.toInt) * 100}%.0f%%) " +
-          f"jobWall=${covered / 1e3}%.2fs driverGap=$driverGap%.2fs")
+          f"jobWall=${covered / 1e3}%.2fs driverGap=$driverGap%.2fs " +
+          metaNames.zip(metaCounters().zip(meta0))
+            .map { case (k, (a, b)) => s"$k=${a - b}" }.mkString(" "))
         locally {
           import scala.jdk.CollectionConverters._
           val sites = jobSites.asScala.toSeq.sortBy { case (k, n) => (-n.toInt, k) }

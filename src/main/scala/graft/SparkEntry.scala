@@ -22,6 +22,22 @@ object SparkEntry {
       (TpchExtQueries.queries, TpchExtQueries.oracle),
     )
 
+  /** The local session the dev tools (JobProfile, Verify, PlanAudit) run
+    * registered queries in: `cpus` threads and shuffle partitions, UTC,
+    * graft's extensions, WARN logging. */
+  def localSession(cpus: String): SparkSession = {
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
     queries("q1_agg")(spark, "/root/testdata/sf0.001")

@@ -43,7 +43,7 @@ class GraftUpdateRewrite extends Rule[LogicalPlan] {
           GraftUpdateCommand(wh, s, tb, matching,
             u.assignments.map(a =>
               GraftDml.Assign(GraftDml.nameOf(a.key), a.value)),
-            u.table.output)
+            u.table.output, t.basis)
         case _ => u
       }
   }
@@ -112,7 +112,7 @@ class GraftDeleteRewrite extends Rule[LogicalPlan] {
         case Some(t: GraftSqlTable) if t.coords.isDefined && t.canDelete =>
           val (wh, s, tb) = t.coords.get
           GraftDeleteCommand(wh, s, tb, Filter(d.condition, d.table),
-            GraftDml.Assign("cond", d.condition))
+            GraftDml.Assign("cond", d.condition), t.basis)
         case _ => d
       }
   }
@@ -130,12 +130,14 @@ case class GraftDeleteCommand(warehouse: String, schemaName: String,
     // Assign-wrapped so QueryPlan.expressions does not traverse it —
     // CheckAnalysis would otherwise reject the IN/EXISTS subquery in a
     // command-expression position (same trick as the UPDATE rewrite).
-    cond: GraftDml.Assign) extends LeafRunnableCommand {
+    cond: GraftDml.Assign,
+    /** The manifest version the resolved table was pinned at. */
+    basis: Option[Long]) extends LeafRunnableCommand {
   override def run(spark: SparkSession): Seq[Row] = {
     val gc = new GraftCatalog(spark, warehouse)
     if (gc.primaryKeyOf(schemaName, tableName).nonEmpty) {
       gc.deleteRowsByKey(schemaName, tableName,
-        GraftColumnBridge.dataFrame(spark, matching))
+        GraftColumnBridge.dataFrame(spark, matching), basis)
     } else {
       import org.apache.spark.sql.catalyst.expressions.SubqueryExpression
       val condition = cond.value
@@ -206,7 +208,7 @@ class GraftMergeRewrite extends Rule[LogicalPlan]
           GraftMergeCommand(wh, s, tb, joined,
             m.targetTable.output, m.sourceTable.output,
             actions(m.matchedActions), actions(m.notMatchedActions),
-            actions(m.notMatchedBySourceActions))
+            actions(m.notMatchedBySourceActions), t.basis)
         case _ => m
       }
   }
@@ -273,7 +275,10 @@ case class GraftMergeCommand(warehouse: String, schemaName: String,
     targetOutput: Seq[Attribute], sourceOutput: Seq[Attribute],
     matched: Seq[GraftDml.ActionSpec],
     notMatched: Seq[GraftDml.ActionSpec],
-    notMatchedBySource: Seq[GraftDml.ActionSpec])
+    notMatchedBySource: Seq[GraftDml.ActionSpec],
+    /** The manifest version the resolved target was pinned at: the
+      * merge derives from that snapshot, so its commit fences on it. */
+    basis: Option[Long])
   extends LeafRunnableCommand {
 
   override def run(spark: SparkSession): Seq[Row] = {
@@ -358,7 +363,7 @@ case class GraftMergeCommand(warehouse: String, schemaName: String,
         .groupBy(pk.map(col): _*).count().filter(col("count") > 1)
       require(dupes.isEmpty,
         "MERGE matched a target row more than once (cardinality violation)")
-      gc.mergeCommit(schemaName, tableName, upserts, deletes)
+      gc.mergeCommit(schemaName, tableName, upserts, deletes, basis = basis)
     } finally { upserts.unpersist(); deletes.unpersist(); joinedDf.unpersist(); () }
     Seq.empty
   }
@@ -366,10 +371,14 @@ case class GraftMergeCommand(warehouse: String, schemaName: String,
 
 /** Executes the rewritten UPDATE: one merge-on-read upsert snapshot of
   * the updated rows. `matching` is the rewrite-time `Filter(cond, table)`
-  * plan (subqueries included); assignments bind by exprId against it. */
+  * plan (subqueries included); assignments bind by exprId against it.
+  * The updated rows derive from the snapshot the table was pinned at, so
+  * the upsert fences on its manifest version (`basis`): a writer that
+  * moved the head since aborts the statement, as library `update` does. */
 case class GraftUpdateCommand(warehouse: String, schemaName: String,
     tableName: String, matching: LogicalPlan,
-    assignments: Seq[GraftDml.Assign], targetOutput: Seq[Attribute])
+    assignments: Seq[GraftDml.Assign], targetOutput: Seq[Attribute],
+    basis: Option[Long])
   extends LeafRunnableCommand {
 
   override def run(spark: SparkSession): Seq[Row] = {
@@ -394,7 +403,7 @@ case class GraftUpdateCommand(warehouse: String, schemaName: String,
         byName.get(f.name).map(GraftColumnBridge.column)
           .getOrElse(GraftColumnBridge.column(targetAttr(f.name)))
           .cast(f.dataType).as(f.name)): _*)
-    gc.upsert(schemaName, tableName, updated)
+    gc.upsertFrom(schemaName, tableName, updated, basis)
     Seq.empty
   }
 

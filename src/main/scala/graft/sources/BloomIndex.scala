@@ -68,28 +68,17 @@ private[graft] object BloomIndex {
     * FileStats.driverFooterReads). */
   val driverBitsetBytes = new AtomicLong(0L)
 
+  // Sidecars are immutable once their dir lands: cached per (manifest
+  // token, file) — a reused ordinal after rollback gets a fresh token.
+  private val cache = new SidecarCache[(String, String), FileBloom]("bloom")
+
   /** Per-file sidecar opens at planning time — lazy loading means a
     * query pays O(admitted files), not O(table). */
-  val sidecarLoads = new AtomicLong(0L)
+  val sidecarLoads: AtomicLong = cache.loads
 
   /** High-water mark of concurrent sidecar loads — lets tests assert the
     * batch probe path actually overlaps its FS opens. */
-  val peakConcurrentLoads = new AtomicLong(0L)
-  private val inflightLoads = new java.util.concurrent.atomic.AtomicInteger(0)
-
-  /** Driver-side pool for batch sidecar probes. Sidecar opens are
-    * latency-bound (small files, object-store round-trips), so a bounded
-    * pool turns an O(files) serial planning stall into O(files /
-    * parallelism); CPU cost is negligible. Daemon threads, shared across
-    * queries, never shut down. */
-  private val ProbeParallelism = 16
-  private lazy val probePool = java.util.concurrent.Executors.newFixedThreadPool(
-    ProbeParallelism,
-    (r: Runnable) => {
-      val t = new Thread(r, "bloom-sidecar-probe")
-      t.setDaemon(true)
-      t
-    })
+  val peakConcurrentLoads: AtomicLong = cache.peakConcurrentLoads
 
   def sidecarPath(dirPath: Path, rel: String): Path =
     new Path(dirPath, s"$DirName/$rel.json")
@@ -290,57 +279,35 @@ private[graft] object BloomIndex {
     }
   }
 
-  // Sidecars are immutable once their dir lands; cache per (manifest
-  // token, file) — a reused ordinal after rollback gets a fresh token.
-  // The size cap is enforced BETWEEN batches only (in
-  // [[filterMightMatch]], before the warm): evicting inside loadFile
-  // would let a batch warm larger than the cap thrash the very cache it
-  // is warming, and the sequential decision pass after the warm would
-  // reload evicted sidecars serially — the O(files) planning stall the
-  // batch path exists to avoid. A single oversized batch may transiently
-  // exceed the cap; the next batch's entry check reclaims it.
-  private val CacheCap = 4096
-  private val cache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), Option[FileBloom]]()
-
+  /** One file's bloom sidecar; None when it does not exist or predates
+    * the current format. */
   def loadFile(fs: FileSystem, dirPath: Path, token: String,
       rel: String): Option[FileBloom] =
-    cache.computeIfAbsent((token, rel), _ => loadFileUncached(fs, dirPath, rel))
-
-  private def loadFileUncached(fs: FileSystem, dirPath: Path,
-      rel: String): Option[FileBloom] =
-    try {
-      sidecarLoads.incrementAndGet()
-      val cur = inflightLoads.incrementAndGet()
-      peakConcurrentLoads.getAndUpdate(p => math.max(p, cur))
-      try loadFileBody(fs, dirPath, rel)
-      finally inflightLoads.decrementAndGet()
-    } catch { case scala.util.control.NonFatal(_) => None }
-
-  private def loadFileBody(fs: FileSystem, dirPath: Path,
-      rel: String): Option[FileBloom] =
-    try {
-      val p = sidecarPath(dirPath, rel)
-      if (!fs.exists(p)) return None
-      val in = fs.open(p)
-      val root = try GraftCatalog.jsonMapper.readTree(in) finally in.close()
-      if (root.path("v").asInt(-1) != FormatVersion ||
-          root.path("k").asInt(-1) != K) return None
-      val cn = root.get("cols")
-        .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
-      val m = mutable.HashMap[String, (Int, Array[Long])]()
-      cn.fieldNames().forEachRemaining { c =>
-        val e = cn.get(c)
-        val bytes = Base64.getDecoder.decode(e.get("b64").asText())
-        val words = new Array[Long](bytes.length / 8)
-        val bb = java.nio.ByteBuffer.wrap(bytes)
-          .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-        var i = 0
-        while (i < words.length) { words(i) = bb.getLong; i += 1 }
-        m += c -> (e.get("m").asInt(), words)
+    cache.get((token, rel), sidecarPath(dirPath, rel)) { p =>
+      if (!fs.exists(p)) None
+      else {
+        val in = fs.open(p)
+        val root = try GraftCatalog.jsonMapper.readTree(in) finally in.close()
+        if (root.path("v").asInt(-1) != FormatVersion ||
+            root.path("k").asInt(-1) != K) None
+        else {
+          val cn = root.get("cols")
+            .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+          val m = mutable.HashMap[String, (Int, Array[Long])]()
+          cn.fieldNames().forEachRemaining { c =>
+            val e = cn.get(c)
+            val bytes = Base64.getDecoder.decode(e.get("b64").asText())
+            val words = new Array[Long](bytes.length / 8)
+            val bb = java.nio.ByteBuffer.wrap(bytes)
+              .order(java.nio.ByteOrder.LITTLE_ENDIAN)
+            var i = 0
+            while (i < words.length) { words(i) = bb.getLong; i += 1 }
+            m += c -> (e.get("m").asInt(), words)
+          }
+          Some(FileBloom(m.toMap))
+        }
       }
-      Some(FileBloom(m.toMap))
-    } catch { case scala.util.control.NonFatal(_) => None }
+    }
 
   /**
    * Keep `rel` only if every applicable constraint admits at least one
@@ -364,9 +331,7 @@ private[graft] object BloomIndex {
 
   /**
    * Batch [[fileMightMatch]] over many files of one dir: uncached
-   * sidecars are loaded through [[probePool]] (bounded concurrency, so a
-   * 10⁵-file candidate set costs O(files / 16) object-store round-trips
-   * of planning latency instead of O(files) serial opens), then the
+   * sidecars are loaded in parallel ([[SidecarCache.warm]]), then the
    * per-file decision runs against the warmed (token, file) cache with
    * semantics identical to the sequential path. Returns kept rels in
    * input order.
@@ -374,18 +339,7 @@ private[graft] object BloomIndex {
   def filterMightMatch(fs: FileSystem, dirPath: Path, token: String,
       indexedCols: Set[String], rels: Seq[String],
       constraints: Seq[(String, Seq[Any])]): Seq[String] = {
-    var missing = rels.filterNot(r => cache.containsKey((token, r)))
-    if (missing.nonEmpty && cache.size + missing.size > CacheCap) {
-      cache.clear() // between-batch eviction: everything must re-warm
-      missing = rels
-    }
-    if (missing.size > 1) {
-      val tasks = new java.util.ArrayList[java.util.concurrent.Callable[Unit]](missing.size)
-      missing.foreach { r =>
-        tasks.add(() => { loadFile(fs, dirPath, token, r); () })
-      }
-      probePool.invokeAll(tasks) // blocks until all sidecars are cached
-    }
+    cache.warm(rels.map(token -> _)) { case (_, r) => loadFile(fs, dirPath, token, r); () }
     rels.filter(r => fileMightMatch(fs, dirPath, token, indexedCols, r, constraints))
   }
 }

@@ -23,7 +23,7 @@ import org.apache.spark.unsafe.types.UTF8String
  *
  * Collection reads only parquet FOOTERS of the files a commit just wrote.
  * The path is SCALE-ADAPTIVE (r18): small commits — at most
- * `spark.graft.commit-stats.driver-max-files` files (default 64), the
+ * [[FileStats.DriverMaxFiles]] files, the
  * steady upsert/streaming delta shape — read footers on the driver over a
  * bounded thread pool, because below that count one Spark job LAUNCH
  * costs more than all the KB-scale footer reads it would distribute.
@@ -132,12 +132,16 @@ private[graft] object FileStats {
   }
 
   /** Footer reads performed on the DRIVER — the bounded small-commit fast
-    * path (≤ `spark.graft.commit-stats.driver-max-files` files, r18) and
+    * path (≤ [[DriverMaxFiles]] files, r18) and
     * the sequential no-job fallback. Bulk commits must never grow this
     * (asserted in ZonePruneSpec: a 1000-file load stays distributed), and
     * the READ/planning paths must never grow it at all (BloomIndexSpec /
     * ManifestScaleSpec tripwires). */
   private[graft] val driverFooterReads = new java.util.concurrent.atomic.AtomicLong
+
+  /** Commits of at most this many files read their footers on the
+    * driver; larger ones fan the reads out in one distributed job. */
+  private[graft] val DriverMaxFiles = 64
 
   /** Hadoop Configuration is not Serializable; standard write/readFields
     * envelope so executor tasks can open footers with the session conf. */
@@ -509,14 +513,11 @@ private[graft] object FileStats {
     val sc = spark.sparkContext
     val orc = fmt == "orc"
     // Scale-adaptive (r18, guide §1/§2): a footer is a KB-scale metadata
-    // read, so below `driver-max-files` a Spark job LAUNCH costs more
+    // read, so below DriverMaxFiles a Spark job LAUNCH costs more
     // than every read it would distribute — small commits (the steady
     // streaming/upsert delta shape) read footers on the driver over a
     // bounded pool, bulk loads keep the distributed job (the 10⁵-file
     // story is unchanged; ZonePruneSpec asserts it stays off the driver).
-    val driverMax =
-      try spark.conf.get("spark.graft.commit-stats.driver-max-files", "64").toInt
-      catch { case scala.util.control.NonFatal(_) => 64 }
     // Avro stats are DATA reads, not footer reads, so the driver path is
     // additionally BYTE-capped (r19): below the cap one sequential decode
     // of the just-written bytes costs less than a Spark job launch (and
@@ -527,10 +528,10 @@ private[graft] object FileStats {
       try spark.conf.get(
         "spark.graft.commit-stats.driver-max-avro-bytes", "16777216").toLong
       catch { case scala.util.control.NonFatal(_) => 16777216L }
-    if (avro && (files.size > driverMax ||
+    if (avro && (files.size > DriverMaxFiles ||
         files.map(_._3).sum > avroDriverMaxBytes))
       return collectFromData(spark, fs, dir, schema, fmt)
-    if (files.size <= driverMax) {
+    if (files.size <= DriverMaxFiles) {
       val hconf = sc.hadoopConfiguration
       def zoneOf(rel: String, abs: String, len: Long): (String, Option[DirStats]) = {
         driverFooterReads.incrementAndGet()

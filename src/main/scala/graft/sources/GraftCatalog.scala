@@ -955,13 +955,26 @@ class GraftCatalog(private[sources] val spark: SparkSession,
    * of TrinoSessionProperties.java:36–37).
    */
   def read(schema: String, table: String, snapshotId: Option[Long] = None,
-      asOfMillis: Option[Long] = None): DataFrame = {
+      asOfMillis: Option[Long] = None): DataFrame =
+    read(pin(schema, table, snapshotId, asOfMillis))
+
+  /** [[read]] of a pinned snapshot. */
+  def read(p: Pin): DataFrame =
+    p.snapshot.flatMap(s => resolveFrames(p.schema, p.table, p.manifest, s.files))
+      .getOrElse(emptyFrame(p.manifest))
+
+  /**
+   * The one place a read's snapshot is chosen: one manifest read, and in
+   * it the snapshot `snapshotId` / `asOfMillis` select — explicit
+   * arguments win, then the session scan properties, then the head. Every
+   * read path plans from a pin, so all its files and stats come from one
+   * snapshot even when a commit lands while it plans.
+   */
+  def pin(schema: String, table: String, snapshotId: Option[Long] = None,
+      asOfMillis: Option[Long] = None): Pin = {
     val m = readManifest(schema, table)
-    m.chooseSnapshot(snapshotId, asOfMillis, spark.conf, s"$schema.$table") match {
-      case None => emptyFrame(m)
-      case Some(s) => resolveFrames(schema, table, m, s.files)
-        .getOrElse(emptyFrame(m))
-    }
+    Pin(schema, table, m,
+      m.chooseSnapshot(snapshotId, asOfMillis, spark.conf, s"$schema.$table"))
   }
 
   /** The head snapshot's merged image resolved from `m` alone — the plan
@@ -969,7 +982,7 @@ class GraftCatalog(private[sources] val spark: SparkSession,
     * fence its commit on exactly that manifest's version. */
   private[sources] def headImage(schema: String, table: String,
       m: Manifest): DataFrame =
-    m.head.flatMap(s => resolveFrames(schema, table, m, s.files)).getOrElse(emptyFrame(m))
+    read(Pin(schema, table, m, m.head))
 
   /** Whether [[headImage]] of `m` merges in fixed-bucket
     * [[bucketedResolve]] legs, one bucket per partition: that image, or
@@ -1001,7 +1014,7 @@ class GraftCatalog(private[sources] val spark: SparkSession,
    * cache misses fetched in bounded parallel so a cold 10⁴-dir table
    * costs O(dirs / 16) planning round-trips, not O(dirs) serial opens.
    * Unreadable sidecars degrade that dir to dir-level pruning (empty
-   * inner map) — conservative, never wrong.
+   * inner map) — conservative, never wrong — with one warning each.
    */
   private[sources] def fileStatsFrom(schema: String, table: String,
       m: Manifest): Map[String, Map[String, FileStats.DirStats]] = {
@@ -1009,40 +1022,21 @@ class GraftCatalog(private[sources] val spark: SparkSession,
     val out = mutable.LinkedHashMap[String, Map[String, FileStats.DirStats]]()
     zones.foreach { case (d, z) => z.foreach(out += d -> _) }
     val ext = zones.flatMap { case (d, z) => z.left.toOption.map(d -> _) } // dir -> sidecar token
-    if (ext.nonEmpty) {
-      val cache = GraftCatalog.zoneSidecarCache
-      var missing = ext.filterNot(e => cache.containsKey(e._2))
-      // between-batch eviction only (same policy as BloomIndex's cache):
-      // never evict mid-warm, so the decision pass below always hits
-      if (missing.nonEmpty && cache.size + missing.size > GraftCatalog.ZoneSidecarCacheCap) {
-        cache.clear()
-        missing = ext
-      }
-      if (missing.size > 1) {
-        val tasks = new java.util.ArrayList[java.util.concurrent.Callable[Unit]](missing.size)
-        missing.foreach { case (d, t) =>
-          tasks.add(() => { loadZoneSidecar(schema, table, d, t); () })
-        }
-        GraftCatalog.sidecarPool.invokeAll(tasks)
-      }
-      ext.foreach { case (d, t) => out += d -> loadZoneSidecar(schema, table, d, t) }
-    }
+    val dirOf = ext.map(_.swap).toMap
+    GraftCatalog.zoneSidecars.warm(ext.map(_._2))(t => loadZoneSidecar(schema, table, dirOf(t), t))
+    ext.foreach { case (d, t) => out += d -> loadZoneSidecar(schema, table, d, t) }
     out.toMap
   }
 
   /** Load one dir's zone sidecar through the token cache. */
   private def loadZoneSidecar(schema: String, table: String, dir: String,
       token: String): Map[String, FileStats.DirStats] =
-    GraftCatalog.zoneSidecarCache.computeIfAbsent(token, _ => {
-      GraftCatalog.zoneSidecarLoads.incrementAndGet()
-      try {
-        val p = new Path(dirPath(schema, table, dir),
-          GraftCatalog.ZoneSidecar)
-        val in = fs.open(p)
-        val root = try mapper.readTree(in) finally in.close()
-        FileStats.sidecarFromJson(root)
-      } catch { case scala.util.control.NonFatal(_) => None }
-    }).getOrElse(Map.empty)
+    GraftCatalog.zoneSidecars.get(token,
+        new Path(dirPath(schema, table, dir), GraftCatalog.ZoneSidecar)) { p =>
+      val in = fs.open(p)
+      val root = try mapper.readTree(in) finally in.close()
+      FileStats.sidecarFromJson(root)
+    }.getOrElse(Map.empty)
 
   /** Write one dir's per-file zones as its immutable `.zones.json`
     * sidecar; returns the fresh cache token the head manifest records. */
@@ -1145,10 +1139,13 @@ class GraftCatalog(private[sources] val spark: SparkSession,
   def readWhere(schema: String, table: String,
       condition: org.apache.spark.sql.Column,
       snapshotId: Option[Long] = None,
-      asOfMillis: Option[Long] = None): DataFrame = {
-    val m = readManifest(schema, table)
-    val chosen = m.chooseSnapshot(snapshotId, asOfMillis, spark.conf, s"$schema.$table")
-    val entries = chosen.map(_.files).getOrElse(Seq.empty)
+      asOfMillis: Option[Long] = None): DataFrame =
+    readWhere(pin(schema, table, snapshotId, asOfMillis), condition)
+
+  /** [[readWhere]] of a pinned snapshot. */
+  def readWhere(p: Pin, condition: org.apache.spark.sql.Column): DataFrame = {
+    val (schema, table, m, chosen) = (p.schema, p.table, p.manifest, p.snapshot)
+    val entries = p.entries
     // read(...)'s frame over THIS manifest read — built only on fallback
     // (it lists and plans every dir of the snapshot)
     lazy val full = resolveFrames(schema, table, m, entries)
@@ -1310,25 +1307,6 @@ class GraftCatalog(private[sources] val spark: SparkSession,
   }
 
   /**
-   * Upper-bound row estimate of a snapshot from manifest dir stats alone
-   * (sum of per-dir footer row counts over DATA entries — pre-merge, so
-   * MoR-pending PK snapshots over-count; tombstones/DVs only shrink).
-   * None when any data dir lacks stats (ORC). Planning-only: feeds the
-   * SQL bridge's reported size so a small MoR dim auto-broadcasts.
-   */
-  def estimatedRowsUpperBound(schema: String, table: String,
-      snapshotId: Option[Long] = None,
-      asOfMillis: Option[Long] = None): Option[Long] = {
-    val m = readManifest(schema, table)
-    val chosen = m.chooseSnapshot(snapshotId, asOfMillis, spark.conf, s"$schema.$table")
-    if (chosen.isEmpty) return Some(0L)
-    val stats = m.dirStats
-    val counts = chosen.get.files.filter(_.kind == "data")
-      .map(fe => stats.get(fe.dir).map(_.rows))
-    if (counts.exists(_.isEmpty)) None else Some(counts.flatten.sum)
-  }
-
-  /**
    * Metadata-only row count: `count(*)` answered from manifest zone-map
    * row counts minus deletion-vector positions — zero files opened, zero
    * executor work (the O(1) planning answer a 100 TB `SELECT count(*)`
@@ -1341,11 +1319,14 @@ class GraftCatalog(private[sources] val spark: SparkSession,
    */
   def countRows(schema: String, table: String,
       snapshotId: Option[Long] = None,
-      asOfMillis: Option[Long] = None): Option[Long] = {
-    val m = readManifest(schema, table)
-    val chosen = m.chooseSnapshot(snapshotId, asOfMillis, spark.conf, s"$schema.$table")
-    if (chosen.isEmpty) return Some(0L)
-    val entries = chosen.get.files
+      asOfMillis: Option[Long] = None): Option[Long] =
+    countRows(pin(schema, table, snapshotId, asOfMillis))
+
+  /** [[countRows]] of a pinned snapshot. */
+  def countRows(p: Pin): Option[Long] = {
+    val m = p.manifest
+    if (p.snapshot.isEmpty) return Some(0L)
+    val entries = p.entries
     // DV-covered PK snapshot (every data dir at/below the newest build,
     // no tombstone dirs): the live image holds exactly one row per key,
     // so the count is metadata-exact by subtraction — the read-optimized
@@ -2105,20 +2086,14 @@ class GraftCatalog(private[sources] val spark: SparkSession,
     * GraftOptions session properties, then latest). None = empty table. */
   def chosenSnapshotId(schema: String, table: String,
       snapshotId: Option[Long] = None,
-      asOfMillis: Option[Long] = None): Option[Long] = {
-    val m = readManifest(schema, table)
-    m.chooseSnapshot(snapshotId, asOfMillis, spark.conf, s"$schema.$table").map(_.id)
-  }
+      asOfMillis: Option[Long] = None): Option[Long] =
+    pin(schema, table, snapshotId, asOfMillis).snapshotId
 
-  /** File entries of the selected snapshot (empty before any commit) —
-    * the split-source surface the SQL catalog plans scans from. */
+  /** File entries of the selected snapshot (empty before any commit). */
   def snapshotFileEntries(schema: String, table: String,
       snapshotId: Option[Long] = None,
-      asOfMillis: Option[Long] = None): Seq[FileEntry] = {
-    val m = readManifest(schema, table)
-    m.chooseSnapshot(snapshotId, asOfMillis, spark.conf, s"$schema.$table")
-      .map(_.files).getOrElse(Seq.empty)
-  }
+      asOfMillis: Option[Long] = None): Seq[FileEntry] =
+    pin(schema, table, snapshotId, asOfMillis).entries
 
   /** Current schema version number (increments per column DDL). */
   def currentSchemaVersionOf(schema: String, table: String): Int =
@@ -2216,15 +2191,6 @@ class GraftCatalog(private[sources] val spark: SparkSession,
     }
   }
 
-  /** Whether a read at `snapshotId` / `asOfMillis` (or the session's scan
-    * properties) resolves the head snapshot: the bucket options and the
-    * dynamic-bucket hash index describe the head's layout only. */
-  private[graft] def readsHead(schema: String, table: String,
-      snapshotId: Option[Long], asOfMillis: Option[Long]): Boolean = {
-    val m = readManifest(schema, table)
-    m.isHead(m.chooseSnapshot(snapshotId, asOfMillis, spark.conf, s"$schema.$table"))
-  }
-
   /**
    * Read ONE bucket of a bucketed PK table, merge-on-read resolved — the
    * split-level consumer API (a bucket is the unit of parallel work, as
@@ -2235,8 +2201,12 @@ class GraftCatalog(private[sources] val spark: SparkSession,
    */
   def readBucket(schema: String, table: String, bucket: Int,
       snapshotId: Option[Long] = None,
-      asOfMillis: Option[Long] = None): DataFrame = {
-    val m = readManifest(schema, table)
+      asOfMillis: Option[Long] = None): DataFrame =
+    readBucket(pin(schema, table, snapshotId, asOfMillis), bucket)
+
+  /** [[readBucket]] of a pinned snapshot. */
+  def readBucket(p: Pin, bucket: Int): DataFrame = {
+    val (schema, table, m) = (p.schema, p.table, p.manifest)
     val n = m.options.bucket.getOrElse(
       throw new IllegalArgumentException(s"$schema.$table is not bucketed"))
     // dynamic tables (n == -1) have no static range — any existing
@@ -2245,8 +2215,7 @@ class GraftCatalog(private[sources] val spark: SparkSession,
       s"bucket $bucket out of range [0, $n)")
     val target = StructType(m.currentFields.map(f =>
       StructField(f.name, TypeMapping.toSparkType(f.trinoType))))
-    m.chooseSnapshot(snapshotId, asOfMillis, spark.conf, s"$schema.$table")
-      .flatMap(s => bucketSlice(schema, table, m, s.files, n, Seq(bucket)))
+    p.snapshot.flatMap(s => bucketSlice(schema, table, m, s.files, n, Seq(bucket)))
       .getOrElse(spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], target))
   }
@@ -2350,7 +2319,7 @@ class GraftCatalog(private[sources] val spark: SparkSession,
     * `basis` ([[update]]'s updated image): every commit it lands carries
     * that basis, so a writer that moved the head since aborts it instead
     * of having its rows overwritten by the stale image. */
-  private def upsertFrom(schema: String, table: String, df: DataFrame,
+  private[graft] def upsertFrom(schema: String, table: String, df: DataFrame,
       basis: Option[Long]): Long = {
     val m = readManifest(schema, table)
     val pk = m.primaryKey
@@ -2613,9 +2582,12 @@ class GraftCatalog(private[sources] val spark: SparkSession,
 
   /** Tombstone-commit the given victim KEYS (PK tables; the SQL
     * subquery-DELETE rewrite computes the victims from an analyzed plan
-    * and lands them here — same snapshot shape as [[deleteWhere]]). */
+    * and lands them here — same snapshot shape as [[deleteWhere]]).
+    * `basis` is the manifest version the victims were derived from
+    * (default: the head read here): a writer that moved the head since
+    * aborts the delete. */
   private[graft] def deleteRowsByKey(schema: String, table: String,
-      victims: DataFrame): Long = {
+      victims: DataFrame, basis: Option[Long] = None): Long = {
     val m = readManifest(schema, table)
     val pk = m.primaryKey
     require(pk.nonEmpty, s"$schema.$table has no primary key")
@@ -2632,7 +2604,7 @@ class GraftCatalog(private[sources] val spark: SparkSession,
           .select((pk ++ sf.toSeq ++ parts).map(col): _*)
     }
     commit(schema, table, Seq(Leg("", "delete", keys)),
-      basis = Some(m.commitVersion))
+      basis = basis.orElse(Some(m.commitVersion)))
   }
 
 
@@ -2744,17 +2716,13 @@ object GraftCatalog {
     * bookkeeping. */
   private[graft] val ZoneSidecar = ".zones.json"
 
-  /** Token-keyed sidecar cache (sidecars are immutable; tokens are fresh
-    * per build, so a reused ordinal after rollback can never serve stale
-    * zones). Evicted only between warm batches — see fileStatsFrom. */
-  private[sources] val ZoneSidecarCacheCap = 4096
-  private[sources] val zoneSidecarCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Option[Map[String, FileStats.DirStats]]]()
+  /** Zone sidecars by cache token. */
+  private[sources] val zoneSidecars =
+    new SidecarCache[String, Map[String, FileStats.DirStats]]("zone")
 
-  /** Sidecar opens at planning time — the cache-effectiveness tripwire
-    * (immutable sidecars must be read at most once per process). */
-  private[graft] val zoneSidecarLoads =
-    new java.util.concurrent.atomic.AtomicLong(0L)
+  /** Zone sidecar opens at planning time — the cache-effectiveness
+    * tripwire (immutable sidecars must be read at most once per process). */
+  private[graft] val zoneSidecarLoads = zoneSidecars.loads
 
   /** Parsed-head cache keyed by the immutable `manifest-v<N>.json` path
     * (each version is CAS'd into existence exactly once — content can
@@ -2769,7 +2737,7 @@ object GraftCatalog {
   /** Process-wide commit-protocol counters (across ALL catalog
     * instances — the per-instance `manifestBytesWritten` serves suite
     * tripwires; these serve cost attribution over query closures that
-    * build their own catalogs, e.g. graft.WarehouseAttrib). */
+    * build their own catalogs, e.g. graft.JobProfile's per-run line). */
   private[graft] val manifestWritesGlobal =
     new java.util.concurrent.atomic.AtomicLong(0L)
   private[graft] val manifestBytesGlobal =
@@ -2784,16 +2752,6 @@ object GraftCatalog {
     val it = headCache.keySet().iterator()
     while (it.hasNext) if (it.next().startsWith(tableDirPrefix)) it.remove()
   }
-
-  /** Bounded driver pool for parallel sidecar loads (latency-bound small
-    * files — same rationale as BloomIndex's probe pool). */
-  private[sources] lazy val sidecarPool =
-    java.util.concurrent.Executors.newFixedThreadPool(16,
-      (r: Runnable) => {
-        val t = new Thread(r, "zone-sidecar-load")
-        t.setDaemon(true)
-        t
-      })
 
   /** Physical bucket-partition column of bucketed PK tables (never part
     * of the logical schema — reads select it away). */
@@ -3026,6 +2984,31 @@ object GraftCatalog {
     * are `-U`/`-D` retract inputs the field-wise fold must invert. */
   case class FileEntry(dir: String, schemaVersion: Int, kind: String,
       excludeBuckets: Seq[Int] = Nil, retract: Boolean = false)
+
+  /** One read's snapshot: the manifest it was resolved from and the
+    * snapshot the travel arguments chose there (None: no commit yet).
+    * A read planned from a pin sees exactly that snapshot however many
+    * times it is planned — see [[GraftCatalog.pin]]. */
+  final case class Pin(schema: String, table: String, manifest: Manifest,
+      snapshot: Option[Manifest.Snapshot]) {
+    def entries: Seq[FileEntry] = snapshot.fold(Seq.empty[FileEntry])(_.files)
+    def snapshotId: Option[Long] = snapshot.map(_.id)
+    /** Whether the pin is the head: the bucket options and the
+      * dynamic-bucket hash index describe the head's layout only. */
+    def readsHead: Boolean = manifest.isHead(snapshot)
+    /** Upper-bound row estimate from manifest dir stats alone (sum of
+      * per-dir footer row counts over DATA entries — pre-merge, so
+      * MoR-pending PK snapshots over-count; tombstones/DVs only shrink).
+      * None when any data dir lacks stats (ORC). Feeds the SQL bridge's
+      * reported size, so a small MoR dim auto-broadcasts. */
+    def rowsUpperBound: Option[Long] =
+      if (snapshot.isEmpty) Some(0L)
+      else {
+        val stats = manifest.dirStats
+        val counts = entries.filter(_.kind == "data").map(fe => stats.get(fe.dir).map(_.rows))
+        if (counts.exists(_.isEmpty)) None else Some(counts.flatten.sum)
+      }
+  }
 
   /** One dir a [[GraftCatalog.commit]] lands, `snap-<id><suffix>`: `frame`
     * written as `kind` (data / delete / dv / cl / idx). `retract` marks an

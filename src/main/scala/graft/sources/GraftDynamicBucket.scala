@@ -494,8 +494,12 @@ trait GraftDynamicBucket { self: GraftCatalog =>
    * stats skip non-matching files).
    */
   def dynamicBucketFor(schema: String, table: String,
-      values: Seq[Any]): Option[Int] = {
-    val m = readManifest(schema, table)
+      values: Seq[Any]): Option[Int] =
+    dynamicBucketFor(pin(schema, table, None, None), values)
+
+  /** [[dynamicBucketFor]] in a pinned manifest's index. */
+  def dynamicBucketFor(p: GraftCatalog.Pin, values: Seq[Any]): Option[Int] = {
+    val (schema, table, m) = (p.schema, p.table, p.manifest)
     require(m.options.bucket.contains(-1),
       s"$schema.$table is not a dynamic-bucket table")
     val pk = m.primaryKey

@@ -39,14 +39,12 @@ trait GraftMetadataViews { self: GraftCatalog =>
   /** One row per file dir referenced by the current (or given) snapshot:
     * dir, kind, schema version, part-file count, bytes on disk. */
   def filesTable(schema: String, table: String,
-      snapshotId: Option[Long] = None): DataFrame = {
-    val m = readManifest(schema, table)
-    val chosen = snapshotId match {
-      case Some(id) =>
-        val s = m.snapshot(id)
-        require(s.isDefined, s"no snapshot $id for $schema.$table"); s
-      case None => m.head
-    }
+      snapshotId: Option[Long] = None): DataFrame =
+    filesTable(pin(schema, table, snapshotId))
+
+  /** [[filesTable]] of a pinned snapshot. */
+  def filesTable(p: GraftCatalog.Pin): DataFrame = {
+    val (schema, table, m) = (p.schema, p.table, p.manifest)
     // Per-dir file counts/bytes answer from the ZONE SIDECARS (the same
     // manifest tier `$partitions` reads — per-file entries now carry the
     // on-disk length): a 10⁵-file table costs cached sidecar reads, not
@@ -55,7 +53,7 @@ trait GraftMetadataViews { self: GraftCatalog =>
     // back to the filesystem — bounded by those dirs alone, counted by
     // the tripwire below.
     val perFile = fileStatsFrom(schema, table, m)
-    val rows = chosen.map(_.files).getOrElse(Seq.empty).map { fe =>
+    val rows = p.entries.map { fe =>
       // retired buckets' subtrees may already be reclaimed from disk —
       // drop their sidecar entries so counts match what a reader plans
       val sidecar = perFile.get(fe.dir)
@@ -102,10 +100,12 @@ trait GraftMetadataViews { self: GraftCatalog =>
    * per-file footer reads — bounded by those dirs alone.
    */
   def partitionsTable(schema: String, table: String,
-      snapshotId: Option[Long] = None): DataFrame = {
-    val m = readManifest(schema, table)
-    val entries = m.chooseSnapshot(snapshotId, None, spark.conf, s"$schema.$table")
-      .map(_.files).getOrElse(Seq.empty)
+      snapshotId: Option[Long] = None): DataFrame =
+    partitionsTable(pin(schema, table, snapshotId))
+
+  /** [[partitionsTable]] of a pinned snapshot. */
+  def partitionsTable(p: GraftCatalog.Pin): DataFrame = {
+    val (schema, table, m, entries) = (p.schema, p.table, p.manifest, p.entries)
     val conf = spark.sparkContext.hadoopConfiguration
     val perFile = fileStatsFrom(schema, table, m)
     val agg = mutable.LinkedHashMap[(String, String), (Long, Long, Long)]()
@@ -264,11 +264,15 @@ trait GraftMetadataViews { self: GraftCatalog =>
    */
   def analyzeStatsOf(schema: String, table: String,
       snapshotId: Option[Long] = None, asOfMillis: Option[Long] = None)
+      : Option[(Long, Map[String, (Option[Long], Option[Long], Option[Double])])] =
+    analyzeStatsOf(pin(schema, table, snapshotId, asOfMillis))
+
+  /** [[analyzeStatsOf]] of a pinned snapshot. */
+  def analyzeStatsOf(p: GraftCatalog.Pin)
       : Option[(Long, Map[String, (Option[Long], Option[Long], Option[Double])])] = {
-    val m = readManifest(schema, table)
-    val st = m.statistics.getOrElse(return None)
-    val chosen = m.chooseSnapshot(snapshotId, asOfMillis, spark.conf, s"$schema.$table")
-      .map(_.id)
+    val (schema, table) = (p.schema, p.table)
+    val st = p.manifest.statistics.getOrElse(return None)
+    val chosen = p.snapshotId
     if (!chosen.contains(st.snapshotId)) {
       // surfaced, not silent (r16): a stale-stats fallback flips join
       // strategies with nothing in the logs — at 100× scale an operator

@@ -75,8 +75,11 @@ class GraftSparkCatalog extends TableCatalog with SupportsNamespaces
         Identifier.of(GraftProcedures.Namespace, n)).toArray
     else Array.empty
 
-  private def spark: SparkSession = SparkSession.active
-  private def gc: GraftCatalog = new GraftCatalog(spark, warehouse)
+  // One catalog per plugin instance, over the session that first uses it
+  // (Spark builds a catalog plugin per session, so that session is the
+  // plugin's own); its constructor sets the catalog's session confs once.
+  private lazy val gc: GraftCatalog = new GraftCatalog(SparkSession.active, warehouse)
+  private def spark: SparkSession = gc.spark
 
   override def initialize(name: String, options: CaseInsensitiveStringMap): Unit = {
     catalogName = name
@@ -227,13 +230,13 @@ class GraftSparkCatalog extends TableCatalog with SupportsNamespaces
         // snapshot-scoped views honor VERSION/TIMESTAMP AS OF (and the
         // session scan properties) like a base-table read; the rest are
         // table-level (evolution history, tags, options, consumers)
-        lazy val travel = gc.chosenSnapshotId(schemaName, base, snapshotId, asOfMillis)
+        lazy val travel = gc.pin(schemaName, base, snapshotId, asOfMillis)
         val df = kind match {
           case "snapshots" => gc.snapshotsTable(schemaName, base)
-          case "files" => gc.filesTable(schemaName, base, travel)
+          case "files" => gc.filesTable(travel)
           case "schemas" => gc.schemasTable(schemaName, base)
           case "options" => gc.optionsTable(schemaName, base)
-          case "partitions" => gc.partitionsTable(schemaName, base, travel)
+          case "partitions" => gc.partitionsTable(travel)
           case "tags" => gc.tagsTable(schemaName, base)
           case "consumers" => gc.consumersTable(schemaName, base)
           case "manifests" => gc.manifestsTable(schemaName, base)
@@ -248,12 +251,12 @@ class GraftSparkCatalog extends TableCatalog with SupportsNamespaces
     // fall through to CREATE paths (saveAsTable / createOrReplace).
     if (!tableExists(ident))
       throw new NoSuchTableException(Seq(schemaName, tableName))
-    // ONE manifest read serves the whole resolution: the chosen
-    // snapshot's entries, the table's shape and options, and the stats
-    // thunks below
-    val m = gc.readManifest(schemaName, tableName)
-    val entries = m.chooseSnapshot(snapshotId, asOfMillis, spark.conf,
-      s"$schemaName.$tableName").map(_.files).getOrElse(Seq.empty)
+    // ONE manifest read serves the whole query: the scans, the optimizer
+    // stats and the DML basis all come from this pin, so a commit landing
+    // while the query plans or runs is not seen by it
+    val p = gc.pin(schemaName, tableName, snapshotId, asOfMillis)
+    val m = p.manifest
+    val entries = p.entries
     val curVersion = m.currentSchemaVersion
     val pk = m.primaryKey
     val tblOpts = m.options
@@ -295,80 +298,26 @@ class GraftSparkCatalog extends TableCatalog with SupportsNamespaces
         // which correctly returns nothing. The index is the head's: an
         // overwrite since an older snapshot may have re-assigned the
         // key's bucket, so time-travel lookups read through readWhere.
-        val dynBucket = if (!dynamicBucket || pk.isEmpty ||
-            !gc.readsHead(schemaName, tableName, snapshotId, asOfMillis)) None else {
+        val dynBucket = if (!dynamicBucket || pk.isEmpty || !p.readsHead) None else {
           val eq = filters.collect { case EqualTo(a, v) if pk.contains(a) => a -> v }.toMap
-          if (pk.forall(eq.contains))
-            gc.dynamicBucketFor(schemaName, tableName, pk.map(eq))
+          if (pk.forall(eq.contains)) gc.dynamicBucketFor(p, pk.map(eq))
           else None
         }
         dynBucket match {
-          case Some(k) => gc.readBucket(schemaName, tableName, k, snapshotId, asOfMillis)
+          case Some(k) => gc.readBucket(p, k)
           case None => FilterTranslation.toCondition(filters) match {
-            case Some(cond) if filters.nonEmpty =>
-              gc.readWhere(schemaName, tableName, cond, snapshotId, asOfMillis)
-            case _ => gc.read(schemaName, tableName, snapshotId, asOfMillis)
+            case Some(cond) if filters.nonEmpty => gc.readWhere(p, cond)
+            case _ => gc.read(p)
           }
         }
       })
-    def dirPath(dir: String): String =
-      gc.dirLocation(schemaName, tableName, dir)
-    val paths = if (resolvedAsFiles) entries.map(e => dirPath(e.dir)) else Seq.empty
+    val paths = if (resolvedAsFiles)
+      entries.map(e => gc.dirLocation(schemaName, tableName, e.dir)) else Seq.empty
     val schema = gc.currentSchema(m)
     val parquet = ParquetTable(s"$catalogName.$schemaName.$tableName",
       spark.asInstanceOf[classic.SparkSession],
       new CaseInsensitiveStringMap(Map.empty[String, String].asJava),
       paths, Some(schema), classOf[ParquetFileFormat])
-    // Manifest zone maps, threaded into the table so the optimizer can
-    // skip whole dirs at planning time (GraftZonePrune) and answer bare
-    // count(*) without a scan (GraftCountFromStats). Parsed only when a
-    // resolved file scan can use them — the V1-bridge paths get their
-    // pruning inside readWhere instead, so loading stats here would be
-    // per-query metadata I/O thrown away.
-    // Manifest stats are sound whenever the snapshot is plain
-    // current-schema append data and no MoR merge can change the visible
-    // rows — INDEPENDENT of whether the physical scan is a raw file scan
-    // or the V1 bridge (a multi-dir partitioned append table reads
-    // through the bridge purely for Spark's partition-discovery
-    // limitation; its stats are as exact as any). Single-dir PK tables
-    // keep their zones too (the raw files ARE the image), matching the
-    // old resolvedAsFiles gate.
-    val statsSound =
-      entries.forall(e => e.kind == "data" && e.schemaVersion == curVersion) &&
-        (pk.isEmpty || resolvedAsFiles)
-    // Parsed from the resolution's manifest, shared by all three stats
-    // thunks and deferred until a zone rule actually consults them (all
-    // three closures capture the same LazyRef).
-    lazy val statsPair =
-      if (statsSound) (m.dirStats, gc.fileStatsFrom(schemaName, tableName, m))
-      else (Map.empty[String, graft.sources.FileStats.DirStats],
-        Map.empty[String, Map[String, graft.sources.FileStats.DirStats]])
-    val zoneStatsIn = () => if (statsSound)
-      Some(entries.flatMap(e => statsPair._1.get(e.dir).map(dirPath(e.dir) -> _)).toMap)
-      else None
-    // Per-file zones serve two rules: GraftZonePrune's finer path cut
-    // (unpartitioned tables only — gated in the rule, since file paths
-    // lose the col=value segments partitioned scans need) and
-    // GraftCountFromStats' metadata-only answers to partition-filtered
-    // aggregates (partition segments give every file an exact point
-    // zone). Threaded only when EVERY live dir carries per-file zones
-    // (zero-row dirs exempt), so consumers may assume full coverage.
-    val fileZonesIn = () => if (statsSound) {
-      val (dirStats, pf) = statsPair
-      val covered = entries.forall(e => pf.get(e.dir).exists(_.nonEmpty) ||
-        dirStats.get(e.dir).exists(_.rows == 0L))
-      if (covered)
-        Some(entries.flatMap { e =>
-          pf.get(e.dir).filter(_.nonEmpty).map(fm =>
-            dirPath(e.dir) -> fm.map { case (rel, z) =>
-              new Path(dirPath(e.dir), rel).toString -> z })
-        }.toMap).filter(_.nonEmpty)
-      else None
-    } else None
-    val exactRowCountIn = () =>
-      if (statsSound && pk.isEmpty && entries.forall(e => statsPair._1.contains(e.dir)))
-        Some(entries.map(e => statsPair._1(e.dir).rows).sum)
-      else None
     new GraftSqlTable(parquet, partitionCols,
       tblOpts.raw ++
         (if (pk.nonEmpty) Map("primary-key" -> pk.mkString(",")) else Map.empty),
@@ -378,14 +327,7 @@ class GraftSparkCatalog extends TableCatalog with SupportsNamespaces
       // vectors when the option is on (both land one snapshot commit)
       canDelete = pk.nonEmpty || tblOpts.deletionVectors,
       coords = Some((warehouse, schemaName, tableName)),
-      zoneStatsIn = zoneStatsIn, exactRowCountIn = exactRowCountIn,
-      fileZonesIn = fileZonesIn,
-      bloomIn = () => gc.bloomIndexInfo(schemaName, tableName)
-        .map { case (d, v) => dirPath(d) -> v },
-      morRowsHintIn = () => gc.estimatedRowsUpperBound(
-        schemaName, tableName, snapshotId, asOfMillis),
-      cboStatsIn = () => gc.analyzeStatsOf(
-        schemaName, tableName, snapshotId, asOfMillis))
+      pinned = Some(new PinnedStats(gc, p, resolvedAsFiles)))
   }
 
   /** SQL INSERT → snapshot commit: `overwrite` for INSERT OVERWRITE,
@@ -647,6 +589,91 @@ private[graft] object FilterTranslation {
 }
 
 /**
+ * What the optimizer rules read of one resolved table, each value
+ * derived on first use from the pin's manifest alone: no manifest read
+ * follows the resolution, and zone sidecars load only when a rule asks
+ * for per-file zones.
+ */
+private[graft] final class PinnedStats(gc: GraftCatalog,
+    val pin: GraftCatalog.Pin, resolvedAsFiles: Boolean) {
+  private val m = pin.manifest
+  private val entries = pin.entries
+  private def dirPath(dir: String): String = gc.dirLocation(pin.schema, pin.table, dir)
+
+  // Manifest stats are sound whenever the snapshot is plain
+  // current-schema append data and no MoR merge can change the visible
+  // rows — INDEPENDENT of whether the physical scan is a raw file scan
+  // or the V1 bridge (a multi-dir partitioned append table reads
+  // through the bridge purely for Spark's partition-discovery
+  // limitation; its stats are as exact as any). Single-dir PK tables
+  // keep their zones too (the raw files ARE the image).
+  private val statsSound =
+    entries.forall(e => e.kind == "data" && e.schemaVersion == m.currentSchemaVersion) &&
+      (m.primaryKey.isEmpty || resolvedAsFiles)
+  private lazy val dirStats =
+    if (statsSound) m.dirStats else Map.empty[String, FileStats.DirStats]
+
+  /** Zone maps keyed by root path — set only when per-dir pruning is
+    * provably safe (see GraftCatalog.readWhere's MoR caveat). Paths
+    * absent from the map are never pruned. They let the optimizer skip
+    * whole dirs at planning time (GraftZonePrune) and answer bare
+    * count(*) without a scan (GraftCountFromStats). */
+  lazy val zoneStats: Option[Map[String, FileStats.DirStats]] =
+    if (statsSound)
+      Some(entries.flatMap(e => dirStats.get(e.dir).map(dirPath(e.dir) -> _)).toMap)
+    else None
+
+  /** Per-FILE zones (dir root path → absolute file path → zone). They
+    * serve GraftZonePrune's finer path cut (unpartitioned tables only —
+    * gated in the rule, since file paths lose the col=value segments
+    * partitioned scans need) and GraftCountFromStats' metadata-only
+    * answers to partition-filtered aggregates (partition segments give
+    * every file an exact point zone). Set only when EVERY live dir
+    * carries per-file zones (zero-row dirs exempt), so consumers may
+    * assume full coverage. */
+  lazy val fileZones: Option[Map[String, Map[String, FileStats.DirStats]]] =
+    if (!statsSound) None
+    else {
+      val pf = gc.fileStatsFrom(pin.schema, pin.table, m)
+      val covered = entries.forall(e => pf.get(e.dir).exists(_.nonEmpty) ||
+        dirStats.get(e.dir).exists(_.rows == 0L))
+      if (covered)
+        Some(entries.flatMap { e =>
+          pf.get(e.dir).filter(_.nonEmpty).map(fm =>
+            dirPath(e.dir) -> fm.map { case (rel, z) =>
+              new Path(dirPath(e.dir), rel).toString -> z })
+        }.toMap).filter(_.nonEmpty)
+      else None
+    }
+
+  /** Exact row count from manifest stats — set only when provably exact
+    * (append-only, every dir has stats); lets `count(*)` answer without
+    * touching a single file. */
+  lazy val exactRowCount: Option[Long] =
+    if (statsSound && m.primaryKey.isEmpty && entries.forall(e => dirStats.contains(e.dir)))
+      Some(entries.map(e => dirStats(e.dir).rows).sum)
+    else None
+
+  /** Bloom-index pointers (dir root path → (cache token, indexed cols))
+    * — lets GraftZonePrune refine equality/IN lookups to the files whose
+    * bloom admits a literal, same contract as GraftCatalog.readWhere's
+    * bloom pass. */
+  lazy val bloomInfo: Map[String, (String, Set[String])] =
+    m.bloomIdx.map { case (d, v) => dirPath(d) -> v }
+
+  /** Upper-bound row estimate for the MoR bridge scan. V1 relations
+    * otherwise report the default huge size, so a small uncompacted PK
+    * dim would never auto-broadcast in a SQL join; an upper bound can
+    * only under-broadcast, never over-broadcast. */
+  lazy val morRowsHint: Option[Long] = pin.rowsUpperBound
+
+  /** ANALYZE statistics (exact rows + per-column ndv/nulls/avgLen) of
+    * the pinned snapshot; feeds the scan's reported DSv2 Statistics
+    * (see GraftCboStats). */
+  lazy val cboStats: Option[GraftCboStats.Stats] = gc.analyzeStatsOf(pin)
+}
+
+/**
  * V2 table over a catalog snapshot: scans delegate to the engine's
  * parquet implementation (vectorized read + pushdown); writes route
  * through the snapshot commit protocol via the V1 write bridge (the
@@ -664,47 +691,14 @@ private[graft] class GraftSqlTable(delegate: ParquetTable,
     /** (warehouse, schema, table) — lets the UPDATE rewrite rule route the
       * statement back into the owning catalog (graft.plans.GraftDml). */
     private[graft] val coords: Option[(String, String, String)] = None,
-    /** Zone maps keyed by root path — set only when per-dir pruning is
-      * provably safe (resolved file scans; see GraftCatalog.readWhere's
-      * MoR caveat). Paths absent from the map are never pruned. Thunked:
-      * manifest stats parse lazily, so a query whose plan never consults
-      * the zone rules (no Filter, no bare aggregate) pays zero
-      * metadata-JSON cost — on a 10⁵-file bulk-load table that parse is
-      * real driver time. */
-    zoneStatsIn: () => Option[Map[String, FileStats.DirStats]] = () => None,
-    /** Exact row count from manifest stats — set only when provably
-      * exact (append-only, every dir has stats); lets `count(*)` answer
-      * without touching a single file. */
-    exactRowCountIn: () => Option[Long] = () => None,
     /** Read-only views (e.g. `t$ro`) must never route DML to the base
       * table: capabilities shrink to BATCH_READ and deletes refuse. */
     private val readOnly: Boolean = false,
-    /** Per-FILE zones (dir root path → absolute file path → zone).
-      * Populated whenever stats are sound with full live-dir coverage —
-      * for partitioned tables too (GraftCountFromStats answers
-      * partition-filtered aggregates from them); only the PATH-EXPANSION
-      * use is unpartitioned-gated, inside GraftZonePrune, because file
-      * paths lose the `col=value` segments a partitioned scan derives
-      * partition columns from. */
-    fileZonesIn: () => Option[Map[String, Map[String, FileStats.DirStats]]] = () => None,
-    /** Bloom-index pointers (dir root path → (cache token, indexed
-      * cols)) — lets GraftZonePrune refine equality/IN lookups to the
-      * files whose bloom admits a literal, same contract as
-      * [[GraftCatalog.readWhere]]'s bloom pass. Thunked like the zones:
-      * zero manifest cost unless a Filter actually consults it. */
-    bloomIn: () => Map[String, (String, Set[String])] = () => Map.empty,
-    /** Upper-bound ROW estimate for the MoR bridge scan, from manifest
-      * dir stats alone (pre-merge row sum — tombstones and pending
-      * merges only shrink it). V1 relations otherwise report the default
-      * huge size, so a small uncompacted PK dim would never
-      * auto-broadcast in a SQL join; an upper bound can only
-      * under-broadcast, never over-broadcast. Thunked: zero manifest
-      * cost unless a MoR scan is actually planned. */
-    morRowsHintIn: () => Option[Long] = () => None,
-    /** ANALYZE statistics (exact rows + per-column ndv/nulls/avgLen) for
-      * the scanned snapshot — thunked like the zones; feeds the scan's
-      * reported DSv2 Statistics (see GraftCboStats). */
-    cboStatsIn: () => Option[GraftCboStats.Stats] = () => None)
+    /** The snapshot this handle resolved (None: a table this statement
+      * creates) — its stats feed the optimizer rules. */
+    pinned: Option[PinnedStats] = None,
+    /** Set on a zone-pruned copy (see [[pruneTo]]). */
+    pruned: Option[GraftSqlTable.Pruned] = None)
   extends Table with SupportsRead with SupportsWrite with SupportsDelete {
 
   /** The read-time merge reader, exposed for the native plan-injection
@@ -715,20 +709,28 @@ private[graft] class GraftSqlTable(delegate: ParquetTable,
   private[graft] def morReader: Option[Array[Filter] => org.apache.spark.sql.DataFrame] =
     morRead
 
-  private[graft] lazy val zoneStats: Option[Map[String, FileStats.DirStats]] =
-    zoneStatsIn()
-  private[graft] lazy val exactRowCount: Option[Long] = exactRowCountIn()
-  private[graft] lazy val fileZones: Option[Map[String, Map[String, FileStats.DirStats]]] =
-    fileZonesIn()
-  private[graft] lazy val bloomInfo: Map[String, (String, Set[String])] = bloomIn()
-  private[graft] lazy val cboStats: Option[GraftCboStats.Stats] = cboStatsIn()
+  /** The manifest version the pinned snapshot was read from — the basis
+    * SQL DML commits fence on, so a writer that moved the head since the
+    * statement resolved aborts it. */
+  private[graft] def basis: Option[Long] = pinned.map(_.pin.manifest.commitVersion)
+
+  private[graft] def zoneStats: Option[Map[String, FileStats.DirStats]] =
+    pruned.fold(pinned.flatMap(_.zoneStats))(p => Some(p.zoneStats))
+  private[graft] def exactRowCount: Option[Long] =
+    if (pruned.isDefined) None else pinned.flatMap(_.exactRowCount)
+  private[graft] def fileZones: Option[Map[String, Map[String, FileStats.DirStats]]] =
+    pruned.fold(pinned.flatMap(_.fileZones))(p => Some(p.fileZones).filter(_.nonEmpty))
+  // a pruned copy's roots may be single files, which the dir-keyed
+  // pointers do not name; the prune has already applied them
+  private[graft] def bloomInfo: Map[String, (String, Set[String])] =
+    if (pruned.isDefined) Map.empty else pinned.fold(Map.empty[String, (String, Set[String])])(_.bloomInfo)
+  private[graft] def cboStats: Option[GraftCboStats.Stats] =
+    pruned.fold(pinned.flatMap(_.cboStats))(_.cboStats)
 
   /** This table as a read-only view (same scan, no write surface). */
   private[graft] def asReadOnly: GraftSqlTable =
     new GraftSqlTable(delegate, partitionCols, props, morRead, commitInsert,
-      commitDelete, canDelete, coords, () => zoneStats, () => exactRowCount,
-      readOnly = true, fileZonesIn = () => fileZones,
-      cboStatsIn = () => cboStats)
+      commitDelete, canDelete, coords, readOnly = true, pinned, pruned)
 
   private[graft] def currentPaths: Seq[String] = delegate.paths
 
@@ -765,20 +767,19 @@ private[graft] class GraftSqlTable(delegate: ParquetTable,
             (delegate.options.asScala ++
               Map("basePath" -> delegate.paths.head)).asJava))
       }
+    // Whole-table ANALYZE rows must not survive a path prune unscaled
+    // (the pruned delegate's fileIndex IS the kept set, so the byte
+    // ratio in GraftRuntimeScan can no longer recover the factor):
+    // re-key the row count to the kept paths' exact manifest rows when
+    // zone coverage is complete, else drop to the delegate's estimate.
+    // Column NDV/avgLen stay whole-table — CBO caps NDV at rows.
+    val keptCbo = cboStats.collect {
+      case (_, cols) if kept.forall(newStats.contains) =>
+        (kept.map(newStats(_).rows).sum, cols)
+    }
     new GraftSqlTable(newDelegate, partitionCols, props,
-      morRead, commitInsert, commitDelete, canDelete, coords,
-      () => Some(newStats), exactRowCountIn = () => None, readOnly = readOnly,
-      fileZonesIn = () => Some(newFileZones).filter(_.nonEmpty),
-      // Whole-table ANALYZE rows must not survive a path prune unscaled
-      // (the pruned delegate's fileIndex IS the kept set, so the byte
-      // ratio in GraftRuntimeScan can no longer recover the factor):
-      // re-key the row count to the kept paths' exact manifest rows when
-      // zone coverage is complete, else drop to the delegate's estimate.
-      // Column NDV/avgLen stay whole-table — CBO caps NDV at rows.
-      cboStatsIn = () => cboStats.collect {
-        case (_, cols) if kept.forall(newStats.contains) =>
-          (kept.map(newStats(_).rows).sum, cols)
-      })
+      morRead, commitInsert, commitDelete, canDelete, coords, readOnly, pinned,
+      Some(GraftSqlTable.Pruned(newStats, newFileZones, keptCbo)))
   }
 
   /** `DELETE FROM` → one tombstone snapshot commit (PK tables only, as
@@ -809,11 +810,10 @@ private[graft] class GraftSqlTable(delegate: ParquetTable,
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
     morRead match {
       case Some(reader) =>
-        val hint = morRowsHintIn().map(rows =>
+        val hint = pinned.flatMap(_.morRowsHint).map(rows =>
           (rows, rows * math.max(1L, delegate.schema.defaultSize.toLong)))
-        new GraftMorScanBuilder(delegate.schema, reader, hint, cboStatsIn())
+        new GraftMorScanBuilder(delegate.schema, reader, hint, cboStats)
       case None =>
-        val base = delegate.newScanBuilder(options)
         // Runtime (dynamic) join filtering: wrap the parquet builder so
         // the built scan carries SupportsRuntimeV2Filtering and SQL joins
         // prune fact files through zones + blooms at execution.
@@ -821,10 +821,7 @@ private[graft] class GraftSqlTable(delegate: ParquetTable,
         // that reach this raw-file scan): the runtime prune re-attaches
         // the scan's PartitionSpec, so Spark's own DPP still prunes
         // partitions while zones+blooms drop files WITHIN the survivors.
-        val rtEnabled = SparkSession.active.conf
-          .get("spark.graft.runtimeFilter.enabled", "true").toBoolean
-        if (rtEnabled) new graft.plans.GraftScanBuilder(base, this)
-        else base
+        new graft.plans.GraftScanBuilder(delegate.newScanBuilder(options), this)
     }
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder = {
     if (readOnly) throw new UnsupportedOperationException(
@@ -845,6 +842,14 @@ private[graft] class GraftSqlTable(delegate: ParquetTable,
       }
     }
   }
+}
+
+private[graft] object GraftSqlTable {
+  /** A zone-pruned copy's stats: the zones re-keyed to the kept paths,
+    * and the ANALYZE stats with rows re-counted over them. */
+  final case class Pruned(zoneStats: Map[String, FileStats.DirStats],
+      fileZones: Map[String, Map[String, FileStats.DirStats]],
+      cboStats: Option[GraftCboStats.Stats])
 }
 
 /**

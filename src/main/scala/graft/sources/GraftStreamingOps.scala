@@ -150,16 +150,14 @@ trait GraftStreamingOps { self: GraftCatalog =>
           val enriched =
             if (bucketedDim) bucketedLookup(schema, dimTable, batch.toDF(), joinKeys)
             else {
-              val m = readManifest(schema, dimTable)
-              val head = m.chooseSnapshot(None, None, spark.conf, s"$schema.$dimTable")
-                .map(_.id).getOrElse(0L)
-              val dimKey = (head, m.commitVersion)
+              val p = pin(schema, dimTable)
+              val dimKey = (p.snapshotId.getOrElse(0L), p.manifest.commitVersion)
               val dim0 = cachedDim.get() match {
                 case Some((k, df)) if k == dimKey => df
                 case stale =>
                   stale.foreach(_._2.unpersist(blocking = false))
                   GraftCatalog.lookupDimResolves.incrementAndGet()
-                  val fresh = read(schema, dimTable)
+                  val fresh = read(p)
                     .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
                   // the listener may have cleared the cache concurrently
                   // (query terminating): if the swap loses, release the

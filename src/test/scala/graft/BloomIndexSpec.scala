@@ -356,4 +356,57 @@ class BloomIndexSpec extends SparkSpecBase {
       }
     }
   }
+
+  test("a corrupt zone or bloom sidecar leaves the answer unchanged and " +
+      "logs one warning naming the file") {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    val wh = Files.createTempDirectory("graft-blbad").toString
+    val g = new GraftCatalog(spark, wh)
+    g.createSchema("db")
+    g.createTable("db", "c", batch(0).schema,
+      options = Map("file-index.bloom-filter.columns" -> "id"))
+    g.append("db", "c", batch(0).toDF()) // snap-1
+    g.append("db", "c", batch(1).toDF()) // snap-2
+    // one dir's zone sidecar, and the bloom sidecar of the snap-2 file
+    // holding id 4, turn to garbage before any lookup reads them
+    val holder = new org.apache.hadoop.fs.Path(g.read("db", "c").filter(col("id") === 4L)
+      .select(input_file_name()).head().getString(0)).getName
+    val zones = new java.io.File(s"$wh/db/c/snap-1/${GraftCatalog.ZoneSidecar}")
+    val bloom = new java.io.File(
+      s"$wh/db/c/snap-2/${graft.sources.BloomIndex.DirName}/$holder.json")
+    assert(zones.isFile && bloom.isFile)
+    Seq(zones, bloom).foreach(f => Files.write(f.toPath, "{not json".getBytes))
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val app = new AbstractAppender("sidecar-capture", null, null, true,
+        org.apache.logging.log4j.core.config.Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLevel == Level.WARN) seen.add(e.getMessage.getFormattedMessage)
+    }
+    app.start()
+    val logger = LogManager.getLogger("graft.sources.SidecarCache").asInstanceOf[Logger]
+    val level = logger.getLevel
+    logger.addAppender(app)
+    logger.setLevel(Level.WARN)
+    try {
+      // the lookup's bloom pass opens the sidecar of every snap-2 file its
+      // zones admit, the holder's among them; snap-1's zones cannot be read
+      (1 to 2).foreach { _ =>
+        assert(g.readWhere("db", "c", col("id") === 4L)
+          .select("id").collect().map(_.getLong(0)).toSeq === Seq(4L))
+        assert(g.readWhere("db", "c", col("id") < 10L).count() ===
+          g.read("db", "c").filter(col("id") < 10L).count())
+      }
+      def warned(f: java.io.File) = seen.toArray.count(m =>
+        m.toString.contains(f.getName) && m.toString.contains(f.getParentFile.getName))
+      assert(warned(zones) === 1, seen)
+      assert(warned(bloom) === 1, seen)
+      assert(seen.size === 2, seen)
+    } finally {
+      logger.removeAppender(app)
+      logger.setLevel(level)
+      app.stop()
+    }
+  }
 }

@@ -843,4 +843,79 @@ class GraftSparkCatalogSpec extends SparkSpecBase {
       "live stage with a garbled stamp was swept inside the TTL window")
     fs.delete(new org.apache.hadoop.fs.Path(warehouse, s"db/$live"), true)
   }
+
+  /** The graft table a resolved frame reads. */
+  private def sqlTable(df: org.apache.spark.sql.DataFrame): graft.sources.GraftSqlTable =
+    df.queryExecution.analyzed.collectFirst {
+      case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation => r.table
+    }.get.asInstanceOf[graft.sources.GraftSqlTable]
+
+  test("a resolved frame reads the snapshot it resolved, not a later commit") {
+    import spark.implicits._
+    spark.sql("CREATE NAMESPACE IF NOT EXISTS g.db")
+    val sch = StructType(Seq(StructField("id", LongType), StructField("v", StringType)))
+    // bucketed PK table: every scan goes through the merge reader
+    gc.createTable("db", "pinb", sch, Map("bucket" -> "2"), primaryKey = Seq("id"))
+    gc.upsert("db", "pinb", Seq((1L, "a"), (2L, "b")).toDF("id", "v"))
+    val pk = spark.table("g.db.pinb")
+    gc.upsert("db", "pinb", Seq((3L, "c")).toDF("id", "v"))
+    assert(pk.count() === 2)
+    assert(spark.table("g.db.pinb").count() === 3)
+    // append table: the raw-file scan has always been fixed at resolution
+    gc.createTable("db", "pina", sch)
+    gc.append("db", "pina", Seq((1L, "a"), (2L, "b")).toDF("id", "v"))
+    val ap = spark.table("g.db.pina")
+    gc.append("db", "pina", Seq((3L, "c")).toDF("id", "v"))
+    assert(ap.count() === 2)
+    assert(spark.table("g.db.pina").count() === 3)
+  }
+
+  test("a MoR frame resolved before a column rename reads its snapshot's columns") {
+    import spark.implicits._
+    spark.sql("CREATE NAMESPACE IF NOT EXISTS g.db")
+    gc.createTable("db", "pinr", StructType(Seq(StructField("id", LongType),
+      StructField("v", StringType))), primaryKey = Seq("id"))
+    gc.upsert("db", "pinr", Seq((1L, "a"), (2L, "b")).toDF("id", "v"))
+    gc.upsert("db", "pinr", Seq((2L, "b2")).toDF("id", "v")) // MoR-pending
+    val df = spark.sql("SELECT id, v FROM g.db.pinr")
+    gc.renameColumn("db", "pinr", "v", "w")
+    assert(df.as[(Long, String)].collect().toSeq.sorted === Seq((1L, "a"), (2L, "b2")))
+    assert(spark.sql("SELECT w FROM g.db.pinr WHERE id = 2").head().getString(0) === "b2")
+  }
+
+  test("a loaded table's CBO stats and bloom pointers describe its snapshot") {
+    import spark.implicits._
+    spark.sql("CREATE NAMESPACE IF NOT EXISTS g.db")
+    gc.createTable("db", "pins", StructType(Seq(StructField("id", LongType),
+      StructField("v", StringType))),
+      options = Map("file-index.bloom-filter.columns" -> "id"))
+    gc.append("db", "pins", (1L to 100L).map(i => (i, s"v$i")).toDF("id", "v"))
+    gc.analyzeTable("db", "pins")
+    val t = sqlTable(spark.table("g.db.pins"))
+    // a later commit and a fresh ANALYZE of it land before the stats are read
+    gc.append("db", "pins", (101L to 150L).map(i => (i, s"v$i")).toDF("id", "v"))
+    gc.analyzeTable("db", "pins")
+    assert(t.cboStats.map(_._1) === Some(100L))
+    assert(t.bloomInfo.keySet === Set(gc.dirLocation("db", "pins", "snap-1")))
+    assert(sqlTable(spark.table("g.db.pins")).cboStats.map(_._1) === Some(150L))
+  }
+
+  test("a SQL UPDATE fences on its resolved snapshot: a concurrent upsert " +
+      "aborts it, and a re-run applies over the upsert") {
+    import spark.implicits._
+    spark.sql("CREATE NAMESPACE IF NOT EXISTS g.db")
+    spark.sql("CREATE TABLE g.db.pinu (id BIGINT, v INT) TBLPROPERTIES ('primary-key'='id')")
+    gc.upsert("db", "pinu", Seq((1L, 10), (2L, 20)).toDF("id", "v"))
+    val update = "UPDATE g.db.pinu SET v = v + 1"
+    val cmd = spark.sessionState.analyzer.execute(
+      spark.sessionState.sqlParser.parsePlan(update))
+      .asInstanceOf[graft.plans.GraftUpdateCommand]
+    gc.upsert("db", "pinu", Seq((2L, 200)).toDF("id", "v"))
+    intercept[java.util.ConcurrentModificationException](cmd.run(spark))
+    assert(gc.read("db", "pinu").as[(Long, Int)].collect().toSeq.sorted ===
+      Seq((1L, 10), (2L, 200)))
+    spark.sql(update)
+    assert(gc.read("db", "pinu").as[(Long, Int)].collect().toSeq.sorted ===
+      Seq((1L, 11), (2L, 201)))
+  }
 }
