@@ -30,6 +30,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // ...and the planning-time eraser for the ANALYZE-stats pin the
     // splice leaves on its subtree (GraftStatsPin reports, never runs)
     ext.injectPlannerStrategy(_ => GraftStatsPinStrategy)
+    // Small global sorts gather to one partition instead of running the
+    // range partitioner's sampling job (AQE plans only) — see GraftSmallSort.
+    ext.injectQueryStagePrepRule(session => new GraftSmallSort(session))
     // (Runtime join filtering needs no injection: GraftSqlTable's scan
     // builder returns a SupportsRuntimeV2Filtering scan natively —
     // see graft.plans.GraftScanBuilder.)

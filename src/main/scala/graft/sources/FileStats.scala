@@ -116,6 +116,16 @@ private[graft] object FileStats {
       case _ => false
     }
 
+  private val log = org.slf4j.LoggerFactory.getLogger("graft.sources.FileStats")
+
+  /** Logs one warning that stats collection could not `what` (naming the
+    * file or dir and the cause), since the dir then loses zone pruning,
+    * and returns None. */
+  private def unreadable(what: String, e: Throwable): None.type = {
+    log.warn(s"could not $what, so the dir gets no zone stats: $e")
+    None
+  }
+
   /** Parse one `col=value` partition-path value into the zone domain of
     * the column's type. None → unparseable, drop the column. */
   private def partitionValue(dom: Domain, dt: DataType, raw: String): Option[Any] = {
@@ -253,7 +263,8 @@ private[graft] object FileStats {
           }
         }
       } finally rd.close()
-    } catch { case scala.util.control.NonFatal(_) => return None }
+    } catch { case scala.util.control.NonFatal(e) =>
+      return unreadable(s"read the footer of $absPath", e) }
     Some(acc.toDirStats(tracked))
   }
 
@@ -316,7 +327,8 @@ private[graft] object FileStats {
           }
         }
       } finally rd.close()
-    } catch { case scala.util.control.NonFatal(_) => return None }
+    } catch { case scala.util.control.NonFatal(e) =>
+      return unreadable(s"read the footer of $absPath", e) }
     Some(acc.toDirStats(tracked))
   }
 
@@ -411,7 +423,8 @@ private[graft] object FileStats {
         }
         acc.rows = rows
       } finally rd.close()
-    } catch { case scala.util.control.NonFatal(_) => return None }
+    } catch { case scala.util.control.NonFatal(e) =>
+      return unreadable(s"read the records of $absPath", e) }
     Some(acc.toDirStats(tracked))
   }
 
@@ -455,7 +468,7 @@ private[graft] object FileStats {
       else Some(filesUnder(fs, dir, Seq("." + fmt)).map { case (rel, st) =>
         (rel, st.getPath.toString, st.getLen)
       })
-    } catch { case scala.util.control.NonFatal(_) => None }
+    } catch { case scala.util.control.NonFatal(e) => unreadable(s"list $dir", e) }
 
   /** Name suffixes of the data files of every table format. */
   val DataFileExts: Seq[String] = Seq(".parquet", ".orc", ".avro")
@@ -665,7 +678,7 @@ private[graft] object FileStats {
           rel -> DirStats(0L, Map.empty, bytes = len)
       }
       Some((mergeZones(fileMap.values.toSeq), fileMap))
-    } catch { case scala.util.control.NonFatal(_) => None }
+    } catch { case scala.util.control.NonFatal(e) => unreadable(s"aggregate the stats of $dir", e) }
   }
 
   /**

@@ -1,5 +1,9 @@
 package graft
 
+import org.apache.spark.sql.{Dataset, Row}
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions.{col, desc, row_number}
+
 /**
  * Plan-shape guards: the scale contracts PLANS.md documents, asserted
  * mechanically so a regression (lost pushdown, a join degrading to a
@@ -8,8 +12,9 @@ package graft
  */
 class PlanSpec extends SparkSpecBase {
 
-  private def plan(name: String): String =
-    SparkEntry.queries(name)(spark, sfDir).queryExecution.executedPlan.toString
+  private def planOf(df: Dataset[_]): String = df.queryExecution.executedPlan.toString
+
+  private def plan(name: String): String = planOf(SparkEntry.queries(name)(spark, sfDir))
 
   test("filters are pushed into the parquet scan") {
     val p = plan("scan_filter_eq")
@@ -71,5 +76,75 @@ class PlanSpec extends SparkSpecBase {
       cart ++ bnlj
     }
     assert(offenders.isEmpty, offenders.mkString("; "))
+  }
+
+  private val minPartitionSize = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
+
+  /** A small frame whose global sort AQE would coalesce into one partition. */
+  private def smallSorted = spark.range(0, 5000, 1, 4)
+    .selectExpr("id % 97 AS k", "id").orderBy("k", "id")
+
+  test("a small global sort gathers to one partition instead of range-shuffling") {
+    val p = planOf(smallSorted)
+    assert(p.contains("Exchange SinglePartition, ENSURE_REQUIREMENTS"), p)
+    assert(!p.contains("rangepartitioning"), p)
+    val q = plan("q1_agg")
+    assert(q.contains("Exchange SinglePartition") && !q.contains("rangepartitioning"), q)
+  }
+
+  test("a small global sort runs one job fewer and returns the same rows in order") {
+    // the range partitioner's sampling job is the job the gather saves
+    var gathered: Seq[Row] = Nil
+    var ranged: Seq[Row] = Nil
+    val gatheredJobs = jobsDuring { gathered = smallSorted.collect().toSeq }
+    val rangedJobs = withConfs(minPartitionSize -> "1b") {
+      assert(planOf(smallSorted).contains("rangepartitioning"))
+      jobsDuring { ranged = smallSorted.collect().toSeq }
+    }
+    assert(gatheredJobs === rangedJobs - 1, s"$gatheredJobs vs $rangedJobs jobs")
+    assert(gathered.size === 5000)
+    assert(gathered === ranged)
+  }
+
+  test("a sort input estimated above the coalescing bound keeps its range shuffle") {
+    // 2^40 longs: an 8 TiB estimate (planned, never run)
+    val p = planOf(spark.range(0, 1L << 40).orderBy(desc("id")))
+    assert(p.contains("rangepartitioning"), p)
+    assert(!p.contains("SinglePartition"), p)
+  }
+
+  test("small sorts keep their range shuffle when AQE does not coalesce partitions") {
+    withConfs("spark.sql.adaptive.coalescePartitions.enabled" -> "false") {
+      val p = planOf(smallSorted)
+      assert(p.contains("rangepartitioning") && !p.contains("SinglePartition"), p)
+    }
+  }
+
+  test("repartitionByRange and sortCompact keep their range partitions") {
+    val wh = java.nio.file.Files.createTempDirectory("graft-smallsort").toString
+    val byRange = spark.range(0, 5000, 1, 4).repartitionByRange(8, col("id"))
+    assert(planOf(byRange).contains("rangepartitioning(id"), planOf(byRange))
+    byRange.write.parquet(s"$wh/ranged")
+    assert(new java.io.File(s"$wh/ranged").list().count(_.endsWith(".parquet")) === 8)
+    val gc = new graft.sources.GraftCatalog(spark, s"$wh/wh")
+    gc.createSchema("db")
+    val rows = spark.range(0, 5000).selectExpr("id % 1000 AS k", "id")
+    gc.createTable("db", "t", rows.schema)
+    gc.append("db", "t", rows)
+    gc.sortCompact("db", "t", Seq("k"), ranges = 16)
+    val ranges = new java.io.File(s"$wh/wh/db/t").list().filter(_.matches("snap-\\d+-r\\d+"))
+    assert(ranges.length === 16, ranges.toSeq)
+  }
+
+  test("window and sort-merge-join orderings keep their hash exchanges") {
+    val base = spark.range(0, 5000, 1, 4).selectExpr("id % 97 AS k", "id")
+    val w = planOf(base.withColumn("r",
+      row_number().over(Window.partitionBy("k").orderBy(col("id")))))
+    assert(w.contains("hashpartitioning(k") && !w.contains("SinglePartition"), w)
+    withConfs("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+      val j = planOf(base.join(base.withColumnRenamed("id", "id2"), "k"))
+      assert(j.contains("SortMergeJoin") && j.contains("hashpartitioning(k"), j)
+      assert(!j.contains("SinglePartition"), j)
+    }
   }
 }

@@ -9,6 +9,17 @@ trait SparkSpecBase extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpecBase.session
   lazy val sfDir: String = "/root/testdata/sf0.001"
 
+  /** Runs `body` with `confs` set, restoring each key's previous value. */
+  def withConfs[T](confs: (String, String)*)(body: => T): T = {
+    val old = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally old.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
   /** Records scanned by every task during `body` (listener-observed
     * input metrics; the bus is flushed before reading). Rows removed by
     * partition pruning / zone skipping never become records — the

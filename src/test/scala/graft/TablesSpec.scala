@@ -15,17 +15,6 @@ class TablesSpec extends SparkSpecBase {
 
   private def path(name: String) = s"$sfDir/$name.parquet"
 
-  /** Runs `body` with `confs` set, restoring each key's previous value. */
-  private def withConfs[T](confs: (String, String)*)(body: => T): T = {
-    val old = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally old.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
-
   /** The opener's schema equals Spark's inference, or both fail alike. */
   private def assertInferred(p: String): Unit = {
     val want = Try(spark.read.parquet(p).schema)
