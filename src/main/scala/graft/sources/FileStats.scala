@@ -153,6 +153,11 @@ private[graft] object FileStats {
     * driver; larger ones fan the reads out in one distributed job. */
   private[graft] val DriverMaxFiles = 64
 
+  /** Avro commits of at most [[DriverMaxFiles]] files and this many
+    * bytes collect their stats on the driver, one sequential decode of
+    * the data; larger ones run the distributed aggregation. */
+  private[graft] val DriverMaxAvroBytes = 16L << 20
+
   /** Hadoop Configuration is not Serializable; standard write/readFields
     * envelope so executor tasks can open footers with the session conf. */
   private[sources] class SerConf(@transient var value: Configuration) extends Serializable {
@@ -536,13 +541,9 @@ private[graft] object FileStats {
     // of the just-written bytes costs less than a Spark job launch (and
     // on an object store, a few MB-scale GETs ≈ one job-scheduling round
     // trip); above it the distributed aggregation keeps the bulk-load
-    // story. 0 disables the avro driver path entirely.
-    val avroDriverMaxBytes =
-      try spark.conf.get(
-        "spark.graft.commit-stats.driver-max-avro-bytes", "16777216").toLong
-      catch { case scala.util.control.NonFatal(_) => 16777216L }
+    // story.
     if (avro && (files.size > DriverMaxFiles ||
-        files.map(_._3).sum > avroDriverMaxBytes))
+        files.map(_._3).sum > DriverMaxAvroBytes))
       return collectFromData(spark, fs, dir, schema, fmt)
     if (files.size <= DriverMaxFiles) {
       val hconf = sc.hadoopConfiguration

@@ -289,7 +289,7 @@ class GraftCatalog(private[sources] val spark: SparkSession,
   /** Replace the table's image with `df`. The new image replaces the
     * head it was built against, so a concurrent commit aborts it. */
   def overwrite(schema: String, table: String, df: DataFrame): Long =
-    commit(schema, table, Seq(Leg("", "data", df)), InheritNone,
+    commit(schema, table, Seq(Leg("", "data", df)), Change.Overwrite,
       basis = Some(readManifest(schema, table).commitVersion))
 
   /**
@@ -336,18 +336,20 @@ class GraftCatalog(private[sources] val spark: SparkSession,
    * index folds, changelog carriers, every compaction and rescale, and
    * [[sortCompact]]'s range dirs.
    *
-   * '''Legs.''' The snapshot lands one dir per [[Leg]], named
-   * `snap-<id><suffix>`. Each leg's frame is written once by
-   * [[writeDir]] into a unique dot-staging dir (or arrives staged by the
-   * caller). Every data leg gets its zone stats, zone sidecar and bloom
-   * index; every leg gets a claim marker. The landing loop claims each
-   * leg's dir by exclusive rename, then CASes the manifest, so all legs
-   * share one ordinal and become visible together. The first leg is the
-   * main dir: its kind drives the dedupe fold, dynamic-bucket routing and
-   * the input/lookup changelog producers (which add a `-cl` leg).
+   * '''Change.''' `change` names what the snapshot is (see [[Change]]):
+   * what it keeps of the previous file list, whether it is a
+   * compaction, its `$snapshots` label and the options it lands.
    *
-   * '''Inheritance.''' `inherit` says what the snapshot keeps of the
-   * previous file list (see [[Inherit]]).
+   * '''Legs.''' The snapshot lands one dir per [[Leg]], named
+   * `snap-<id><suffix>`. The first leg is the main dir: its kind drives
+   * the dedupe fold, dynamic-bucket routing and the input/lookup
+   * changelog producers (which add a `-cl` leg). The legs pass three
+   * stages: [[prepareLegs]] checks their columns, folds duplicate keys
+   * and routes dynamic buckets; [[stageLegs]] writes each frame once
+   * with [[writeDir]] (or takes it staged by the caller) and adds its
+   * zone stats, zone sidecar and bloom index; [[publish]] claims each
+   * leg's dir by exclusive rename, then CASes the manifest, so all legs
+   * share one ordinal and become visible together.
    *
    * '''Basis.''' A commit whose content was derived from the head
    * carries that head's manifest version as `basis`: overwrite,
@@ -360,54 +362,52 @@ class GraftCatalog(private[sources] val spark: SparkSession,
    * rebase onto a new head and retry.
    */
   private[sources] def commit(schema: String, table: String, legs: Seq[Leg],
-      inherit: Inherit = InheritAll, basis: Option[Long] = None,
-      compaction: Boolean = false,
-      // Options applied atomically WITH the snapshot in the same manifest
-      // CAS — the bucket-rescale path: data written under the new layout
-      // and the option that describes it become visible together.
-      optionOverrides: Map[String, String] = Map.empty,
-      streamBatchId: Option[Long] = None): Long = {
+      change: Change = Change.Add(), basis: Option[Long] = None): Long = {
     basisTestHook()
     val m = readManifest(schema, table)
-    def staleBasis(b: Long, now: Long) = new java.util.ConcurrentModificationException(
-      s"$schema.$table: a concurrent writer moved the head (manifest v$b -> " +
-        s"v$now) since this commit's content was derived — re-run against the new head")
-    basis.foreach(b => if (m.commitVersion != b) throw staleBasis(b, m.commitVersion))
-    val main = legs.head
-    val keepExisting = inherit != InheritNone
-    if (legs.exists(_.kind == "data")) {
-      val cur = currentSchema(m).fieldNames
-      // a retract batch (aggregation engine) carries the hidden flag
-      // column as its last field — everything else must still align
-      legs.filter(_.kind == "data").foreach { l =>
-        val expect = if (l.retract) cur :+ RetractCol else cur
-        require(l.frame.schema.fieldNames.sameElements(expect),
-          s"dataframe columns ${l.frame.schema.fieldNames.mkString(",")} != table ${expect.mkString(",")}")
-      }
-    }
-    // Data is written to a UNIQUE dot-staging dir (invisible to snap-*
-    // globs and never another writer's target), then RENAMED to its
-    // ordinal dir at land time via an exclusive FileContext rename —
-    // an atomic claim that fails if the target exists, so two racing
-    // writers can never clobber or nest into each other's dirs.
-    val dir = s".staging-${java.util.UUID.randomUUID()}"
+    basis.foreach(b => if (m.commitVersion != b) throw staleBasis(schema, table, b, m.commitVersion))
     // Bucketed PK tables (Paimon's bucket layout): every commit — data,
     // delete tombstones, compaction rewrites alike — lands rows in
     // `__bucket=k` subdirs by primary-key hash, so a key lives in exactly
     // one bucket across ALL deltas and merge-on-read never crosses
     // buckets (see bucketedResolve). Delete frames carry the PK columns,
-    // so the same hash applies.
+    // so the same hash applies. A rescale writes under its new count.
+    val buckets = TableOptions(change.options).bucket
+      .orElse(m.options.bucket).filter(_ => m.primaryKey.nonEmpty)
+    val staged = stageLegs(schema, table, m, change, buckets,
+      prepareLegs(schema, table, m, legs, change, buckets))
+    // Dynamic-bucket index routing and a lookup changelog's before
+    // images are derived from THIS head: such a commit carries its basis
+    // even when the caller passed none.
+    val fence = basis.orElse(Some(m.commitVersion).filter(_ => buckets.contains(-1) ||
+      (m.options.changelogProducer == "lookup" && staged.exists(_.leg.kind == "cl"))))
+    commitTestHook()
+    publish(schema, table, m, change, staged, fence)
+  }
+
+  private def staleBasis(schema: String, table: String, b: Long, now: Long) =
+    new java.util.ConcurrentModificationException(
+      s"$schema.$table: a concurrent writer moved the head (manifest v$b -> " +
+        s"v$now) since this commit's content was derived — re-run against the new head")
+
+  /**
+   * Commit stage 1: check each data leg's columns against the table,
+   * fold duplicate keys within the batch, and route a dynamic-bucket
+   * table's rows to their buckets. Returns the legs to stage, each with
+   * the caller's columns, which its zone stats are collected under
+   * (routing adds the bucket column).
+   */
+  private def prepareLegs(schema: String, table: String, m: Manifest,
+      legs: Seq[Leg], change: Change, buckets: Option[Int]): Seq[(Leg, StructType)] = {
+    lazy val cur = currentSchema(m).fieldNames
+    // a retract batch (aggregation engine) carries the hidden flag
+    // column as its last field — everything else must still align
+    legs.filter(_.kind == "data").foreach { l =>
+      val expect = if (l.retract) cur :+ RetractCol else cur
+      require(l.frame.schema.fieldNames.sameElements(expect),
+        s"dataframe columns ${l.frame.schema.fieldNames.mkString(",")} != table ${expect.mkString(",")}")
+    }
     val pkCols = m.primaryKey
-    val buckets = TableOptions(optionOverrides).bucket
-      .orElse(m.options.bucket).filter(_ => pkCols.nonEmpty)
-    // Dynamic bucket mode (Paimon's bucket = -1): key→bucket is NOT a
-    // modular hash — it comes from the persisted hash index, so frames
-    // are routed up front (existing keys to their recorded bucket, new
-    // keys filling capacity) and carry an explicit __bucket column; the
-    // commit's own assignments land as an immutable `.dbidx` parquet
-    // delta inside the main dir, atomic with the data under the ordinal
-    // claim-rename. An index-only fold carries its folded index already.
-    val dynamicBucket = buckets.contains(-1)
     // Within-batch key resolution (deduplicate engine): all rows of one
     // commit share an ordinal, so duplicate keys INSIDE one batch would
     // tie at read time and resolve by partition order — nondeterministic.
@@ -419,7 +419,7 @@ class GraftCatalog(private[sources] val spark: SparkSession,
     // case) pass through it unchanged. Skipped when a column type is
     // unorderable (maps): those tables keep the key-unique-batch contract.
     def foldable(df: DataFrame): Boolean =
-      !compaction && pkCols.nonEmpty && m.options.mergeEngine == "deduplicate" &&
+      !change.compaction && pkCols.nonEmpty && m.options.mergeEngine == "deduplicate" &&
         df.schema.fields.forall(f =>
           org.apache.spark.sql.catalyst.expressions.RowOrdering
             .isOrderable(f.dataType))
@@ -445,71 +445,71 @@ class GraftCatalog(private[sources] val spark: SparkSession,
     // exchange instead of two. Dynamic routing keeps the two.
     val foldLayout = buckets.filter(n => n >= 1 && !crossPartition(m))
     val deduped = legs.map { l =>
-      if (l.kind != "data" || !foldable(l.frame)) l
-      else foldLayout match {
-        case Some(n) =>
-          val layout = m.partitionColumns :+ BucketCol
-          val laid = l.frame.withColumn(BucketCol, bucketExpr(pkCols, n))
-            .repartition(layout.map(col): _*)
-          l.copy(frame = fold(laid, (layout ++ pkCols).distinct,
-            l.frame.schema.fieldNames.toSeq), clustered = true)
-        case None =>
-          l.copy(frame = fold(l.frame, pkCols, l.frame.schema.fieldNames.toSeq))
-      }
+      val out = l.frame.schema.fieldNames.toSeq
+      val folded =
+        if (l.kind != "data" || !foldable(l.frame)) l
+        else foldLayout match {
+          case Some(n) =>
+            val layout = m.partitionColumns :+ BucketCol
+            val laid = l.frame.withColumn(BucketCol, bucketExpr(pkCols, n))
+              .repartition(layout.map(col): _*)
+            l.copy(frame = fold(laid, (layout ++ pkCols).distinct, out), clustered = true)
+          case None => l.copy(frame = fold(l.frame, pkCols, out))
+        }
+      (folded, l.frame.schema)
     }
-    val routed =
-      if (!dynamicBucket || main.kind == "idx") deduped
-      else {
-        val (df, del, idx) = dynamicRoute(schema, table, m, deduped.head.frame,
-          deduped.tail.find(_.kind == "delete").map(_.frame), main.kind,
-          fold = compaction, reset = !keepExisting && !compaction)
-        // routing drops tombstones of keys that have no residence and
-        // adds the old residence's tombstone of each cross-partition move
-        deduped.head.copy(frame = df, index = idx) +:
-          (del.map(Leg("-del", "delete", _)).toSeq ++
-            deduped.tail.filter(_.kind != "delete"))
-      }
-    // Full-fold commits — index-only fold, compaction, overwrite reset —
-    // record the ENTIRE live key set in their own dir: the manifest's
-    // dynIdx node is rebuilt to that one flag (stale flags on surviving
-    // dirs would double-count keys) and prior index-only dirs leave the
-    // file list (their bytes reclaim on expiration).
-    val dynIdxReplace = dynamicBucket &&
-      (main.kind == "idx" || compaction || !keepExisting)
-    val staged = routed.map(l => l.staged.getOrElse {
+    // Dynamic bucket mode (Paimon's bucket = -1): key→bucket is NOT a
+    // modular hash — it comes from the persisted hash index, so frames
+    // are routed up front (existing keys to their recorded bucket, new
+    // keys filling capacity) and carry an explicit __bucket column; the
+    // commit's own assignments land as an immutable `.dbidx` parquet
+    // delta inside the main dir, atomic with the data under the ordinal
+    // claim-rename. An index-only fold carries its folded index already.
+    if (!buckets.contains(-1) || legs.head.kind == "idx") return deduped
+    val (main, mainCols) = deduped.head
+    val (df, del, idx) = dynamicRoute(schema, table, m, main.frame,
+      deduped.tail.collectFirst { case (l, _) if l.kind == "delete" => l.frame },
+      main.kind, fold = change.compaction, reset = !change.inherits && !change.compaction)
+    // routing drops tombstones of keys that have no residence and
+    // adds the old residence's tombstone of each cross-partition move
+    (main.copy(frame = df, index = idx), mainCols) +:
+      (del.map(d => (Leg("-del", "delete", d), d.schema)).toSeq ++
+        deduped.tail.filter(_._1.kind != "delete"))
+  }
+
+  /**
+   * Commit stage 2: write each prepared leg into a UNIQUE dot-staging dir
+   * (invisible to snap-* globs and never another writer's target) unless
+   * the caller staged it, add the write-time changelog leg, collect each
+   * data leg's zone stats, zone sidecar and bloom index, and write the
+   * dynamic-bucket index delta.
+   */
+  private def stageLegs(schema: String, table: String, m: Manifest, change: Change,
+      buckets: Option[Int], prepared: Seq[(Leg, StructType)]): Seq[StagedLeg] = {
+    val dir = s".staging-${java.util.UUID.randomUUID()}"
+    def write(l: Leg): String = {
       writeDir(schema, table, m, l.frame, dir + l.suffix, l.kind, buckets,
         clustered = l.clustered)
       dir + l.suffix
-    })
+    }
+    val written = prepared.map { case (l, cols) => (l, cols, l.staged.getOrElse(write(l))) }
     // Write-time changelog materialization (changelog-producer): the
     // snapshot pairs a `-cl` dir of row-kinded changelog rows — consumers
     // then read O(changelog files) per batch instead of paying the
     // before-image resolve (see readChangelogFull's file-served path).
     // An explicit `-cl` leg (full-compaction producer) is passed in.
-    val clProducerMode = m.options.changelogProducer
-    def stagedOf(kind: String) = Some(routed.indexWhere(_.kind == kind))
-      .filter(_ >= 0).map(staged)
+    val mode = m.options.changelogProducer
+    def stagedOf(kind: String) = written.collectFirst { case (l, _, at) if l.kind == kind => at }
+    val mainKind = prepared.head._1.kind
     val produced: Option[Leg] =
-      if (!legs.exists(_.kind == "cl") &&
-          (clProducerMode == "input" || clProducerMode == "lookup") &&
-          m.primaryKey.nonEmpty && keepExisting && !compaction &&
-          (main.kind == "data" || main.kind == "delete"))
-        producerChangelog(schema, table, m, clProducerMode,
+      if (!prepared.exists(_._1.kind == "cl") &&
+          (mode == "input" || mode == "lookup") &&
+          m.primaryKey.nonEmpty && change.inherits && !change.compaction &&
+          (mainKind == "data" || mainKind == "delete"))
+        producerChangelog(schema, table, m, mode,
           stagedOf("data"), stagedOf("delete")).map(Leg("-cl", "cl", _))
       else None
-    produced.foreach(l => writeDir(schema, table, m, l.frame, dir + l.suffix, l.kind, buckets))
-    val all = routed ++ produced
-    // where each leg's bytes sit: staging at first, then its claimed dir
-    val at = (staged ++ produced.map(dir + _.suffix)).toArray
-    // Dynamic-bucket index routing and a lookup changelog's before
-    // images are derived from THIS head: such a commit carries its basis
-    // even when the caller passed none.
-    val fence = basis.orElse(Some(m.commitVersion).filter(_ =>
-      dynamicBucket || (produced.isDefined && clProducerMode == "lookup")))
-    // The files' write-time schema version — pinned BEFORE any conflict
-    // rebase (a concurrent DDL may bump the current version; these bytes
-    // are at THIS version and map forward by field id like any other dir).
-    val sv = m.currentSchemaVersion
+    val all = written ++ produced.map(l => (l, l.frame.schema, write(l)))
     // Zone maps: aggregate each data leg's footer stats into the manifest
     // (Paimon manifests carry per-file field stats the same way;
     // TrinoMetadataBase.applyFilter prunes splits with them). Dirs are
@@ -540,68 +540,71 @@ class GraftCatalog(private[sources] val spark: SparkSession,
     // metadata writes are O(this commit), never O(table); reads load
     // sidecars lazily per dir, cached by token (fresh per build, so an
     // ordinal reused after rollback never serves stale zones).
-    val legStats = all.indices.filter(all(_).kind == "data").flatMap { i =>
-      val path = new Path(tablePath(schema, table), at(i))
-      // the caller's columns: routing adds the dynamic bucket column
-      val sch = legs.find(_.suffix == all(i).suffix).get.frame.schema
-      val opts = m.options
-      FileStats.collectWithFiles(spark, fs, path, sch, opts.fileFormat).map {
-        case (ds, fileZones) =>
-          val bloom = if (opts.bloomColumns.isEmpty) None
-            else BloomIndex.build(spark, fs, path, sch, opts.bloomColumns,
-                fileZones.map { case (r, s) => r -> s.rows },
-                provider = providerFor(opts.fileFormat), table = s"$schema.$table")
-              .map(cols => (java.util.UUID.randomUUID().toString, cols))
-          val zoneToken = if (fileZones.isEmpty) None
-            else Some(writeZoneSidecar(path, fileZones))
-          (all(i).suffix, ds, zoneToken, bloom)
-      }
+    val opts = m.options
+    val staged = all.map { case (l, cols, at) =>
+      val path = new Path(tablePath(schema, table), at)
+      StagedLeg(l, at, if (l.kind != "data") None
+        else FileStats.collectWithFiles(spark, fs, path, cols, opts.fileFormat).map {
+          case (ds, fileZones) =>
+            val bloom = if (opts.bloomColumns.isEmpty) None
+              else BloomIndex.build(spark, fs, path, cols, opts.bloomColumns,
+                  fileZones.map { case (r, s) => r -> s.rows },
+                  provider = providerFor(opts.fileFormat), table = s"$schema.$table")
+                .map(bcols => (java.util.UUID.randomUUID().toString, bcols))
+            val zoneToken = if (fileZones.isEmpty) None
+              else Some(writeZoneSidecar(path, fileZones))
+            (ds, zoneToken, bloom)
+        })
     }
     // Dynamic-bucket index delta: written AFTER the zone/bloom passes
     // (their recursive file walks must see only data files), INSIDE the
     // main dir so the claim-rename publishes data and index atomically.
     // Hash-sorted and range-partitioned so point lookups push `__kh = v`
     // into the parquet scan.
-    val dynIdxKeys: Option[Long] = routed.head.index.map { case (delta, keys) =>
+    staged.head.leg.index.foreach { case (delta, keys) =>
       val parts = math.min(32L, (keys - 1) / 4000000L + 1).toInt
       val sorted = if (parts == 1) delta.coalesce(1).sortWithinPartitions("__kh")
         else delta.repartitionByRange(parts, col("__kh")).sortWithinPartitions("__kh")
       sorted.write.mode("overwrite").parquet(
-        new Path(new Path(tablePath(schema, table), at(0)), DynIdxDir).toString)
-      keys
+        new Path(new Path(tablePath(schema, table), staged.head.dir), DynIdxDir).toString)
     }
-    commitTestHook()
-    val fileLegs = all.filter(_.kind != "cl")
+    staged
+  }
+
+  /**
+   * Commit stage 3: claim every staged leg's dir at the next free
+   * ordinal and CAS the snapshot into the manifest; on a conflict, rebase
+   * and retry, or abort when the commit carries a `fence` (its basis).
+   */
+  private def publish(schema: String, table: String, m: Manifest, change: Change,
+      staged: Seq[StagedLeg], fence: Option[Long]): Long = {
+    // The files' write-time schema version — pinned BEFORE any conflict
+    // rebase (a concurrent DDL may bump the current version; these bytes
+    // are at THIS version and map forward by field id like any other dir).
+    val sv = m.currentSchemaVersion
+    val fileLegs = staged.map(_.leg).filter(_.kind != "cl")
+    // Full-fold commits — index-only fold, compaction, overwrite reset —
+    // record the ENTIRE live key set in their own dir: the manifest's
+    // dynIdx node is rebuilt to that one flag (stale flags on surviving
+    // dirs would double-count keys) and prior index-only dirs leave the
+    // file list (their bytes reclaim on expiration).
+    val fullFold = change.compaction || !change.inherits
     /** Build the snapshot entry against manifest `mm` and CAS it in. */
     def land(mm: Manifest, landId: Long, landDir: String): Unit = {
       val prev = mm.head
       // head carries the dir-level aggregate (the manifest-list's
       // partition-stats analog) + the sidecar token; per-file zones
       // stay in the dir's immutable `.zones.json`
-      legStats.foreach { case (suffix, ds, zoneToken, _) =>
-        mm.putDirStats(landDir + suffix, ds, zoneToken)
-      }
-      val inheritable = if (keepExisting) prev.fold(Seq.empty[FileEntry])(_.files)
-        else Seq.empty
-      // a full index fold supersedes prior index-only dirs — they drop
-      // from the file list exactly like a minor compaction's victims
-      val droppedIdxDirs: Set[String] =
-        if (dynIdxReplace) inheritable.filter(_.kind == "idx").map(_.dir).toSet
-        else Set.empty
-      val allReplaced = droppedIdxDirs ++ (inherit match {
-        case InheritAllExcept(dirs) => dirs
-        case _ => Set.empty[String]
+      staged.foreach(s => s.stats.foreach { case (ds, zoneToken, _) =>
+        mm.putDirStats(landDir + s.leg.suffix, ds, zoneToken)
       })
-      val retired = inherit match {
-        case InheritRetiring(bs) => bs
-        case _ => Set.empty[Int]
-      }
-      val prevFiles: Seq[FileEntry] = {
-        val inherited = inheritable.filterNot(fe => allReplaced.contains(fe.dir))
-        if (retired.isEmpty) inherited
-        else inherited.map(fe => fe.copy(excludeBuckets =
-          (fe.excludeBuckets ++ retired).distinct.sorted))
-      }
+      val inheritable = if (change.inherits) prev.fold(Seq.empty[FileEntry])(_.files)
+        else Seq.empty
+      val dropped = change.drops ++
+        (if (fullFold) inheritable.filter(_.kind == "idx").map(_.dir) else Nil)
+      val prevFiles = inheritable.filterNot(fe => dropped.contains(fe.dir)).map(fe =>
+        if (change.retires.isEmpty) fe
+        else fe.copy(excludeBuckets = (fe.excludeBuckets ++ change.retires).distinct.sorted))
       // Delta basis for the serialized form: an additive commit's file
       // list is prev ++ added, so the head stores {baseId, added}; a
       // REPLACE-SUBSET commit (minor compaction, partition expiration,
@@ -611,50 +614,48 @@ class GraftCatalog(private[sources] val spark: SparkSession,
       // commit's head delta stays O(its own change), never O(table dirs)
       // (see Manifest.deflate).
       val baseId: Option[Long] = prev.filter(_ => prevFiles.nonEmpty).map(_.id)
-      if (optionOverrides.nonEmpty) mm.putOptions(optionOverrides)
+      if (change.options.nonEmpty) mm.putOptions(change.options)
       val added = fileLegs.map(l =>
         FileEntry(landDir + l.suffix, sv, l.kind, retract = l.retract))
       mm.appendSnapshot(landId,
         // strictly increasing
         math.max(System.currentTimeMillis(), prev.fold(0L)(_.timestampMillis) + 1),
-        compaction,
-        // Commit kind for the $snapshots operational view (Paimon's
-        // commitKind): what KIND of change this snapshot represents.
-        if (compaction) "compact"
-        else if (!keepExisting) "overwrite"
-        else if (fileLegs.size > 1) "merge"
-        else if (main.kind == "delete" || main.kind == "dv") "delete"
-        else "append",
-        prevFiles, added, baseId, allReplaced.toSeq.sorted, retired.toSeq.sorted)
+        change.compaction, change.label(fileLegs),
+        prevFiles, added, baseId, dropped.toSeq.sorted, change.retires.toSeq.sorted)
       // Deletion-vector index: which data files the new DV dir touches and
       // how many positions it deletes — the manifest-side summary that lets
       // reads split clean files (pure vectorized scan) from dirty files
       // (position anti-join) without opening the DV itself, and lets
       // countRows stay metadata-only by subtraction.
-      all.foreach(l => l.dvIndex.foreach { case (files, rows) =>
-        mm.putDvIndex(landDir + l.suffix, files, rows)
+      staged.foreach(s => s.leg.dvIndex.foreach { case (files, rows) =>
+        mm.putDvIndex(landDir + s.leg.suffix, files, rows)
       })
       // Changelog-producer registration: the `-cl` dir, its write-time
       // schema version, and its coverage link (the snapshot its rows
       // change FROM — the previous head unless the leg names an explicit
       // range, as full-compaction does).
-      all.find(_.kind == "cl").foreach { l =>
+      staged.map(_.leg).find(_.kind == "cl").foreach { l =>
         mm.putChangelog(landDir + l.suffix, landId, sv,
           l.from.getOrElse(prev.fold(0L)(_.id)))
       }
       // Bloom-index pointer: which columns this dir's sidecar indexes,
       // plus a cache token (fresh per build — an ordinal reused after
       // rollback never serves a stale cached index).
-      legStats.foreach { case (suffix, _, _, bloom) =>
-        bloom.foreach { case (token, bcols) => mm.putBloomIdx(landDir + suffix, token, bcols) }
-      }
+      staged.foreach(s => s.stats.flatMap(_._3).foreach { case (token, bcols) =>
+        mm.putBloomIdx(landDir + s.leg.suffix, token, bcols)
+      })
       // Dynamic-bucket index pointer: this dir carries a `.dbidx` delta
       // with that many key assignments — readDynamicIndex unions exactly
       // the flagged dirs of the current snapshot, zero FS probes.
       // Full-fold commits rebuild the node: their delta records EVERY
       // live key, so any older flag would double-count.
-      dynIdxKeys.foreach(mm.putDynIdx(landDir, _, replace = dynIdxReplace))
-      streamBatchId.foreach(mm.setLastStreamBatchId)
+      staged.head.leg.index.foreach { case (_, keys) =>
+        mm.putDynIdx(landDir, keys, replace = fullFold)
+      }
+      change match {
+        case Change.Add(Some(batchId)) => mm.setLastStreamBatchId(batchId)
+        case _ => ()
+      }
       writeManifest(schema, table, mm)
     }
     // Optimistic concurrency (Paimon's commit protocol), two fences:
@@ -695,38 +696,25 @@ class GraftCatalog(private[sources] val spark: SparkSession,
     // the protocol then fails LOUDLY instead of silently interleaving
     // two writers' dirs.
     val claimToken = java.util.UUID.randomUUID().toString
-    at.foreach { d =>
+    staged.foreach { s =>
       val out = fs.create(
-        new Path(tablePath(schema, table), s"$d/${GraftCatalog.ClaimMarker}"), true)
+        new Path(tablePath(schema, table), s"${s.dir}/${GraftCatalog.ClaimMarker}"), true)
       try out.write(claimToken.getBytes(java.nio.charset.StandardCharsets.UTF_8))
       finally out.close()
     }
-    // Reads the whole marker (a single read() may legally return short)
-    // and retries transient IO errors, so only a genuine token mismatch —
-    // never a short read or a blip — downgrades a successful rename into
-    // the loud non-atomic-rename abort below.
-    def markerAt(toDir: String): Boolean = {
+    // Reads the whole marker and retries transient IO errors, so only a
+    // genuine token mismatch — never a blip — downgrades a successful
+    // rename into the loud non-atomic-rename abort below.
+    def markerAt(toDir: String, attempt: Int = 1): Boolean = {
       val p = new Path(tablePath(schema, table), s"$toDir/${GraftCatalog.ClaimMarker}")
-      var attempt = 0
-      while (attempt < 3) {
-        attempt += 1
-        try {
-          val in = fs.open(p)
-          val bos = new java.io.ByteArrayOutputStream(64)
-          try {
-            val buf = new Array[Byte](64)
-            var n = in.read(buf)
-            while (n >= 0) { bos.write(buf, 0, n); n = in.read(buf) }
-          } finally in.close()
-          return new String(bos.toByteArray,
-            java.nio.charset.StandardCharsets.UTF_8) == claimToken
-        } catch {
-          case scala.util.control.NonFatal(_) if attempt < 3 =>
-            Thread.sleep(10L * attempt)
-          case scala.util.control.NonFatal(_) => return false
-        }
+      scala.util.Try { val in = fs.open(p); try in.readAllBytes() finally in.close() } match {
+        case scala.util.Success(bytes) =>
+          new String(bytes, java.nio.charset.StandardCharsets.UTF_8) == claimToken
+        case scala.util.Failure(_) if attempt < 3 =>
+          Thread.sleep(10L * attempt)
+          markerAt(toDir, attempt + 1)
+        case scala.util.Failure(_) => false
       }
-      false
     }
     def claim(fromDir: String, toDir: String): Boolean = {
       val to = fs.makeQualified(new Path(tablePath(schema, table), toDir))
@@ -755,6 +743,7 @@ class GraftCatalog(private[sources] val spark: SparkSession,
     var cur = m
     var landId = m.headId + 1
     var attempts = 0
+    var placed = staged // each leg where its bytes sit: staging, then its claimed dir
     // Basis-free commits retry to a TIME budget, not a fixed attempt
     // count (Paimon's commit retries until a configurable deadline):
     // under an N-writer storm each round has one winner, so any fixed
@@ -768,14 +757,17 @@ class GraftCatalog(private[sources] val spark: SparkSession,
       val target = s"snap-$landId"
       // claim every leg's dir at this ordinal, in order; a lost claim
       // leaves the remaining legs where they are
-      val lost = all.indices.find { i =>
-        val to = target + all(i).suffix
-        at(i) != to && { val won = claim(at(i), to); if (won) at(i) = to; !won }
+      val lost = placed.indexWhere { s =>
+        val to = target + s.leg.suffix
+        s.dir != to && !claim(s.dir, to)
       }
-      if (lost.isEmpty) {
+      val won = if (lost < 0) placed.size else lost
+      placed = placed.take(won).map(s => s.copy(dir = target + s.leg.suffix)) ++
+        placed.drop(won)
+      if (lost < 0) {
         try {
           land(cur, landId, target)
-          autoMaintain(schema, table, compaction)
+          autoMaintain(schema, table, change.compaction)
           autoExpire(schema, table)
           return landId
         }
@@ -786,9 +778,9 @@ class GraftCatalog(private[sources] val spark: SparkSession,
       // conflict — a dir claim or the manifest CAS was lost
       val fresh = readManifest(schema, table)
       fence.foreach { b =>
-        if (fresh.commitVersion != b) throw staleBasis(b, fresh.commitVersion)
+        if (fresh.commitVersion != b) throw staleBasis(schema, table, b, fresh.commitVersion)
         throw new java.util.ConcurrentModificationException(
-          s"$schema.$table: ${lost.fold(target)(target + all(_).suffix)} is " +
+          s"$schema.$table: ${if (lost < 0) target else target + placed(lost).leg.suffix} is " +
             "claimed by a concurrent writer (or a dead attempt's leftover) — " +
             "re-run; sweepOrphanDirs reclaims orphan dirs")
       }
@@ -2485,7 +2477,7 @@ class GraftCatalog(private[sources] val spark: SparkSession,
     }
     commit(schema, table,
       Seq(Leg("", "data", upserts), Leg("-del", "delete", delKeys)),
-      basis = basis.orElse(fetchBasis), streamBatchId = streamBatchId)
+      Change.Add(streamBatchId), basis.orElse(fetchBasis))
   }
 
   /**
@@ -2516,8 +2508,7 @@ class GraftCatalog(private[sources] val spark: SparkSession,
     // since no tombstone path is needed.
     if (m.options.ignoreDelete) {
       val ups = batch.filter(col(RowKindCol).isin("+I", "+U")).drop(RowKindCol)
-      return Some(commit(schema, table, Seq(Leg("", "data", ups)),
-        streamBatchId = batchId))
+      return Some(commit(schema, table, Seq(Leg("", "data", ups)), Change.Add(batchId)))
     }
     val upserts = batch.filter(col(RowKindCol).isin("+I", "+U")).drop(RowKindCol)
     // `-D` rows keep the sequence column when the replica declares one:
@@ -3029,21 +3020,60 @@ object GraftCatalog {
       index: Option[(DataFrame, Long)] = None, staged: Option[String] = None,
       clustered: Boolean = false, dvIndex: Option[(Seq[String], Long)] = None)
 
-  /** What a commit's snapshot keeps of the previous snapshot's file list. */
-  sealed trait Inherit
-  /** Every previous entry: appends, upserts, deletes. */
-  case object InheritAll extends Inherit
-  /** Nothing: overwrite, full compaction, rescale, sort-compaction. */
-  case object InheritNone extends Inherit
-  /** Every previous entry except these dirs (minor compaction, partition
-    * replacement, a DV build retiring tombstone dirs): older snapshots
-    * still reference them, and expiration reclaims them. */
-  final case class InheritAllExcept(dirs: Set[String]) extends Inherit
-  /** Every previous entry with these buckets retired (per-bucket
-    * compaction): the new dir carries their merged images, and the
-    * serialized delta stays O(1) (one `xbuckets` list, applied at
-    * inflate). Expiration reclaims retired subdirs. */
-  final case class InheritRetiring(buckets: Set[Int]) extends Inherit
+  /** What a [[GraftCatalog.commit]]'s snapshot is (Paimon's `CommitKind`).
+    * Each change declares what the snapshot keeps of the previous file
+    * list (`inherits`, less `drops`, with `retires` excluded on every
+    * kept entry; dropped and retired bytes stay for older snapshots until
+    * expiration reclaims them), whether it is a `compaction` (bytes move,
+    * logical content does not: no dedupe fold, no changelog, no
+    * commit-time maintenance after it), its `$snapshots` label, and the
+    * `options` it lands with the snapshot in the same manifest CAS. */
+  sealed abstract class Change(val compaction: Boolean, val inherits: Boolean = true) {
+    def drops: Set[String] = Set.empty
+    def retires: Set[Int] = Set.empty
+    def options: Map[String, String] = Map.empty
+    /** The label of a snapshot landing `fileLegs` (its legs but `-cl`). */
+    def label(fileLegs: Seq[Leg]): String = if (compaction) "compact" else "overwrite"
+  }
+  object Change {
+    /** Rows on top of the head: appends, upserts, merges, tombstone and
+      * deletion-vector deletes, recording streaming batch `batchId`.
+      * Labelled by what lands: `merge` for paired legs, else `delete`
+      * for a tombstone or DV leg, else `append`. */
+    final case class Add(batchId: Option[Long] = None) extends Change(compaction = false) {
+      override def label(fileLegs: Seq[Leg]): String =
+        if (fileLegs.size > 1) "merge"
+        else if (fileLegs.head.kind == "delete" || fileLegs.head.kind == "dv") "delete"
+        else "append"
+    }
+    /** A new image in place of the head's. */
+    case object Overwrite extends Change(compaction = false, inherits = false)
+    /** New rows in place of these dirs (partition expiration, dynamic
+      * partition overwrite). */
+    final case class ReplaceDirs(override val drops: Set[String]) extends Change(compaction = false)
+    /** The head's image rewritten (full and sort compaction). */
+    case object Compact extends Change(compaction = true, inherits = false)
+    /** These dirs folded into one (minor compaction, a DV build retiring
+      * tombstone dirs). */
+    final case class CompactDirs(override val drops: Set[String]) extends Change(compaction = true)
+    /** These buckets' merged images, retired on every inherited entry
+      * (per-bucket compaction): the serialized delta stays O(1), one
+      * `xbuckets` list applied at inflate. */
+    final case class CompactBuckets(override val retires: Set[Int]) extends Change(compaction = true)
+    /** The head's image rewritten under `buckets` fixed buckets, landing
+      * with the option that describes it. */
+    final case class Rescale(buckets: Int) extends Change(compaction = true, inherits = false) {
+      override def options: Map[String, String] = Map(TableOptions.Bucket.key -> buckets.toString)
+    }
+    /** The dynamic-bucket hash index folded into one index-only dir. */
+    case object FoldIndex extends Change(compaction = true)
+  }
+
+  /** One leg of a commit once staged: its bytes at `dir` (relative to the
+    * table) and, for a data leg, its zone stats, zone sidecar token and
+    * bloom index (cache token, columns). */
+  private[sources] final case class StagedLeg(leg: Leg, dir: String,
+      stats: Option[(FileStats.DirStats, Option[String], Option[(String, Seq[String])])])
 }
 
 /**

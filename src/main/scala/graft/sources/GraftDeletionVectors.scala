@@ -392,11 +392,11 @@ trait GraftDeletionVectors { self: GraftCatalog =>
       commit(schema, table,
         Seq(Leg("", "dv", victims.sortWithinPartitions(DvFileCol, DvPosCol),
           dvIndex = Some((files, rows)))),
-        InheritAllExcept(delEs.map(_.dir).toSet),
+        // bytes re-indexed, no logical change: changelog skips it
+        Change.CompactDirs(delEs.map(_.dir).toSet),
         // victims are (file, pos) pairs derived from THIS head — abort
         // if a concurrent commit moved it (same contract as deleteWhereDv)
-        basis = Some(m.commitVersion),
-        compaction = true) // bytes re-indexed, no logical change: changelog skips it
+        basis = Some(m.commitVersion))
     } finally { victims.unpersist(); () }
   }
 

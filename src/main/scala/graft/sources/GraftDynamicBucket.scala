@@ -127,7 +127,7 @@ trait GraftDynamicBucket { self: GraftCatalog =>
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
       currentSchema(m))
     commit(schema, table, Seq(Leg("", "idx", empty, index = Some((folded, keys)))),
-      basis = Some(m.commitVersion), compaction = true)
+      Change.FoldIndex, basis = Some(m.commitVersion))
   }
 
   /** Latest index record per key of a cross-partition table — apply

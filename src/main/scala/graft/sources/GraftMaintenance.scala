@@ -182,7 +182,7 @@ trait GraftMaintenance { self: GraftCatalog =>
       } else None
     commit(schema, table, Leg("", "data", headImage(schema, table, m),
         clustered = headMergesPerBucket(m)) +: cl.toSeq,
-      InheritNone, basis = Some(m.commitVersion), compaction = true)
+      Change.Compact, basis = Some(m.commitVersion))
   }
 
   /**
@@ -230,8 +230,7 @@ trait GraftMaintenance { self: GraftCatalog =>
     val img = bucketedResolve(schema, table, m, entries, n,
       onlyBuckets = Some(buckets.distinct.sorted)).getOrElse(emptyFrame(m))
     commit(schema, table, Seq(Leg("", "data", img, clustered = true)),
-      InheritRetiring(buckets.toSet), basis = Some(m.commitVersion),
-      compaction = true)
+      Change.CompactBuckets(buckets.toSet), basis = Some(m.commitVersion))
   }
 
   /**
@@ -307,7 +306,7 @@ trait GraftMaintenance { self: GraftCatalog =>
         if (!holdsBytes) return m.headId
         return commit(schema, table,
           Seq(Leg("", "data", live.select(names.map(col): _*))),
-          InheritRetiring(buckets.toSet), basis, compaction = true)
+          Change.CompactBuckets(buckets.toSet), basis)
       }
       val files = perFile.map(_.getString(0)).toSeq.sorted
       val rows = perFile.map(_.getLong(1)).sum
@@ -315,7 +314,7 @@ trait GraftMaintenance { self: GraftCatalog =>
         Seq(Leg("", "data", live.select(names.map(col): _*)),
           Leg("-dv", "dv", live.select(col(DvFileCol), col(DvPosCol))
             .sortWithinPartitions(DvFileCol, DvPosCol), dvIndex = Some((files, rows)))),
-        InheritRetiring(buckets.toSet), basis, compaction = true)
+        Change.CompactBuckets(buckets.toSet), basis)
     } finally { live.unpersist(); () }
   }
 
@@ -386,8 +385,7 @@ trait GraftMaintenance { self: GraftCatalog =>
       "fixed-bucket layouts")
     if (old == newBuckets) return m.headId
     commit(schema, table, Seq(Leg("", "data", headImage(schema, table, m))),
-      InheritNone, basis = Some(m.commitVersion), compaction = true,
-      optionOverrides = Map(TableOptions.Bucket.key -> newBuckets.toString))
+      Change.Rescale(newBuckets), basis = Some(m.commitVersion))
   }
 
   /**
@@ -474,8 +472,7 @@ trait GraftMaintenance { self: GraftCatalog =>
       val legs = if (rangeDirs.isEmpty) Seq(Leg("-r0", "data", img))
         else rangeDirs.toSeq.map(rd => Leg(s"-r${rd.stripPrefix("__range=")}",
           "data", img, staged = Some(s"$staging/$rd")))
-      commit(schema, table, legs, InheritNone,
-        basis = Some(m.commitVersion), compaction = true)
+      commit(schema, table, legs, Change.Compact, basis = Some(m.commitVersion))
     } finally {
       // landed ranges moved out; an aborted attempt's unclaimed ones go
       try fs.delete(new Path(tablePath(schema, table), staging), true)
@@ -591,8 +588,7 @@ trait GraftMaintenance { self: GraftCatalog =>
     // rewrite stale — abort via the basis-version fence, same contract
     // as DV deletes.
     Some(commit(schema, table, Seq(Leg("", "data", img)),
-      InheritAllExcept(candidates.map(_.dir).toSet),
-      basis = Some(m.commitVersion), compaction = true))
+      Change.CompactDirs(candidates.map(_.dir).toSet), basis = Some(m.commitVersion)))
   }
 
   /**
@@ -701,8 +697,11 @@ trait GraftMaintenance { self: GraftCatalog =>
         "DV names a file this commit would retire")
     val pcols = m.partitionColumns
     require(pcols.nonEmpty, s"$schema.$table is not partitioned")
-    if (m.head.isEmpty) return (Seq.empty,
-      newData.map(d => commit(schema, table, Seq(Leg("", "data", d)))))
+    // nothing to replace: the new data (if any) still lands as a
+    // replacement, dropping no dir
+    def replaceNone = (Seq.empty[String], newData.map(d =>
+      commit(schema, table, Seq(Leg("", "data", d)), Change.ReplaceDirs(Set.empty))))
+    if (m.head.isEmpty) return replaceNone
     val allEntries = m.headFiles.filter(_.kind == "data")
     // Candidate prefilter from the head's dir-level zones (partition
     // columns carry path-segment zones): a dir the evaluator PROVES
@@ -721,8 +720,7 @@ trait GraftMaintenance { self: GraftCatalog =>
         headStats.get(fe.dir).forall(FileStats.mightMatch(_, cond)))
       case None => allEntries
     }
-    if (entries.isEmpty) return (Seq.empty,
-      newData.map(d => commit(schema, table, Seq(Leg("", "data", d)))))
+    if (entries.isEmpty) return replaceNone
     // live partition paths per dir: one recursive metadata listing
     val dirParts: Map[String, Set[String]] = entries.map { fe =>
       val basePath = dirPath(schema, table, fe.dir)
@@ -733,8 +731,7 @@ trait GraftMaintenance { self: GraftCatalog =>
       fe.dir -> parts.filter(_.nonEmpty).toSet
     }.toMap
     val allParts = dirParts.values.flatten.toSet.toSeq.sorted
-    if (allParts.isEmpty) return (Seq.empty,
-      newData.map(d => commit(schema, table, Seq(Leg("", "data", d)))))
+    if (allParts.isEmpty) return replaceNone
     // Evaluate `where` over the distinct partition tuples, typed exactly
     // as Spark partition discovery types them: unescape the path value,
     // NULL for the default-partition token, explicit cast to the
@@ -758,8 +755,7 @@ trait GraftMaintenance { self: GraftCatalog =>
       }: _*)
     val expired = typed.filter(where).select("__part")
       .collect().map(_.getString(0)).toSet
-    if (expired.isEmpty) return (Seq.empty,
-      newData.map(d => commit(schema, table, Seq(Leg("", "data", d)))))
+    if (expired.isEmpty) return replaceNone
     val affected = entries.filter(fe => dirParts(fe.dir).exists(expired.contains))
     val mixed = affected.filter(fe => !dirParts(fe.dir).forall(expired.contains))
     // Survivor filter keeps null-predicate rows: a partition `where`
@@ -775,8 +771,7 @@ trait GraftMaintenance { self: GraftCatalog =>
       case (None, None) => emptyFrame(m)
     }
     val sid = commit(schema, table, Seq(Leg("", "data", img)),
-      InheritAllExcept(affected.map(_.dir).toSet),
-      basis = Some(m.commitVersion))
+      Change.ReplaceDirs(affected.map(_.dir).toSet), basis = Some(m.commitVersion))
     (expired.toSeq.sorted, Some(sid))
   }
 

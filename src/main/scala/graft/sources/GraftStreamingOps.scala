@@ -31,7 +31,7 @@ trait GraftStreamingOps { self: GraftCatalog =>
   def appendStreamBatch(schema: String, table: String, df: DataFrame,
       batchId: Long): Boolean = {
     if (batchId <= lastStreamBatchId(schema, table)) false
-    else { commit(schema, table, Seq(Leg("", "data", df)), streamBatchId = Some(batchId)); true }
+    else { commit(schema, table, Seq(Leg("", "data", df)), Change.Add(Some(batchId))); true }
   }
 
   /**
